@@ -238,18 +238,15 @@ final class CachingInputStream(
         System.arraycopy(buf, (p - bufStart).toInt, b, off + (p - position).toInt, want)
         (if (fetchTier != null) fetchTier else stats.bytesFromPrefetch)
           .addAndGet(want)
+      } else if (cacheEnabled &&
+          pageCache.read(PageKey(keyBase, pageOff), inPage, b, off + (p - position).toInt, want)) {
+        // the cache copied just the wanted slice, straight into b
+        stats.bytesFromPageCache.addAndGet(want)
       } else {
-        val key = PageKey(keyBase, pageOff)
-        (if (cacheEnabled) pageCache.get(key) else None) match {
-          case Some(page) =>
-            System.arraycopy(page, inPage, b, off + (p - position).toInt, want)
-            stats.bytesFromPageCache.addAndGet(want)
-          case None =>
-            fetchTier = fetchSpan(pageOff)
-            // the span starts at pageOff, so the wanted slice is in-buffer now
-            System.arraycopy(buf, (p - bufStart).toInt, b, off + (p - position).toInt, want)
-            fetchTier.addAndGet(want)
-        }
+        fetchTier = fetchSpan(pageOff)
+        // the span starts at pageOff, so the wanted slice is in-buffer now
+        System.arraycopy(buf, (p - bufStart).toInt, b, off + (p - position).toInt, want)
+        fetchTier.addAndGet(want)
       }
       p += want
     }
@@ -274,11 +271,9 @@ final class CachingInputStream(
     var o = 0
     while (o < spanLen) {
       val pl = math.min(pageSize, (spanLen - o).toLong).toInt
-      if (cacheEnabled && !isScan) {
-        val page = new Array[Byte](pl)
-        System.arraycopy(buf, o, page, 0, pl)
-        pageCache.put(PageKey(keyBase, pageOff + o), page)
-      } else stats.pagesRejectedScan.incrementAndGet()
+      // admitted straight from the span buffer: one copy per page
+      if (cacheEnabled && !isScan) pageCache.put(PageKey(keyBase, pageOff + o), buf, o, pl)
+      else stats.pagesRejectedScan.incrementAndGet()
       o += pl
     }
     tier

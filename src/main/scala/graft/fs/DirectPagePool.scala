@@ -1,6 +1,8 @@
 package graft.fs
 
+import java.io.EOFException
 import java.nio.ByteBuffer
+import java.nio.channels.{FileChannel, WritableByteChannel}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
@@ -52,47 +54,74 @@ final class DirectPagePool(segmentSize: Int, maxFreeSegments: Int) {
 }
 
 /** A cached page's storage: heap array (heap mode) or a pooled direct
-  * segment (offheap mode). `bytes` always returns a heap copy the caller
-  * may keep; `release` must be called exactly once, under the owning
-  * shard's lock, when the page leaves the memory tier. */
+  * segment (offheap mode). Readers copy out only the slice they need
+  * (`copyTo`) and the disk tier writes the stored bytes as they are
+  * (`writeTo`), so no call hands out or stages a whole-page copy. Every
+  * call runs under the owning shard's lock; `release` is called exactly
+  * once, when the page leaves the memory tier. */
 private[fs] sealed trait PageRef {
   def length: Int
-  def bytes: Array[Byte]
+  def copyTo(srcOff: Int, dst: Array[Byte], dstOff: Int, len: Int): Unit
+  def writeTo(ch: WritableByteChannel): Unit
   def release(): Unit
 }
 
 private[fs] final class HeapPageRef(a: Array[Byte]) extends PageRef {
   def length: Int = a.length
-  // heap mode hands back the stored array itself (callers never mutate
-  // pages); zero-copy keeps heap-mode hits identical to the pre-offheap
-  // implementation
-  def bytes: Array[Byte] = a
+  def copyTo(srcOff: Int, dst: Array[Byte], dstOff: Int, len: Int): Unit =
+    System.arraycopy(a, srcOff, dst, dstOff, len)
+  def writeTo(ch: WritableByteChannel): Unit = PageRef.writeFully(ch, ByteBuffer.wrap(a))
   def release(): Unit = ()
 }
 
 private[fs] final class DirectPageRef(
-    buf: ByteBuffer, len: Int, pool: DirectPagePool) extends PageRef {
-  def length: Int = len
-  def bytes: Array[Byte] = {
-    val a = new Array[Byte](len)
-    // duplicate: position/limit stay thread-confined even if two shard
-    // operations race on the same ref (they can't today — shard lock —
-    // but a view costs nothing and removes the trap)
-    val d = buf.duplicate()
-    d.position(0).limit(len)
-    d.get(a)
-    a
-  }
+    buf: ByteBuffer, pageLen: Int, pool: DirectPagePool) extends PageRef {
+  def length: Int = pageLen
+  // absolute bulk get: reads never move the segment's position, so no
+  // view is needed to keep concurrent readers apart
+  def copyTo(srcOff: Int, dst: Array[Byte], dstOff: Int, len: Int): Unit =
+    buf.get(srcOff, dst, dstOff, len)
+  // duplicate: the channel advances the view's position, not the segment's
+  def writeTo(ch: WritableByteChannel): Unit =
+    PageRef.writeFully(ch, buf.duplicate().position(0).limit(pageLen))
   def release(): Unit = pool.release(buf)
 }
 
 private[fs] object PageRef {
-  /** Copy `data` into the mode's storage. */
-  def store(data: Array[Byte], pool: DirectPagePool): PageRef =
-    if (pool == null) new HeapPageRef(data)
+  /** Copy `src[off, off + len)` into the mode's storage: one copy in
+    * either mode. */
+  def copyOf(src: Array[Byte], off: Int, len: Int, pool: DirectPagePool): PageRef =
+    if (pool == null) new HeapPageRef(java.util.Arrays.copyOfRange(src, off, off + len))
     else {
-      val b = pool.acquire(data.length)
-      b.put(data, 0, data.length)
-      new DirectPageRef(b, data.length, pool)
+      val b = pool.acquire(len)
+      b.put(src, off, len)
+      new DirectPageRef(b, len, pool)
     }
+
+  /** Read the first `len` bytes of `ch` straight into the mode's storage
+    * (offheap: into a pool segment, with no heap staging). */
+  def load(ch: FileChannel, len: Int, pool: DirectPagePool): PageRef =
+    if (pool == null) {
+      val a = new Array[Byte](len)
+      readFully(ch, ByteBuffer.wrap(a), 0L)
+      new HeapPageRef(a)
+    } else {
+      val b = pool.acquire(len)
+      try readFully(ch, b.duplicate().position(0).limit(len), 0L)
+      catch { case e: Throwable => pool.release(b); throw e }
+      new DirectPageRef(b, len, pool)
+    }
+
+  /** Positioned read of `dst.remaining` bytes starting at `pos`. */
+  def readFully(ch: FileChannel, dst: ByteBuffer, pos: Long): Unit = {
+    var p = pos
+    while (dst.hasRemaining) {
+      val n = ch.read(dst, p)
+      if (n < 0) throw new EOFException(s"page file ended at $p")
+      p += n
+    }
+  }
+
+  def writeFully(ch: WritableByteChannel, src: ByteBuffer): Unit =
+    while (src.hasRemaining) ch.write(src)
 }

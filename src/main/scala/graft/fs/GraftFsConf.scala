@@ -64,10 +64,12 @@ object GraftFsConf {
     dataCacheExclude = Option(c.get(s"${Prefix}data.cache.exclude.list"))
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Seq.empty),
-    // memory-tier storage for data pages: OFFHEAP (default — reference
-    // parity, SidecarDataCacheType.java:20-48: pooled direct segments,
-    // multi-GB caches stay off the GC heap) or HEAP (plain arrays,
-    // zero-copy hits for small caches)
+    // where the memory tier keeps data pages: OFFHEAP (default —
+    // reference parity, SidecarDataCacheType.java:20-48: pooled direct
+    // segments, multi-GB caches stay off the GC heap) or HEAP (plain
+    // arrays on the GC heap, no pool; for small caches). Hits copy only
+    // the requested bytes in either mode, so the choice is about where
+    // the memory lives, not about hit cost
     dataCacheType = c.get(s"${Prefix}data.cache.type", "OFFHEAP").toUpperCase)
   }
 

@@ -1,7 +1,11 @@
 package graft.fs
 
 import java.io.{File, FileInputStream, FileOutputStream, ObjectInputStream, ObjectOutputStream}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.StandardOpenOption.{CREATE, READ, TRUNCATE_EXISTING, WRITE}
 import java.security.MessageDigest
+import java.util.HexFormat
 import scala.jdk.CollectionConverters._
 
 /** Page identity: MD5(qualifiedPath + "/" + modTime) plus the
@@ -11,10 +15,13 @@ import scala.jdk.CollectionConverters._
 final case class PageKey(base: String, offset: Long) extends Serializable
 
 object PageKey {
+  private val Hex = HexFormat.of() // lowercase, no delimiter
+
+  /** 32 lowercase hex digits. Persisted `pagecache.idx` entries and disk
+    * tier file names embed this string, so its format must not change. */
   def baseFor(qualifiedPath: String, modTime: Long): String = {
     val md = MessageDigest.getInstance("MD5")
-    md.digest(s"$qualifiedPath/$modTime".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    Hex.formatHex(md.digest(s"$qualifiedPath/$modTime".getBytes("UTF-8")))
   }
 }
 
@@ -26,16 +33,19 @@ object PageKey {
   * `offheap` (default, reference parity — SidecarDataCacheType.java:20-48)
   * stores pages in pooled `ByteBuffer.allocateDirect` segments so a
   * multi-GB per-executor cache lives outside the GC heap; `heap` keeps
-  * plain byte arrays (zero-copy hits, right for small caches). Both
-  * modes share identical budgets/LRU/admission, so hit rates are
-  * mode-independent.
+  * plain byte arrays on the GC heap (no pool, right for small caches).
+  * Both modes share identical budgets/LRU/admission, so hit rates are
+  * mode-independent, and both move bytes the same number of times: a
+  * hit (`read`) copies only the requested slice of the page, like the
+  * reference's `getRange` (SidecarCachingInputStream.java:650-656), and
+  * admission (`put`) copies the page once out of the caller's buffer.
   *
   * Lock-striped: keys hash into `NumShards` independent shards, each an
   * access-ordered LinkedHashMap pair guarded by its own monitor with
   * 1/NumShards of each byte budget. A 32-thread scan never serializes on
-  * one global lock; per-shard copies are O(pageSize) and never held
-  * across remote I/O. Budget skew across shards is statistical noise —
-  * MD5-based keys distribute uniformly.
+  * one global lock; a hit holds its shard for one slice copy, and no
+  * lock is held across remote I/O. Budget skew across shards is
+  * statistical noise — MD5-based keys distribute uniformly.
   */
 final class PageCache(memCapacity: Long, diskCapacity: Long, diskDir: String,
     stats: Statistics, pageSize: Long = 1L << 20, offheap: Boolean = false) {
@@ -73,9 +83,23 @@ final class PageCache(memCapacity: Long, diskCapacity: Long, diskDir: String,
 
   private def shardOf(k: PageKey): PageShard = shards(shardIndex(k))
 
-  def get(k: PageKey): Option[Array[Byte]] = shardOf(k).get(k)
+  /** Copy `len` bytes of page `k`, starting `inPage` bytes into the
+    * page, to `dst(dstOff)`. Returns false, leaving `dst` untouched, when
+    * the page is in neither tier. A disk-tier hit promotes the page to
+    * the memory tier when it fits there. */
+  def read(k: PageKey, inPage: Int, dst: Array[Byte], dstOff: Int, len: Int): Boolean =
+    shardOf(k).read(k, inPage, dst, dstOff, len)
+
   def contains(k: PageKey): Boolean = shardOf(k).contains(k)
-  def put(k: PageKey, data: Array[Byte]): Unit = shardOf(k).put(k, data)
+
+  /** Admit `src[off, off + len)` as page `k` unless it is cached already;
+    * the bytes are copied once, straight into the tier's storage. */
+  def put(k: PageKey, src: Array[Byte], off: Int, len: Int): Unit =
+    shardOf(k).put(k, src, off, len)
+
+  /** Test helpers: a whole-page copy through `read`, and a whole-array put. */
+  private[fs] def get(k: PageKey): Option[Array[Byte]] = shardOf(k).get(k)
+  private[fs] def put(k: PageKey, data: Array[Byte]): Unit = put(k, data, 0, data.length)
 
   /** Drop every page of a file (walk offsets by pageSize like the
     * reference's evictDataPages). */
@@ -130,28 +154,56 @@ private final class PageShard(memCapacity: Long, diskCapacity: Long,
   private def diskFile(k: PageKey): File =
     new File(diskDir, s"${k.base}_${k.offset}.page")
 
-  def get(k: PageKey): Option[Array[Byte]] = synchronized {
-    val m = mem.get(k)
-    if (m != null) Some(m.bytes)
-    else if (disk.containsKey(k)) {
-      val f = diskFile(k)
-      if (!f.exists()) { removeDisk(k); None }
-      else {
-        val buf = java.nio.file.Files.readAllBytes(f.toPath)
-        if (memCapacity >= buf.length) {
-          // promote on hit (victim-cache behavior): the page moves
-          // tiers, releasing the disk entry + file so it isn't counted
-          // against both budgets
-          removeDisk(k)
-          f.delete()
-          putMem(k, buf)
+  def read(k: PageKey, inPage: Int, dst: Array[Byte], dstOff: Int, len: Int): Boolean =
+    synchronized {
+      val m = mem.get(k)
+      if (m != null) { m.copyTo(inPage, dst, dstOff, len); true }
+      else if (disk.containsKey(k)) {
+        val f = diskFile(k)
+        if (!f.exists()) { removeDisk(k); false }
+        else {
+          val ch = FileChannel.open(f.toPath, READ)
+          val promoted =
+            try {
+              val size = ch.size()
+              if (memCapacity >= size) {
+                val ref = PageRef.load(ch, size.toInt, pool)
+                ref.copyTo(inPage, dst, dstOff, len)
+                ref
+              } else {
+                // memory tier can't hold a page at all — serve from disk
+                // in place (promoting would just spill straight back,
+                // rewriting the same file on every hit)
+                PageRef.readFully(ch, ByteBuffer.wrap(dst, dstOff, len), inPage.toLong)
+                null
+              }
+            } finally ch.close()
+          if (promoted != null) {
+            // promote on hit (victim-cache behavior): the page moves
+            // tiers, releasing the disk entry + file so it isn't counted
+            // against both budgets
+            removeDisk(k)
+            f.delete()
+            putMem(k, promoted)
+          }
+          true
         }
-        // else: memory tier can't hold a page at all — serve from disk
-        // in place (promoting would just spill straight back, rewriting
-        // the same file on every hit)
-        Some(buf)
-      }
-    } else None
+      } else false
+    }
+
+  def get(k: PageKey): Option[Array[Byte]] = synchronized {
+    // disk length from the file, not `disk.get`: that would reorder the
+    // disk tier's LRU, which `read` never does
+    val m = mem.get(k)
+    val len =
+      if (m != null) m.length
+      else if (disk.containsKey(k)) diskFile(k).length.toInt
+      else -1
+    if (len < 0) None
+    else {
+      val a = new Array[Byte](len)
+      if (read(k, 0, a, 0, len)) Some(a) else None
+    }
   }
 
   def contains(k: PageKey): Boolean = synchronized {
@@ -160,37 +212,37 @@ private final class PageShard(memCapacity: Long, diskCapacity: Long,
 
   /** Insert unless present (the reference dedups via maybeExists under a
     * lock — same key implies same bytes by construction). */
-  def put(k: PageKey, data: Array[Byte]): Unit = synchronized {
+  def put(k: PageKey, src: Array[Byte], off: Int, len: Int): Unit = synchronized {
     if (!mem.containsKey(k) && !disk.containsKey(k)) {
-      putMem(k, data)
+      putMem(k, PageRef.copyOf(src, off, len, pool))
       stats.pagesPut.incrementAndGet()
     }
   }
 
-  private def putMem(k: PageKey, data: Array[Byte]): Unit = {
-    mem.put(k, PageRef.store(data, pool))
-    memBytes += data.length
+  private def putMem(k: PageKey, page: PageRef): Unit = {
+    mem.put(k, page)
+    memBytes += page.length
     while (memBytes > memCapacity && !mem.isEmpty) {
       val it = mem.entrySet().iterator()
       val eldest = it.next()
       it.remove()
       memBytes -= eldest.getValue.length
-      // copy out BEFORE release: the disk write must not read a segment
+      // write out BEFORE release: the disk write must not read a segment
       // already recycled to a concurrent put (same lock today, but the
       // order is the invariant worth keeping obvious)
-      spillToDisk(eldest.getKey, eldest.getValue.bytes)
+      spillToDisk(eldest.getKey, eldest.getValue)
       eldest.getValue.release()
     }
   }
 
-  private def spillToDisk(k: PageKey, data: Array[Byte]): Unit = {
+  private def spillToDisk(k: PageKey, page: PageRef): Unit = {
     if (diskCapacity <= 0) return
     if (!disk.containsKey(k)) {
       val f = diskFile(k)
-      val out = new FileOutputStream(f)
-      try out.write(data) finally out.close()
-      disk.put(k, data.length.toLong)
-      diskBytes += data.length
+      val ch = FileChannel.open(f.toPath, CREATE, WRITE, TRUNCATE_EXISTING)
+      try page.writeTo(ch) finally ch.close()
+      disk.put(k, page.length.toLong)
+      diskBytes += page.length
       stats.pagesEvictedToDisk.incrementAndGet()
       while (diskBytes > diskCapacity && !disk.isEmpty) {
         val it = disk.entrySet().iterator()
@@ -230,7 +282,7 @@ private final class PageShard(memCapacity: Long, diskCapacity: Long,
     * the cache they belong to. */
   def spillAllAndIndex(): Seq[(PageKey, Long)] = synchronized {
     mem.entrySet().asScala.toSeq.foreach { e =>
-      spillToDisk(e.getKey, e.getValue.bytes)
+      spillToDisk(e.getKey, e.getValue)
       e.getValue.release()
     }
     mem.clear(); memBytes = 0

@@ -158,6 +158,38 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s.bytesFromRemote.get)
   }
 
+  test("per-tier byte counters add up to bytesRead across all four tiers") {
+    val fs = newFs("sum")
+    val p = graftPath("sum.bin")
+    val len = FileSz + 777 // short tail page
+    writeFile(fs, p, len, 12)
+    val buf = new Array[Byte](len)
+    def readAll(): Unit = {
+      val in = fs.open(p)
+      // page-sized steps: the first call of a span fetches it, the rest
+      // are served from the stream's prefetch buffer
+      (0 until len by PageSz).foreach { o =>
+        in.readFully(o.toLong, buf, o, math.min(PageSz, len - o))
+      }
+      in.close()
+      assert(buf.zipWithIndex.forall { case (b, i) => b == expectedByte(i, 12) })
+    }
+    readAll() // write cache + prefetch
+    readAll() // page cache: slice reads
+    fs.pageCacheRef.clear()
+    val wc = fs.writeCacheRef.get
+    wc.cacheFs.delete(wc.toCachePath(p), false)
+    readAll() // remote + prefetch
+    val s = fs.stats
+    Seq(s.bytesFromWriteCache, s.bytesFromPrefetch, s.bytesFromPageCache,
+      s.bytesFromRemote).foreach(c => assert(c.get > 0, s"a tier served nothing: $s"))
+    assert(s.bytesFromPageCache.get == len)
+    assert(s.bytesRead.get == 3L * len)
+    assert(s.bytesRead.get == s.bytesFromPageCache.get +
+      s.bytesFromPrefetch.get + s.bytesFromWriteCache.get +
+      s.bytesFromRemote.get)
+  }
+
   test("sequential scan is detected and pages stop being admitted") {
     val fs = newFs("t6", "graft.fs.scan.detector.threshold.pages" -> "4",
       "graft.fs.write.cache.enabled" -> "false")
