@@ -736,61 +736,17 @@ object CurationQueries {
 
   // The table-format MECHANICS (clustered writes, per-file stats,
   // atomic versioned commits, prune/stats-only planning, vacuum, CDC,
-  // deletion vectors) live in ONE place — graft.table.GraftTable. The
-  // helpers below are the operator surface's policy layers over it
-  // (q100/q105/q107 keep a single in-place manifest; q108/q110/q111 and
-  // the streaming ingest sink are snapshot-versioned) and keep their
-  // original signatures so the spec suites exercise the shared module.
+  // deletion vectors) live in ONE place — graft.table.GraftTable. Every
+  // query below is a commit or a read on one of its versioned tables.
   import graft.table.GraftTable
 
-  /** Write the clustered layout and its manifest; returns (dataDir, manifestDir). */
-  private[graft] def manifestLayout(s: SparkSession, dir: String): (String, String) = {
-    val out = RelationalQueries.scratch("q100_layout", dir)
-    val man = RelationalQueries.scratch("q100_manifest", dir)
-    GraftTable.clusteredWrite(
-      t(s, dir, "lineitem").select("l_orderkey", "l_quantity", "l_extendedprice"),
-      "l_orderkey", 16, "overwrite", out)
-    // the manifest is built from the written files' own footers (one
-    // O(#files) driver pass; the scan fallback stays for anything
-    // outside the provably-exact envelope) and persisted WITH the data
-    // — readers never touch the data to plan, and the WRITE is
-    // driver-side too (the Delta-log shape: committing O(#files)
-    // metadata must not schedule a Spark job)
-    GraftTable.writeManifestDf(s,
-      GraftTable.fileStats(s, Seq(out), "l_orderkey"), man, "overwrite")
-    (out, man)
-  }
-
-  /** The data files currently in a layout directory (names only; no
-    * data read — this is commit bookkeeping, not planning). */
-  private[graft] def partFiles(dir: String): Set[String] =
-    GraftTable.partFiles(dir)
-
-  /** Incremental manifest maintenance: append a new batch of rows as
-    * new files and extend the manifest with ONLY the new files' stats —
-    * the existing manifest entries are never rescanned (the Delta
-    * append-commit shape; rebuilding a 100 TB table's manifest per
-    * batch would cost a full scan). The new batch is clustered the same
-    * way so its boxes stay tight. */
-  private[graft] def manifestAppend(s: SparkSession, layout: (String, String),
-      batch: DataFrame): Unit = {
-    val (out, man) = layout
-    val before = partFiles(out)
-    GraftTable.clusteredWrite(batch, "l_orderkey", 4, "append", out)
-    // stats for ONLY the files this append created (identified by
-    // directory listing — no data read); existing entries untouched
-    val added = (partFiles(out) -- before).toSeq.map(n => s"$out/$n")
-    if (added.nonEmpty)
-      GraftTable.writeManifestDf(s,
-        GraftTable.fileStats(s, added, "l_orderkey"), man, "append")
-  }
-
-  /** Manifest read: the file list whose [lo, hi] box intersects [qlo, qhi],
-    * plus the total file count. O(#files) rows on the driver — this IS
-    * the manifest-planning step, not a data collect. */
-  private[graft] def manifestPrune(s: SparkSession, man: String,
-      qlo: Long, qhi: Long): (Seq[String], Int) =
-    GraftTable.pruneManifest(s, man, qlo, qhi)
+  /** q100/q106's table: lineitem range-clustered on l_orderkey into 16
+    * files, committed as v=1 with each file's key box. */
+  private[graft] def skipTable(s: SparkSession, dir: String): GraftTable =
+    GraftTable(s, RelationalQueries.scratch("q100_layout", dir),
+      RelationalQueries.scratch("q100_manifest", dir), "l_orderkey")
+      .create(t(s, dir, "lineitem")
+        .select("l_orderkey", "l_quantity", "l_extendedprice"), 16)
 
   // ---- 106. Stats-only (metadata-only) aggregation. A count over a
   // key range does not need to READ a file whose box lies entirely
@@ -802,17 +758,12 @@ object CurationQueries {
   // the covered terabytes. The split is driver-side O(#files) like all
   // manifest planning; ManifestSkipSpec asserts most files are
   // answered from stats alone and none are read twice. ----
-  /** (rows answered from stats alone, boundary files to scan, #covered files). */
-  private[graft] def statsOnlySplit(s: SparkSession, man: String,
-      qlo: Long, qhi: Long): (Long, Seq[String], Int) =
-    GraftTable.statsOnlySplit(s, man, qlo, qhi)
-
   val q106_stats_only_count: Q = (s, dir) => {
-    val (out, man) = manifestLayout(s, dir)
+    val tbl = skipTable(s, dir)
     val (statsRows, boundaryFiles, _) =
-      statsOnlySplit(s, man, SkipLo, SkipHi)
+      tbl.statsOnlySplit(1, SkipLo, SkipHi)
     val boundary =
-      if (boundaryFiles.isEmpty) s.read.parquet(out).where(lit(false))
+      if (boundaryFiles.isEmpty) s.read.parquet(tbl.data).where(lit(false))
       else s.read.parquet(boundaryFiles: _*)
     boundary.filter(col("l_orderkey").between(SkipLo, SkipHi))
       .agg((count(lit(1)) + lit(statsRows)).as("n_rows"))
@@ -823,10 +774,10 @@ object CurationQueries {
        |FROM lineitem WHERE l_orderkey BETWEEN $SkipLo AND $SkipHi""".stripMargin
 
   val q100_manifest_skip: Q = (s, dir) => {
-    val (out, man) = manifestLayout(s, dir)
-    val (kept, _) = manifestPrune(s, man, SkipLo, SkipHi)
+    val tbl = skipTable(s, dir)
+    val (kept, _) = tbl.prune(1, SkipLo, SkipHi)
     val src =
-      if (kept.isEmpty) s.read.parquet(out).where(lit(false))
+      if (kept.isEmpty) s.read.parquet(tbl.data).where(lit(false))
       else s.read.parquet(kept: _*)
     src.filter(col("l_orderkey").between(SkipLo, SkipHi))
       .agg(count(lit(1)).as("n_rows"),
@@ -841,69 +792,21 @@ object CurationQueries {
        |FROM lineitem WHERE l_orderkey BETWEEN $SkipLo AND $SkipHi""".stripMargin
 
   // ---- 105. Copy-on-write MERGE at file granularity. The Delta/
-  // Iceberg upsert shape on plain parquet: the manifest (q100) names
-  // the only files whose key boxes intersect the update batch's key
-  // range; ONLY those files are rewritten (read surviving rows, union
-  // the batch, write replacement files), every other file — at 100 TB,
-  // the overwhelming majority — is untouched bytes. The manifest then
-  // drops the replaced entries and appends the new files' stats, so
-  // skipping keeps working after the merge. Batch keys join the
-  // impacted files' rows as a plain anti join (no broadcast hint — the
-  // batch is corpus-derived). CowMergeSpec asserts untouched files stay
-  // byte-identical, replaced files are gone, and the manifest matches
-  // the directory. ----
-  private[graft] def cowLayout(s: SparkSession, dir: String): (String, String) = {
-    val out = RelationalQueries.scratch("q105_layout", dir)
-    val man = RelationalQueries.scratch("q105_manifest", dir)
-    GraftTable.clusteredWrite(
-      t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
-      "o_orderkey", 8, "overwrite", out)
-    GraftTable.writeManifestDf(s,
-      GraftTable.fileStats(s, Seq(out), "o_orderkey"), man, "overwrite")
-    (out, man)
-  }
-
-  /** Upsert `batch` (same schema as the layout, unique `key`) into the
-    * layout, rewriting only manifest-impacted files. This is the
-    * IN-PLACE policy (replaced files deleted at commit, one manifest) —
-    * the snapshot-isolated variant is commitMerge below. */
-  private[graft] def cowMerge(s: SparkSession, layout: (String, String),
-      batch: DataFrame, key: String): Unit = {
-    val (out, man) = layout
-    // planning: the batch's key envelope (one small agg), then the
-    // manifest names the files that can hold matching keys
-    val env = batch.agg(min(key), max(key)).head
-    val (impacted, _) =
-      manifestPrune(s, man, env.getLong(0), env.getLong(1))
-    val before = partFiles(out)
-    // survivors = impacted rows whose key is NOT updated; plain anti
-    // join (batch scales with the corpus — no hint, AQE decides)
-    val replacement =
-      (if (impacted.isEmpty) batch.limit(0)
-       else s.read.parquet(impacted: _*)
-         .join(batch.select(key).distinct(), Seq(key), "left_anti"))
-        .unionByName(batch)
-    GraftTable.clusteredWrite(replacement, key, 2, "append", out)
-    val added = (partFiles(out) -- before).toSeq.map(n => s"$out/$n")
-    // swap: drop the replaced files, then swap the manifest entries.
-    // The manifest is O(#files) and driver-resident by design, so the
-    // entry edit is a collect + rewrite (the Delta log-compaction shape).
-    impacted.foreach { p => // FS-resolved, like every table-layer path op
-      val path = new org.apache.hadoop.fs.Path(p)
-      require(path.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(path, false), s"could not remove replaced file $path")
-    }
-    val keptEntries = GraftTable.readManifestRows(s, man)._1
-      .filterNot(r => impacted.contains(r.getAs[String]("file")))
-    val addedStats = GraftTable.fileStats(s, added, key).collect().toSeq
-    import scala.jdk.CollectionConverters._
-    GraftTable.writeManifestDf(s,
-      s.createDataFrame((keptEntries ++ addedStats).asJava,
-        GraftTable.manifestSchema), man, "overwrite")
-  }
-
+  // Iceberg upsert shape: the manifest (q100) names the only files
+  // whose key boxes intersect the update batch's key range; ONLY those
+  // files are rewritten (read surviving rows, union the batch, write
+  // replacement files), every other file — at 100 TB, the overwhelming
+  // majority — is untouched bytes. The new version drops the replaced
+  // entries and adds the new files' stats, so skipping keeps working
+  // after the merge; the replaced files stay on disk for time travel
+  // until vacuum, so the result is read from the snapshot, never from
+  // the directory. Batch keys join the impacted files' rows as a plain
+  // anti join (no broadcast hint — the batch is corpus-derived).
+  // CowMergeSpec asserts untouched files stay byte-identical, replaced
+  // files leave the manifest and v=1 still reads the pre-merge rows. ----
   val q105_cow_merge: Q = (s, dir) => {
-    val (out, man) = cowLayout(s, dir)
+    val (out, man) = versionedLayout(s, dir, "q105")
+    val tbl = GraftTable(s, out, man, "o_orderkey")
     val o = t(s, dir, "orders")
     val updates = o.filter(col("o_orderkey").between(1000, 3000))
       .select(col("o_orderkey"), col("o_custkey"),
@@ -911,8 +814,8 @@ object CurationQueries {
     val inserts = o.filter(col("o_orderkey").between(1, 5))
       .select((-col("o_orderkey")).as("o_orderkey"), col("o_custkey"),
         col("o_totalprice"))
-    cowMerge(s, (out, man), updates.unionByName(inserts), "o_orderkey")
-    s.read.parquet(out)
+    tbl.commitMerge(updates.unionByName(inserts), 1)
+    tbl.readAsOf(2)
       .agg(count(lit(1)).as("n_rows"),
         dround(sum("o_totalprice"), 2).as("total"),
         min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
@@ -937,51 +840,23 @@ object CurationQueries {
   // complement of q105's copy-on-write: a delete whose matches are
   // SCATTERED across files (here every 7th key) would force COW to
   // rewrite essentially every file. Merge-on-read instead writes NO
-  // data bytes at all — it records (file, row position) pairs in a
-  // deletion-vector table (the Iceberg v2 position-delete shape; the
-  // positions come from parquet's `_metadata.row_index`, so the DV is
-  // stable as long as the file is, which the layout guarantees). The
-  // reader anti-joins the DV on (file, pos): both sides co-partition on
-  // the same key, the DV side is O(#deletes), no hint — AQE broadcasts
-  // it while it is small. Compaction later applies the DVs to ONLY the
-  // files they name and clears them — deletes are batched into one
-  // rewrite instead of one rewrite per delete. MorDeleteSpec asserts
-  // the delete leaves every data file byte-identical, the MOR read
-  // equals the filtered restatement, and compaction converges. ----
-  private[graft] def morLayout(s: SparkSession, dir: String): (String, String) = {
-    val out = RelationalQueries.scratch("q107_layout", dir)
-    val dv = RelationalQueries.scratch("q107_dv", dir)
-    GraftTable.clusteredWrite(
-      t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
-      "o_orderkey", 8, "overwrite", out)
-    // start from an empty deletion-vector table (schema declared, so
-    // readers never special-case "no deletes yet")
-    GraftTable.dvInit(s, dv)
-    (out, dv)
-  }
-
-  /** DELETE WHERE pred, as position deletes: no data file is touched;
-    * the matching rows' (file, row_index) pairs append to the DV table. */
-  private[graft] def morDelete(s: SparkSession, layout: (String, String),
-      pred: Column): Unit =
-    GraftTable.dvDelete(s, layout._1, layout._2, pred)
-
-  /** Merge-on-read scan: live rows = data ANTI JOIN dv ON (file, pos),
-    * with the anti join running over ONLY the DV-dirty files — DV-free
-    * files stream straight from the scan (GraftTable.dvRead). */
-  private[graft] def morRead(s: SparkSession, layout: (String, String)): DataFrame =
-    GraftTable.dvRead(s, layout._1, layout._2)
-
-  /** Apply accumulated DVs: rewrite ONLY the files the DV table names
-    * (survivor rows re-clustered), then clear the DVs. */
-  private[graft] def morCompact(s: SparkSession, layout: (String, String),
-      key: String): Unit =
-    GraftTable.dvCompact(s, layout._1, layout._2, key)
-
+  // data bytes at all — it records (file, row position) pairs in one
+  // deletion vector per commit (the Iceberg v2 position-delete shape;
+  // the positions come from parquet's `_metadata.row_index`, so the DV
+  // is stable as long as the file is) and points the masked entries at
+  // it. The reader anti-joins each DV-carrying file against its vector
+  // on (file, pos) — DV-free files stream straight from the scan; the
+  // DV side is O(#deletes), no hint — AQE broadcasts it while it is
+  // small. Compaction later folds the DVs into ONLY the files they
+  // name. MorTimeTravelSpec asserts the delete leaves every data file
+  // byte-identical, the MOR read equals the filtered restatement, and
+  // compaction rewrites only DV-carrying files. ----
   val q107_mor_delete: Q = (s, dir) => {
-    val layout = morLayout(s, dir)
-    morDelete(s, layout, col("o_orderkey") % 7 === 3)
-    morRead(s, layout)
+    val (out, man) = versionedLayout(s, dir, "q107")
+    val tbl = GraftTable(s, out, man, "o_orderkey")
+    // no key range to plan on: every file is scanned for matches
+    tbl.commitDeleteMor(Nil, col("o_orderkey") % 7 === 3, 1)
+    tbl.readAsOf(2)
       .agg(count(lit(1)).as("n_rows"),
         dround(sum("o_totalprice"), 2).as("total"),
         min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
@@ -1057,10 +932,9 @@ object CurationQueries {
       |)
       |ORDER BY version""".stripMargin
 
-  // ---- 110. Snapshot-isolated COW merge + VACUUM. q105's merge
-  // deletes replaced files at commit time, which kills time travel
-  // across the merge. The snapshot-isolated form NEVER deletes at
-  // commit: the new manifest version simply stops referencing the
+  // ---- 110. Snapshot-isolated COW merge + VACUUM. A merge NEVER
+  // deletes at commit (q105's merge included): the new manifest
+  // version simply stops referencing the
   // impacted files, so older versions keep reading their exact state
   // (writers and time-travel readers cannot race — a reader plans from
   // an immutable version). Storage is reclaimed by an explicit VACUUM:
@@ -1243,7 +1117,7 @@ object CurationQueries {
 
   /** Manifest planning for a point-lookup key set: (bloom-kept files,
     * min/max-kept files, total). Driver-resident O(#files), like
-    * manifestPrune. */
+    * [[GraftTable!.prune]]. */
   private[graft] def bloomPrune(s: SparkSession, man: String,
       keys: Seq[Long]): (Seq[String], Seq[String], Int) = {
     val rows = GraftTable.readManifestRows(s, man)._1
@@ -1339,24 +1213,22 @@ object CurationQueries {
   // O(#files) driver-resident; a file is skipped if ANY queried
   // dimension's box misses. ManifestSkipSpec asserts each dimension
   // prunes on its own and that the box-filtered read is exact. ----
-  private[graft] def multiColLayout(s: SparkSession, dir: String): (String, String) = {
-    val out = RelationalQueries.scratch("q112_layout", dir)
-    val man = RelationalQueries.scratch("q112_manifest", dir)
+  private[graft] def multiColTable(s: SparkSession, dir: String): GraftTable = {
     val li = t(s, dir, "lineitem")
       .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
-    zOrderedWrite(li, "l_orderkey", "l_partkey", nParts = 16, out)
-    GraftTable.writeManifestDf(s,
-      GraftTable.fileStatsMulti(s, Seq(out), Seq("l_orderkey", "l_partkey")),
-      man, "overwrite")
-    (out, man)
+    val tbl = GraftTable(s, RelationalQueries.scratch("q112_layout", dir),
+      RelationalQueries.scratch("q112_manifest", dir), "l_orderkey",
+      statsCols = Seq("l_partkey"))
+    tbl.createOver(li.schema)(
+      zOrderedWrite(li, "l_orderkey", "l_partkey", nParts = 16, tbl.data))
   }
 
   val q112_multicol_skip: Q = (s, dir) => {
-    val (out, man) = multiColLayout(s, dir)
-    val (kept, _) = GraftTable.pruneManifestMulti(s, man,
+    val tbl = multiColTable(s, dir)
+    val (kept, _) = tbl.pruneMulti(1,
       Seq(("l_orderkey", 100L, 2000L), ("l_partkey", 50L, 1500L)))
     val src =
-      if (kept.isEmpty) s.read.parquet(out).where(lit(false))
+      if (kept.isEmpty) s.read.parquet(tbl.data).where(lit(false))
       else s.read.parquet(kept: _*)
     src.filter(col("l_orderkey").between(100, 2000) &&
         col("l_partkey").between(50, 1500))

@@ -417,7 +417,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * current snapshot — adding a constraint the data already breaks
     * would make every future write fail), then records it in
     * `_table_props`; UNSET drops it (idempotent). Enforcement lives in
-    * every commit path's stats scan ([[GraftTable.fileStats]]).
+    * every commit path's stats scan ([[GraftTable!.fileStats]]).
     *
     * Every other TableChange is rejected loudly — narrowing/retyping
     * would make committed manifests lie about their files, and renames

@@ -4,14 +4,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The ONE implementation of the lakehouse-table mechanics that the
-  * operator surface exposes several policies over: q100 (file-skipping
-  * manifest), q105 (in-place COW merge), q106 (stats-only planning),
-  * q107 (MoR deletion vectors), q108 (time travel), q110
-  * (snapshot-isolated merge + vacuum), q111 (incremental CDC), q112
-  * (multi-column boxes) and the streaming ManifestIngestSink all build
-  * from these primitives — previously each re-implemented its own copy
-  * (VERDICT r7 #2 / r8 #6).
+/** The ONE table format behind the operator surface: q100
+  * (file-skipping manifest), q105 (COW merge), q106 (stats-only
+  * planning), q107 (MoR deletion vectors), q108 (time travel), q110
+  * (merge + vacuum), q111 (incremental CDC), q112 (multi-column boxes)
+  * and the streaming ManifestIngestSink are all commits and reads on a
+  * versioned table of this class.
   *
   * Scale contract, shared by every operation here:
   *  - DATA work (scans, stats aggregation, survivor anti-joins,
@@ -696,17 +694,25 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * invalidates every prior snapshot, so the old version history is
     * dropped — otherwise a stale committed v=1 would win the
     * atomic-commit race and reference the overwritten files. */
-  def create(df: DataFrame, nParts: Int): GraftTable = {
+  def create(df: DataFrame, nParts: Int): GraftTable =
+    createOver(df.schema)(clusteredWrite(df, nParts, "overwrite"))
+
+  /** [[create]] over a caller-written initial layout: `writeLayout`
+    * fills the data dir (overwrite) with files of `schema`, and v=1
+    * commits whatever it wrote — e.g. a z-ordered layout whose boxes
+    * are tight in every declared stats column (q112). */
+  private[graft] def createOver(
+      schema: org.apache.spark.sql.types.StructType)(
+      writeLayout: => Unit): GraftTable = {
     requireStoreCapability()
     checks.foreach { case (n, e) =>
-      GraftTable.validateCheck(spark, n, e, df.schema) }
-    clusteredWrite(df, nParts, "overwrite")
+      GraftTable.validateCheck(spark, n, e, schema) }
+    writeLayout
     val manDir = new Path(man)
     if (manFs.exists(manDir)) manFs.delete(manDir, true)
     manFs.mkdirs(manDir)
     writeProps()
-    commitManifest(fileStats(Seq(data)), 1,
-      schemaDdl = Some(df.schema.toDDL))
+    commitManifest(fileStats(Seq(data)), 1, schemaDdl = Some(schema.toDDL))
     this
   }
 
@@ -1585,6 +1591,14 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // per-file counts, and old counts are provably zero.
     val anyOldDv = hasDv &&
       impactedRows.exists(r => GraftTable.entryDvOf(r).isDefined)
+    if (!anyOldDv && maskedNew.isDefined && newCntPre.isDefined) {
+      // the DML callers' mask comes from ONE scan of the impacted files,
+      // so its (file, pos) pairs are already unique: it IS the combined
+      // vector and their per-file counts are its counts — no dedup pass
+      commitMorMaskedTail(prevMan, prevEntries, maskedNew, newCntPre.get,
+        Map.empty, stats, prevV, tag, schemaDdl, envGuard)
+      return
+    }
     if (!anyOldDv && maskedNew.isDefined) {
       val dvAll = maskedNew.get.distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2316,7 +2330,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * Returns the number of rows deleted; when the range holds none
     * (box intersection is conservative) NO version is burned — the
     * count scan is the only cost. For scattered non-range deletes use
-    * the MoR deletion vectors ([[GraftTable.dvDelete]]) instead.
+    * the MoR deletion vectors ([[commitDeleteMor]]) instead.
     * Snapshot-isolated; a lost commit race rebases mechanically when
     * the winner left every impacted file untouched
     * ([[commitCowRewrite]]), anything else fails loudly — never a
@@ -2930,7 +2944,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * for integral/timestamp/date keys (epoch micros / days — the box
     * representation), String for string keys. */
   def prune(v: Int, qlo: Any, qhi: Any): (Seq[String], Int) =
-    GraftTable.pruneManifest(spark, manifestPath(v), qlo, qhi)
+    pruneMulti(v, Seq((key, qlo, qhi)))
 
   /** Multi-column min/max skipping against version v's manifest: keep
     * the files whose box intersects EVERY queried column's range. The
@@ -2994,9 +3008,23 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     (kept, rows.length)
   }
 
-  /** Metadata-only split against version v's manifest. */
-  def statsOnlySplit(v: Int, qlo: Any, qhi: Any): (Long, Seq[String], Int) =
-    GraftTable.statsOnlySplit(spark, manifestPath(v), qlo, qhi)
+  /** Metadata-only split against version v's manifest: a file whose
+    * key box lies fully inside [qlo, qhi] is answered from its n_rows
+    * stat without being read; only boundary files are scanned. A NULL
+    * box is never "fully inside" — it scans. Returns (rows answered
+    * from stats, boundary files to scan, #covered files). */
+  def statsOnlySplit(v: Int, qlo: Any, qhi: Any): (Long, Seq[String], Int) = {
+    val (covered, boundary) = manifest(v).collect()
+      .filter(GraftTable.boxIntersects(_, "lo", "hi", qlo, qhi))
+      .partition { r => // a STORED box is only ever wider than the
+        // true one, so fully-inside on it is stricter than the truth
+        val lo = r.getAs[Any]("lo"); val hi = r.getAs[Any]("hi")
+        lo != null && hi != null &&
+          GraftTable.boxCmp(lo, qlo) >= 0 && GraftTable.boxCmp(hi, qhi) <= 0
+      }
+    (covered.map(_.getAs[Number]("n_rows").longValue).sum,
+      boundary.map(_.getAs[String]("file")).toSeq, covered.length)
+  }
 
   /** VACUUM: drop manifest versions below `keepFrom`, then delete every
     * data file referenced by NO retained version (plus crashed `_tmp_*`
@@ -4088,8 +4116,8 @@ object GraftTable {
   }
 
   /** Range-cluster `df` on `key` and write to `path` — the shared
-    * physical-layout primitive (single-manifest q100/q105/q107 policies
-    * use it directly; versioned tables via the instance method). */
+    * physical-layout primitive behind [[GraftTable!.clusteredWrite]]
+    * and every staged commit write. */
   def clusteredWrite(df: DataFrame, key: String, nParts: Int, mode: String,
       path: String): Unit = {
     // Single-partition writes need no range bounds: a round-robin
@@ -4129,21 +4157,6 @@ object GraftTable {
       .sortWithinPartitions(key)
       .write.mode(mode).parquet(path)
     finally { mat.foreach(_.unpersist(blocking = false)); () }
-  }
-
-  /** The key must be INTEGRAL: lo/hi are stored as long (the
-    * manifestSchema type), and a lossy cast — a timestamp truncating to
-    * epoch seconds, a double flooring — would make the boxes
-    * non-conservative, silently skipping files that hold matching
-    * rows. Rejected loudly instead. */
-  private[table] def requireIntegral(df: DataFrame, c: String): Unit = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val dt = df.schema(c).dataType
-    require(dt == ByteType || dt == ShortType || dt == IntegerType ||
-      dt == LongType,
-      s"manifest stats require an integral column (lo/hi are stored " +
-        s"as long; a lossy cast would make skipping non-conservative); " +
-        s"got $dt for '$c'")
   }
 
   /** A z-order dimension's ordered-numeric embedding (double space) —
@@ -4207,253 +4220,6 @@ object GraftTable {
       case other => true // unknown probe type: conservative keep
     })
 
-  /** Per-file (file, lo, hi, n_rows, bytes) stats over `files`, from
-    * the parquet FOOTERS when provably exact (the same Delta/Iceberg
-    * shape as the instance fast path — the writer already recorded
-    * min/max/row-count, so re-reading every written byte to recompute
-    * them is a pure waste at any scale), else ONE distributed
-    * partial-agg scan of exactly those files (sizes from
-    * `_metadata.file_size` — no FS stat calls). The single-manifest
-    * policy layers (q100/q105/q107) use this directly; versioned
-    * tables use the instance [[GraftTable.fileStats]], which also
-    * records declared extra stats columns and enforces the
-    * non-null-key contract. */
-  def fileStats(spark: SparkSession, files: Seq[String],
-      key: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField,
-      StructType}
-    footerStatsIntegral(spark, files, Seq(key)).foreach { aggs =>
-      import scala.jdk.CollectionConverters._
-      val rows = aggs.map { a =>
-        Row(a.file, a.lo(key), a.hi(key),
-          java.lang.Long.valueOf(a.nRows), java.lang.Long.valueOf(a.bytes))
-      }
-      return spark.createDataFrame(rows.toList.asJava, StructType(Seq(
-        StructField("file", StringType), StructField("lo", LongType),
-        StructField("hi", LongType), StructField("n_rows", LongType),
-        StructField("bytes", LongType))))
-    }
-    val df = spark.read.parquet(files: _*)
-    requireIntegral(df, key)
-    df.groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(key).cast("long").as("lo"), max(key).cast("long").as("hi"),
-        count(lit(1)).as("n_rows"),
-        max(col("_metadata.file_size")).as("bytes"))
-  }
-
-  /** Per-file stats over SEVERAL columns:
-    * (file, n_rows, lo_<c1>, hi_<c1>, lo_<c2>, hi_<c2>, ...). A
-    * multi-column manifest prunes on ANY of the recorded columns —
-    * pair it with a z-order layout (q81) so the per-file boxes are
-    * tight in every recorded dimension, not just the sort key's.
-    * (The q112 standalone shape; versioned tables get the same
-    * capability from `statsCols` on the mainline commit path.) Footer
-    * fast path like [[fileStats]]. */
-  def fileStatsMulti(spark: SparkSession, files: Seq[String],
-      keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField,
-      StructType}
-    footerStatsIntegral(spark, files, keys).foreach { aggs =>
-      import scala.jdk.CollectionConverters._
-      val rows = aggs.map { a =>
-        Row.fromSeq(a.file +: java.lang.Long.valueOf(a.nRows) +:
-          keys.flatMap(k => Seq(a.lo(k), a.hi(k))))
-      }
-      return spark.createDataFrame(rows.toList.asJava, StructType(
-        StructField("file", StringType) +:
-          StructField("n_rows", LongType) +:
-          keys.flatMap(k => Seq(StructField(s"lo_$k", LongType),
-            StructField(s"hi_$k", LongType)))))
-    }
-    val df = spark.read.parquet(files: _*)
-    keys.foreach(requireIntegral(df, _)) // same contract, enforced at build
-    val aggs = keys.flatMap(k =>
-      Seq(min(k).cast("long").as(s"lo_$k"), max(k).cast("long").as(s"hi_$k")))
-    df.groupBy(col("_metadata.file_path").as("file"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
-  }
-
-  /** One decoded file for the STATIC footer fast path: qualified path
-    * (same string `_metadata.file_path` yields), total rows, size, and
-    * per-key lo/hi as boxed Longs (null = all-NULL column, matching
-    * `min(k)` over it). */
-  private[table] final case class IntegralFileAgg(file: String,
-    nRows: Long, bytes: Long,
-    lo: Map[String, java.lang.Long], hi: Map[String, java.lang.Long])
-
-  /** Footer decode behind the static [[fileStats]]/[[fileStatsMulti]]:
-    * per-file row counts, sizes and SIGNED-integral key boxes read from
-    * the chunk statistics the parquet writer recorded — O(#files)
-    * driver-side planning instead of a distributed re-read of every
-    * newly written byte. None (fall back to the scan) unless every
-    * file is provably exact: each key a primitive INT32/INT64 whose
-    * annotation is absent or a SIGNED int of its width (an UNSIGNED
-    * annotation decodes differently in Spark — UINT32 reads as long —
-    * so it falls back rather than assume; byte/short land as INT32
-    * with int(8/16, signed) and decode exactly like the scan's
-    * `min(k).cast("long")`), statistics present with numNulls set.
-    * A 0-row file yields no entry (scan parity: groupBy emits no
-    * group); all-0-row batches and files missing a key column fall
-    * back so the scan derives the shape (or fails loudly — the
-    * requireIntegral contract). Gated by the same conf as the
-    * instance path. Value parity is locked by FooterStatsSpec. */
-  private def footerStatsIntegral(spark: SparkSession, files: Seq[String],
-      keys: Seq[String]): Option[Seq[IntegralFileAgg]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Try
-
-    if (!spark.conf.get("spark.graft.stats.fromFooters", "true").toBoolean)
-      return None
-    val hconf = spark.sessionState.newHadoopConf()
-    // expand directory args (the layout builders stat the whole dir)
-    val sts: Seq[FileStatus] = files.flatMap { f =>
-      val p = new Path(f)
-      val fs = p.getFileSystem(hconf)
-      val st =
-        try fs.getFileStatus(p)
-        catch { case _: java.io.IOException => return None }
-      if (st.isFile) Seq(st)
-      else listStatusSafe(fs, p).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !n.startsWith(".")
-      }.toSeq
-    }
-    if (sts.isEmpty) return None
-    // the exact envelope: INT32/INT64, unannotated or signed int of the
-    // width — the requireIntegral type family and nothing else
-    def integral(p: org.apache.parquet.schema.PrimitiveType): Boolean =
-      p.getPrimitiveTypeName match {
-        case INT32 => p.getLogicalTypeAnnotation match {
-          case null => true
-          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-            i.isSigned && i.getBitWidth <= 32
-          case _ => false // date/decimal etc: scan path rejects loudly
-        }
-        case INT64 => p.getLogicalTypeAnnotation match {
-          case null => true
-          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-            i.isSigned && i.getBitWidth == 64
-          case _ => false // timestamp etc: scan path rejects loudly
-        }
-        case _ => false
-      }
-    def decodeFile(st: FileStatus): Option[Option[IntegralFileAgg]] =
-      Try[Option[Option[IntegralFileAgg]]] {
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(st.getPath, hconf))
-        try {
-          val msg = reader.getFooter.getFileMetaData.getSchema
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val nRows = blocks.map(_.getRowCount).sum
-          if (nRows == 0) Some(None) // legal 0-row file: no entry
-          else if (keys.exists(k => !msg.containsField(k) ||
-              !msg.getType(msg.getFieldIndex(k)).isPrimitive ||
-              !integral(msg.getType(msg.getFieldIndex(k))
-                .asPrimitiveType()))) None
-          else {
-            var lo = Map.empty[String, java.lang.Long]
-            var hi = Map.empty[String, java.lang.Long]
-            var ok = true
-            blocks.foreach { b =>
-              val byCol = b.getColumns.asScala
-                .map(cc => cc.getPath.toDotString -> cc).toMap
-              keys.foreach { k =>
-                if (ok) {
-                  val stats = byCol.get(k).map(_.getStatistics).orNull
-                  if (stats == null || stats.isEmpty ||
-                      !stats.isNumNullsSet) ok = false
-                  else if (stats.hasNonNullValue) {
-                    val bounds: Option[(Long, Long)] =
-                      (stats.genericGetMin, stats.genericGetMax) match {
-                        case (a: java.lang.Integer, b: java.lang.Integer) =>
-                          Some((a.longValue, b.longValue))
-                        case (a: java.lang.Long, b: java.lang.Long) =>
-                          Some((a.longValue, b.longValue))
-                        case _ => None
-                      }
-                    bounds match {
-                      case Some((mn, mx)) =>
-                        val nl = lo.get(k).map(p => math.min(p.longValue, mn))
-                          .getOrElse(mn)
-                        val nh = hi.get(k).map(p => math.max(p.longValue, mx))
-                          .getOrElse(mx)
-                        lo = lo.updated(k, java.lang.Long.valueOf(nl))
-                        hi = hi.updated(k, java.lang.Long.valueOf(nh))
-                      case None => ok = false
-                    }
-                  }
-                }
-              }
-            }
-            if (!ok) None
-            else Some(Some(IntegralFileAgg(st.getPath.toString, nRows,
-              st.getLen,
-              keys.map(k => k -> lo.getOrElse(k, null)).toMap,
-              keys.map(k => k -> hi.getOrElse(k, null)).toMap)))
-          }
-        } finally reader.close()
-      }.toOption.flatten
-    val decoded: Seq[Option[Option[IntegralFileAgg]]] =
-      sts.toList.asJava.parallelStream()
-        .map[Option[Option[IntegralFileAgg]]](st => decodeFile(st))
-        .collect(java.util.stream.Collectors
-          .toList[Option[Option[IntegralFileAgg]]]).asScala.toSeq
-    if (decoded.exists(_.isEmpty)) return None // ineligible file: scan
-    val aggs = decoded.flatMap(_.get)
-    if (aggs.isEmpty) return None // all 0-row: scan derives the shape
-    Some(aggs)
-  }
-
-  /** Write `entries` to the manifest dir `man` DRIVER-side (the
-    * [[writeManifestRows]] shape — O(#files) planning work, no Spark
-    * job), falling back to the Spark write for schemas outside the
-    * flat-primitive manifest contract. `overwrite` clears the dir
-    * first; `append` adds a unique part (always driver-written when
-    * possible, so every part of a policy manifest carries the same
-    * all-optional footer schema — [[readManifestRows]] requires parts
-    * to agree). The policy layers' manifest-write counterpart of the
-    * versioned tables' [[GraftTable!.tryCommitManifest]] direct path. */
-  def writeManifestDf(spark: SparkSession, entries: DataFrame,
-      man: String, mode: String): Unit = {
-    require(mode == "overwrite" || mode == "append",
-      s"writeManifestDf mode must be overwrite or append; got '$mode'")
-    val p = new Path(man)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    val rows = entries.collect().toIndexedSeq // local relation in the
-                                              // footer path: driver-only
-    if (mode == "overwrite" && fs.exists(p)) fs.delete(p, true)
-    // write through an underscore-hidden staging dir and move the part
-    // in: a HALF-written part must never land in a live manifest dir
-    // (an append after a direct-write crash would otherwise leave a
-    // corrupt part next to good ones)
-    val stage = new Path(man +
-      s"_stage_${java.util.UUID.randomUUID().toString.take(8)}")
-    val wrote =
-      try writeManifestRows(rows, entries.schema, stage, conf)
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (wrote) {
-      fs.mkdirs(p)
-      listStatusSafe(fs, stage)
-        .filter(_.getPath.getName.startsWith("part-")).foreach { st =>
-          require(fs.rename(st.getPath, new Path(p, st.getPath.getName)),
-            s"could not move staged manifest part ${st.getPath} into $man")
-        }
-      fs.delete(stage, true)
-      ()
-    } else {
-      fs.delete(stage, true)
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, entries.schema)
-        .coalesce(1).write.mode(mode).parquet(man)
-    }
-  }
-
   /** Conservative box test: a NULL box (all-NULL column in that file —
     * legal for non-key stats columns; a truncation-overflowed string
     * hi) can rule nothing out, so the file is kept. Bounds are Long for
@@ -4465,151 +4231,11 @@ object GraftTable {
       (boxCmp(hi, qlo) >= 0 && boxCmp(lo, qhi) <= 0)
   }
 
-  /** Multi-column min/max skipping: keep the files whose box intersects
-    * EVERY queried column's range (a file can be skipped if ANY
-    * dimension rules it out). Same O(#files) driver-side planning as
-    * the single-column prune. */
-  def pruneManifestMulti(spark: SparkSession, manPath: String,
-      preds: Seq[(String, Long, Long)]): (Seq[String], Int) = {
-    val rows = readManifestRows(spark, manPath)._1
-    val kept = rows.filter { r =>
-      preds.forall { case (c, qlo, qhi) =>
-        boxIntersects(r, s"lo_$c", s"hi_$c", qlo, qhi)
-      }
-    }.map(_.getAs[String]("file")).toSeq
-    (kept, rows.length)
-  }
-
-  /** Data files in a layout dir (names only, no data read). */
-  def partFiles(dir: String): Set[String] = {
-    if (dir.isEmpty) return Set.empty
-    val p = new Path(dir)
-    val fs = p.getFileSystem(
-      SparkSession.active.sessionState.newHadoopConf())
-    listStatusSafe(fs, p)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .map(_.getPath.getName).toSet
-  }
-
-  /** Min/max skipping over an arbitrary manifest path: the file list
-    * whose [lo, hi] box intersects [qlo, qhi], plus the total file
-    * count. O(#files) rows on the driver — this IS the planning step,
-    * not a data collect. */
-  def pruneManifest(spark: SparkSession, manPath: String,
-      qlo: Any, qhi: Any): (Seq[String], Int) = {
-    val rows = readManifestRows(spark, manPath)._1
-    val kept = rows.filter(boxIntersects(_, "lo", "hi", qlo, qhi))
-      .map(_.getAs[String]("file")).toSeq
-    (kept, rows.length)
-  }
-
-  /** Metadata-only split: a file whose box lies fully inside [qlo, qhi]
-    * is answered from its n_rows stat without being read; only boundary
-    * files are scanned. A NULL box is never "fully inside" — it scans.
-    * Returns (rows answered from stats, boundary files to scan,
-    * #covered files). */
-  def statsOnlySplit(spark: SparkSession, manPath: String,
-      qlo: Any, qhi: Any): (Long, Seq[String], Int) = {
-    val rows = readManifestRows(spark, manPath)._1
-    val (covered, boundary) = rows
-      .filter(boxIntersects(_, "lo", "hi", qlo, qhi)) // intersecting only
-      .partition { r => // fully inside: stats answer, no read — and a
-        // STORED box is only ever wider than the true one, so
-        // fully-inside on it is stricter than the truth: conservative
-        val lo = r.getAs[Any]("lo"); val hi = r.getAs[Any]("hi")
-        lo != null && hi != null &&
-          boxCmp(lo, qlo) >= 0 && boxCmp(hi, qhi) <= 0
-      }
-    (covered.map(_.getAs[Number]("n_rows").longValue).sum,
-      boundary.map(_.getAs[String]("file")).toSeq, covered.length)
-  }
-
-  // ---- merge-on-read deletion vectors ------------------------------
-  // The complement of COW for scattered deletes: no data bytes are
-  // written — (file, row-position) pairs append to a DV side table
-  // (the Iceberg v2 position-delete shape; positions come from
-  // parquet's `_metadata.row_index`, stable as long as the file is).
-
+  /** A deletion vector's (file, row-position) schema — the Iceberg v2
+    * position-delete shape. Positions come from parquet's
+    * `_metadata.row_index`, stable as long as the file is; each MoR
+    * commit writes one vector and the manifest's `dv` column points
+    * each masked entry at it. */
   val dvSchema: StructType = StructType(Seq(
     StructField("file", StringType), StructField("pos", LongType)))
-
-  /** The empty DV table is O(0) metadata — written driver-side (the
-    * manifest-write shape), never as a Spark job. */
-  def dvInit(spark: SparkSession, dv: String): Unit = {
-    val p = new Path(dv)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) fs.delete(p, true)
-    if (!writeManifestRows(Nil, dvSchema, p, conf))
-      spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), dvSchema)
-        .write.mode("overwrite").parquet(dv)
-  }
-
-  /** DELETE WHERE pred as position deletes — no data file is touched. */
-  def dvDelete(spark: SparkSession, data: String, dv: String,
-      pred: Column): Unit =
-    spark.read.parquet(data)
-      .filter(pred)
-      .select(col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("pos"))
-      .write.mode("append").parquet(dv)
-
-  /** DV-table scan with the DECLARED schema — the (file, pos) shape is
-    * fixed, so inferring it back from footers would burn a
-    * schema-inference job per read for nothing. */
-  private def dvScan(spark: SparkSession, dv: String): DataFrame =
-    spark.read.schema(dvSchema).parquet(dv)
-
-  /** MoR scan: live rows = data ANTI JOIN dv ON (file, pos) — but the
-    * anti join runs over ONLY the files the DV table actually names;
-    * DV-free files (at 100 TB, the overwhelming majority after a
-    * targeted delete) stream straight from the scan with no join work
-    * at all. The DV side is O(#deletes), unhinted — AQE broadcasts it
-    * while it is small. */
-  def dvRead(spark: SparkSession, data: String, dv: String): DataFrame = {
-    val dvDf = dvScan(spark, dv)
-    // O(#files-with-deletes) driver list — planning, like manifest reads
-    val dirty = dvDf.select("file").distinct().collect()
-      .map(_.getString(0)).toSeq
-    val all = spark.read.parquet(data)
-    if (dirty.isEmpty) all
-    else {
-      val clean = all.filter(!col("_metadata.file_path").isin(dirty: _*))
-      val scrubbed = spark.read.parquet(dirty: _*)
-        .withColumn("file", col("_metadata.file_path"))
-        .withColumn("pos", col("_metadata.row_index"))
-        .join(dvDf, Seq("file", "pos"), "left_anti")
-        .drop("file", "pos")
-      clean.unionByName(scrubbed)
-    }
-  }
-
-  /** Apply accumulated DVs: rewrite ONLY the files the DV table names
-    * (survivors re-clustered on `key`), then clear the DVs — deletes
-    * are batched into one rewrite instead of one rewrite per delete. */
-  def dvCompact(spark: SparkSession, data: String, dv: String,
-      key: String): Unit = {
-    val dvDf = dvScan(spark, dv)
-    val impacted = dvDf.select("file").distinct().collect()
-      .map(_.getString(0)).toSeq
-    if (impacted.nonEmpty) {
-      val before = partFiles(data)
-      clusteredWrite(
-        spark.read.parquet(impacted: _*)
-          .withColumn("file", col("_metadata.file_path"))
-          .withColumn("pos", col("_metadata.row_index"))
-          .join(dvDf, Seq("file", "pos"), "left_anti")
-          .drop("file", "pos"),
-        key, 2, "append", data)
-      require(partFiles(data) != before, "compaction wrote no survivors")
-      val conf = spark.sessionState.newHadoopConf()
-      impacted.foreach { p =>
-        val path = new Path(p)
-        require(path.getFileSystem(conf).delete(path, false),
-          s"could not remove compacted file $path")
-      }
-      dvInit(spark, dv) // reset to the declared-empty DV table
-    }
-  }
 }

@@ -3,8 +3,8 @@ package graft
 import graft.operators.CurationQueries
 import org.apache.spark.sql.functions._
 
-/** File-skipping manifest (q100): the min/max stats table written with
-  * the layout must let the reader skip whole files — and must never
+/** File-skipping manifest (q100): the min/max stats a table version
+  * records per file must let the reader skip whole files — and must never
   * skip a file that could hold a matching row. The second property is
   * what the DuckDB oracle proves (pruned read == full-scan filter);
   * this spec proves the first (files actually get skipped) plus the
@@ -12,11 +12,10 @@ import org.apache.spark.sql.functions._
   */
 class ManifestSkipSpec extends TestBase {
 
-  private lazy val layout = CurationQueries.manifestLayout(spark, sfDir)
+  private lazy val tbl = CurationQueries.skipTable(spark, sfDir)
 
   test("the query range keeps a strict subset of files") {
-    val (_, man) = layout
-    val (kept, total) = CurationQueries.manifestPrune(spark, man, 100L, 2000L)
+    val (kept, total) = tbl.prune(1, 100L, 2000L)
     assert(total >= 8, s"clustered layout produced only $total files")
     assert(kept.nonEmpty, "pruned everything — the range overlaps the data")
     assert(kept.size < total,
@@ -24,58 +23,58 @@ class ManifestSkipSpec extends TestBase {
   }
 
   test("pruned read equals the full-scan filter, row for row") {
-    val (out, man) = layout
-    val (kept, _) = CurationQueries.manifestPrune(spark, man, 100L, 2000L)
+    val (kept, _) = tbl.prune(1, 100L, 2000L)
     val pruned = spark.read.parquet(kept: _*)
       .filter(col("l_orderkey").between(100, 2000))
-    val full = spark.read.parquet(out)
+    val full = tbl.readAsOf(1)
       .filter(col("l_orderkey").between(100, 2000))
     assert(pruned.count() == full.count())
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
   }
 
   test("an empty-intersection range prunes to zero files") {
-    val (_, man) = layout
-    val (kept, _) = CurationQueries.manifestPrune(spark, man, -500L, -1L)
+    val (kept, _) = tbl.prune(1, -500L, -1L)
     assert(kept.isEmpty, s"kept $kept for a range below the domain")
   }
 
   test("incremental append extends the manifest without touching old entries") {
-    val (out, man) = layout
-    val manBefore = spark.read.parquet(man)
-      .collect().map(_.toSeq).toSet
-    val maxKey = spark.read.parquet(out)
-      .agg(max("l_orderkey")).head.getLong(0)
+    def manBytes(v: Int): Map[String, Seq[Byte]] = {
+      val d = new java.io.File(new java.net.URI(tbl.manifestPath(v)).getPath)
+      d.listFiles().map(f => f.getName ->
+        java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    val v1Bytes = manBytes(1)
+    val v1Entries = tbl.manifest(1).collect().map(_.toSeq).toSet
+    val maxKey = tbl.readAsOf(1).agg(max("l_orderkey")).head.getLong(0)
     // a batch entirely ABOVE the current key domain, so its files are
     // distinguishable in the manifest
     val batch = Tables.load(spark, sfDir, "lineitem")
       .select((col("l_orderkey") + maxKey + 1000L).as("l_orderkey"),
         col("l_quantity"), col("l_extendedprice"))
       .limit(5000)
-    CurationQueries.manifestAppend(spark, (out, man), batch)
-    val manAfter = spark.read.parquet(man).collect()
-    // old entries survive byte-identical; new entries exist and cover
-    // only the shifted key range
-    assert(manBefore.subsetOf(manAfter.map(_.toSeq).toSet))
-    val fresh = manAfter.map(_.toSeq).toSet -- manBefore
+    tbl.commitAppend(batch, 1, 4)
+    // v1's manifest is byte-identical; its entries carry into v2
+    // unchanged, and the new entries cover only the shifted key range
+    assert(manBytes(1) == v1Bytes, "v1's manifest changed by the append")
+    val v2Entries = tbl.manifest(2).collect().map(_.toSeq).toSet
+    assert(v1Entries.subsetOf(v2Entries))
+    val fresh = v2Entries -- v1Entries
     assert(fresh.nonEmpty)
     assert(fresh.forall(_(1).asInstanceOf[Long] > maxKey),
       s"new manifest entries leak into the old key range: $fresh")
     // a query in the new range prunes to new files only
-    val (kept, total) = CurationQueries.manifestPrune(
-      spark, man, maxKey + 1000L, maxKey + 2000L)
-    assert(total == manAfter.length)
+    val (kept, total) = tbl.prune(2, maxKey + 1000L, maxKey + 2000L)
+    assert(total == v2Entries.size)
     assert(kept.nonEmpty && kept.size < total)
   }
 
   test("stats-only count: covered files answered from the manifest, boundary files read") {
-    val (out, man) = layout
     val (statsRows, boundaryFiles, nCovered) =
-      CurationQueries.statsOnlySplit(spark, man, 100L, 2000L)
+      tbl.statsOnlySplit(1, 100L, 2000L)
     // the wide range fully covers most boxes — those are METADATA-only
     assert(nCovered > 0 && statsRows > 0,
       s"no file answered from stats alone (covered=$nCovered)")
-    val total = spark.read.parquet(man).count()
+    val total = tbl.manifest(1).count()
     assert(boundaryFiles.size < nCovered,
       s"boundary ${boundaryFiles.size} vs covered $nCovered of $total — " +
         "the stats-only path carries no weight on this fixture")
@@ -84,55 +83,53 @@ class ManifestSkipSpec extends TestBase {
       if (boundaryFiles.isEmpty) 0L
       else spark.read.parquet(boundaryFiles: _*)
         .filter(col("l_orderkey").between(100L, 2000L)).count()
-    val full = spark.read.parquet(out)
+    val full = tbl.readAsOf(1)
       .filter(col("l_orderkey").between(100L, 2000L)).count()
     assert(statsRows + boundaryCount == full,
       s"$statsRows (stats) + $boundaryCount (boundary) != $full")
   }
 
   test("multi-column boxes over the z-ordered layout prune on EITHER dimension") {
-    import graft.table.GraftTable
-    val (out, man) = CurationQueries.multiColLayout(spark, sfDir)
-    val total = spark.read.parquet(man).count().toInt
+    val t = CurationQueries.multiColTable(spark, sfDir)
+    val total = t.manifest(1).count().toInt
     assert(total >= 8, s"z-ordered layout produced only $total files")
     // each dimension must prune files ON ITS OWN — the property a
     // single-column manifest cannot offer (its files span the full
     // domain of every non-key column)
-    val okDomain = spark.read.parquet(out)
+    val okDomain = t.readAsOf(1)
       .agg(min("l_orderkey"), max("l_orderkey"),
         min("l_partkey"), max("l_partkey")).head
-    val (okOnly, _) = GraftTable.pruneManifestMulti(spark, man,
+    val (okOnly, _) = t.pruneMulti(1,
       Seq(("l_orderkey", okDomain.getLong(0), okDomain.getLong(0) + 100L)))
-    val (pkOnly, _) = GraftTable.pruneManifestMulti(spark, man,
+    val (pkOnly, _) = t.pruneMulti(1,
       Seq(("l_partkey", okDomain.getLong(2), okDomain.getLong(2) + 20L)))
     assert(okOnly.nonEmpty && okOnly.size < total,
       s"l_orderkey alone kept ${okOnly.size} of $total — no pruning")
     assert(pkOnly.nonEmpty && pkOnly.size < total,
       s"l_partkey alone kept ${pkOnly.size} of $total — no pruning")
     // both predicates together keep at most the intersection
-    val (both, _) = GraftTable.pruneManifestMulti(spark, man,
+    val (both, _) = t.pruneMulti(1,
       Seq(("l_orderkey", okDomain.getLong(0), okDomain.getLong(0) + 100L),
         ("l_partkey", okDomain.getLong(2), okDomain.getLong(2) + 20L)))
     assert(both.size <= math.min(okOnly.size, pkOnly.size))
     // no false skip: the pruned two-sided read equals the full filter
-    val (kept, _) = GraftTable.pruneManifestMulti(spark, man,
+    val (kept, _) = t.pruneMulti(1,
       Seq(("l_orderkey", 100L, 2000L), ("l_partkey", 50L, 1500L)))
     val pred = col("l_orderkey").between(100, 2000) &&
       col("l_partkey").between(50, 1500)
     val pruned =
-      (if (kept.isEmpty) spark.read.parquet(out).where(lit(false))
+      (if (kept.isEmpty) t.readAsOf(1).where(lit(false))
        else spark.read.parquet(kept: _*)).filter(pred)
-    val full = spark.read.parquet(out).filter(pred)
+    val full = t.readAsOf(1).filter(pred)
     assert(pruned.count() == full.count() && full.count() > 0)
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
   }
 
   test("a boundary-touching range keeps the boundary file (no false skip)") {
-    val (out, man) = layout
     // the global max key sits in exactly one file; a point query on it
     // must keep that file
-    val maxKey = spark.read.parquet(out).agg(max("l_orderkey")).head.getLong(0)
-    val (kept, total) = CurationQueries.manifestPrune(spark, man, maxKey, maxKey)
+    val maxKey = tbl.readAsOf(1).agg(max("l_orderkey")).head.getLong(0)
+    val (kept, total) = tbl.prune(1, maxKey, maxKey)
     assert(kept.nonEmpty && kept.size < total)
     val n = spark.read.parquet(kept: _*)
       .filter(col("l_orderkey") === maxKey).count()
@@ -288,5 +285,43 @@ class ManifestSkipSpec extends TestBase {
       GraftTable(spark, s"$root/data2", s"$root/man2", "amt").create(df, 2)
     }
     assert(e.getMessage.contains("cannot be the table KEY"), e.getMessage)
+  }
+
+  // ---- job-count ratchet -------------------------------------------
+
+  /** Spark jobs one declared query schedules end to end (its layout
+    * writes, commits, planning and the final aggregate), after one
+    * warm-up run. */
+  private def jobsOf(name: String): Int = {
+    val q = graft.SparkEntry.queries(name)
+    q(spark, sfDir).collect() // warm-up: classloading, codegen
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler
+          .SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    try {
+      q(spark, sfDir).collect()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("job-count ratchet: the table-format queries stay within their budgets") {
+    // ceilings = the counts these queries ran at on this fixture on
+    // their earlier single-manifest layouts; lower one when a query
+    // gets cheaper, never raise one to pass
+    val ceilings = Seq("q100_manifest_skip" -> 6, "q105_cow_merge" -> 15,
+      "q106_stats_only_count" -> 6, "q107_mor_delete" -> 12,
+      "q112_multicol_skip" -> 8)
+    val over = ceilings.flatMap { case (q, max) =>
+      val n = jobsOf(q)
+      info(s"$q: $n jobs (budget $max)")
+      if (n > max) Some(s"$q ran $n Spark jobs (budget $max)") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
   }
 }

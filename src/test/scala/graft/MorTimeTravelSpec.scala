@@ -5,10 +5,11 @@ import java.nio.file.Files
 import java.security.MessageDigest
 
 import graft.operators.CurationQueries
+import graft.table.GraftTable
 import org.apache.spark.sql.functions._
 
 /** q107's merge-on-read contract (a position delete writes NO data
-  * bytes; compaction rewrites only DV-named files) and q108's snapshot
+  * bytes; compaction rewrites only DV-carrying files) and q108's snapshot
   * contract (committed manifest versions are immutable; as-of reads
   * reproduce the snapshot exactly). */
 class MorTimeTravelSpec extends TestBase {
@@ -24,17 +25,38 @@ class MorTimeTravelSpec extends TestBase {
       }.toMap
   }
 
+  private def nameOf(p: String): String =
+    new File(new java.net.URI(p).getPath).getName
+
+  /** q107's table: orders over 8 clustered files, committed as v=1. */
+  private def morTable(tag: String): GraftTable = {
+    val (out, man) = CurationQueries.versionedLayout(spark, sfDir, tag)
+    GraftTable(spark, out, man, "o_orderkey")
+  }
+
+  /** DELETE WHERE o_orderkey BETWEEN 1 AND 200 as position deletes,
+    * planned on the key range: only the low-key files get a vector. */
+  private def rangeDelete(tbl: GraftTable): Long = {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+    tbl.commitDeleteMor(Seq(GreaterThanOrEqual("o_orderkey", 1L),
+      LessThanOrEqual("o_orderkey", 200L)),
+      col("o_orderkey").between(1, 200), 1)
+  }
+
   test("q107: a scattered delete touches zero data bytes; the MOR read is exact") {
-    val layout @ (out, dv) = CurationQueries.morLayout(spark, sfDir)
-    val before = md5s(out)
+    val tbl = morTable("q107spec")
+    val before = md5s(tbl.data)
     // every 7th key — scattered across ALL files, the COW worst case
-    CurationQueries.morDelete(spark, layout, col("o_orderkey") % 7 === 3)
-    assert(md5s(out) == before, "a position delete must not touch data files")
-    val dvRows = spark.read.parquet(dv).count()
+    val deleted = tbl.commitDeleteMor(Nil, col("o_orderkey") % 7 === 3, 1)
+    assert(md5s(tbl.data) == before, "a position delete must not touch data files")
     val expectDeleted = Tables.load(spark, sfDir, "orders")
       .filter(col("o_orderkey") % 7 === 3).count()
+    assert(deleted == expectDeleted, s"deleted $deleted != matches $expectDeleted")
+    val dvPaths = tbl.entryPairs(2).flatMap(_._2).distinct
+    val dvRows = spark.read.schema(GraftTable.dvSchema)
+      .parquet(dvPaths: _*).count()
     assert(dvRows == expectDeleted, s"DV rows $dvRows != matches $expectDeleted")
-    val got = CurationQueries.morRead(spark, layout)
+    val got = tbl.readAsOf(2)
       .agg(count(lit(1)), sum("o_totalprice")).head
     val want = Tables.load(spark, sfDir, "orders")
       .filter(col("o_orderkey") % 7 =!= 3)
@@ -48,26 +70,26 @@ class MorTimeTravelSpec extends TestBase {
     // majority of files carry no DVs and must stream straight from the
     // scan — paying the (file, pos) anti join for every row of a 100 TB
     // table to honor deletes in 1% of files is the regression this pins
-    val layout @ (out, dv) = CurationQueries.morLayout(spark, sfDir)
-    CurationQueries.morDelete(spark, layout, col("o_orderkey").between(1, 200))
-    val dirty = spark.read.parquet(dv).select("file").distinct().count().toInt
-    val total = CurationQueries.partFiles(out).size
-    assert(dirty > 0 && dirty < total,
-      s"precondition: delete must touch a strict subset ($dirty of $total)")
-    val df = CurationQueries.morRead(spark, layout)
+    val tbl = morTable("q107spec")
+    rangeDelete(tbl)
+    val dirty = tbl.entryPairs(2).collect { case (f, Some(_)) => nameOf(f) }
+      .toSet
+    val total = tbl.files(2).size
+    assert(dirty.nonEmpty && dirty.size < total,
+      s"precondition: delete must touch a strict subset (${dirty.size} of $total)")
+    val df = tbl.readAsOf(2)
     val plan = df.queryExecution.sparkPlan
     assert(plan.toString.contains("Union"),
       s"MOR read lost its clean/dirty split:\n$plan")
     // the anti-join side scans exactly the DV-named files (file-rooted
     // relation), not the whole table
     import org.apache.spark.sql.execution.FileSourceScanLike
-    val dataScans = plan.collectLeaves().collect {
-      case f: FileSourceScanLike
-        if f.relation.location.rootPaths.exists(_.toString.contains("q107_layout")) => f
+    val scanned = plan.collectLeaves().collect {
+      case f: FileSourceScanLike =>
+        f.relation.location.rootPaths.map(_.getName).toSet
     }
-    assert(dataScans.exists(_.relation.location.rootPaths.length == dirty),
-      s"no scan restricted to the $dirty DV-dirty files: " +
-        dataScans.map(_.relation.location.rootPaths.length).mkString(","))
+    assert(scanned.contains(dirty),
+      s"no scan restricted to the ${dirty.size} DV-dirty files: $scanned")
     // and the result is still exact
     val got = df.agg(count(lit(1))).head.getLong(0)
     val want = Tables.load(spark, sfDir, "orders")
@@ -76,34 +98,39 @@ class MorTimeTravelSpec extends TestBase {
   }
 
   test("q107: compaction rewrites only DV-named files, then clears the DVs") {
-    val layout @ (out, dv) = CurationQueries.morLayout(spark, sfDir)
+    val tbl = morTable("q107spec")
     // a range-local delete: only the low-key files accumulate DVs
-    CurationQueries.morDelete(spark, layout, col("o_orderkey").between(1, 200))
-    val before = md5s(out)
-    val impactedNames = spark.read.parquet(dv).select("file").distinct()
-      .collect().map(r => new File(new java.net.URI(r.getString(0)).getPath).getName)
+    rangeDelete(tbl)
+    val before = md5s(tbl.data)
+    val v2Names = tbl.files(2).map(nameOf).toSet
+    val dvNames = tbl.entryPairs(2).collect { case (f, Some(_)) => nameOf(f) }
       .toSet
-    assert(impactedNames.nonEmpty && impactedNames.size < before.size,
-      s"delete impacted ${impactedNames.size} of ${before.size} files — not range-local")
-    val morBefore = CurationQueries.morRead(spark, layout)
+    assert(dvNames.nonEmpty && dvNames.size < v2Names.size,
+      s"delete impacted ${dvNames.size} of ${v2Names.size} files — not range-local")
+    val morBefore = tbl.readAsOf(2)
       .agg(count(lit(1)), sum("o_totalprice")).head
 
-    CurationQueries.morCompact(spark, layout, "o_orderkey")
-    val after = md5s(out)
-    impactedNames.foreach(n => assert(!after.contains(n), s"$n not compacted away"))
-    (before.keySet -- impactedNames).foreach { n =>
+    // target = the smallest file's size: no file is undersized, so the
+    // pack set is exactly the DV-carrying files
+    val target = tbl.manifest(2).agg(min("bytes")).head.getLong(0)
+    assert(tbl.commitCompaction(2, target) == dvNames.size)
+    assert(!tbl.hasLiveDvs(3), "DVs not cleared")
+    val v3Names = tbl.files(3).map(nameOf).toSet
+    assert((v3Names & dvNames).isEmpty, "a DV-carrying file survived compaction")
+    assert((v2Names -- dvNames).subsetOf(v3Names), "a DV-free file was rewritten")
+    val after = md5s(tbl.data)
+    (v2Names -- dvNames).foreach { n =>
       assert(after.get(n).contains(before(n)), s"untouched file $n changed")
     }
-    assert(spark.read.parquet(dv).count() == 0, "DVs not cleared")
-    // the PLAIN read now equals what the MOR read said before compaction,
-    // and the (empty-DV) MOR read agrees with it
-    val plain = spark.read.parquet(out)
+    // the PLAIN read of v3's files now equals what the MOR read said
+    // before compaction, and the DV-free MOR read agrees with it
+    val plain = spark.read.parquet(tbl.files(3): _*)
       .agg(count(lit(1)), sum("o_totalprice")).head
     assert(plain.getLong(0) == morBefore.getLong(0), "compaction changed rows")
     assert(math.abs(plain.getDouble(1) - morBefore.getDouble(1)) < 1e-6)
-    val morAfter = CurationQueries.morRead(spark, layout)
+    val morAfter = tbl.readAsOf(3)
       .agg(count(lit(1)), sum("o_totalprice")).head
-    assert(morAfter.getLong(0) == plain.getLong(0), "empty-DV MOR read off")
+    assert(morAfter.getLong(0) == plain.getLong(0), "DV-free MOR read off")
   }
 
   test("q108: committed manifests are immutable; as-of reads reproduce the snapshot") {
@@ -174,9 +201,9 @@ class MorTimeTravelSpec extends TestBase {
     val deleted = CurationQueries.vacuum(spark, layout, keepFrom = 2, latest = 2)
     assert(deleted.toSet == expectGone,
       s"vacuum deleted ${deleted.toSet} != expected $expectGone")
-    assert(CurationQueries.partFiles(out) == v2Referenced ++
-      (CurationQueries.partFiles(out) -- v1Files.keySet) &&
-      (CurationQueries.partFiles(out) & expectGone).isEmpty,
+    val onDisk = GraftTable(spark, out, man, "o_orderkey").partFiles
+    assert(onDisk == v2Referenced ++ (onDisk -- v1Files.keySet) &&
+      (onDisk & expectGone).isEmpty,
       "directory does not match the retained reference set")
     assert(!new File(s"$man/v=1").exists(), "expired manifest version survived vacuum")
     val v2After = CurationQueries.readAsOf(spark, layout, 2)

@@ -401,9 +401,11 @@ class StreamingSpec extends TestBase {
     assert(math.abs(total - want) < 1e-6, "latest snapshot content off")
 
     // replay of a committed batch — even with different data — is a no-op
-    val filesBefore = CurationQueries.partFiles(out)
+    def partFiles: Set[String] =
+      graft.table.GraftTable(spark, out, man, "event_id").partFiles
+    val filesBefore = partFiles
     sink.apply(ev.limit(7).select("event_id", "user_id", "value"), 0L)
-    assert(CurationQueries.partFiles(out) == filesBefore,
+    assert(partFiles == filesBefore,
       "replay of a committed batch wrote data")
 
     // crash window: data written, manifest never committed -> the files
@@ -411,7 +413,7 @@ class StreamingSpec extends TestBase {
     // reclaims exactly them
     ev.limit(5).select("event_id", "user_id", "value")
       .coalesce(1).write.mode("append").parquet(out)
-    val orphans = CurationQueries.partFiles(out) -- filesBefore
+    val orphans = partFiles -- filesBefore
     assert(orphans.nonEmpty, "crash simulation wrote nothing")
     assert(CurationQueries.readAsOf(spark, (out, man), 4).count() ==
       prefixCounts.last, "orphans leaked into a committed snapshot")
@@ -425,9 +427,9 @@ class StreamingSpec extends TestBase {
     // RE-COMMIT the batch (write data + manifest), not skip it; the first
     // attempt's files stay orphans and vacuum reclaims exactly them
     val replay = ev.limit(5).select("event_id", "user_id", "value")
-    val preCrash = CurationQueries.partFiles(out)
+    val preCrash = partFiles
     replay.coalesce(1).write.mode("append").parquet(out) // attempt 1 data
-    val attempt1 = CurationQueries.partFiles(out) -- preCrash
+    val attempt1 = partFiles -- preCrash
     assert(attempt1.nonEmpty && !sink.committedVersions.contains(5),
       "crash simulation precondition failed")
     sink.apply(replay, 3L) // batchId 3 -> v=5: the replay after the crash
@@ -443,7 +445,7 @@ class StreamingSpec extends TestBase {
     // OPTIMIZE: bin-pack the per-batch small files into one target-size
     // file as a NEW snapshot; content identical, old versions still
     // time-travel, vacuum then reclaims exactly the packed-away files
-    val filesPre = CurationQueries.partFiles(out)
+    val filesPre = partFiles
     val v5Sum = CurationQueries.readAsOf(spark, (out, man), 5)
       .agg(sum("value")).head.getDouble(0)
     val packed = sink.optimize(targetBytes = 64L * 1024 * 1024)
@@ -477,9 +479,9 @@ class StreamingSpec extends TestBase {
     assert(CurationQueries.readAsOf(spark, (out, man), 7).count() ==
       prefixCounts.last + 5 + 3, "post-optimize batch rows missing")
     // and replaying THAT batch is still a no-op
-    val before7 = CurationQueries.partFiles(out)
+    val before7 = partFiles
     sink.apply(postOpt, 4L)
-    assert(CurationQueries.partFiles(out) == before7,
+    assert(partFiles == before7,
       "replay of a tag-committed batch wrote data")
 
     // replaying a batch whose VERSION was vacuumed away (v=2..5 expired
@@ -489,7 +491,7 @@ class StreamingSpec extends TestBase {
     sink.apply(ev.filter(col("event_id") % 97 === 0)
       .select("event_id", "user_id", "value"), 1L) // batch 1: vacuumed tag
     assert(sink.committedVersions == versionsNow &&
-      CurationQueries.partFiles(out) == before7,
+      partFiles == before7,
       "replay of a vacuumed batch re-appended data")
   }
 

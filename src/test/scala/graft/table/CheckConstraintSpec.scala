@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * properties): declared at CREATE (`check.<name>` option) or added
   * later (`ALTER TABLE ... SET TBLPROPERTIES ('check.<name>' =
   * '<boolean expr>')`), enforced inside EVERY commit path's stats scan
-  * ([[GraftTable.fileStats]] — the one distributed pass each commit
+  * ([[GraftTable!.fileStats]] — the one distributed pass each commit
   * already runs over its newly-written files, so enforcement adds agg
   * columns, not a scan). A violation throws BEFORE the manifest
   * commit: no version burns, staged files are vacuum-reclaimable

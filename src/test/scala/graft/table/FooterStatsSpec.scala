@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Parity gate for the two r21 commit-path optimizations:
   *
-  *  1. footer-based [[GraftTable.fileStats]] (stats decoded from the
+  *  1. footer-based [[GraftTable!.fileStats]] (stats decoded from the
   *     parquet footers Spark's writer already recorded — no second
   *     distributed scan of freshly written files) must produce entries
   *     VALUE-IDENTICAL to the distributed-scan path across every codec
@@ -203,111 +203,45 @@ class FooterStatsSpec extends TestBase {
     assert(t.cdc(1, 2).filter(col("op") === "insert").count() == 1)
   }
 
-  // ---- r22: the STATIC policy-layer stats builders get the same
-  // footer fast path (VERDICT r21 next-round #1) — parity pins below.
-
-  /** Static fileStats/fileStatsMulti under both settings, canonicalized. */
-  private def bothStatic(files: Seq[String], keys: Seq[String])
-      : (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-    def run() =
-      if (keys.size == 1) GraftTable.fileStats(spark, files, keys.head)
-      else GraftTable.fileStatsMulti(spark, files, keys)
-    def canon(rows: Array[Row]): Seq[Seq[Any]] =
-      rows.map(_.toSeq).sortBy(_.head.toString).toSeq
-    spark.conf.set("spark.graft.stats.fromFooters", "true")
-    val fast = run()
-    val fastRows = canon(fast.collect())
-    spark.conf.set("spark.graft.stats.fromFooters", "false")
-    val slow = run()
-    val slowRows = canon(slow.collect())
-    assert(fast.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      slow.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-      s"schema drift: ${fast.schema} vs ${slow.schema}")
-    spark.conf.set("spark.graft.stats.fromFooters", "true")
-    (fastRows, slowRows)
-  }
-
-  test("static fileStats/fileStatsMulti footer path == scan path: " +
-      "long/int/short/byte keys, dir and file args, all-NULL column") {
+  test("footer stats == scan stats: int/short/byte stats columns, " +
+      "dir and file args, all-NULL column") {
     val s = spark
-    import s.implicits._
-    val root = tmp("static")
+    val root = tmp("narrow")
     val df = s.range(0, 1000).select(col("id").as("k"),
       (col("id") % 97).cast("int").as("iv"),
       (col("id") % 31).cast("smallint").as("sv"),
       (col("id") % 11).cast("tinyint").as("bv"),
       when(lit(true), lit(null).cast("long")).as("nv"))
-    GraftTable.clusteredWrite(df, "k", 4, "overwrite", s"$root/d")
-    // directory arg (the manifestLayout shape)
-    val (fastD, slowD) = bothStatic(Seq(s"$root/d"), Seq("k"))
+    val t = GraftTable(s, s"$root/d", s"$root/m", "k",
+      statsCols = Seq("iv", "sv", "bv", "nv"))
+    t.create(df, 4)
+    // directory arg (the create() shape)
+    val (fastD, slowD) = bothPaths(t, Seq(t.data))
     assert(fastD == slowD && fastD.size == 4, s"\n$fastD\nvs\n$slowD")
-    // explicit file list (the manifestAppend shape)
-    val files = GraftTable.partFiles(s"$root/d").toSeq.sorted
-      .map(n => s"$root/d/$n")
-    val (fastF, slowF) = bothStatic(files, Seq("k"))
+    // explicit file list (the staged-append shape)
+    val (fastF, slowF) = bothPaths(t, partsOf(t))
     assert(fastF == slowF && fastF == fastD)
-    // multi-key boxes over narrow integral types; all-NULL column box
-    val (fastM, slowM) = bothStatic(Seq(s"$root/d"),
-      Seq("k", "iv", "sv", "bv", "nv"))
-    assert(fastM == slowM, s"\n$fastM\nvs\n$slowM")
-    assert(fastM.forall(r => r(r.size - 2) == null && r.last == null),
-      "all-NULL column must record a NULL box on both paths")
+    // row layout: (file, lo, hi, n_rows, bytes, 4 x (lo_c, hi_c),
+    // 4 x nulls_c) — nv is all NULL: a NULL box and a full census
+    assert(fastD.forall(r => r(11) == null && r(12) == null &&
+      r.last == r(3)), "all-NULL column must record a NULL box")
   }
 
-  test("static footer path falls back, staying correct: 0-row files, " +
-      "non-integral key rejected loudly on both paths") {
+  test("footer stats == scan stats: a 0-row file records no entry; " +
+      "an all-0-row batch falls back to the scan") {
     val s = spark
-    import s.implicits._
-    val root = tmp("staticfb")
-    // 0-row parquet only: footer path defers, scan derives the shape
-    s.range(0, 10).filter(lit(false)).select(col("id").as("k"))
-      .coalesce(1).write.parquet(s"$root/zero")
-    spark.conf.set("spark.graft.stats.fromFooters", "true")
-    assert(GraftTable.fileStats(s, Seq(s"$root/zero"), "k")
-      .collect().isEmpty)
-    // non-integral key: requireIntegral fires whichever path runs
-    s.range(0, 10).select(col("id").as("k"),
-      to_date(lit("2024-01-01")).as("dt"))
-      .write.parquet(s"$root/dated")
-    Seq("true", "false").foreach { flag =>
-      spark.conf.set("spark.graft.stats.fromFooters", flag)
-      val e = intercept[IllegalArgumentException] {
-        GraftTable.fileStats(s, Seq(s"$root/dated"), "dt").collect()
-      }
-      assert(e.getMessage.contains("integral"))
-    }
-    spark.conf.set("spark.graft.stats.fromFooters", "true")
-  }
-
-  test("writeManifestDf: overwrite + append parts agree across the " +
-      "direct reader and spark.read; prune planning unchanged") {
-    val s = spark
-    import s.implicits._
-    val root = tmp("staticman")
-    val df = s.range(0, 400).select(col("id").as("k"), col("id").as("v"))
-    GraftTable.clusteredWrite(df, "k", 4, "overwrite", s"$root/d")
-    GraftTable.writeManifestDf(s,
-      GraftTable.fileStats(s, Seq(s"$root/d"), "k"), s"$root/m",
-      "overwrite")
-    val before = GraftTable.partFiles(s"$root/d")
-    GraftTable.clusteredWrite(
-      s.range(400, 500).select(col("id").as("k"), col("id").as("v")),
-      "k", 2, "append", s"$root/d")
-    val added = (GraftTable.partFiles(s"$root/d") -- before)
-      .toSeq.sorted.map(n => s"$root/d/$n")
-    GraftTable.writeManifestDf(s,
-      GraftTable.fileStats(s, added, "k"), s"$root/m", "append")
-    def canon(rs: Seq[Row]) = rs.map(_.toSeq).sortBy(_.head.toString)
-    val direct = GraftTable.readManifestRows(s, s"$root/m")._1
-    val viaSpark = s.read.parquet(s"$root/m").collect().toSeq
-    assert(canon(direct) == canon(viaSpark))
-    assert(direct.size == 6) // 4 base + 2 appended entries
-    // planning over the mixed-part manifest behaves: the appended
-    // files' boxes are disjoint from the base range
-    val (keptHi, total) = GraftTable.pruneManifest(s, s"$root/m", 450L, 460L)
-    assert(total == 6 && keptHi.size == 1)
-    val (keptLo, _) = GraftTable.pruneManifest(s, s"$root/m", 0L, 10L)
-    assert(keptLo.nonEmpty && keptLo.size <= 2 &&
-      !keptLo.exists(f => added.exists(f.endsWith)))
+    val root = tmp("zero")
+    val t = GraftTable(s, s"$root/d", s"$root/m", "k", statsCols = Seq("v"))
+    def write(df: org.apache.spark.sql.Dataset[_]): Unit =
+      df.select(col("id").as("k"), (col("id") * 2).as("v"))
+        .coalesce(1).write.mode("append").parquet(s"$root/z")
+    write(s.range(0, 10).filter(lit(false)))
+    // 0-row parquet only: the footer path defers, the scan yields none
+    val (fast0, slow0) = bothPaths(t, Seq(s"$root/z"))
+    assert(fast0.isEmpty && slow0.isEmpty)
+    // next to a real file, the 0-row file is skipped on both paths
+    write(s.range(0, 10))
+    val (fast1, slow1) = bothPaths(t, Seq(s"$root/z"))
+    assert(fast1 == slow1 && fast1.size == 1, s"\n$fast1\nvs\n$slow1")
   }
 }

@@ -143,12 +143,12 @@ class ManifestDirectReadSpec extends TestBase {
       Thread.sleep(500) // drain any in-flight listener events
       jobs.set(0)
       // the full planning surface: raw rows, the DataFrame view, the
-      // file list, and a companion prune — all driver-only
+      // file list, and the prune/stats-only planners — all driver-only
       GraftTable.readManifestRows(spark, t.manifestPath(1))
       t.manifest(1).collect()           // local relation -> no job
       assert(t.files(1).size == 4)
-      GraftTable.pruneManifest(spark, t.manifestPath(1), 0L, 50L)
-      GraftTable.statsOnlySplit(spark, t.manifestPath(1), 0L, 199L)
+      t.prune(1, 0L, 50L)
+      t.statsOnlySplit(1, 0L, 199L)
       Thread.sleep(500) // let any job-start events surface before asserting
       assert(jobs.get() == 0,
         s"manifest planning scheduled ${jobs.get()} Spark job(s) — " +

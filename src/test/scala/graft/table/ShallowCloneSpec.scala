@@ -26,7 +26,7 @@ class ShallowCloneSpec extends TestBase {
   }
 
   private def dataFiles(t: GraftTable): Set[String] =
-    GraftTable.partFiles(t.data)
+    t.partFiles
 
   test("clone v=1 reads the source snapshot row-for-row, copying nothing") {
     val src = freshSource("parity")
