@@ -59,6 +59,8 @@ object JobProfile {
       jobs.synchronized(jobs.clear())
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
+      // listener event times are epoch milliseconds
+      val startMs = System.currentTimeMillis()
       fn(spark, sfDir).limit(2000000).collect()
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(listener)
@@ -79,7 +81,7 @@ object JobProfile {
       // per-job timeline incl. the GAP to the previous job's end: the
       // gap is driver-side work (planning, manifest/footer I/O, AQE)
       println("  -- timeline (dur / gap-before / tasks / site) --")
-      var prevEnd = t0 / 1000000L
+      var prevEnd = startMs
       done.sortBy(_.start).foreach { j =>
         val gap = math.max(0L, j.start - prevEnd)
         prevEnd = math.max(prevEnd, j.end)

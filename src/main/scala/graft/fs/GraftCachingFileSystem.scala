@@ -113,8 +113,7 @@ class GraftCachingFileSystem extends FileSystem {
       case Some(m) if !fsConf.remoteMutable =>
         // hot facts from the cache; owner/permission/block size backfill
         // lazily with one remote RPC on first access (CachedFileStatus)
-        new CachedFileStatus(m.length, m.isDir, fsConf.pageSize, m.modTime, q,
-          gp => remoteFs.getFileStatus(toRemotePath(gp)))
+        statusOf(m, q, backfill = true)
       case cached =>
         val rs = remoteFs.getFileStatus(toRemotePath(f))
         val rec = MetaRecord(rs.getModificationTime, rs.getLen, rs.isDirectory)
@@ -132,13 +131,40 @@ class GraftCachingFileSystem extends FileSystem {
     }
   }
 
-  override def listStatus(f: Path): Array[FileStatus] =
-    // listings always hit the remote — the reference never intercepts
-    // them either (SURVEY §2A.1); Spark's InMemoryFileIndex memoizes.
-    remoteFs.listStatus(toRemotePath(f)).map { rs =>
-      new FileStatus(rs.getLen, rs.isDirectory, rs.getReplication,
-        rs.getBlockSize, rs.getModificationTime, toGraftPath(rs.getPath))
+  /** A status built from a meta record's facts, with the synthesized
+    * replication 1 and block size = page size. With `backfill` the
+    * rarely used fields (owner, permission, real block size, ...) load
+    * from the remote on first access (CachedFileStatus); without it they
+    * keep the synthesized values, so no getter costs a remote call. */
+  private def statusOf(m: MetaRecord, q: Path, backfill: Boolean): FileStatus =
+    if (backfill)
+      new CachedFileStatus(m.length, m.isDir, fsConf.pageSize, m.modTime, q,
+        gp => remoteFs.getFileStatus(toRemotePath(gp)))
+    else new FileStatus(m.length, m.isDir, 1, fsConf.pageSize, m.modTime, q)
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val q = qualify(f)
+    // listStatus(file) is that file's one status (Hadoop contract), so a
+    // file the meta cache knows is answered from its record: Spark's
+    // InMemoryFileIndex lists every file path it is given. Directory
+    // listings always hit the remote; the cache holds no directory
+    // contents, like the reference's (SURVEY §2A.1). The plain status
+    // matters: Spark reads replication, block size and isSymlink off each
+    // listed file, and on a CachedFileStatus each would backfill.
+    val known =
+      if (fsConf.remoteMutable) None
+      else metaCache.peek(q.toString).filterNot(_.isDir)
+    known match {
+      case Some(m) =>
+        stats.metaHits.incrementAndGet()
+        Array(statusOf(m, q, backfill = false))
+      case None =>
+        remoteFs.listStatus(toRemotePath(f)).map { rs =>
+          new FileStatus(rs.getLen, rs.isDirectory, rs.getReplication,
+            rs.getBlockSize, rs.getModificationTime, toGraftPath(rs.getPath))
+        }
     }
+  }
 
   // ---- read path ----
 
@@ -419,14 +445,20 @@ class GraftCachingFileSystem extends FileSystem {
         pageCache.invalidateFile(PageKey.baseFor(qs.toString, m.modTime),
           m.length, fsConf.pageSize)
       }
-      // drop any stale fact at the destination, then migrate the source
-      // record (rename preserves content, so modTime/len stay valid)
-      metaCache.remove(qd.toString)
-      metaCache.rename(qs.toString, qd.toString)
-      metaCache.removePrefix(qs.toString) // children of a renamed dir
+      // where a copy whose upload is still in flight landed
+      var inFlightAt: Option[String] = None
       writeCache.foreach { w =>
-        val cs = w.toCachePath(qs); val cd = w.toCachePath(qd)
+        val cs = w.toCachePath(qs)
         if (w.cacheFs.exists(cs)) {
+          // the local rename also lands in an existing directory at
+          // dir/<name>: track the copy where it really is
+          val (cd, gd) = {
+            val c = w.toCachePath(qd)
+            val intoDir = try w.cacheFs.getFileStatus(c).isDirectory
+              catch { case _: java.io.FileNotFoundException => false }
+            if (intoDir) (new Path(c, cs.getName), new Path(qd, qs.getName).toString)
+            else (c, qd.toString)
+          }
           w.cacheFs.mkdirs(cd.getParent)
           val monikered = w.cacheFs.exists(w.monikerPath(cs))
           if (w.cacheFs.rename(cs, cd)) {
@@ -437,7 +469,8 @@ class GraftCachingFileSystem extends FileSystem {
               // record a forward so the pending completion callback
               // finds — and only ever touches — its own moniker here
               w.cacheFs.rename(w.monikerPath(cs), w.monikerPath(cd))
-              renameForwards.put(cs.toString, (cd, qd.toString))
+              renameForwards.put(cs.toString, (cd, gd))
+              inFlightAt = Some(gd)
             }
           } else {
             w.cacheFs.delete(cs, false)
@@ -446,6 +479,22 @@ class GraftCachingFileSystem extends FileSystem {
           }
         }
       }
+      // the record follows the content (rename preserves it, so
+      // modTime/len stay valid): rename(x, existingDir) lands at
+      // dir/<name>. With no record for dst the landing path is unknown,
+      // so the record is dropped rather than guessed, unless it belongs
+      // to an in-flight upload: the remote cannot report that file's
+      // length yet, so its record follows the moved copy.
+      val landed = metaCache.peek(qd.toString).map { d =>
+        if (d.isDir) new Path(qd, qs.getName).toString else qd.toString
+      }.orElse(inFlightAt)
+      landed match {
+        case Some(k) =>
+          metaCache.remove(k) // stale fact at the destination
+          metaCache.rename(qs.toString, k)
+        case None => metaCache.remove(qs.toString)
+      }
+      metaCache.removePrefix(qs.toString) // children of a renamed dir
     }
     ok
   }

@@ -20,6 +20,10 @@ final class MetaCache(stats: Statistics) {
     else { stats.metaMisses.incrementAndGet(); None }
   }
 
+  /** The record without moving the hit/miss counters: for callers that
+    * count a hit only once the record actually answered the call. */
+  def peek(path: String): Option[MetaRecord] = Option(map.get(path))
+
   def put(path: String, rec: MetaRecord): Unit = map.put(path, rec)
   def remove(path: String): Unit = map.remove(path)
   def contains(path: String): Boolean = map.containsKey(path)

@@ -2,7 +2,9 @@ package graft.fs
 
 import java.net.URI
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -368,18 +370,217 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(CountingRemoteState.statusCalls.get() == 1,
       "backfill must be memoized")
   }
+
+  // ---- listStatus of a file the meta cache knows ----
+
+  private def countingFs(tag: String, extra: (String, String)*) =
+    newFs(tag, (("graft.fs.remote.impl" ->
+      classOf[CountingRemoteFileSystem].getName) +: extra): _*)
+
+  /** Writes `len` bytes straight to the remote, behind the cache's back. */
+  private def writeRemote(name: String, len: Int): Unit = {
+    val f = remoteDir.resolve(name)
+    java.nio.file.Files.createDirectories(f.getParent)
+    java.nio.file.Files.write(f, Array.fill[Byte](len)(7))
+  }
+
+  test("listStatus of a known file is served from its meta record: zero remote calls, the remote listing's facts") {
+    val fs = countingFs("lsf")
+    // the same remote through an instance that never trusts its records
+    val remoteView = countingFs("lsf_remote", "graft.fs.remote.files.mutable" -> "true")
+    val created = graftPath("lsf/created.bin")
+    val statted = graftPath("lsf/statted.bin")
+    writeFile(fs, created, PageSz + 3, 1) // known from the create
+    writeRemote("lsf/statted.bin", 777)
+    fs.getFileStatus(statted) // known from a stat
+    Seq(created, statted).foreach { p =>
+      CountingRemoteState.reset()
+      val Array(st) = fs.listStatus(p)
+      // Spark's listLeafFiles reads these off every listed file
+      st.getReplication; st.getBlockSize; st.isSymlink
+      assert(CountingRemoteState.allCalls.get == 0, s"remote call listing $p")
+      assert(st.getClass == classOf[FileStatus], "a CachedFileStatus would backfill")
+      assert(st.getReplication == 1 && st.getBlockSize == PageSz)
+      val Array(rs) = remoteView.listStatus(p)
+      assert(CountingRemoteState.listCalls.get == 1)
+      assert(st.getPath == rs.getPath)
+      assert(st.getLen == rs.getLen)
+      assert(st.isDirectory == rs.isDirectory && !st.isDirectory)
+      assert(st.getModificationTime == rs.getModificationTime)
+    }
+  }
+
+  test("listStatus of a deleted file goes remote and throws FileNotFoundException") {
+    val fs = countingFs("lsdel")
+    val p = graftPath("lsdel/gone.bin")
+    writeFile(fs, p, PageSz, 2)
+    assert(fs.listStatus(p).map(_.getLen).sameElements(Array(PageSz.toLong)))
+    assert(fs.delete(p, false))
+    CountingRemoteState.reset()
+    intercept[java.io.FileNotFoundException](fs.listStatus(p))
+    assert(CountingRemoteState.listCalls.get == 1)
+  }
+
+  test("listStatus after an overwrite shows the new length") {
+    val fs = countingFs("lsow")
+    val p = graftPath("lsow/f.bin")
+    writeFile(fs, p, PageSz, 3)
+    assert(fs.listStatus(p).head.getLen == PageSz)
+    writeFile(fs, p, 2 * PageSz + 5, 4)
+    CountingRemoteState.reset()
+    val Array(st) = fs.listStatus(p)
+    assert(CountingRemoteState.allCalls.get == 0)
+    assert(st.getLen == 2 * PageSz + 5)
+    val raw = new RawLocalFileSystem()
+    raw.initialize(java.net.URI.create("file:///"), new Configuration(false))
+    assert(st.getModificationTime ==
+      raw.getFileStatus(new Path(s"$remoteDir/lsow/f.bin")).getModificationTime)
+  }
+
+  test("listStatus of a file goes remote when the remote is mutable") {
+    val fs = countingFs("lsmut", "graft.fs.remote.files.mutable" -> "true")
+    val p = graftPath("lsmut/f.bin")
+    writeFile(fs, p, PageSz, 5)
+    fs.getFileStatus(p)
+    CountingRemoteState.reset()
+    (1 to 2).foreach(_ => assert(fs.listStatus(p).head.getLen == PageSz))
+    assert(CountingRemoteState.listCalls.get == 2)
+    assert(CountingRemoteState.fileListCalls.get == 2)
+  }
+
+  test("a directory is listed remotely on every call, and its record counts no hit") {
+    val fs = countingFs("lsdir")
+    val d = graftPath("lsdir/d")
+    writeFile(fs, new Path(d, "a.bin"), PageSz, 6)
+    writeFile(fs, new Path(d, "b.bin"), PageSz, 7)
+    assert(fs.getFileStatus(d).isDirectory) // the meta cache knows d
+    CountingRemoteState.reset()
+    val before = fs.stats.snapshot
+    (1 to 3).foreach { _ =>
+      assert(fs.listStatus(d).map(_.getPath.getName).sorted.toSeq ==
+        Seq("a.bin", "b.bin"))
+    }
+    assert(CountingRemoteState.listCalls.get == 3)
+    assert(fs.stats.snapshot == before, "a remote listing moved a counter")
+  }
+
+  test("a served file listing counts one meta hit and moves no other counter") {
+    val fs = countingFs("lscnt")
+    val known = graftPath("lscnt/known.bin")
+    writeFile(fs, known, PageSz, 8)
+    writeRemote("lscnt/unknown.bin", 100)
+    val before = fs.stats.snapshot
+    fs.listStatus(known)
+    val after = fs.stats.snapshot
+    assert(after("metaHits") == before("metaHits") + 1)
+    assert(after.updated("metaHits", before("metaHits")) == before)
+    // a file with no record lists remotely and counts neither hit nor miss
+    CountingRemoteState.reset()
+    assert(fs.listStatus(graftPath("lscnt/unknown.bin")).head.getLen == 100)
+    assert(CountingRemoteState.fileListCalls.get == 1)
+    assert(fs.stats.snapshot == after)
+  }
+
+  test("rename(file, existingDir) moves the record and the write-cache copy to dir/<name>; the directory keeps its facts") {
+    // a write cache of one page: every settled copy is over the watermark
+    val fs = countingFs("rndir", "graft.fs.write.cache.size" -> PageSz.toString,
+      "graft.fs.write.cache.async.evict" -> "false")
+    val src = graftPath("rndir/a.bin")
+    val dir = graftPath("rndir/into")
+    writeFile(fs, src, PageSz, 9)
+    assert(fs.mkdirs(dir))
+    assert(fs.getFileStatus(dir).isDirectory) // the meta cache knows dir
+    assert(fs.rename(src, dir))
+    val landed = new Path(dir, "a.bin")
+    assert(new java.io.File(s"$remoteDir/rndir/into/a.bin").length() == PageSz)
+
+    val st = fs.getFileStatus(dir)
+    assert(st.isDirectory, s"directory reported as a file of length ${st.getLen}")
+    assert(fs.listStatus(dir).map(_.getPath).toSeq == Seq(landed))
+    CountingRemoteState.reset()
+    val Array(ls) = fs.listStatus(landed)
+    assert(CountingRemoteState.allCalls.get == 0, "the record did not follow the file")
+    assert(ls.getLen == PageSz)
+    val in = fs.open(landed)
+    val buf = new Array[Byte](PageSz)
+    in.readFully(0, buf)
+    in.close()
+    assert(buf.zipWithIndex.forall { case (b, i) => b == expectedByte(i, 9) })
+    assert(fs.stats.bytesFromWriteCache.get == PageSz)
+    // the write cache tracks the copy where it landed, so eviction finds it
+    val wc = fs.writeCacheRef.get
+    wc.evictNow()
+    assert(!wc.cacheFs.exists(wc.toCachePath(landed)), "copy at dir/<name> not evicted")
+    assert(wc.used == 0)
+
+    // dst unknown to the meta cache: the record is dropped, not guessed
+    val src2 = graftPath("rndir/b.bin")
+    val dir2 = graftPath("rndir/unknown")
+    writeFile(fs, src2, PageSz, 10)
+    java.nio.file.Files.createDirectories(remoteDir.resolve("rndir/unknown"))
+    assert(fs.rename(src2, dir2))
+    assert(!fs.metaCacheRef.contains(dir2.toString))
+    assert(!fs.metaCacheRef.contains(src2.toString))
+    assert(!fs.metaCacheRef.contains(new Path(dir2, "b.bin").toString))
+    assert(fs.getFileStatus(dir2).isDirectory)
+    assert(fs.getFileStatus(new Path(dir2, "b.bin")).getLen == PageSz)
+  }
 }
 
 object CountingRemoteState {
-  val statusCalls = new java.util.concurrent.atomic.AtomicLong
+  import java.util.concurrent.atomic.AtomicLong
+  /** HEADs: getFileStatus calls. */
+  val statusCalls = new AtomicLong
+  /** LISTs of any path. */
+  val listCalls = new AtomicLong
+  /** LISTs of a path that is a file. */
+  val fileListCalls = new AtomicLong
+  /** Every remote call, of any kind. */
+  val allCalls = new AtomicLong
+
+  def reset(): Unit =
+    Seq(statusCalls, listCalls, fileListCalls, allCalls).foreach(_.set(0))
 }
 
-/** A "remote" that counts HEAD (getFileStatus) calls — proves the meta
-  * cache serves hot facts RPC-free and the lazy backfill pays exactly
-  * one. */
-class CountingRemoteFileSystem extends RawLocalFileSystem {
-  override def getFileStatus(f: Path): org.apache.hadoop.fs.FileStatus = {
-    CountingRemoteState.statusCalls.incrementAndGet()
-    super.getFileStatus(f)
+/** A "remote" that counts its requests: HEADs (getFileStatus), LISTs
+  * (and which of them list a file path), and calls of every kind. It
+  * filters a RawLocalFileSystem, so the local FS's own internal
+  * getFileStatus calls are not counted. Proves the meta cache serves hot
+  * facts and file listings RPC-free and the lazy backfill pays exactly
+  * one HEAD. */
+class CountingRemoteFileSystem extends FilterFileSystem(new RawLocalFileSystem) {
+  import CountingRemoteState._
+
+  private def call[T](body: => T): T = { allCalls.incrementAndGet(); body }
+
+  override def getFileStatus(f: Path): FileStatus = call {
+    statusCalls.incrementAndGet()
+    fs.getFileStatus(f)
   }
+
+  override def listStatus(f: Path): Array[FileStatus] = call {
+    listCalls.incrementAndGet()
+    if (new java.io.File(f.toUri.getPath).isFile) fileListCalls.incrementAndGet()
+    fs.listStatus(f)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    call(fs.open(f, bufferSize))
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = call(fs.create(f,
+    permission, overwrite, bufferSize, replication, blockSize, progress))
+
+  override def append(f: Path, bufferSize: Int,
+      progress: Progressable): FSDataOutputStream =
+    call(fs.append(f, bufferSize, progress))
+
+  override def rename(src: Path, dst: Path): Boolean = call(fs.rename(src, dst))
+
+  override def delete(f: Path, recursive: Boolean): Boolean =
+    call(fs.delete(f, recursive))
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean =
+    call(fs.mkdirs(f, permission))
 }

@@ -88,6 +88,75 @@ class SparkGraftFsSpec extends TestBase {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ckpt/commits")))
   }
 
+  /** Mounts `graft://<auth>/` over the request-counting remote (the conf
+    * keys only apply while the instance initializes; Hadoop's FileSystem
+    * cache then serves it to Spark's driver and tasks). */
+  private def mountCounting(auth: String): Unit = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Map(
+      "graft.fs.remote.impl" -> classOf[CountingRemoteFileSystem].getName,
+      "graft.fs.disk.cache.dir" -> s"$scratch/pages_$auth",
+      "graft.fs.write.cache.dir" -> s"$scratch/wc_$auth")
+    val saved = keys.keys.map(k => k -> Option(hc.get(k))).toMap
+    keys.foreach { case (k, v) => hc.set(k, v) }
+    try new org.apache.hadoop.fs.Path(s"graft://$auth/").getFileSystem(hc)
+    finally saved.foreach {
+      case (k, Some(v)) => hc.set(k, v)
+      case (k, None) => hc.unset(k)
+    }
+  }
+
+  /** (result, HEADs, LISTs, LISTs of a file path) of one action. */
+  private def remoteCalls[T](body: => T): (T, Long, Long, Long) = {
+    CountingRemoteState.reset()
+    val r = body
+    (r, CountingRemoteState.statusCalls.get, CountingRemoteState.listCalls.get,
+      CountingRemoteState.fileListCalls.get)
+  }
+
+  // Ceilings pin the remote calls of each read. Tighten them when a read
+  // gets cheaper; never raise them. While every file listing went
+  // remote, the parquet read made 4 LISTs (one per file) and 4 HEADs
+  // cold, 0 warm, and the snapshot read 3 HEADs and 5 LISTs (4 of data
+  // files); the HEAD ceilings keep those counts.
+  test("reading parquet file paths over graft:// lists no file remotely") {
+    mountCounting("listguard")
+    val local = java.nio.file.Files.createTempDirectory("graft_list_guard").toString
+    spark.range(0, 4000).selectExpr("id", "id % 7 AS k").repartition(4)
+      .write.parquet(s"$local/parts")
+    val files = new java.io.File(s"$local/parts").list()
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted
+      .map(n => s"graft://listguard$local/parts/$n")
+    assert(files.length == 4)
+    Seq("cold", "warm").foreach { pass =>
+      val (n, heads, lists, fileLists) =
+        remoteCalls(spark.read.parquet(files: _*).count())
+      info(s"$pass read of ${files.length} files: HEAD=$heads LIST=$lists " +
+        s"file LIST=$fileLists")
+      assert(n == 4000)
+      assert(fileLists == 0, s"$pass read listed $fileLists file paths remotely")
+      assert(lists == 0, s"$pass read: $lists LISTs")
+      assert(heads <= (if (pass == "cold") 4 else 0), s"$pass read: $heads HEADs")
+    }
+  }
+
+  test("a graft_snapshot read of a GraftTable on graft:// lists no file remotely") {
+    mountCounting("tblguard")
+    val local = java.nio.file.Files.createTempDirectory("graft_tbl_guard").toString
+    val man = s"graft://tblguard$local/man"
+    val orders = Tables.load(spark, sfDir, "orders")
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    graft.table.GraftTable(spark, s"graft://tblguard$local/data", man,
+      "o_orderkey").create(orders, 4)
+    val (n, heads, lists, fileLists) = remoteCalls(
+      spark.sql(s"SELECT count(*) FROM graft_snapshot('$man', 1)").head.getLong(0))
+    info(s"graft_snapshot read: HEAD=$heads LIST=$lists file LIST=$fileLists")
+    assert(n == orders.count())
+    assert(fileLists == 0, s"listed $fileLists file paths remotely")
+    assert(lists <= 1, s"$lists LISTs")
+    assert(heads <= 3, s"$heads HEADs")
+  }
+
   test("query results identical with and without the caching layer") {
     val direct = Tables.load(spark, sfDir, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
