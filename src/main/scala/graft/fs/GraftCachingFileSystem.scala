@@ -461,8 +461,19 @@ class GraftCachingFileSystem extends FileSystem {
           }
           w.cacheFs.mkdirs(cd.getParent)
           val monikered = w.cacheFs.exists(w.monikerPath(cs))
+          // a renamed directory carries its children's in-flight uploads
+          val children =
+            if (w.cacheFs.getFileStatus(cs).isDirectory) w.inFlightUnder(cs)
+            else Nil
           if (w.cacheFs.rename(cs, cd)) {
             w.renameFile(cs, cd)
+            // each pending child callback must find its moniker where
+            // the directory rename moved it
+            children.foreach { c =>
+              val rel = c.toString.drop(cs.toString.length)
+              renameForwards.put(c.toString,
+                (new Path(cd.toString + rel), gd + rel))
+            }
             if (monikered) {
               // upload still in flight: move the moniker with the copy
               // (read-your-writes at the new name keeps working) and

@@ -92,9 +92,28 @@ final class WriteCacheManager(val cacheFs: FileSystem, val workDir: Path,
     if (len != null) usedBytes.addAndGet(-len)
   }
 
+  /** Follow a local rename of `src` — one copy, or a directory of them
+    * — to `dst`: every listed key at or under `src` moves. */
   def renameFile(src: Path, dst: Path): Unit = synchronized {
-    val len = fileList.remove(src.toString)
-    if (len != null) fileList.put(dst.toString, len)
+    val (s, d) = (src.toString, dst.toString)
+    val moved = fileList.keySet.asScala.toList
+      .filter(k => k == s || k.startsWith(s + "/"))
+    moved.foreach(k => fileList.put(d + k.drop(s.length), fileList.remove(k)))
+  }
+
+  /** The copies under directory `dir` whose upload is still in flight
+    * (a moniker sits beside each), as paths in `dir`'s own form. */
+  def inFlightUnder(dir: Path): Seq[Path] = {
+    val base = dir.toUri.getPath
+    val out = Seq.newBuilder[Path]
+    val it = cacheFs.listFiles(dir, true)
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".toupload"))
+        out += new Path(dir.toString +
+          p.toUri.getPath.drop(base.length).stripSuffix(".toupload"))
+    }
+    out.result()
   }
 
   def used: Long = usedBytes.get

@@ -3,7 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.functions.Det.dround
 import graft.functions.VectorExprs.cosine_similarity
-import graft.table.GraftTable
+import graft.table.{GraftTable, SnapshotRef}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -306,7 +306,8 @@ object AnnIndex {
 
   /** The corpus change feed `from -> to` shaped for index maintenance:
     * (op, nid, old/new embedding). */
-  private[operators] def churn(corpus: GraftTable, from: Int, to: Int): DataFrame =
+  private[operators] def churn(corpus: GraftTable, from: SnapshotRef,
+      to: SnapshotRef): DataFrame =
     corpus.cdc(from, to).select(col("op"),
       col(corpus.key).as("nid"),
       col("old_embedding"), col("new_embedding"))
@@ -339,13 +340,15 @@ object AnnIndex {
     // it the feed from there is permanently unreadable and the ONLY
     // recovery is a rebuild — name it instead of surfacing cdc's
     // generic expired-version error
-    require(corpus.isCommitted(from),
-      s"index ${idx.man} covers corpus v=$from, which has been EXPIRED " +
-        s"by vacuum (retained: ${corpus.committedVersions.mkString(", ")})" +
-        " — the change feed from the covered version is no longer " +
-        "readable, so incremental refresh is impossible; REBUILD the " +
-        "index (build() at the current corpus version) to re-anchor it")
-    val delta = churn(corpus, from, toV)
+    val covered = try corpus.snapshot(Some(from)).requireTable()
+    catch { case e: IllegalArgumentException =>
+      throw new IllegalArgumentException(
+        s"index ${idx.man} covers corpus v=$from: ${e.getMessage}" +
+          " — the change feed from the covered version is no longer " +
+          "readable, so incremental refresh is impossible; REBUILD the " +
+          "index (build() at the current corpus version) to re-anchor it")
+    }
+    val delta = churn(corpus, covered, toV)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val live = encodeFn(delta
@@ -365,7 +368,7 @@ object AnnIndex {
         // hash table per vector and must still report churn vectors
         val nLive = coded.filter(!col("dead"))
           .select("nid").distinct().count()
-        idx.commitAppend(coded, idx.committedVersions.max, nParts,
+        idx.commitAppend(coded, idx.snapshot(), nParts,
           tag = Some(s"corpus_v=$toV"))
         nLive
       } finally { coded.unpersist(); () }
@@ -392,16 +395,13 @@ object AnnIndex {
       idx: GraftTable): DataFrame = {
     import spark.implicits._
     val indexed = indexedCorpusVersion(idx)
-    val latest = corpus.committedVersions.max
-    val readable = corpus.isCommitted(indexed)
+    val log = corpus.snapshot().requireTable()
+    val latest = log.version
+    val readable = log.contains(indexed)
     def entryRows(v: Int): Map[String, Long] = {
-      val m = corpus.manifest(v)
-      val hasDv = m.columns.contains("dv")
-      m.collect().map { r =>
-        val dv = if (hasDv) Option(r.getAs[String]("dv")).getOrElse("")
-          else ""
-        s"${r.getAs[String]("file")}|$dv" -> r.getAs[Long]("n_rows")
-      }.toMap
+      val m = log.at(v)
+      m.pairs.zip(m.rows).map { case ((f, dv), r) =>
+        s"$f|${dv.getOrElse("")}" -> r.getAs[Long]("n_rows") }.toMap
     }
     val (churnEntries, freshRows, removedRows) =
       if (!readable || latest <= indexed) (0L, 0L, 0L)
@@ -449,7 +449,7 @@ object AnnIndex {
       nParts: Int, minDeadFraction: Double): Long = {
     require(minDeadFraction >= 0.0 && minDeadFraction <= 1.0,
       s"minDeadFraction must be in [0, 1]; got $minDeadFraction")
-    val v = idx.committedVersions.max
+    val v = idx.snapshot().requireTable()
     val covered = indexedCorpusVersion(idx)
     val df = idx.readAsOf(v)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -504,9 +504,9 @@ object AnnIndex {
       probes: DataFrame, k: Int = 5,
       nprobe: Int = SketchQueries.DefaultIvfProbes): DataFrame = {
     val idx = table(spark, root)
-    val v = idx.committedVersions.max
+    val v = idx.snapshot().requireTable()
     val indexed = indexedCorpusVersion(idx)
-    val latest = corpus.committedVersions.max
+    val latest = corpus.snapshot().requireTable().version
     val cents = loadModel(spark, root)
     val qonly = probes
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -713,9 +713,9 @@ object AnnIndexPq {
       nprobe: Int = SketchQueries.DefaultIvfProbes,
       rerank: Int = Rerank): DataFrame = {
     val idx = table(spark, root)
-    val v = idx.committedVersions.max
+    val v = idx.snapshot().requireTable()
     val indexed = AnnIndex.indexedCorpusVersion(idx)
-    val latestV = corpus.committedVersions.max
+    val latestV = corpus.snapshot().requireTable().version
     val cents = AnnIndex.loadModel(spark, root)
     val cb = loadCodebook(spark, root)
     val qdf = adcQueryRows(spark, probes, cb)
@@ -1014,9 +1014,9 @@ object AnnIndexSrp {
       rerank: Int = AnnIndexPq.Rerank): DataFrame = {
     import graft.functions.TextHashExprs.srp_probe_buckets
     val idx = table(spark, root)
-    val v = idx.committedVersions.max
+    val v = idx.snapshot().requireTable()
     val indexed = AnnIndex.indexedCorpusVersion(idx)
-    val latest = corpus.committedVersions.max
+    val latest = corpus.snapshot().requireTable().version
     val (tables, bits, nprobe, storage) = loadParams(spark, root)
     if (storage == "pq") {
       // codes-only rows: LSH probe geometry, then the shared

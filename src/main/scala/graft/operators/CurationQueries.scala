@@ -1429,7 +1429,7 @@ object CurationQueries {
           dround(sum("o_totalprice"), 2).as("total"))
         .withColumn("side", lit(side))
     shape(clone.readAsOf(2), "clone")
-      .unionByName(shape(src.readAsOf(src.committedVersions.max), "source"))
+      .unionByName(shape(src.readAsOf(src.snapshot()), "source"))
       .orderBy("side", "o_orderstatus")
   }
 

@@ -376,15 +376,16 @@ object GraftStreams {
 
     /** Newest committed state, if any batch has committed rows yet. */
     def latest: Option[DataFrame] = {
-      val v = table.committedVersions.max
-      if (table.files(v).isEmpty) None else Some(table.readAsOf(v))
+      val v = table.snapshot().requireTable()
+      if (v.files.isEmpty) None else Some(table.readAsOf(v))
     }
 
     def apply(batch: DataFrame, batchId: Long): Unit = {
       val tag = s"$appId-batch$batchId"
-      if (table.tagCommitted(tag))
+      val v = table.snapshot()
+      if (table.tagCommitted(tag, v))
         return // committed replay — the tag rode the atomic commit
-      val v = table.committedVersions.max
+      v.requireTable()
       val dedup = winners(batch.select("user_id", "event_id", "ts", "value"))
       // current rows for the batch's keys, read from ONLY the
       // envelope-pruned files (exactly the set the merge rewrites) —
@@ -411,7 +412,7 @@ object GraftStreams {
 
     /** Fold accumulated DVs / pack the ingest tail (OPTIMIZE). */
     def optimize(targetBytes: Long = 128L << 20): Int =
-      table.commitCompaction(table.committedVersions.max, targetBytes)
+      table.commitCompaction(table.snapshot(), targetBytes)
   }
 
   /** Maintain the latest event per user in an external keyed store,
@@ -472,7 +473,7 @@ object GraftStreams {
     /** Write the empty initial snapshot (v=1). */
     def init(): Unit = { table.createEmpty(); () }
 
-    def committedVersions: Seq[Int] = table.committedVersions
+    def committedVersions: Seq[Int] = table.snapshot().versions
 
     /** OPTIMIZE the ingest tail: bin-pack the latest snapshot's small
       * files into ~targetBytes files as a new snapshot version (pure
@@ -482,20 +483,20 @@ object GraftStreams {
       * interleave with the batch stream: the next batch commits the
       * version AFTER the compaction snapshot (tag-keyed replay). */
     def optimize(targetBytes: Long): Int =
-      table.commitCompaction(committedVersions.max, targetBytes)
+      table.commitCompaction(table.snapshot(), targetBytes)
 
     def apply(batch: DataFrame, batchId: Long): Unit = {
       val tag = batchTag(batchId)
-      if (table.tagCommitted(tag))
+      val log = table.snapshot()
+      if (table.tagCommitted(tag, log))
         return // committed replay — even if vacuum expired the version,
                // the _tags ledger still remembers the batch
-      require(table.committedVersions.nonEmpty,
-        "sink not initialized — call init() first")
+      require(!log.isEmpty, "sink not initialized — call init() first")
       // OCC, not a fixed parent version: a maintenance commit (optimize)
       // racing this batch must cost a rebase, never a lost batch — the
       // lenient single-version commitAppend would accept the compaction
       // snapshot winning v=N+1 as its own success
-      table.commitAppendOcc(batch, tag = Some(tag))
+      table.commitAppendOcc(batch, tag = Some(tag), start = Some(log))
       ()
     }
   }

@@ -118,14 +118,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def tblPath(ident: Identifier): Path =
     new Path(nsPath(ident.namespace()), s"${ident.name()}.tbl")
 
-  private def readSmall(p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-      bos.toString("UTF-8")
-    } finally in.close()
-  }
+  private def readSmall(p: Path): String = GraftTable.readText(fs, p)
 
   /** The manifest dir a registered name maps to — also the resolution
     * hook for name-addressed maintenance TVFs ([[SnapshotSql]] accepts
@@ -193,22 +186,19 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     // requireAbsentOrAdopt delete a healthy table's registration.
     GraftTable.loadProps(spark, staleMan).isEmpty &&
       GraftTable(spark, data = "", man = staleMan, key = "")
-        .committedVersions.isEmpty
+        .snapshot().isEmpty
   }
 
   override def loadTable(ident: Identifier): Table =
     GraftV2Table(s"$catalogName.$ident", manOf(ident), pinned = None)
 
-  /** `VERSION AS OF <v>` on the named table. */
+  /** `VERSION AS OF <v>` on the named table; an uncommitted or expired
+    * version fails when the table resolves its snapshot. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val man = manOf(ident)
     val v = version.trim.toIntOption.getOrElse(
       throw new IllegalArgumentException(
         s"VERSION AS OF takes an integer snapshot version; got '$version'"))
-    val t = GraftTable(spark, data = "", man = man, key = "")
-    require(t.isCommitted(v),
-      s"no committed snapshot v=$v of $ident " +
-        s"(committed: ${t.committedVersions.mkString(", ")})")
     GraftV2Table(s"$catalogName.$ident", man, pinned = Some(v))
   }
 
@@ -281,8 +271,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     }.toMap
     GraftTable.validateDmlModes(dmlModes)
     val exists = GraftTable.loadProps(spark, man).isDefined &&
-      GraftTable(spark, data = "", man = man, key = "")
-        .committedVersions.nonEmpty
+      !GraftTable(spark, data = "", man = man, key = "").snapshot().isEmpty
     val newTable = if (exists) {
       require(checks.isEmpty && dmlModes.isEmpty,
         s"a graft table already exists at $man — this CREATE only " +
@@ -463,12 +452,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     GraftTable.validateDmlModes(setModes.toMap)
     unsetModes.foreach(s0 => GraftTable.validateDmlModes(Map(s0 -> "cow")))
     val t = GraftTable(spark, data = "", man = man, key = "")
-    val vs = t.committedVersions
-    if (vs.isEmpty) throw new NoSuchTableException(ident)
-    val base = t.versionSchema(vs.max).getOrElse(
-      throw new UnsupportedOperationException(
-        s"$ident's latest snapshot records no schema (pre-r11 table) — " +
-          "ALTER TABLE needs the commit-recorded schema to extend"))
+    val log = t.snapshot()
+    if (log.isEmpty) throw new NoSuchTableException(ident)
+    val base = log.requireSchema("ALTER TABLE")
     val widened = adds.foldLeft(base) { (sch, a) =>
       require(a.fieldNames().length == 1,
         s"nested ADD COLUMN is not supported — graft tables are flat " +
@@ -481,7 +467,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       StructType(sch.fields :+ org.apache.spark.sql.types.StructField(
         n, a.dataType(), nullable = true))
     }
-    var cur = vs.max
+    var cur: SnapshotRef = log
     if (adds.nonEmpty) cur = t.commitWidenSchema(widened, cur)
     // RENAME COLUMN: one metadata-only mapping commit per rename (the
     // column-mapping event list is per-version); flat names only
@@ -516,8 +502,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
         GraftTable.validateCheck(spark, n, e, effective) }
       val tm = SnapshotSql.tableForMaintenance(spark, man,
         detail => throw new IllegalStateException(detail))
-      val latest = tm.committedVersions.max
-      val live = tm.files(latest)
+      val latest = tm.snapshot().requireTable()
+      val live = latest.files
       if (live.nonEmpty) {
         val df = tm.readAsOf(latest, live)
         val present = df.columns.toSet
@@ -630,24 +616,14 @@ final case class GraftV2Table(ident: String, man: String,
   private def probe: GraftTable =
     GraftTable(spark, data = "", man = man, key = "")
 
-  /** The snapshot this table reads: pinned, else latest at load time. */
-  lazy val snapshotVersion: Int = pinned.getOrElse {
-    val vs = probe.committedVersions
-    require(vs.nonEmpty, s"no committed snapshots under $man")
-    vs.max
-  }
+  /** The snapshot this table reads: pinned, else latest at load time —
+    * one log listing for the table's whole statement. */
+  lazy val snapshot: LogSnapshot = probe.snapshot(pinned).requireTable()
 
   override def name(): String =
     ident + pinned.map(v => s"@v$v").getOrElse("")
 
-  override def schema(): StructType =
-    probe.versionSchema(snapshotVersion).getOrElse {
-      val files = probe.files(snapshotVersion)
-      require(files.nonEmpty,
-        s"snapshot v=$snapshotVersion of $man references no files, no " +
-          "recorded schema")
-      spark.read.option("mergeSchema", "true").parquet(files: _*).schema
-    }
+  override def schema(): StructType = snapshot.dataSchema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
@@ -695,15 +671,14 @@ final case class GraftV2Table(ident: String, man: String,
       s"cannot DELETE from the time-travel pinned snapshot ${name()}")
     val t = SnapshotSql.tableForMaintenance(spark, man,
       detail => throw new IllegalStateException(detail))
-    val vs = t.committedVersions
-    require(vs.nonEmpty, s"no committed snapshots under $man")
+    val base = snapshot // the statement's one log snapshot
     if (predicates.isEmpty || predicates.forall(_.isInstanceOf[
         org.apache.spark.sql.connector.expressions.filter.AlwaysTrue])) {
       // unconditional DELETE FROM t (also TRUNCATE's default route):
       // commit a zero-entry snapshot at the recorded schema — no scan,
       // no rewrite; old versions stay time-travelable until vacuum
-      t.commitManifest(t.manifest(vs.max).limit(0), vs.max + 1,
-        schemaDdl = t.versionSchema(vs.max).map(_.toDDL))
+      t.commitManifest(base.entries.limit(0), base.version + 1,
+        schemaDdl = base.schema.map(_.toDDL))
       return
     }
     // the full condition is the ROW predicate (Catalyst translation —
@@ -725,8 +700,8 @@ final case class GraftV2Table(ident: String, man: String,
     // shape at 100 TB) instead of the COW survivor rewrite; like
     // merge.mode it is a performance hint, never a semantics change
     if (t.dmlMode("delete") == "mor")
-      t.commitDeleteMor(pruneFilters, pred, vs.max)
-    else t.commitDelete(pruneFilters, pred, vs.max, 2, None)
+      t.commitDeleteMor(pruneFilters, pred, base)
+    else t.commitDelete(pruneFilters, pred, base, 2, None)
     ()
   }
 
@@ -808,26 +783,21 @@ final case class GraftV2Table(ident: String, man: String,
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
             override def insert(data: DataFrame, ov: Boolean): Unit = {
-              val s = data.sparkSession
-              val p = GraftTable.loadProps(s, man).getOrElse(
-                throw new IllegalStateException(
-                  s"$man carries no _table_props — not a graft table"))
-              val key = p.key.getOrElse(throw new IllegalStateException(
-                s"$man's _table_props records no key"))
-              val dataDir = p.data.getOrElse(
-                throw new IllegalStateException(
-                  s"$man's _table_props records no data dir"))
-              val t = GraftTable(s, dataDir, man, key, p.statsCols,
-                p.bloomCols, p.bloomItems, p.bloomFpp)
+              val t = SnapshotSql.tableForMaintenance(data.sparkSession, man,
+                detail => throw new IllegalStateException(detail))
               replaceFilters match {
                 case Some(fs) =>
                   t.commitReplaceWhere(fs,
                     fs.map(GraftTable.v1FilterColumn).reduce(_ && _),
-                    data, t.committedVersions.max, 8)
+                    data, t.snapshot(), 8)
                   ()
                 case None =>
                   if (overwriteAll || ov) t.create(data, 8)
-                  else { t.commitAppendOcc(data, 8); () }
+                  else {
+                    // the first attempt builds on the snapshot this
+                    // statement already resolved; a lost race re-lists
+                    t.commitAppendOcc(data, 8, start = Some(snapshot)); ()
+                  }
               }
             }
           }
@@ -923,7 +893,7 @@ final class GraftFallbackScanBuilder(table: GraftV2Table)
       val spark = ctx.sparkSession
       // self-contained: expand the snapshot leaf here rather than
       // relying on the session's (possibly absent) extension rules
-      val plan = SnapshotSql.snapshotPlan(spark, table.man, table.snapshotVersion)
+      val plan = SnapshotSql.snapshotPlan(spark, table.snapshot)
         match {
           case r: GraftSnapshotRelation => SnapshotExpandRule(spark).expandNow(r)
           case p => p // the MoR read is already a full plan
@@ -969,7 +939,7 @@ final case class GraftV2ExpandRule(spark: SparkSession)
     // through the catalog's time-travel loadTable overloads, so the
     // table arrives already pinned (GraftCatalogSpec pins both
     // spellings and their misuse errors)
-    val plan = SnapshotSql.snapshotPlan(spark, t.man, t.snapshotVersion)
+    val plan = SnapshotSql.snapshotPlan(spark, t.snapshot)
     require(plan.output.length == r.output.length &&
       plan.output.zip(r.output).forall { case (n, o) => n.name == o.name },
       s"catalog expansion schema drift: ${plan.output} vs ${r.output}")

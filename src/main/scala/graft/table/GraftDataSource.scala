@@ -65,25 +65,19 @@ final class GraftDataSource extends RelationProvider
     val spark = ctx.sparkSession
     val man = manifestOf(opts)
     val probe = GraftTable(spark, data = "", man = man, key = "")
-    val vs = probe.committedVersions
-    require(vs.nonEmpty, s"no committed snapshots under $man — not a " +
-      "GraftTable manifest dir (or the table was never created)")
-    val v = opts.get("versionasof").map(_.trim.toInt)
-      .orElse(opts.get("timestampasof").map(ts => probe.versionAsOfTime(
-        parseTimestampMs(ts))))
-      .getOrElse(vs.max)
-    require(probe.isCommitted(v),
-      s"no committed snapshot v=$v under $man (committed: ${vs.mkString(", ")})")
-    val entries = probe.manifest(v).collect().toSeq // O(#files) planning
+    val log = probe.snapshot().requireTable()
+    val snap = opts.get("versionasof").map(v => log.at(v.trim.toInt))
+      .orElse(opts.get("timestampasof").map(ts =>
+        log.asOfTime(parseTimestampMs(ts))))
+      .getOrElse(log)
+    val v = snap.version
+    val entries = snap.rows.toSeq // O(#files) planning
     // format("graft") reads plan as a native parquet HadoopFsRelation —
     // a pure file-list scan that CANNOT apply deletion vectors. A
     // snapshot with live DVs must fail loudly here (reading raw files
     // would resurrect masked rows): read it via graft_snapshot /
     // readAsOf, or run graft_optimize to fold the DVs back in.
-    val liveDvs = entries.headOption
-      .exists(_.schema.fieldNames.contains("dv")) &&
-      entries.exists(_.getAs[String]("dv") != null)
-    require(!liveDvs,
+    require(!snap.hasLiveDvs,
       s"snapshot v=$v of $man carries live deletion vectors (MoR " +
         "merges pending compaction) — format(\"graft\") plans a raw " +
         "parquet scan that cannot apply them; read through " +
@@ -96,16 +90,6 @@ final class GraftDataSource extends RelationProvider
         "format(\"graft\") plans a raw parquet scan that cannot alias " +
         "the frozen physical names; read through graft_snapshot(...), " +
         "the catalog table name, or GraftTable.readAsOf")
-    val files = entries.map(_.getAs[String]("file"))
-    // schema from the commit's _schema.ddl when recorded — planning a
-    // format("graft") read then opens ZERO data files (the footer read
-    // remains only as the pre-round-11 fallback)
-    val schema = probe.versionSchema(v).getOrElse {
-      require(entries.nonEmpty,
-        s"snapshot v=$v of $man references no data files and records " +
-          "no schema (empty pre-r11 snapshots carry no schema to scan)")
-      spark.read.parquet(files: _*).schema
-    }
     val props = GraftTable.loadProps(spark, man)
       .getOrElse(GraftTable.TableProps(None, Nil, Nil, None))
     val manCols = entries.head.schema.fieldNames.toSet
@@ -114,7 +98,9 @@ final class GraftDataSource extends RelationProvider
       props.statsCols.filter(c => manCols(s"lo_$c") && manCols(s"hi_$c")),
       props.bloomCols.filter(c => manCols(s"bloom_$c")))
     HadoopFsRelation(index, partitionSchema = new StructType(),
-      dataSchema = schema, bucketSpec = None,
+      // the commit's _schema.ddl: planning opens ZERO data files (the
+      // footer read remains only as the pre-round-11 fallback)
+      dataSchema = snap.dataSchema, bucketSpec = None,
       fileFormat = new ParquetFileFormat(), options = Map.empty)(spark)
   }
 
@@ -128,18 +114,9 @@ final class GraftDataSource extends RelationProvider
 
   // ---- streaming read: spark.readStream.format("graft").load(man) ----
 
-  private def latestSchema(spark: SparkSession, man: String): StructType = {
-    val probe = GraftTable(spark, data = "", man = man, key = "")
-    val vs = probe.committedVersions
-    require(vs.nonEmpty, s"no committed snapshots under $man")
-    probe.versionSchema(vs.max).getOrElse {
-      val files = probe.files(vs.max)
-      require(files.nonEmpty,
-        s"latest snapshot of $man references no files and records no " +
-          "schema — pass .schema(...) to stream a still-empty pre-r11 table")
-      spark.read.parquet(files: _*).schema
-    }
-  }
+  private def latestSchema(spark: SparkSession, man: String): StructType =
+    GraftTable(spark, data = "", man = man, key = "").snapshot()
+      .requireTable().dataSchema
 
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String])
@@ -279,8 +256,7 @@ final class GraftDataSource extends RelationProvider
     val nParts = opts.get("numfiles").map(_.trim.toInt).getOrElse(8)
     val props = GraftTable.loadProps(spark, man)
     val exists = props.isDefined &&
-      GraftTable(spark, data = "", man = man, key = "")
-        .committedVersions.nonEmpty
+      !GraftTable(spark, data = "", man = man, key = "").snapshot().isEmpty
 
     def declaredTable(): GraftTable = this.declaredTable(spark, man, opts, props)
     def existingTable(): GraftTable = this.existingTable(spark, man, opts, props)
@@ -324,8 +300,7 @@ final class GraftDataSource extends RelationProvider
           "checkpoint against an existing table needs a NEW appId"))
     val props = GraftTable.loadProps(spark, man)
     val exists = props.isDefined &&
-      GraftTable(spark, data = "", man = man, key = "")
-        .committedVersions.nonEmpty
+      !GraftTable(spark, data = "", man = man, key = "").snapshot().isEmpty
     val table =
       if (exists) existingTable(spark, man, opts, props)
       else declaredTable(spark, man, opts, props).createEmpty()
@@ -433,7 +408,7 @@ final class GraftStreamSource(spark: SparkSession, man: String,
   private var fence: Option[Int] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    fence = Some(probe.committedVersions.maxOption.getOrElse(0))
+    fence = Some(probe.snapshot().version)
 
   /** The declared pacing options as Spark's admission-control limits —
     * MicroBatchExecution hands them back to [[latestOffset]] on every
@@ -453,11 +428,11 @@ final class GraftStreamSource(spark: SparkSession, man: String,
   override def deserializeOffset(json: String): V2Offset =
     org.apache.spark.sql.execution.streaming.runtime.SerializedOffset(json)
 
-  private def posOf(o: V2Offset): Pos = o match {
-    case v1: V1Offset => Pos.parse(v1, probe)
+  private def posOf(o: V2Offset, log: LogSnapshot): Pos = o match {
+    case v1: V1Offset => Pos.parse(v1, log)
     case other => Pos.parse(
       org.apache.spark.sql.execution.streaming.runtime
-        .SerializedOffset(other.json), probe)
+        .SerializedOffset(other.json), log)
   }
 
   /** (file budget, byte budget) a trigger may admit under `limit`. */
@@ -473,13 +448,6 @@ final class GraftStreamSource(spark: SparkSession, man: String,
     case _ => (Long.MaxValue, Long.MaxValue) // ReadAllAvailable & co.
   }
 
-  private def requireRetained(v: Int): Unit =
-    if (!probe.isCommitted(v))
-      throw new IllegalStateException(
-        s"stream version v=$v of $man no longer exists — vacuum " +
-          "expired it before this consumer caught up; vacuum " +
-          "retention must exceed the slowest consumer's lag")
-
   /** Version v's fresh (file, manifest bytes) list for a stream
     * anchored at `anchor`: the anchor version contributes its FULL
     * snapshot (sorted for a deterministic, restart-stable slicing
@@ -493,23 +461,25 @@ final class GraftStreamSource(spark: SparkSession, man: String,
   private val freshMemo =
     scala.collection.mutable.LinkedHashMap[(Int, Int), Seq[(String, Long)]]()
 
-  private def entriesOf(v: Int): Seq[(String, Long)] =
-    probe.manifest(v).select("file", "bytes").collect().map(r =>
-      r.getString(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).toSeq
+  private def entriesOf(s: LogSnapshot): Seq[(String, Long)] =
+    s.rows.map { r =>
+      val b = r.getAs[java.lang.Long]("bytes")
+      r.getAs[String]("file") -> (if (b == null) 0L else b.longValue)
+    }.toSeq
 
-  private def freshList(v: Int, anchor: Int): Seq[(String, Long)] =
+  private def freshList(log: LogSnapshot, v: Int,
+      anchor: Int): Seq[(String, Long)] =
     freshMemo.getOrElseUpdate((v, anchor), {
       // manifests are immutable once committed, so memoizing is safe;
       // the bound keeps a paced multi-version walk from re-reading
       // each manifest on every trigger while staying O(1) memory
       if (freshMemo.size > 8) freshMemo.remove(freshMemo.head._1)
-      requireRetained(v)
-      if (v == anchor) entriesOf(v).sortBy(_._1)
-      else if (!probe.dataChange(v)) Nil
+      val cur = log.at(v) // fails once vacuum expired it
+      if (v == anchor) entriesOf(cur).sortBy(_._1)
+      else if (!probe.dataChange(cur)) Nil
       else {
-        requireRetained(v - 1)
-        val prev = probe.files(v - 1).toSet
-        entriesOf(v).filterNot(e => prev(e._1)).sortBy(_._1)
+        val prev = log.at(v - 1).files.toSet
+        entriesOf(cur).filterNot(e => prev(e._1)).sortBy(_._1)
       }
     })
 
@@ -521,17 +491,14 @@ final class GraftStreamSource(spark: SparkSession, man: String,
     * semantics): a trigger's FIRST file always delivers, else a file
     * above the budget would stall the stream forever. */
   override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = {
-    val vs = probe.committedVersions
-    val latest = {
-      val l0 = vs.maxOption.getOrElse(0)
-      fence.fold(l0)(math.min(_, l0))
-    }
+    val log = probe.snapshot()
+    val latest = fence.fold(log.version)(math.min(_, log.version))
     if (latest <= 0) return null // nothing committed yet (or an
                                  // AvailableNow run prepared against a
                                  // still-empty table)
     // Spark's v1 bridge passes null (not initialOffset()) before the
     // first batch — both spell "nothing delivered yet"
-    val startPos = if (start == null) Pos(0, 0, 0) else posOf(start)
+    val startPos = if (start == null) Pos(0, 0, 0) else posOf(start, log)
     val cur = if (startPos.anchor == 0) {
       // fresh stream: anchor the snapshot at the CURRENT latest and
       // start with nothing delivered (the first trigger never mixes
@@ -544,7 +511,7 @@ final class GraftStreamSource(spark: SparkSession, man: String,
     var (v, i) = (cur.v, cur.i)
     var (files, bytes) = budgets(limit)
     var took = 0L
-    var list = freshList(v, cur.anchor)
+    var list = freshList(log, v, cur.anchor)
     while (files > 0 && bytes > 0 && (i < list.size || v < latest)) {
       if (i < list.size) {
         val sz = list(i)._2
@@ -552,12 +519,12 @@ final class GraftStreamSource(spark: SparkSession, man: String,
           i += 1; took += 1; files -= 1
           bytes = math.max(0L, bytes - sz)
         } else bytes = 0L
-      } else { v += 1; i = 0; list = freshList(v, cur.anchor) }
+      } else { v += 1; i = 0; list = freshList(log, v, cur.anchor) }
     }
     // close out trailing empty versions so a no-op trigger does not
     // keep re-offering the same offset with work "pending"
     while (i == list.size && v < latest &&
-        freshList(v + 1, cur.anchor).isEmpty) {
+        freshList(log, v + 1, cur.anchor).isEmpty) {
       v += 1; list = Nil; i = 0
     }
     Pos(cur.anchor, v, i).offset
@@ -585,14 +552,15 @@ final class GraftStreamSource(spark: SparkSession, man: String,
   }
 
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
-    val to = Pos.parse(end, probe)
-    val from = start.map(Pos.parse(_, probe))
+    val log = probe.snapshot()
+    val to = Pos.parse(end, log)
+    val from = start.map(Pos.parse(_, log))
     // the slice of each version's fresh list between the two offsets;
     // planning is O(#versions-in-range x #files) driver-side — the
     // module contract, 1-2 versions per trigger in steady state
     val fromV = from.map(_.v).getOrElse(to.anchor)
     val pieces: Seq[(Int, Seq[String])] = (fromV to to.v).map { v =>
-      val list = freshList(v, to.anchor)
+      val list = freshList(log, v, to.anchor)
       val lo = from.filter(_.v == v).map(_.i).getOrElse(0)
       val hi = if (v == to.v) to.i else list.size
       v -> list.slice(lo, hi).map(_._1)
@@ -603,13 +571,14 @@ final class GraftStreamSource(spark: SparkSession, man: String,
     // DVs applied; later versions' fresh files are DV-free at their
     // own version by construction
     val anchorFiles = pieces.filter(_._1 == to.anchor).flatMap(_._2)
+    lazy val anchor = log.at(to.anchor)
     val batch =
       if (fresh.isEmpty)
         spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           schema)
-      else if (anchorFiles.nonEmpty && probe.hasLiveDvs(to.anchor)) {
-        val anchorDf = probe.readAsOf(to.anchor, anchorFiles)
+      else if (anchorFiles.nonEmpty && anchor.hasLiveDvs) {
+        val anchorDf = probe.readAsOf(anchor, anchorFiles)
           .select(schema.fieldNames.map(org.apache.spark.sql.functions.col)
             .toIndexedSeq: _*)
         val rest = fresh.filterNot(anchorFiles.toSet)
@@ -640,7 +609,7 @@ object GraftStreamSource {
         .SerializedOffset(s"""{"a":$anchor,"v":$v,"i":$i}""")
   }
   private[table] object Pos {
-    def parse(o: V1Offset, probe: GraftTable): Pos = {
+    def parse(o: V1Offset, log: => LogSnapshot): Pos = {
       val s = o.json.trim
       if (s.startsWith("{")) {
         def field(n: String): Int = {
@@ -652,7 +621,7 @@ object GraftStreamSource {
       } else {
         // legacy long offset: version fully delivered
         val v = s.toInt
-        Pos(v, v, probe.files(v).size)
+        Pos(v, v, log.at(v).files.size)
       }
     }
   }
@@ -688,13 +657,6 @@ final class GraftChangeFeedSource(spark: SparkSession, man: String,
 
   private def version(o: V1Offset): Int = o.json.trim.toInt
 
-  private def requireCommitted(v: Int): Unit =
-    if (!table.isCommitted(v))
-      throw new IllegalStateException(
-        s"change-feed version v=$v of $man no longer exists — vacuum " +
-          "expired it before this consumer caught up; vacuum retention " +
-          "must exceed the slowest consumer's lag")
-
   /** One-slot manifest memo: the walk reuses each version's entry list
     * as the next step's `from`, and across triggers the previous end
     * offset's list is still warm — so a steady-state trigger reads each
@@ -706,10 +668,11 @@ final class GraftChangeFeedSource(spark: SparkSession, man: String,
     * walk would deliver nothing for such a commit. */
   private var memo: Option[(Int, Seq[(String, Option[String])])] = None
 
-  private def pairsOf(v: Int): Seq[(String, Option[String])] = memo match {
+  private def pairsOf(log: LogSnapshot,
+      v: Int): Seq[(String, Option[String])] = memo match {
     case Some((mv, ps)) if mv == v => ps
     case _ =>
-      val ps = table.entryPairs(v)
+      val ps = log.at(v).pairs
       memo = Some((v, ps))
       ps
   }
@@ -721,7 +684,7 @@ final class GraftChangeFeedSource(spark: SparkSession, man: String,
   @volatile private var holdWarned = false
 
   override def prepareForTriggerAvailableNow(): Unit =
-    fence = Some(table.committedVersions.maxOption.getOrElse(0))
+    fence = Some(table.snapshot().version)
 
   // the per-trigger budget is maxVersionsPerTrigger, a unit Spark's
   // ReadLimit vocabulary lacks — the source self-paces in latestOffset
@@ -739,11 +702,8 @@ final class GraftChangeFeedSource(spark: SparkSession, man: String,
     * delivers the whole starting snapshot in its first batch, while a
     * startingVersion resume bounds even its first batch. */
   override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = {
-    val vs = table.committedVersions
-    val latest = {
-      val l0 = vs.maxOption.getOrElse(0)
-      fence.fold(l0)(math.min(_, l0))
-    }
+    val log = table.snapshot()
+    val latest = fence.fold(log.version)(math.min(_, log.version))
     if (latest <= 0) return null
     // Spark's v1 bridge passes null (not initialOffset()) before the
     // first batch — both spell "nothing delivered yet"
@@ -793,12 +753,12 @@ final class GraftChangeFeedSource(spark: SparkSession, man: String,
 
   /** Snapshot v's LIVE rows as `insert` ops (DVs applied, old_* NULL) —
     * the starting-snapshot delivery, and version 1's "diff". */
-  private def snapshotInserts(v: Int): Seq[DataFrame] = {
+  private def snapshotInserts(log: LogSnapshot, v: Int): Seq[DataFrame] = {
     import org.apache.spark.sql.functions.{col, lit}
-    requireCommitted(v)
-    if (table.files(v).isEmpty) Nil
+    val at = log.at(v) // fails once vacuum expired it
+    if (at.files.isEmpty) Nil
     else {
-      val snap = table.readAsOf(v)
+      val snap = table.readAsOf(at)
       val values = snap.columns.filterNot(_ == table.key).toSeq
       Seq(shape(snap.select(
         col(table.key) +:
@@ -811,19 +771,20 @@ final class GraftChangeFeedSource(spark: SparkSession, man: String,
 
   /** Per-commit row-level diffs of versions (vFrom, vEnd], walked so
     * each manifest reads once (the memo contract). */
-  private def changesIn(vFrom: Int, vEnd: Int): Seq[DataFrame] = {
-    requireCommitted(vFrom)
-    var prev = pairsOf(vFrom)
+  private def changesIn(log: LogSnapshot, vFrom: Int,
+      vEnd: Int): Seq[DataFrame] = {
+    log.at(vFrom) // fails once vacuum expired it
+    var prev = pairsOf(log, vFrom)
     ((vFrom + 1) to vEnd).flatMap { v =>
-      requireCommitted(v)
-      val cur = table.entryPairs(v)
+      val snap = log.at(v)
+      val cur = snap.pairs
       memo = Some((v, cur)) // warm for the next trigger's v0
       // a no-op commit (e.g. an empty streamed batch) changes no
       // entries — skipping it also keeps cdc away from its
       // empty-diff-of-an-empty-table loud path
       val out =
-        if (table.dataChange(v) && cur.toSet != prev.toSet)
-          Some(shape(table.cdcOf(prev, cur, v - 1, v), v))
+        if (table.dataChange(snap) && cur.toSet != prev.toSet)
+          Some(shape(table.cdcOf(prev, snap, v - 1), v))
         else None // OPTIMIZE/no-op: nothing to deliver
       prev = cur
       out
@@ -832,9 +793,10 @@ final class GraftChangeFeedSource(spark: SparkSession, man: String,
 
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
     val vEnd = version(end)
+    val log = table.snapshot()
     val pieces: Seq[DataFrame] = start match {
       case None => startingVersion match {
-        case None => snapshotInserts(vEnd) // Delta's default: snapshot
+        case None => snapshotInserts(log, vEnd) // Delta's default: snapshot
                                            // as inserts, then tail
         case Some(v0s) if v0s > vEnd => Nil // ahead of the log: deliver
                                             // nothing until it catches up
@@ -842,20 +804,20 @@ final class GraftChangeFeedSource(spark: SparkSession, man: String,
           // resume from a known watermark: deliver commits v0s..vEnd as
           // row-level diffs, NOT the whole snapshot. v=1 has no
           // predecessor — its "diff" is snapshot 1 as inserts.
-          requireCommitted(v0s)
-          if (v0s == 1) snapshotInserts(1) ++ changesIn(1, vEnd)
+          log.at(v0s)
+          if (v0s == 1) snapshotInserts(log, 1) ++ changesIn(log, 1, vEnd)
           else {
-            if (!table.isCommitted(v0s - 1))
+            if (!log.contains(v0s - 1))
               throw new IllegalStateException(
                 s"startingVersion=$v0s of $man needs predecessor " +
                   s"v=${v0s - 1} to compute commit $v0s's row-level " +
                   "diff, but vacuum expired it — start at or above the " +
                   "retained horizon's successor, or omit startingVersion " +
                   "to begin from the current snapshot")
-            changesIn(v0s - 1, vEnd)
+            changesIn(log, v0s - 1, vEnd)
           }
       }
-      case Some(o) => changesIn(version(o), vEnd)
+      case Some(o) => changesIn(log, version(o), vEnd)
     }
     val batch = pieces.reduceOption(_ unionByName _).getOrElse(
       spark.createDataFrame(

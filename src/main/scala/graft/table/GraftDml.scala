@@ -152,10 +152,8 @@ final case class GraftUpdateCommand(table: GraftV2Table,
   override def run(spark: SparkSession): Seq[Row] = {
     import GraftDml._
     val t = maintenance(spark, table)
-    val vs = t.committedVersions
-    require(vs.nonEmpty, s"no committed snapshots under ${table.man}")
-    val base = vs.max
-    val entries = t.manifest(base).collect()
+    val base = table.snapshot // the statement's one log snapshot
+    val entries = base.rows
     if (entries.isEmpty) return Seq(Row(0L))
     val (prunable, bloomable) = pruneCols(t, entries)
     val keep = condition.flatMap(c => SnapshotPruning.keepTest(
@@ -264,9 +262,7 @@ final case class GraftMergeCommand(table: GraftV2Table,
   override def run(spark: SparkSession): Seq[Row] = {
     import GraftDml._
     val t = maintenance(spark, table)
-    val vs = t.committedVersions
-    require(vs.nonEmpty, s"no committed snapshots under ${table.man}")
-    val base = vs.max
+    val base = table.snapshot // the statement's one log snapshot
 
     val tgtSet = AttributeSet(target.output)
     val srcSet = AttributeSet(source.output)
@@ -322,8 +318,7 @@ final case class GraftMergeCommand(table: GraftV2Table,
       return Seq(Row(n))
     }
     val keyDt = {
-      val sch = t.versionSchema(base)
-      sch.flatMap(s => s.fields.find(_.name == t.key).map(_.dataType))
+      base.schema.flatMap(s => s.fields.find(_.name == t.key).map(_.dataType))
         .getOrElse(srcDf.schema("__src_key").dataType)
     }
     val codec = GraftTable.codecFor(keyDt, t.key, forKey = true)
@@ -335,7 +330,7 @@ final case class GraftMergeCommand(table: GraftV2Table,
     if (env.getLong(2) == 0L && notMatchedBySourceActions.isEmpty)
       return Seq(Row(0L))
 
-    val entries = t.manifest(base).collect()
+    val entries = base.rows
     val impactedRows =
       if (notMatchedBySourceActions.nonEmpty) entries
       else entries.filter(
@@ -346,7 +341,7 @@ final case class GraftMergeCommand(table: GraftV2Table,
       (if (impacted.isEmpty)
         // typed empty: inserts may still apply
         GraftSqlBridge.ofRows(spark,
-          SnapshotSql.snapshotPlan(spark, table.man, base)).limit(0)
+          SnapshotSql.snapshotPlan(spark, base)).limit(0)
       else t.readAsOf(base, impacted))
         .withColumn("__tid", monotonically_increasing_id())
         .withColumn("__t", lit(true))
@@ -455,8 +450,8 @@ final case class GraftMergeCommand(table: GraftV2Table,
         t.sizedParts(2, t.entryBytes(impactedRows)))
       val stats = if (added.isEmpty) t.emptyEntries else t.fileStats(added)
       t.commitManifest(
-        t.unionEntries(t.excludeFiles(t.manifest(base), impacted), stats),
-        base + 1, schemaDdl = t.versionSchema(base).map(_.toDDL))
+        t.unionEntries(t.excludeFiles(base.entries, impacted), stats),
+        base.version + 1, schemaDdl = base.schema.map(_.toDDL))
       Seq(Row(affected))
     } finally { joined.unpersist(); () }
   }

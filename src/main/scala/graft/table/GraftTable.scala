@@ -36,6 +36,16 @@ import org.apache.spark.sql.functions._
   * [[GraftTable.atomicPublish]], the single place the publish decision
   * lives, exactly like Delta's LogStore abstraction.
   *
+  * SNAPSHOTS: a statement resolves the log ONCE. [[snapshot]] returns a
+  * [[LogSnapshot]] (Delta's `DeltaLog.update()` → `Snapshot`) from at
+  * most one listing of the committed versions: the version, its
+  * manifest dir and — each read once, on first use — its entries,
+  * files, (file, dv) pairs and recorded schema. Every read and commit
+  * takes a [[SnapshotRef]] (that snapshot, or an Int version), and
+  * retry loops re-snapshot per attempt; the atomic publish stays the
+  * only arbiter, so a stale snapshot costs a retry, never a wrong
+  * commit.
+  *
   * A table is (data dir, manifest dir, cluster/skip key [, extra stats
   * columns][, bloom columns]). The manifest schema is `(file, lo, hi,
   * n_rows, bytes)` — per-file key boxes + row counts + sizes — plus
@@ -59,11 +69,11 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     dmlModes: Map[String, String] = Map.empty)
     extends org.apache.spark.internal.Logging {
 
-  import GraftTable.{listStatusSafe, touch}
+  import GraftTable.{entryDvOf => entryDv, listStatusSafe, touch}
 
   @transient private lazy val hconf =
     spark.sessionState.newHadoopConf()
-  @transient private lazy val manFs: FileSystem =
+  @transient private[table] lazy val manFs: FileSystem =
     new Path(man).getFileSystem(hconf)
   @transient private lazy val dataFs: FileSystem =
     new Path(data).getFileSystem(hconf)
@@ -72,7 +82,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * declared on the instance, else whatever `_table_props` recorded at
     * creation (so a reader holding only the manifest path resolves
     * pointer-committed tables correctly), else the rename default. */
-  @transient private lazy val store: GraftTable.LogStore =
+  @transient private[table] lazy val store: GraftTable.LogStore =
     GraftTable.logStoreOf(
       if (logStore.nonEmpty) logStore
       else GraftTable.loadProps(spark, man).flatMap(_.logStore)
@@ -340,7 +350,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       case (x: java.lang.Double, y: java.lang.Double) =>
         if (java.lang.Double.compare(x, y) <= 0) x else y
       case (x: String, y: String) =>
-        if (GraftTable.utf8Compare(x, y) <= 0) x else y
+        if (GraftTable.utf8Cmp(x, y) <= 0) x else y
       case _ => throw new IllegalStateException(s"merge $a $b")
     }
     def mergeMax(dt: DataType, a: Any, b: Any): Any = (a, b) match {
@@ -351,7 +361,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       case (x: java.lang.Double, y: java.lang.Double) =>
         if (java.lang.Double.compare(x, y) >= 0) x else y
       case (x: String, y: String) =>
-        if (GraftTable.utf8Compare(x, y) >= 0) x else y
+        if (GraftTable.utf8Cmp(x, y) >= 0) x else y
       case _ => throw new IllegalStateException(s"merge $a $b")
     }
 
@@ -525,21 +535,34 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
 
   // ---- commit protocol ---------------------------------------------
 
-  /** Version v's committed directory, resolved through the log store
-    * (the rename store's `man/v=N`; the pointer store's pointed-to
-    * staging dir). Falls back to the rename-store target path for an
-    * uncommitted version, so `exists`-style probes behave as before. */
-  def manifestPath(v: Int): String =
-    store.resolve(manFs, new Path(man), v)
-      .map(_.toString).getOrElse(s"$man/v=$v")
+  /** The statement's view of the log, pinned at `v` (default: the
+    * latest, from ONE listing of the committed versions; a named version
+    * is proven by its own manifest read instead). The only place a
+    * version is resolved — every read and commit below takes the
+    * snapshot it is handed, or resolves its [[SnapshotRef]] here. A log
+    * with no version yields an EMPTY snapshot (version 0) rather than a
+    * failure, so existence probes need no second path. */
+  def snapshot(v: Option[Int] = None): LogSnapshot = v match {
+    case Some(named) => new LogSnapshot(this, None, named)
+    case None =>
+      val vs = store.committedVersions(manFs, new Path(man))
+      new LogSnapshot(this, Some(vs), vs.lastOption.getOrElse(0))
+  }
 
-  /** A resolvable version IS the commit marker — see the publish
-    * contract in the class doc. */
-  def isCommitted(v: Int): Boolean =
-    store.resolve(manFs, new Path(man), v).isDefined
+  private[table] def resolve(ref: SnapshotRef): LogSnapshot = ref match {
+    case s: LogSnapshot => s
+    case SnapshotRef.Version(v) => snapshot(Some(v))
+  }
 
-  def committedVersions: Seq[Int] =
-    store.committedVersions(manFs, new Path(man))
+  /** `ref`'s own listing when it is a snapshot, else a fresh one. */
+  private def listing(ref: SnapshotRef): LogSnapshot = ref match {
+    case s: LogSnapshot => s
+    case _ => snapshot()
+  }
+
+  def manifestPath(v: Int): String = snapshot(Some(v)).dir
+  def isCommitted(v: Int): Boolean = snapshot().contains(v)
+  def committedVersions: Seq[Int] = snapshot().versions
 
   /** Attempt to commit `entries` as manifest version `v`: write to a
     * staging dir, rename into place ([[GraftTable.atomicPublish]] — the
@@ -618,10 +641,11 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
   def commitManifest(entries: DataFrame, v: Int,
       tag: Option[String] = None, schemaDdl: Option[String] = None): Unit =
     if (!tryCommitManifest(entries, v, tag, schemaDdl = schemaDdl)) {
-      require(isCommitted(v),
-        s"manifest commit v=$v failed: publish refused and no committed version present")
+      // the publish refusal means v is committed: the winner resolves
+      // from one listing
+      val winner = snapshot(Some(v))
       tag.foreach { t =>
-        require(manFs.exists(new Path(manifestPath(v), s"_tag_$t")),
+        require(manFs.exists(new Path(winner.dir, s"_tag_$t")),
           s"lost the commit race for v=$v to a snapshot NOT carrying tag " +
             s"'$t' — concurrent non-replay writers on one version; use " +
             "commitAppendOcc for multi-writer tables")
@@ -631,8 +655,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       // construction). Both lists are already on the driver, so the
       // complete check costs the same O(#files) as the count it
       // replaces — and closes the same-count-different-content hole.
-      val winnerFiles = manifest(v).collect()
-        .map(_.getAs[String]("file")).sorted.toSeq
+      val winnerFiles = winner.files.sorted
       val ourFiles = entries.select("file").collect()
         .map(_.getString(0)).sorted.toSeq
       require(winnerFiles == ourFiles,
@@ -647,21 +670,20 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * recorded the no-data marker. Pre-marker manifests read as true —
     * conservative for change-feed consumers (at worst a re-delivery,
     * never a missed row). */
-  def dataChange(v: Int): Boolean =
-    !manFs.exists(new Path(manifestPath(v), GraftTable.NoDataMarker))
+  def dataChange(v: SnapshotRef): Boolean =
+    !manFs.exists(new Path(resolve(v).dir, GraftTable.NoDataMarker))
 
   /** The committed version carrying `tag`, if any — O(#versions)
     * driver-side, like all manifest planning. */
-  def versionWithTag(tag: String): Option[Int] =
-    committedVersions.find(v =>
-      manFs.exists(new Path(manifestPath(v), s"_tag_$tag")))
+  def versionWithTag(tag: String, s: LogSnapshot = snapshot()): Option[Int] =
+    s.versions.find(v => manFs.exists(new Path(s.at(v).dir, s"_tag_$tag")))
 
   /** Whether `tag` was EVER committed — live versions plus the `_tags`
     * ledger that [[vacuum]] preserves when it expires a tagged version.
     * Replay detection must use this, not [[versionWithTag]]: vacuuming
     * a batch's version must not make its replay look uncommitted. */
-  def tagCommitted(tag: String): Boolean =
-    versionWithTag(tag).isDefined ||
+  def tagCommitted(tag: String, s: LogSnapshot = snapshot()): Boolean =
+    versionWithTag(tag, s).isDefined ||
       manFs.exists(new Path(s"$man/_tags", s"_tag_$tag"))
 
   /** All committed tags starting with `prefix` — live versions plus the
@@ -670,8 +692,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * when a NEW checkpoint silently restarts batchIds at 0 against an
     * appId that already committed far past them. */
   def committedTags(prefix: String): Seq[String] = {
-    val live = committedVersions.flatMap { v =>
-      listStatusSafe(manFs, new Path(manifestPath(v)))
+    val s = snapshot()
+    val live = s.versions.flatMap { v =>
+      listStatusSafe(manFs, new Path(s.at(v).dir))
         .map(_.getPath.getName).filter(_.startsWith("_tag_"))
     }
     val ledger = listStatusSafe(manFs, new Path(s"$man/_tags"))
@@ -680,12 +703,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       .distinct.filter(_.startsWith(prefix))
   }
 
-  /** Snapshot v's manifest as a DataFrame. Read driver-side
-    * ([[GraftTable.readManifestRows]]) — planning never schedules a
-    * Spark job; the result is a local relation, so downstream
-    * `.collect()`s are driver-only too. */
-  def manifest(v: Int): DataFrame =
-    GraftTable.readManifestDf(spark, manifestPath(v))
+  /** Snapshot v's manifest as a local relation ([[LogSnapshot.entries]]). */
+  def manifest(v: SnapshotRef): DataFrame = resolve(v).entries
 
   // ---- snapshot operations -----------------------------------------
 
@@ -739,7 +758,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // creator writes; create() stays destructive (it deletes the
     // manifest dir first, so its writeProps is always a fresh file).
     if (!manFs.exists(new Path(man, GraftTable.PropsFile))) writeProps()
-    if (!isCommitted(1)) {
+    if (!snapshot().contains(1)) {
       val entries = schema match {
         case Some(sch) =>
           val codecs = (key +: statsCols).map(c =>
@@ -754,23 +773,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     this
   }
 
-  /** The data schema version v's commit recorded (rides the atomic
-    * commit as `_schema.ddl`), when present — the zero-footer-read
-    * planning path. Pre-round-11 manifests return None (readers fall
-    * back to parquet footer inference). */
-  def versionSchema(v: Int): Option[org.apache.spark.sql.types.StructType] = {
-    val p = new Path(manifestPath(v), GraftTable.SchemaFile)
-    if (!manFs.exists(p)) None
-    else {
-      val in = manFs.open(p)
-      val txt = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-        bos.toString("UTF-8")
-      } finally in.close()
-      Some(org.apache.spark.sql.types.StructType.fromDDL(txt))
-    }
-  }
+  /** The data schema version v's commit recorded ([[LogSnapshot.schema]]). */
+  def versionSchema(v: SnapshotRef): Option[org.apache.spark.sql.types.StructType] =
+    resolve(v).schema
 
   /** The schema DDL a commit on top of `base` should record, given the
     * batch's schema: the base version's recorded fields plus any new
@@ -778,9 +783,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * when the base recorded no schema AND still references files — the
     * union with unknown historical columns cannot be stated, so the
     * commit records nothing and readers keep the footer fallback. */
-  private def evolvedSchemaDdl(base: Int,
+  private def evolvedSchemaDdl(base: LogSnapshot,
       batch: org.apache.spark.sql.types.StructType): Option[String] =
-    versionSchema(base) match {
+    base.schema match {
       case Some(prev) =>
         // field identity per the session resolver: a batch spelling an
         // existing column in a different case (caseSensitive=false) is
@@ -798,7 +803,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         Some(org.apache.spark.sql.types.StructType(
           prev.fields ++ fresh).toDDL)
       case None =>
-        if (files(base).isEmpty) Some(batch.toDDL) else None
+        if (base.files.isEmpty) Some(batch.toDDL) else None
     }
 
   /** SHALLOW CLONE (Delta `CLONE`/Iceberg snapshot-ref): a NEW table
@@ -823,10 +828,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     *    dependency before reclaiming.
     *
     * Destructive on the target (same overwrite contract as [[create]]). */
-  def shallowClone(v: Int, targetData: String, targetMan: String)
+  def shallowClone(v: SnapshotRef, targetData: String, targetMan: String)
       : GraftTable = {
-    require(isCommitted(v),
-      s"cannot clone uncommitted snapshot v=$v of $man")
+    val src = resolve(v)
     // compare FULLY QUALIFIED paths (scheme + authority + absolute):
     // an alias of the same directory — 'file:/x/man' vs '/x/man',
     // relative vs absolute — must not slip past the guard, because the
@@ -850,21 +854,21 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     if (clone.manFs.exists(cloneManDir)) clone.manFs.delete(cloneManDir, true)
     clone.manFs.mkdirs(cloneManDir)
     clone.dataFs.mkdirs(new Path(targetData))
-    clone.writeProps(provenance = Some(s"source=$man@v=$v"))
+    clone.writeProps(provenance = Some(s"source=$man@v=${src.version}"))
     // carry the source's column mapping RESOLVED AT v as v=1 events:
     // the clone's single-version lineage starts at the cloned snapshot,
     // so the composed logical->physical pairs apply to every clone
     // version (the clone's data files are the source's, under the same
     // frozen physical names)
-    val mapped = logicalToPhysical(v).toSeq.sortBy(_._1)
+    val mapped = logicalToPhysical(src.version).toSeq.sortBy(_._1)
     mapped.zipWithIndex.foreach { case ((l, p), i) =>
       clone.setPropLine(s"rename.1.$i", Some(s"$p:$l"))
     }
     if (mapped.nonEmpty ||
         GraftTable.loadProps(spark, man).exists(_.schemaDetached))
       clone.setPropLine("schema_detached", Some("true"))
-    clone.commitManifest(manifest(v), 1,
-      schemaDdl = versionSchema(v).map(_.toDDL))
+    clone.commitManifest(src.entries, 1,
+      schemaDdl = src.schema.map(_.toDDL))
     clone
   }
 
@@ -985,12 +989,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     val p = new Path(man, GraftTable.PropsFile)
     require(manFs.exists(p),
       s"$man carries no _table_props — not a graft table")
-    val in = manFs.open(p)
-    val txt = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-      bos.toString("UTF-8")
-    } finally in.close()
+    val txt = GraftTable.readText(manFs, p)
     val kept = txt.linesIterator
       .filterNot(_.startsWith(s"$fullKey=")).toSeq
     val out = manFs.create(p, true)
@@ -1100,12 +1099,13 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * NULL table keys are rejected by the stats scan (see [[fileStats]]);
     * a rejected batch's already-moved files are unreferenced orphans
     * that [[vacuum]] reclaims. */
-  def commitAppend(batch: DataFrame, prevV: Int, nParts: Int = 2,
+  def commitAppend(batch: DataFrame, prevV: SnapshotRef, nParts: Int = 2,
       tag: Option[String] = None): Unit = {
+    val base = resolve(prevV)
     val added = stagedAppend(batch, nParts)
     val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitManifest(unionEntries(manifest(prevV), stats), prevV + 1, tag,
-      schemaDdl = evolvedSchemaDdl(prevV, batch.schema))
+    commitManifest(unionEntries(base.entries, stats), base.version + 1, tag,
+      schemaDdl = evolvedSchemaDdl(base, batch.schema))
   }
 
   /** Optimistic-concurrency append for MULTI-WRITER tables (the Delta
@@ -1121,24 +1121,26 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * callers using the value as a version number must treat -1 as
     * "committed, version unavailable". */
   def commitAppendOcc(batch: DataFrame, nParts: Int = 2,
-      maxRetries: Int = 50, tag: Option[String] = None): Int = {
+      maxRetries: Int = 50, tag: Option[String] = None,
+      start: Option[LogSnapshot] = None): Int = {
     val added = stagedAppend(batch, nParts)
     val stats = if (added.isEmpty) emptyEntries else fileStats(added)
     var attempts = 0
     while (attempts <= maxRetries) {
+      // the caller's snapshot serves the first attempt; every rebase
+      // re-lists the log
+      val base = start.filter(_ => attempts == 0).getOrElse(snapshot())
       // a concurrent replay carrying OUR tag may have won a lost race:
       // its snapshot holds the batch, ours is redundant — stop, leaving
       // our staged files as vacuum-reclaimable orphans
       tag.foreach { t =>
-        if (tagCommitted(t)) return versionWithTag(t).getOrElse(-1)
+        if (tagCommitted(t, base)) return versionWithTag(t, base).getOrElse(-1)
       }
-      val vs = committedVersions
-      require(vs.nonEmpty,
-        s"no committed versions under $man — call create()/createEmpty() first")
-      val base = vs.max
-      if (tryCommitManifest(unionEntries(manifest(base), stats), base + 1, tag,
+      base.requireTable()
+      if (tryCommitManifest(unionEntries(base.entries, stats),
+          base.version + 1, tag,
           schemaDdl = evolvedSchemaDdl(base, batch.schema)))
-        return base + 1
+        return base.version + 1
       attempts += 1 // lost the race — rebase onto the winner's version
     }
     throw new IllegalStateException(
@@ -1164,8 +1166,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * merges on DISJOINT key envelopes both commit; overlapping merges
     * still fail loudly. `tag` records replay provenance (the streaming
     * upsert sink keys exactly-once on it). */
-  def commitMerge(batch: DataFrame, prevV: Int, nParts: Int = 2,
+  def commitMerge(batch: DataFrame, prevV: SnapshotRef, nParts: Int = 2,
       tag: Option[String] = None, maxRebases: Int = 5): Unit = {
+    val prev = resolve(prevV)
     // one pass computes the key envelope AND the null-key census: a
     // NULL merge key can never be matched by the anti join, so such a
     // row would duplicate on every re-merge and sit outside its file's
@@ -1185,15 +1188,15 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
           "inside this batch's key envelope); re-run the merge against " +
           "the latest snapshot")
     if (total == 0) { // empty batch: commit a carry-forward version
-      if (!tryCommitManifest(manifest(prevV), prevV + 1, tag))
-        conflict(prevV + 1)
+      if (!tryCommitManifest(prev.entries, prev.version + 1, tag))
+        conflict(prev.version + 1)
       return
     }
     require(nonNull == total,
       s"merge batch has ${total - nonNull} NULL '$key' key(s) — " +
         "the merge key must be non-null")
     val (qlo, qhi) = (env.get(0), env.get(1))
-    val prevEntries = manifest(prevV).collect()
+    val prevEntries = prev.rows
     val impactedRows = prevEntries
       .filter(GraftTable.boxIntersects(_, "lo", "hi", qlo, qhi))
     val impacted = impactedRows.map(_.getAs[String]("file")).toSeq
@@ -1209,8 +1212,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // survivors (evolvedSchemaDdl records the union either way)
     val replacement =
       (if (impacted.isEmpty) batch.limit(0)
-       else morRead(impactedRows.map(r => (r.getAs[String]("file"),
-           entryDv(r))).toSeq, versionSchema(prevV), prevV)
+       else readRows(prev, impactedRows)
          .join(batch.select(key).distinct(), Seq(key), "left_anti"))
         .unionByName(batch, allowMissingColumns = true)
     val added = stagedAppend(replacement,
@@ -1222,46 +1224,36 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // this merge's survivor read is stale all the same
     def pairsOf(rows: Array[Row]): Map[String, Option[String]] =
       rows.map(r => r.getAs[String]("file") -> entryDv(r)).toMap
-    var base = prevV
+    var base = prev
     var basePairs = pairsOf(prevEntries)
     var rebases = 0
     while (true) {
-      val entries = unionEntries(excludeFiles(manifest(base), impacted),
+      val entries = unionEntries(excludeFiles(base.entries, impacted),
         stats)
-      if (tryCommitManifest(entries, base + 1, tag,
+      if (tryCommitManifest(entries, base.version + 1, tag,
           schemaDdl = evolvedSchemaDdl(base, batch.schema)))
         return
-      // lost the race — O(#files) driver-side disjointness check
-      val winner = manifest(base + 1).collect()
-      val winnerPairs = pairsOf(winner)
-      val newEntries =
-        winner.filterNot(r => basePairs.contains(r.getAs[String]("file")))
+      // lost the race — re-snapshot at the winner, then an O(#files)
+      // driver-side disjointness check
+      val winner = snapshot(Some(base.version + 1))
+      val winnerPairs = pairsOf(winner.rows)
+      val newEntries = winner.rows
+        .filterNot(r => basePairs.contains(r.getAs[String]("file")))
       rebases += 1
       if (rebases > maxRebases ||
           !impacted.forall(f => winnerPairs.get(f).contains(basePairs(f))) ||
           newEntries.exists(
             GraftTable.boxIntersects(_, "lo", "hi", qlo, qhi)))
-        conflict(base + 1)
-      base += 1
+        conflict(winner.version)
+      base = winner
       basePairs = winnerPairs
     }
   }
 
   // ---- merge-on-read (deletion-vector) merge ------------------------
 
-  /** A manifest entry's deletion-vector path — None for pre-MoR
-    * manifests (no `dv` column) and DV-free entries alike. Delegates
-    * to the shared encoding probe so the commit side and the pruning
-    * side ([[SnapshotPruning]]) can never disagree on what "carries a
-    * DV" means. */
-  private def entryDv(r: Row): Option[String] = GraftTable.entryDvOf(r)
-
-  /** Snapshot v's entries as (file, deletion-vector path) pairs — the
-    * EFFECTIVE content identity of an entry. Pre-MoR manifests have no
-    * `dv` column; every pair reads None. */
-  private[graft] def entryPairs(v: Int): Seq[(String, Option[String])] =
-    manifest(v).collect()
-      .map(r => (r.getAs[String]("file"), entryDv(r))).toSeq
+  private[graft] def entryPairs(v: SnapshotRef): Seq[(String, Option[String])] =
+    resolve(v).pairs
 
   // ---- logical->physical column mapping (RENAME COLUMN) -------------
 
@@ -1273,7 +1265,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
   private[graft] def renameEvents: Seq[(Int, String, String)] = {
     val raw = GraftTable.loadProps(spark, man).map(_.renames).getOrElse(Nil)
     if (raw.isEmpty) raw
-    else raw.filter { case (v, old, nw) => renameEventCommitted(v, old, nw) }
+    else {
+      lazy val log = snapshot()
+      raw.filter { case (v, old, nw) => renameEventCommitted(log, v, old, nw) }
+    }
   }
 
   /** An event replays only once its version COMMITTED a schema
@@ -1305,14 +1300,14 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * would silently map to the old physical bytes (ADVICE r21 medium). */
   @transient private lazy val renameEventOk =
     new java.util.concurrent.ConcurrentHashMap[(Int, String, String), java.lang.Boolean]()
-  private def renameEventCommitted(v: Int, old: String,
+  private def renameEventCommitted(log: => LogSnapshot, v: Int, old: String,
       nw: String): Boolean = {
     val key = (v, old, nw)
     if (renameEventOk.get(key) != null) true
     else {
       val resolver = spark.sessionState.conf.resolver
-      if (isCommitted(v)) {
-        val ok = versionSchema(v).exists { s =>
+      if (log.contains(v)) {
+        val ok = log.at(v).schema.exists { s =>
           s.fieldNames.exists(resolver(_, nw)) &&
             !s.fieldNames.exists(resolver(_, old))
         }
@@ -1321,7 +1316,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
                                          // expiry must never trust it
         ok
       }
-      else committedVersions.minOption.exists(v < _) // expired
+      else log.versions.minOption.exists(v < _) // expired
     }
   }
 
@@ -1332,12 +1327,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
   private def dropRenameEvent(v: Int, old: String, nw: String): Unit = {
     val p = new Path(man, GraftTable.PropsFile)
     if (!manFs.exists(p)) return
-    val in = manFs.open(p)
-    val txt = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-      bos.toString("UTF-8")
-    } finally in.close()
+    val txt = GraftTable.readText(manFs, p)
     val doomed = (line: String) =>
       line.startsWith(s"rename.$v.") && line.endsWith(s"=$old:$nw")
     if (!txt.linesIterator.exists(doomed)) return
@@ -1453,15 +1443,21 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     }
   }
 
+  /** Live rows of `rows`, entries of snapshot `s`, under s's schema. */
+  private def readRows(s: LogSnapshot, rows: Array[Row]): DataFrame =
+    morRead(rows.map(r => (r.getAs[String]("file"), entryDv(r))).toSeq,
+      s.schema, s.version)
+
   /** [[readAsOf]] restricted to a pruned subset of snapshot v's files,
     * with each file's deletion vector still applied — what a policy
     * layer that planned its own file list (the streaming upsert sink's
     * envelope-pruned current-state read) must use on a table that may
     * carry DVs: a raw `spark.read.parquet` would resurrect masked
     * rows. */
-  def readAsOf(v: Int, only: Seq[String]): DataFrame = {
+  def readAsOf(v: SnapshotRef, only: Seq[String]): DataFrame = {
+    val s = resolve(v)
     val want = only.toSet
-    morRead(entryPairs(v).filter(p => want(p._1)), versionSchema(v), v)
+    morRead(s.pairs.filter(p => want(p._1)), s.schema, s.version)
   }
 
   /** MERGE-ON-READ upsert commit — the write-amplification complement
@@ -1500,33 +1496,31 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * anything else — in particular a winner that rewrote or re-masked
     * a file whose positions this DV masks (positions are only stable
     * while the file is) — still fails loudly. */
-  def commitMergeMor(batch: DataFrame, prevV: Int, nParts: Int = 2,
+  def commitMergeMor(batch: DataFrame, prevV: SnapshotRef, nParts: Int = 2,
       tag: Option[String] = None): Unit = {
+    val prev = resolve(prevV)
     val codec = GraftTable.codecFor(batch.schema(key).dataType, key,
       forKey = true)
     val env = batch.agg(codec.loAgg(key), codec.hiAgg(key),
       count(lit(1)), count(col(key))).head
     val (total, nonNull) = (env.getLong(2), env.getLong(3))
     if (total == 0) { // empty batch: commit a carry-forward version
-      if (!tryCommitManifest(manifest(prevV), prevV + 1, tag))
+      if (!tryCommitManifest(prev.entries, prev.version + 1, tag))
         throw new java.util.ConcurrentModificationException(
-          s"MoR merge lost the commit race for v=${prevV + 1}")
+          s"MoR merge lost the commit race for v=${prev.version + 1}")
       return
     }
     require(nonNull == total,
       s"merge batch has ${total - nonNull} NULL '$key' key(s) — " +
         "the merge key must be non-null")
     val (qlo, qhi) = (env.get(0), env.get(1))
-    val prevMan = manifest(prevV)
-    val hasDv = prevMan.columns.contains("dv")
-    val prevEntries = prevMan.collect()
-    val impactedRows = prevEntries
+    val impactedRows = prev.rows
       .filter(GraftTable.boxIntersects(_, "lo", "hi", qlo, qhi))
     val impacted = impactedRows.map(_.getAs[String]("file")).toSeq
     // physical-name schema for the raw file scan (the key itself can
     // never be renamed, so col(key) below resolves either way)
-    val reader = versionSchema(prevV).map(s => spark.read.schema(
-        physicalSchemaOf(s, logicalToPhysical(prevV))))
+    val reader = prev.schema.map(s => spark.read.schema(
+        physicalSchemaOf(s, logicalToPhysical(prev.version))))
       .getOrElse(spark.read.option("mergeSchema", "true"))
 
     // masked positions: key column + parquet metadata only — the scan
@@ -1547,9 +1541,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       // the batch's new clustered files (stats recorded like any append)
       val added = stagedAppend(batch, nParts)
       val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-      commitMorMasked(prevMan, prevEntries, impactedRows, maskedNew, stats,
-        prevV, tag, evolvedSchemaDdl(prevV, batch.schema),
-        envGuard = Some((qlo, qhi)))
+      commitMorMasked(prev, impactedRows, maskedNew, stats, tag,
+        evolvedSchemaDdl(prev, batch.schema), envGuard = Some((qlo, qhi)))
     } finally { maskedNew.foreach(_.unpersist()); () }
   }
 
@@ -1576,27 +1569,24 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * dedups and the live arithmetic (n_rows − (combined − old)) stays
     * exact. With no masked positions at all this degrades to a pure
     * append commit (no dv column introduced). */
-  private def commitMorMasked(prevMan: DataFrame, prevEntries: Array[Row],
+  private def commitMorMasked(prev: LogSnapshot,
       impactedRows: Array[Row], maskedNew: Option[DataFrame],
-      stats: DataFrame, prevV: Int, tag: Option[String],
-      schemaDdl: Option[String],
+      stats: DataFrame, tag: Option[String], schemaDdl: Option[String],
       oldDvPre: Option[DataFrame] = None,
       envGuard: Option[(Any, Any)] = None,
       newCntPre: Option[Map[String, Long]] = None): Unit = {
     import spark.implicits._
-    val hasDv = prevMan.columns.contains("dv")
     // FAST PATH: when no impacted entry carries an existing DV (every
     // first mask over an envelope — the common case), the combined
     // vector IS the deduped new mask: ONE aggregation yields the
     // per-file counts, and old counts are provably zero.
-    val anyOldDv = hasDv &&
-      impactedRows.exists(r => GraftTable.entryDvOf(r).isDefined)
+    val anyOldDv = impactedRows.exists(r => entryDv(r).isDefined)
     if (!anyOldDv && maskedNew.isDefined && newCntPre.isDefined) {
       // the DML callers' mask comes from ONE scan of the impacted files,
       // so its (file, pos) pairs are already unique: it IS the combined
       // vector and their per-file counts are its counts — no dedup pass
-      commitMorMaskedTail(prevMan, prevEntries, maskedNew, newCntPre.get,
-        Map.empty, stats, prevV, tag, schemaDdl, envGuard)
+      commitMorMaskedTail(prev, maskedNew, newCntPre.get,
+        Map.empty, stats, tag, schemaDdl, envGuard)
       return
     }
     if (!anyOldDv && maskedNew.isDefined) {
@@ -1607,11 +1597,11 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
           .groupBy("file").agg(count(lit(1)).as("n")).collect()
           .map(r => r.getAs[String]("file") -> r.getAs[Long]("n")).toMap
         if (allCnt.isEmpty)
-          commitMorMaskedTail(prevMan, prevEntries, None, Map.empty,
-            Map.empty, stats, prevV, tag, schemaDdl, envGuard)
+          commitMorMaskedTail(prev, None, Map.empty,
+            Map.empty, stats, tag, schemaDdl, envGuard)
         else
-          commitMorMaskedTail(prevMan, prevEntries, Some(dvAll),
-            allCnt, Map.empty, stats, prevV, tag, schemaDdl, envGuard)
+          commitMorMaskedTail(prev, Some(dvAll),
+            allCnt, Map.empty, stats, tag, schemaDdl, envGuard)
       } finally { dvAll.unpersist(blocking = false); () }
       return
     }
@@ -1628,8 +1618,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     if (newCnt.isEmpty) {
       // no masked positions (or no impacted files): a pure append
       // commit — no DV written, no dv column introduced
-      commitMorMaskedTail(prevMan, prevEntries, None, Map.empty,
-        Map.empty, stats, prevV, tag, schemaDdl, envGuard)
+      commitMorMaskedTail(prev, None, Map.empty,
+        Map.empty, stats, tag, schemaDdl, envGuard)
       return
     }
     val refold = newCnt.keySet
@@ -1648,7 +1638,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // refold files here. When computed locally, ONLY the refold
     // entries' own DV parquets are read at all.
     val ownedDv: Option[DataFrame] =
-      if (oldDvPre.isDefined || !hasDv) None
+      if (oldDvPre.isDefined) None
       else GraftTable.ownDvRows(spark, refoldRows).map(_.persist())
     val oldDv: Option[DataFrame] = oldDvPre match {
       case Some(o) =>
@@ -1668,8 +1658,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
             val allCnt: Map[String, Long] = dvAll
               .groupBy("file").agg(count(lit(1)).as("n")).collect()
               .map(r => r.getAs[String]("file") -> r.getAs[Long]("n")).toMap
-            commitMorMaskedTail(prevMan, prevEntries, Some(dvAll),
-              allCnt, Map.empty, stats, prevV, tag, schemaDdl, envGuard)
+            commitMorMaskedTail(prev, Some(dvAll),
+              allCnt, Map.empty, stats, tag, schemaDdl, envGuard)
           } finally { dvAll.unpersist(blocking = false); () }
         case Some(o) =>
           // ONE tagged pass replaces the pre-r22 three evaluations
@@ -1696,9 +1686,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
               val n = r.getAs[Long]("old")
               if (n == 0L) None else Some(r.getAs[String]("file") -> n)
             }.toMap
-            commitMorMaskedTail(prevMan, prevEntries,
+            commitMorMaskedTail(prev,
               Some(merged.select("file", "pos")),
-              allCnt, oldCnt, stats, prevV, tag, schemaDdl, envGuard)
+              allCnt, oldCnt, stats, tag, schemaDdl, envGuard)
           } finally { merged.unpersist(blocking = false); () }
       }
     } finally { ownedDv.foreach(_.unpersist()); () }
@@ -1723,16 +1713,15 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * the WINNER verbatim, so its changes to files outside this
     * commit's mask set compose. Anything else fails loudly — never a
     * silent drop. */
-  private def commitMorMaskedTail(prevMan: DataFrame,
-      prevEntries: Array[Row],
+  private def commitMorMaskedTail(prev: LogSnapshot,
       dvAll: Option[DataFrame], allCnt: Map[String, Long],
-      oldCnt: Map[String, Long], stats: DataFrame, prevV: Int,
+      oldCnt: Map[String, Long], stats: DataFrame,
       tag: Option[String], schemaDdl: Option[String],
       envGuard: Option[(Any, Any)] = None, maxRebases: Int = 5): Unit = {
     if (allCnt.isEmpty) {
       // no masked positions (or no impacted files): a pure append
       // commit — no DV written, no dv column introduced
-      commitManifest(unionEntries(prevMan, stats), prevV + 1, tag,
+      commitManifest(unionEntries(prev.entries, stats), prev.version + 1, tag,
         schemaDdl)
       return
     }
@@ -1744,14 +1733,14 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
 
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     import scala.jdk.CollectionConverters._
-    def rebuilt(manDf: DataFrame, entries: Array[Row]): DataFrame = {
-      val hasDv = manDf.columns.contains("dv")
+    def rebuilt(b: LogSnapshot): DataFrame = {
+      val hasDv = b.entries.columns.contains("dv")
       val outSchema =
-        if (hasDv) manDf.schema
-        else StructType(manDf.schema.fields :+ StructField("dv", StringType))
+        if (hasDv) b.entries.schema
+        else StructType(b.entries.schema.fields :+ StructField("dv", StringType))
       val idxN = outSchema.fieldIndex("n_rows")
       val idxDv = outSchema.fieldIndex("dv")
-      val updated = entries.flatMap { r =>
+      val updated = b.rows.flatMap { r =>
         val f = r.getAs[String]("file")
         val vals = (if (hasDv) r.toSeq else r.toSeq :+ null).toArray
         allCnt.get(f) match {
@@ -1780,35 +1769,32 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     def pairOf(r: Row): (Option[String], Long) =
       (entryDv(r), r.getAs[Long]("n_rows"))
 
-    var base = prevV
-    var manDf = prevMan
-    var baseEntries = prevEntries
+    var base = prev
     var rebases = 0
     while (true) {
-      if (tryCommitManifest(unionEntries(rebuilt(manDf, baseEntries),
-          stats), base + 1, tag, schemaDdl = schemaDdl))
+      if (tryCommitManifest(unionEntries(rebuilt(base), stats),
+          base.version + 1, tag, schemaDdl = schemaDdl))
         return
-      // lost the race — O(#files) driver-side disjointness check
+      // lost the race — re-snapshot at the winner, then an O(#files)
+      // driver-side disjointness check
       rebases += 1
-      val winner = manifest(base + 1).collect()
-      val baseByFile = baseEntries
+      val winner = snapshot(Some(base.version + 1))
+      val baseByFile = base.rows
         .map(r => r.getAs[String]("file") -> pairOf(r)).toMap
-      val winByFile = winner
+      val winByFile = winner.rows
         .map(r => r.getAs[String]("file") -> pairOf(r)).toMap
       val touchedIntact = allCnt.keySet.forall(f =>
         winByFile.contains(f) && winByFile.get(f) == baseByFile.get(f))
-      val schemaIntact = versionSchema(base + 1).map(_.toDDL) ==
-        versionSchema(base).map(_.toDDL)
+      val schemaIntact =
+        winner.schema.map(_.toDDL) == base.schema.map(_.toDDL)
       val envClear = envGuard.forall { case (qlo, qhi) =>
-        !winner.exists(r => !baseByFile.contains(r.getAs[String]("file")) &&
+        !winner.rows.exists(r => !baseByFile.contains(r.getAs[String]("file")) &&
           GraftTable.boxIntersects(r, "lo", "hi", qlo, qhi))
       }
       if (rebases > maxRebases || !touchedIntact || !schemaIntact ||
           !envClear)
-        conflict(base + 1)
-      base += 1
-      manDf = manifest(base)
-      baseEntries = winner
+        conflict(winner.version)
+      base = winner
     }
   }
 
@@ -1826,9 +1812,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * rows neither inflate the count nor re-mask; a no-match delete
     * burns no version. Returns rows deleted. */
   def commitDeleteMor(pruneFilters: Seq[org.apache.spark.sql.sources.Filter],
-      pred: Column, prevV: Int, tag: Option[String] = None): Long = {
-    val prevMan = manifest(prevV)
-    val prevEntries = prevMan.collect()
+      pred: Column, prevV: SnapshotRef, tag: Option[String] = None): Long = {
+    val prev = resolve(prevV)
+    val prevEntries = prev.rows
     if (prevEntries.isEmpty) return 0L
     val (prunable, bloomable) = pruneSets(prevEntries)
     val impactedRows = SnapshotPruning
@@ -1845,7 +1831,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // columns + parquet metadata (no other value bytes); rows an
     // existing DV already masks anti-join away so the returned count
     // is live-exact and the no-op test cannot be fooled
-    val matchedRaw = dmlScan(prevV, impacted)
+    val matchedRaw = dmlScan(prev, impacted)
       .filter(pred)
       .select(col("__file").as("file"), col("__pos").as("pos"))
     val maskedNew = oldDv.fold(matchedRaw)(o =>
@@ -1875,11 +1861,11 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         logWarning(s"MoR DELETE on $man matches $nDel of $liveRows live " +
           s"envelope rows (> maxMaskFraction=$maxFrac); falling back to " +
           "the COW rewrite")
-        return commitDelete(pruneFilters, pred, prevV, 2, tag)
+        return commitDelete(pruneFilters, pred, prev, 2, tag)
       }
-      commitMorMasked(prevMan, prevEntries, impactedRows, Some(maskedNew),
-        emptyEntries, prevV, tag,
-        schemaDdl = versionSchema(prevV).map(_.toDDL), oldDvPre = oldDv,
+      commitMorMasked(prev, impactedRows, Some(maskedNew),
+        emptyEntries, tag,
+        schemaDdl = prev.schema.map(_.toDDL), oldDvPre = oldDv,
         newCntPre = Some(newCnt))
       nDel
     } finally { maskedNew.unpersist(); oldDv.foreach(_.unpersist()); () }
@@ -1891,9 +1877,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * then aliased to v's LOGICAL names so caller predicates and
     * assignments resolve post-rename. Identity for never-renamed
     * tables. */
-  private def dmlScan(v: Int, files: Seq[String]): DataFrame = {
-    val schema = versionSchema(v)
-    val m = logicalToPhysical(v)
+  private def dmlScan(v: LogSnapshot, files: Seq[String]): DataFrame = {
+    val schema = v.schema
+    val m = logicalToPhysical(v.version)
     val reader = schema.map(s => spark.read.schema(physicalSchemaOf(s, m)))
       .getOrElse(spark.read.option("mergeSchema", "true"))
     val raw = reader.parquet(files: _*)
@@ -1920,12 +1906,12 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * re-appended rows exactly as on any append. Returns rows updated;
     * zero matches burn no version. */
   def commitUpdateMor(cond: Column, sets: Map[String, Column],
-      prevV: Int, impactedOnly: Option[Seq[String]] = None,
+      prevV: SnapshotRef, impactedOnly: Option[Seq[String]] = None,
       tag: Option[String] = None): Long = {
-    val prevMan = manifest(prevV)
-    val prevEntries = prevMan.collect()
+    val prev = resolve(prevV)
+    val prevEntries = prev.rows
     if (prevEntries.isEmpty) return 0L
-    requireKnownSetColumns(sets, prevV)
+    requireKnownSetColumns(sets, prev)
     val impactedRows = impactedOnly match {
       case Some(files) =>
         val want = files.toSet
@@ -1937,7 +1923,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // each impacted entry's OWN vector, computed once — the live
     // anti-join side here and the commit tail's old-count source
     val oldDv = GraftTable.ownDvRows(spark, impactedRows).map(_.persist())
-    val raw = dmlScan(prevV, impacted)
+    val raw = dmlScan(prev, impacted)
     val live = oldDv.fold(raw)(o =>
       raw.join(o.select(col("file").as("__file"), col("pos").as("__pos")),
         Seq("__file", "__pos"), "left_anti"))
@@ -1962,7 +1948,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         logWarning(s"MoR UPDATE on $man matches $nUpd of $liveRows live " +
           s"envelope rows (> maxMaskFraction=$maxFrac); falling back to " +
           "the COW rewrite")
-        return commitUpdateCow(cond, sets, prevV, impactedOnly, tag)
+        return commitUpdateCow(cond, sets, prev, impactedOnly, tag)
       }
       val maskedNew = matched.select(col("__file").as("file"),
         col("__pos").as("pos"))
@@ -1983,9 +1969,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         (entryBytes(impactedRows).toDouble * nUpd / totalRows).toLong
       val added = stagedAppend(updated, sizedParts(1, estBytes))
       val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-      commitMorMasked(prevMan, prevEntries, impactedRows, Some(maskedNew),
-        stats, prevV, tag,
-        schemaDdl = versionSchema(prevV).map(_.toDDL), oldDvPre = oldDv,
+      commitMorMasked(prev, impactedRows, Some(maskedNew),
+        stats, tag,
+        schemaDdl = prev.schema.map(_.toDDL), oldDvPre = oldDv,
         newCntPre = Some(newCnt))
       nUpd
     } finally { matched.unpersist(); oldDv.foreach(_.unpersist()); () }
@@ -2002,11 +1988,12 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * mechanically when the winner left every impacted file untouched
     * ([[commitCowRewrite]]); anything else fails loudly. */
   def commitUpdateCow(cond: Column, sets: Map[String, Column],
-      prevV: Int, impactedOnly: Option[Seq[String]] = None,
+      prevV: SnapshotRef, impactedOnly: Option[Seq[String]] = None,
       tag: Option[String] = None): Long = {
-    val prevEntries = manifest(prevV).collect()
+    val prev = resolve(prevV)
+    val prevEntries = prev.rows
     if (prevEntries.isEmpty) return 0L
-    requireKnownSetColumns(sets, prevV)
+    requireKnownSetColumns(sets, prev)
     val impactedRows = impactedOnly match {
       case Some(files) =>
         val want = files.toSet
@@ -2015,7 +2002,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     }
     if (impactedRows.isEmpty) return 0L
     val impacted = impactedRows.map(_.getAs[String]("file")).toSeq
-    val df = readAsOf(prevV, impacted)
+    val df = readAsOf(prev, impacted)
     val nUpd = df.filter(cond).count()
     if (nUpd == 0L) return 0L // conservative planning kept files with
                               // no matching rows: no burned version
@@ -2031,8 +2018,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // ~target-file-size outputs instead of two giant write tasks
     val added = stagedAppend(updated, sizedParts(2, entryBytes(impactedRows)))
     val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitCowRewrite(prevV, impactedRows, stats, tag,
-      schemaDdl = versionSchema(prevV).map(_.toDDL))
+    commitCowRewrite(prev, impactedRows, stats, tag,
+      schemaDdl = prev.schema.map(_.toDDL))
     nUpd
   }
 
@@ -2041,8 +2028,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * (the MoR path would even report the matched rows as updated while
     * re-appending them byte-identical). */
   private def requireKnownSetColumns(sets: Map[String, Column],
-      prevV: Int): Unit =
-    versionSchema(prevV).foreach { sch =>
+      prev: LogSnapshot): Unit =
+    prev.schema.foreach { sch =>
       val unknown = sets.keySet -- sch.fieldNames.toSet
       require(unknown.isEmpty,
         s"UPDATE assigns to column(s) not in the table schema: " +
@@ -2065,7 +2052,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * contract as the MoR DELETE/UPDATE). Untouched entries are carried
     * from the WINNER verbatim, so its changes outside this envelope
     * compose. Anything else fails loudly — never a silent drop. */
-  private def commitCowRewrite(prevV: Int, impactedRows: Array[Row],
+  private def commitCowRewrite(prev: LogSnapshot, impactedRows: Array[Row],
       stats: DataFrame, tag: Option[String], schemaDdl: Option[String],
       maxRebases: Int = 5): Unit = {
     val impacted = impactedRows.map(_.getAs[String]("file")).toSeq
@@ -2079,25 +2066,26 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
           "interact with it (it rewrote, re-masked or dropped a file " +
           "this rewrite read, or changed the recorded schema); re-run " +
           "against the latest snapshot")
-    var base = prevV
+    var base = prev
     var rebases = 0
     while (true) {
       if (tryCommitManifest(
-          unionEntries(excludeFiles(manifest(base), impacted), stats),
-          base + 1, tag, schemaDdl = schemaDdl))
+          unionEntries(excludeFiles(base.entries, impacted), stats),
+          base.version + 1, tag, schemaDdl = schemaDdl))
         return
-      // lost the race — O(#files) driver-side disjointness check
+      // lost the race — re-snapshot at the winner, then an O(#files)
+      // driver-side disjointness check
       rebases += 1
-      val winner = manifest(base + 1).collect()
-      val winByFile = winner
+      val winner = snapshot(Some(base.version + 1))
+      val winByFile = winner.rows
         .map(r => r.getAs[String]("file") -> pairOf(r)).toMap
       val touchedIntact =
         impacted.forall(f => winByFile.get(f).contains(impactedPairs(f)))
-      val schemaIntact = versionSchema(base + 1).map(_.toDDL) ==
-        versionSchema(base).map(_.toDDL)
+      val schemaIntact =
+        winner.schema.map(_.toDDL) == base.schema.map(_.toDDL)
       if (rebases > maxRebases || !touchedIntact || !schemaIntact)
-        conflict(base + 1)
-      base += 1
+        conflict(winner.version)
+      base = winner
     }
   }
 
@@ -2159,7 +2147,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
   }
 
   /** Whether snapshot v carries any live deletion vector. */
-  def hasLiveDvs(v: Int): Boolean = entryPairs(v).exists(_._2.isDefined)
+  def hasLiveDvs(v: SnapshotRef): Boolean = resolve(v).hasLiveDvs
 
   /** OPTIMIZE: bin-pack the snapshot's small files into ~targetBytes
     * files as a NEW snapshot version. Content-identical to `prevV` —
@@ -2172,12 +2160,16 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * already-compact files are carried over as untouched entries, so a
     * steady-state 100 TB table re-packs just its ingest tail. Returns
     * the number of files compacted away. */
-  def commitCompaction(prevV: Int, targetBytes: Long,
-      maxRetries: Int = 5): Int = {
-    val vs0 = committedVersions
-    require(vs0.nonEmpty,
-      s"no committed versions under $man — call create()/createEmpty() first")
-    var base = math.max(prevV, vs0.max)
+  def commitCompaction(prevV: SnapshotRef, targetBytes: Long,
+      maxRetries: Int = 5): Int = compact(prevV, targetBytes, maxRetries)._1
+
+  /** [[commitCompaction]], also returning the latest version after it:
+    * the commit's own, or the planned one when nothing needed packing. */
+  private[table] def compact(prevV: SnapshotRef, targetBytes: Long,
+      maxRetries: Int = 5): (Int, Int) = {
+    // plans against the latest version (prevV's at least)
+    val log = listing(prevV).requireTable()
+    var base = log.at(math.max(prevV.version, log.versions.max))
     var attempts = 0
     while (attempts <= maxRetries) {
       // (re)plan against the CURRENT latest: losing the commit race to
@@ -2185,16 +2177,12 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       // pack set must be recomputed, not just the version number —
       // compaction may never be "accepted" by someone else's snapshot
       // winning the rename (that snapshot doesn't contain the pack)
-      val man0 = manifest(base)
-      val hasDv = man0.columns.contains("dv")
-      val entries = man0.collect()
+      val entries = base.rows
       // the pack set: sub-target files, PLUS any file carrying a
       // deletion vector — OPTIMIZE is also how MoR merges fold their
       // DVs back into clean files (the packed rewrite reads through
       // the MoR scan, so masked rows vanish and the new entries carry
       // no dv)
-      def dvOf(r: Row): Option[String] =
-        if (hasDv) Option(r.getAs[String]("dv")) else None
       // spark.graft.optimize.minDvFraction (default 0 = fold ALL
       // DV-carrying files, the historical contract): at 100 TB,
       // rewriting a full-size file to reclaim one masked row is the
@@ -2215,7 +2203,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
           .map(_.groupBy("file").agg(count(lit(1)).as("n")).collect()
             .map(r => r.getString(0) -> r.getAs[Long]("n")).toMap)
           .getOrElse(Map.empty)
-      def foldWorthy(r: Row): Boolean = dvOf(r).isDefined &&
+      def foldWorthy(r: Row): Boolean = entryDv(r).isDefined &&
         (minFrac <= 0.0 || {
           val masked = debts.getOrElse(r.getAs[String]("file"), 0L)
           val live = r.getAs[Long]("n_rows")
@@ -2224,31 +2212,29 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         })
       val pack = entries.filter(r =>
         r.getAs[Long]("bytes") < targetBytes || foldWorthy(r))
-      val anyDv = pack.exists(dvOf(_).isDefined)
-      if (pack.length <= 1 && !anyDv) return 0
+      val anyDv = pack.exists(entryDv(_).isDefined)
+      if (pack.length <= 1 && !anyDv) return (0, base.version)
         // already compact and DV-free: no commit, no burned version,
         // no no-op batch for change-feed consumers
       else {
         val packFiles = pack.map(_.getAs[String]("file")).toSeq
         val totalBytes = pack.map(_.getAs[Long]("bytes")).sum
         val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-        val packPairs = pack.map(r => (r.getAs[String]("file"), dvOf(r))).toSeq
-        val added = stagedAppend(
-          morRead(packPairs, versionSchema(base), base), nOut)
+        val added = stagedAppend(readRows(base, pack), nOut)
         if (tryCommitManifest(
             unionEntries(
-              excludeFiles(man0, packFiles),
+              excludeFiles(base.entries, packFiles),
               if (added.isEmpty) emptyEntries else fileStats(added)),
-            base + 1, noData = true, // LIVE-content-identical:
+            base.version + 1, noData = true, // LIVE-content-identical:
                                      // dataChange=false (masked rows
                                      // were already dead)
-            schemaDdl = versionSchema(base).map(_.toDDL)))
-          return pack.length
+            schemaDdl = base.schema.map(_.toDDL)))
+          return (pack.length, base.version + 1)
         // lost: this attempt's packed output becomes vacuum-reclaimable
         // orphans; replan from the winner's version
       }
       attempts += 1
-      base = committedVersions.max
+      base = snapshot()
     }
     throw new IllegalStateException(
       s"compaction lost $maxRetries consecutive commit races; giving up")
@@ -2272,32 +2258,32 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * restore point) — a restore must never commit an unreadable
     * snapshot. Single-writer like all maintenance: losing the publish
     * race fails loudly instead of clobbering a concurrent batch. */
-  def commitRestore(toV: Int): Int = {
-    require(isCommitted(toV),
-      s"cannot restore to uncommitted snapshot v=$toV of $man " +
-        s"(committed: ${committedVersions.mkString(", ")})")
-    val latest = committedVersions.max
+  def commitRestore(toV: SnapshotRef): Int = {
+    val target = resolve(toV)
+    val latest = target.versions.max
     // a restore may not cross a RENAME COLUMN boundary: the restored
     // commit would re-record the PRE-rename schema at a version ABOVE
     // the rename event, and the replayed mapping could then resolve a
     // restored name onto the wrong physical column (the old name may
     // have been legally reused once its bytes were purged) — silent
     // wrong data, so refuse loudly with the recovery spelled out
-    val crossed = renameEvents.filter(e => e._1 > toV && e._1 <= latest)
+    val crossed =
+      renameEvents.filter(e => e._1 > target.version && e._1 <= latest)
     require(crossed.isEmpty,
-      s"RESTORE to v=$toV would cross RENAME COLUMN commit(s) " +
+      s"RESTORE to v=${target.version} would cross RENAME COLUMN commit(s) " +
         crossed.map { case (v, o, n) => s"v=$v: $o -> $n" }
           .mkString("[", "; ", "]") +
         s" — the restored snapshot's schema predates the column " +
         "mapping; rename the column(s) back first (the mapping then " +
         "resolves both ways), or read the old snapshot via time travel")
-    val targetFiles = files(toV)
+    val targetFiles = target.files
+    val current = target.at(latest)
     // no-op only when BOTH content and recorded schema already match:
     // an empty widening append changes the schema without touching the
     // file set, and the restore contract says the target's schema rides
     // along (narrows back) — so a schema difference must still commit
-    if (files(latest).toSet == targetFiles.toSet &&
-        versionSchema(latest) == versionSchema(toV)) return latest
+    if (current.files.toSet == targetFiles.toSet &&
+        current.schema == target.schema) return latest
     // O(#files) existence probes — driver-side planning, the same cost
     // class as a manifest read. Entries may point outside this table's
     // data dir (a shallow clone's source), so each path resolves its
@@ -2307,11 +2293,11 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       path.getFileSystem(hconf).exists(path)
     }
     require(missing.isEmpty,
-      s"cannot restore $man to v=$toV: ${missing.size} referenced data " +
+      s"cannot restore $man to v=${target.version}: ${missing.size} referenced data " +
         "file(s) no longer exist (vacuumed past the restore point); " +
         s"e.g. ${missing.take(3).mkString(", ")}")
-    commitManifest(manifest(toV), latest + 1,
-      schemaDdl = versionSchema(toV).map(_.toDDL))
+    commitManifest(target.entries, latest + 1,
+      schemaDdl = target.schema.map(_.toDDL))
     latest + 1
   }
 
@@ -2335,9 +2321,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * the winner left every impacted file untouched
     * ([[commitCowRewrite]]), anything else fails loudly — never a
     * dropped delete. */
-  def commitDeleteRange(qlo: Any, qhi: Any, prevV: Int, nParts: Int = 2,
+  def commitDeleteRange(qlo: Any, qhi: Any, prevV: SnapshotRef, nParts: Int = 2,
       tag: Option[String] = None): Long = {
-    val prevEntries = manifest(prevV).collect()
+    val prev = resolve(prevV)
+    val prevEntries = prev.rows
     val impactedRows = prevEntries
       .filter(GraftTable.boxIntersects(_, "lo", "hi", qlo, qhi))
     val impacted = impactedRows.map(_.getAs[String]("file")).toSeq
@@ -2345,9 +2332,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // the MoR read, not a raw parquet scan: an impacted file carrying a
     // live deletion vector must not resurrect its masked rows into the
     // survivor rewrite, and already-dead rows must not inflate nDel
-    val df = morRead(impactedRows.map(r =>
-      (r.getAs[String]("file"), entryDv(r))).toSeq, versionSchema(prevV),
-      prevV)
+    val df = readRows(prev, impactedRows)
     val codec = GraftTable.codecFor(df.schema(key).dataType, key,
       forKey = true)
     val doomed = codec.toBox(col(key)).between(lit(qlo), lit(qhi))
@@ -2358,8 +2343,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     val added = stagedAppend(df.filter(!doomed),
       sizedParts(nParts, entryBytes(impactedRows)))
     val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitCowRewrite(prevV, impactedRows, stats, tag,
-      schemaDdl = versionSchema(prevV).map(_.toDDL))
+    commitCowRewrite(prev, impactedRows, stats, tag,
+      schemaDdl = prev.schema.map(_.toDDL))
     nDel
   }
 
@@ -2387,7 +2372,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * impacted file untouched ([[commitCowRewrite]]); anything else
     * fails loudly. */
   def commitDelete(filters: Seq[org.apache.spark.sql.sources.Filter],
-      prevV: Int, nParts: Int = 2, tag: Option[String] = None): Long = {
+      prevV: SnapshotRef, nParts: Int = 2, tag: Option[String] = None): Long = {
     require(filters.nonEmpty,
       "commitDelete needs at least one predicate — to drop every row, " +
         "recreate the table (mode overwrite) instead")
@@ -2405,25 +2390,24 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * would be skipped; an EMPTY pruneFilters is legal and prunes
     * nothing. */
   def commitDelete(pruneFilters: Seq[org.apache.spark.sql.sources.Filter],
-      pred: Column, prevV: Int, nParts: Int, tag: Option[String]): Long = {
-    val prevEntries = manifest(prevV).collect()
+      pred: Column, prevV: SnapshotRef, nParts: Int, tag: Option[String]): Long = {
+    val prev = resolve(prevV)
+    val prevEntries = prev.rows
     if (prevEntries.isEmpty) return 0L
     val (prunable, bloomable) = pruneSets(prevEntries)
     val impactedRows = SnapshotPruning
       .keepTestV1(pruneFilters, Some(key), prunable, bloomable)
       .map(test => prevEntries.filter(test)).getOrElse(prevEntries)
     if (impactedRows.isEmpty) return 0L
-    val df = morRead(impactedRows.map(r =>
-      (r.getAs[String]("file"), entryDv(r))).toSeq, versionSchema(prevV),
-      prevV)
+    val df = readRows(prev, impactedRows)
     val nDel = df.filter(pred).count()
     if (nDel == 0L) return 0L // conservative planning kept files whose
                               // rows all miss: no-op, no burned version
     val added = stagedAppend(df.filter(!coalesce(pred, lit(false))),
       sizedParts(nParts, entryBytes(impactedRows)))
     val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitCowRewrite(prevV, impactedRows, stats, tag,
-      schemaDdl = versionSchema(prevV).map(_.toDDL))
+    commitCowRewrite(prev, impactedRows, stats, tag,
+      schemaDdl = prev.schema.map(_.toDDL))
     nDel
   }
 
@@ -2453,8 +2437,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * untouched ([[commitCowRewrite]]). Returns the number of rows
     * deleted. */
   def commitReplaceWhere(pruneFilters: Seq[org.apache.spark.sql.sources.Filter],
-      pred: Column, data: DataFrame, prevV: Int, nParts: Int = 2,
+      pred: Column, data: DataFrame, prevV: SnapshotRef, nParts: Int = 2,
       tag: Option[String] = None, check: Boolean = true): Long = {
+    val prev = resolve(prevV)
     val doCheck = check &&
       spark.conf.get("spark.graft.replaceWhere.check", "true").toBoolean
     // the violation census rides the write job as an observed metric —
@@ -2481,7 +2466,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
           "the replaced region; fix the data or disable " +
           "spark.graft.replaceWhere.check")
     }
-    val prevEntries = manifest(prevV).collect()
+    val prevEntries = prev.rows
     val (prunable, bloomable) = pruneSets(prevEntries)
     val candidates = SnapshotPruning
       .keepTestV1(pruneFilters, Some(key), prunable, bloomable)
@@ -2497,7 +2482,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       if (candidates.isEmpty) None
       else {
         val oldDv = GraftTable.ownDvRows(spark, candidates)
-        val raw = dmlScan(prevV, candidates.map(_.getAs[String]("file")).toSeq)
+        val raw = dmlScan(prev, candidates.map(_.getAs[String]("file")).toSeq)
         Some(oldDv.fold(raw)(o =>
           raw.join(o.select(col("file").as("__file"), col("pos").as("__pos")),
             Seq("__file", "__pos"), "left_anti"))
@@ -2530,14 +2515,14 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         }
       val all = survivors ++ addedNew
       val stats = if (all.isEmpty) emptyEntries else fileStats(all)
-      commitCowRewrite(prevV, impactedRows, stats, tag,
-        schemaDdl = evolvedSchemaDdl(prevV, data.schema))
+      commitCowRewrite(prev, impactedRows, stats, tag,
+        schemaDdl = evolvedSchemaDdl(prev, data.schema))
       doomed
     } finally { live.foreach(_.unpersist(blocking = false)); () }
   }
 
   /** Two-dimension convenience overload (the original API shape). */
-  def commitZorder(prevV: Int, targetBytes: Long, dimA: String,
+  def commitZorder(prevV: SnapshotRef, targetBytes: Long, dimA: String,
       dimB: String): Int =
     commitZorder(prevV, targetBytes, Seq(dimA, dimB))
 
@@ -2567,17 +2552,16 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * entire point. Old versions keep time-traveling to the old layout
     * until [[vacuum]]. Single-writer like other maintenance commits: a
     * lost race fails loudly. Returns the new version. */
-  def commitZorder(prevV: Int, targetBytes: Long, dims: Seq[String]): Int = {
+  def commitZorder(prevV: SnapshotRef, targetBytes: Long, dims: Seq[String]): Int = {
+    val prev = resolve(prevV)
     require(targetBytes > 0, s"targetBytes must be positive; got $targetBytes")
     require(dims.nonEmpty && dims.size <= 8,
       s"z-order takes 1..8 dimensions; got ${dims.size}")
     require(dims.distinct.size == dims.size,
       s"duplicate z-order dimensions: ${dims.mkString(", ")}")
-    val entries = manifest(prevV).collect()
-    require(entries.nonEmpty, s"snapshot v=$prevV of $man has no files")
-    val df = morRead(entries.map(r =>
-      (r.getAs[String]("file"), entryDv(r))).toSeq, versionSchema(prevV),
-      prevV)
+    val entries = prev.rows
+    require(entries.nonEmpty, s"snapshot v=${prev.version} of $man has no files")
+    val df = readRows(prev, entries)
     dims.foreach { c =>
       require(df.columns.contains(c),
         s"z-order dimension '$c' is not a column of $man " +
@@ -2626,13 +2610,26 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         .write.mode("overwrite").parquet(stage)
     } finally { zd.unpersist(blocking = false); () }
     require(added.nonEmpty, "z-order rewrite produced no files")
-    if (!tryCommitManifest(fileStats(added), prevV + 1,
-        noData = true, // content-identical: layout-only commit
-        schemaDdl = versionSchema(prevV).map(_.toDDL)))
+    // content-identical: a layout-only commit
+    layoutCommit("z-order rewrite", fileStats(added), prev,
+      prev.schema.map(_.toDDL))
+  }
+
+  /** Publish a layout-only (`dataChange=false`) commit on top of `prev`.
+    * The single-writer maintenance commits (z-order, schema changes)
+    * never rebase: a lost race runs `onLoss` and fails loudly. Returns
+    * the new version. */
+  private def layoutCommit(what: String, entries: DataFrame,
+      prev: LogSnapshot, schemaDdl: Option[String],
+      onLoss: => Unit = ()): Int = {
+    val v = prev.version + 1
+    if (!tryCommitManifest(entries, v, noData = true, schemaDdl = schemaDdl)) {
+      onLoss
       throw new java.util.ConcurrentModificationException(
-        s"z-order rewrite lost the commit race for v=${prevV + 1}; " +
-          "re-run against the latest snapshot")
-    prevV + 1
+        s"$what lost the commit race for v=$v; re-run against the latest " +
+          "snapshot")
+    }
+    v
   }
 
   /** The shared physical-presence (resurrection) guard: refuse
@@ -2652,7 +2649,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * on the common never-detached table the guard costs one props
     * read. Once rewrites + vacuum purge the old bytes, the name frees
     * up automatically. */
-  private def requireNoPhysicalResurrection(prevV: Int,
+  private def requireNoPhysicalResurrection(prev: LogSnapshot,
       names: Seq[String], verb: String, always: Boolean = false): Unit = {
     if (names.isEmpty) return
     // the schema_detached flag only exists on tables whose DROP/RENAME
@@ -2662,7 +2659,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // only the hot append-evolve path keeps the flag gate
     if (!always &&
       !GraftTable.loadProps(spark, man).exists(_.schemaDetached)) return
-    val live = files(prevV)
+    val live = prev.files
     if (live.isEmpty) return
     val physical = spark.read.option("mergeSchema", "true")
       .parquet(live: _*).schema.fieldNames
@@ -2708,11 +2705,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * documented loud edges, never silent wrong data. Returns the new
     * version. */
   def commitRenameColumn(oldName: String, newName: String,
-      prevV: Int): Int = {
-    val base = versionSchema(prevV).getOrElse(
-      throw new UnsupportedOperationException(
-        s"snapshot v=$prevV of $man records no schema (pre-r11 table) — " +
-          "RENAME COLUMN needs the commit-recorded schema"))
+      prevV: SnapshotRef): Int = {
+    val prev = resolve(prevV)
+    val base = prev.requireSchema("RENAME COLUMN")
     val resolver = spark.sessionState.conf.resolver
     val resolvedOld = base.fieldNames.find(resolver(_, oldName)).getOrElse(
       throw new IllegalArgumentException(
@@ -2750,7 +2745,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // the new name must not shadow ANY physically present name — run
     // the footer union unconditionally here (renames are rare DDL; the
     // props flag may not be set yet on a first rename)
-    val live = files(prevV)
+    val live = prev.files
     if (live.nonEmpty) {
       val physical = spark.read.option("mergeSchema", "true")
         .parquet(live: _*).schema.fieldNames
@@ -2773,19 +2768,13 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // a schema speaking the new name, so a dangling event can never
     // poison the mapping — not even for a LATER column legitimately
     // created under the failed target name.
-    setPropLine(s"rename.${prevV + 1}.0",
+    setPropLine(s"rename.${prev.version + 1}.0",
       Some(s"$resolvedOld:$newName"))
     setPropLine("schema_detached", Some("true"))
-    if (!tryCommitManifest(manifest(prevV), prevV + 1, noData = true,
-        schemaDdl = Some(renamed.toDDL))) {
-      // lost the race: drop the now-unreachable event (the flag stays —
-      // conservative: it only widens a guard)
-      setPropLine(s"rename.${prevV + 1}.0", None)
-      throw new java.util.ConcurrentModificationException(
-        s"RENAME COLUMN lost the commit race for v=${prevV + 1}; " +
-          "re-run against the latest snapshot")
-    }
-    prevV + 1
+    // a lost race drops the now-unreachable event (the flag stays —
+    // conservative: it only widens a guard)
+    layoutCommit("RENAME COLUMN", prev.entries, prev, Some(renamed.toDDL),
+      onLoss = setPropLine(s"rename.${prev.version + 1}.0", None))
   }
 
   /** ALTER TABLE ADD COLUMN's commit: a layout-identical new version
@@ -2800,11 +2789,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * committed manifests lie about their files. Single-writer: a lost
     * publish race fails loudly. Returns the new version. */
   def commitWidenSchema(widened: org.apache.spark.sql.types.StructType,
-      prevV: Int): Int = {
-    val base = versionSchema(prevV).getOrElse(
-      throw new UnsupportedOperationException(
-        s"snapshot v=$prevV of $man records no schema (pre-r11 table) — " +
-          "widening needs the commit-recorded schema to extend"))
+      prevV: SnapshotRef): Int = {
+    val prev = resolve(prevV)
+    val base = prev.requireSchema("widening")
     require(widened.fields.take(base.length).map(f => (f.name, f.dataType))
         .sameElements(base.fields.map(f => (f.name, f.dataType))) &&
       widened.length > base.length,
@@ -2812,15 +2799,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         s"${base.simpleString}, proposed ${widened.simpleString}")
     require(widened.fields.drop(base.length).forall(_.nullable),
       "added columns must be nullable — existing files backfill NULL")
-    requireNoPhysicalResurrection(prevV,
+    requireNoPhysicalResurrection(prev,
       widened.fields.drop(base.length).map(_.name).toSeq, "add",
       always = true)
-    if (!tryCommitManifest(manifest(prevV), prevV + 1, noData = true,
-        schemaDdl = Some(widened.toDDL)))
-      throw new java.util.ConcurrentModificationException(
-        s"schema widening lost the commit race for v=${prevV + 1}; " +
-          "re-run against the latest snapshot")
-    prevV + 1
+    layoutCommit("schema widening", prev.entries, prev, Some(widened.toDDL))
   }
 
   /** ALTER TABLE DROP COLUMN as a METADATA-ONLY commit (Delta's
@@ -2838,12 +2820,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * (every future write's stats scan would fail), or the last column.
     * Appends after the drop validate against the narrowed schema like
     * any other ([[evolvedSchemaDdl]]). Returns the new version. */
-  def commitNarrowSchema(dropCols: Seq[String], prevV: Int): Int = {
+  def commitNarrowSchema(dropCols: Seq[String], prevV: SnapshotRef): Int = {
+    val prev = resolve(prevV)
     require(dropCols.nonEmpty, "DROP COLUMN needs at least one column")
-    val base = versionSchema(prevV).getOrElse(
-      throw new UnsupportedOperationException(
-        s"snapshot v=$prevV of $man records no schema (pre-r11 table) — " +
-          "DROP COLUMN needs the commit-recorded schema to narrow"))
+    val base = prev.requireSchema("DROP COLUMN")
     val resolver = spark.sessionState.conf.resolver
     val resolved = dropCols.map { c =>
       base.fieldNames.find(resolver(_, c)).getOrElse(
@@ -2880,77 +2860,56 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       base.fields.filterNot(f => gone(f.name)))
     require(narrowed.nonEmpty,
       s"cannot drop every column of $man — drop the table instead")
-    if (!tryCommitManifest(manifest(prevV), prevV + 1, noData = true,
-        schemaDdl = Some(narrowed.toDDL)))
-      throw new java.util.ConcurrentModificationException(
-        s"schema narrowing lost the commit race for v=${prevV + 1}; " +
-          "re-run against the latest snapshot")
+    val v = layoutCommit("schema narrowing", prev.entries, prev,
+      Some(narrowed.toDDL))
     // the schema has detached from the physical layout: from here on,
     // re-recording a name still physically present must be refused on
     // EVERY path (ALTER and append-time evolution alike) — the flag is
     // what arms [[requireNoPhysicalResurrection]]'s footer pass
     setPropLine("schema_detached", Some("true"))
-    prevV + 1
+    v
   }
 
-  /** Version v's commit time: the `_ts_<epochMs>` marker the commit
-    * itself carried (written in staging, published by the same atomic
-    * rename — so it survives file-system surgery like a copy/restore
-    * that rewrites every mtime). Manifests from before the marker
-    * existed fall back to the directory's modification time. */
-  def commitTimeOf(v: Int): Long = {
-    val dir = new Path(manifestPath(v))
-    listStatusSafe(manFs, dir).map(_.getPath.getName)
-      .find(_.startsWith("_ts_")).map(_.drop(4).toLong)
-      .getOrElse(manFs.getFileStatus(dir).getModificationTime)
-  }
+  /** Version v's commit time ([[LogSnapshot.commitTime]]): the
+    * `_ts_<epochMs>` marker rides the atomic commit, so it survives
+    * file-system surgery that rewrites every mtime. */
+  def commitTimeOf(v: SnapshotRef): Long = resolve(v).commitTime
 
-  /** Resolve "TIMESTAMP AS OF": the LATEST committed version whose
-    * commit time is <= `epochMs` (Delta's timestamp time travel).
-    * O(#versions) driver-side. */
-  def versionAsOfTime(epochMs: Long): Int = {
-    val vs = committedVersions
-    require(vs.nonEmpty, s"no committed versions under $man")
-    val eligible = vs.filter(v => commitTimeOf(v) <= epochMs)
-    require(eligible.nonEmpty,
-      s"no snapshot committed at or before $epochMs " +
-        s"(earliest commit: ${commitTimeOf(vs.min)})")
-    eligible.max
-  }
+  /** Resolve "TIMESTAMP AS OF" ([[LogSnapshot.asOfTime]]). */
+  def versionAsOfTime(epochMs: Long): Int = snapshot().asOfTime(epochMs).version
 
   /** Time travel: plan the file list from snapshot v's manifest alone. */
-  def files(v: Int): Seq[String] =
-    manifest(v).select("file").collect().map(_.getString(0)).toSeq
+  def files(v: SnapshotRef): Seq[String] = resolve(v).files
 
-  def readAsOf(v: Int): DataFrame = {
-    val fs = files(v)
+  def readAsOf(v: SnapshotRef): DataFrame = {
+    val s = resolve(v)
     // the commit-recorded schema, not sampled-footer inference (after a
     // widening append the snapshot's files are heterogeneous and a
     // sampled old file would silently hide the widened column); and
     // the MoR path: entries carrying a deletion vector anti-join their
     // masked positions — DV-free files stream straight from the scan
-    if (fs.nonEmpty) morRead(entryPairs(v), versionSchema(v), v)
+    if (s.files.nonEmpty) morRead(s.pairs, s.schema, s.version)
     else if (data.nonEmpty && partFiles.nonEmpty)
       spark.read.parquet(data).limit(0) // typed empty, schema from layout
     else
       // an empty snapshot of a still-empty table carries no schema at
       // all — fail with intent instead of Spark's inference error
       throw new IllegalStateException(
-        s"snapshot v=$v of $man references no files and the layout $data " +
+        s"snapshot v=${s.version} of $man references no files and the layout $data " +
           "is empty: an empty table has no schema to scan")
   }
 
   /** Min/max skipping against version v's manifest. Bounds are Long
     * for integral/timestamp/date keys (epoch micros / days — the box
     * representation), String for string keys. */
-  def prune(v: Int, qlo: Any, qhi: Any): (Seq[String], Int) =
+  def prune(v: SnapshotRef, qlo: Any, qhi: Any): (Seq[String], Int) =
     pruneMulti(v, Seq((key, qlo, qhi)))
 
   /** Multi-column min/max skipping against version v's manifest: keep
     * the files whose box intersects EVERY queried column's range. The
     * table key prunes on its (lo, hi) box; declared stats columns on
     * their (lo_c, hi_c) boxes. Same O(#files) driver planning. */
-  def pruneMulti(v: Int, preds: Seq[(String, Any, Any)])
+  def pruneMulti(v: SnapshotRef, preds: Seq[(String, Any, Any)])
       : (Seq[String], Int) = {
     val named = preds.map { case (c, qlo, qhi) =>
       require(c == key || statsCols.contains(c),
@@ -2958,7 +2917,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       if (c == key) ("lo", "hi", qlo, qhi)
       else (s"lo_$c", s"hi_$c", qlo, qhi)
     }
-    val rows = manifest(v).collect()
+    val rows = resolve(v).rows
     val kept = rows.filter(r => named.forall { case (lo, hi, qlo, qhi) =>
       GraftTable.boxIntersects(r, lo, hi, qlo, qhi)
     }).map(_.getAs[String]("file")).toSeq
@@ -2972,11 +2931,11 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * pruning; false positives cost a read, false skips cannot happen
     * (bloom has no false negatives, and a NULL sketch keeps the
     * file). */
-  def pruneBloom(v: Int, c: String, probes: Seq[Any]): (Seq[String], Int) = {
+  def pruneBloom(v: SnapshotRef, c: String, probes: Seq[Any]): (Seq[String], Int) = {
     require(bloomCols.contains(c),
       s"no bloom recorded for column '$c' (bloomCols=$bloomCols)")
     require(probes.nonEmpty, "pruneBloom needs at least one probe value")
-    val rows = manifest(v).collect()
+    val rows = resolve(v).rows
     val kept = rows.filter { r =>
       val bytes = r.getAs[Array[Byte]](s"bloom_$c")
       probes.exists(GraftTable.bloomMightContain(bytes, _))
@@ -2996,9 +2955,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * point-lookup service would plan the same way). Probes are the
     * column's external values (Long/String/Timestamp/... as a
     * DataFrame would produce them). */
-  def pruneIn(v: Int, c: String, probes: Seq[Any]): (Seq[String], Int) = {
+  def pruneIn(v: SnapshotRef, c: String, probes: Seq[Any]): (Seq[String], Int) = {
     require(probes.nonEmpty, "pruneIn needs at least one probe value")
-    val rows = manifest(v).collect()
+    val rows = resolve(v).rows
     val (prunable, bloomable) = pruneSets(rows)
     val kept = SnapshotPruning.keepTestV1(
         Seq(org.apache.spark.sql.sources.In(c, probes.toArray)),
@@ -3013,8 +2972,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * stat without being read; only boundary files are scanned. A NULL
     * box is never "fully inside" — it scans. Returns (rows answered
     * from stats, boundary files to scan, #covered files). */
-  def statsOnlySplit(v: Int, qlo: Any, qhi: Any): (Long, Seq[String], Int) = {
-    val (covered, boundary) = manifest(v).collect()
+  def statsOnlySplit(v: SnapshotRef, qlo: Any, qhi: Any): (Long, Seq[String], Int) = {
+    val (covered, boundary) = resolve(v).rows
       .filter(GraftTable.boxIntersects(_, "lo", "hi", qlo, qhi))
       .partition { r => // a STORED box is only ever wider than the
         // true one, so fully-inside on it is stricter than the truth
@@ -3030,32 +2989,29 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * data file referenced by NO retained version (plus crashed `_tmp_*`
     * / `_stage_*` staging dirs). Returns the deleted data-file names.
     *
-    * Concurrency: the retained horizon is re-read from the manifest dir
-    * at scan time (max of `latest` and the current committed max), so a
-    * version another writer commits between the caller's planning and
-    * this scan still protects its files. An IN-FLIGHT commit (files
+    * Concurrency: every listed version from `keepFrom` up is retained.
+    * The listing is the statement's own snapshot when `latest` is one,
+    * else taken here at scan time, so a version another writer commits
+    * between the caller's planning and this scan still protects its
+    * files. An IN-FLIGHT commit (files
     * moved, manifest rename not yet done) is indistinguishable from a
     * crash orphan by reference-counting alone — that is what `graceMs`
     * is for: nothing younger than the grace is deleted. Multi-writer
     * deployments must vacuum with a grace exceeding their longest
     * commit (the Delta retention-period contract); the default 0 is
     * the single-writer admin op on a quiesced table. */
-  def vacuum(keepFrom: Int, latest: Int, graceMs: Long = 0L): Seq[String] = {
-    val vs = committedVersions
-    require(vs.nonEmpty,
-      s"no committed versions under $man — nothing to vacuum")
-    val upper = math.max(latest, vs.max)
+  def vacuum(keepFrom: Int, latest: SnapshotRef,
+      graceMs: Long = 0L): Seq[String] = {
+    val log = listing(latest).requireTable()
     // versions below an earlier vacuum's horizon no longer exist —
     // skip them instead of failing the whole reclamation on a read
-    val retained = (keepFrom to upper).filter(isCommitted)
-    val referenced = retained.flatMap { v =>
-      files(v).map(p => new Path(p).getName)
-    }.toSet
-    // deletion-vector files referenced by any retained version's `dv`
-    // column — reclaimed by the same name-based counting as data files
-    val referencedDv = retained.flatMap { v =>
-      entryPairs(v).flatMap(_._2).map(p => new Path(p).getName)
-    }.toSet
+    val retained = log.versions.filter(_ >= keepFrom).map(log.at)
+    // data and deletion-vector files referenced by any retained
+    // version — reclaimed by the same name-based counting
+    val referenced = retained.flatMap(_.files.map(p => new Path(p).getName))
+      .toSet
+    val referencedDv = retained.flatMap(
+      _.pairs.flatMap(_._2).map(p => new Path(p).getName)).toSet
     val cutoff = System.currentTimeMillis() - graceMs
     def aged(st: FileStatus): Boolean = st.getModificationTime <= cutoff
     val orphans = listStatusSafe(dataFs, new Path(data))
@@ -3071,36 +3027,32 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       // dv-<id>.parquet name (writeDvFile); data files stay plain files
       require(dataFs.delete(new Path(data, n), true), s"could not vacuum $n")
     }
-    (1 until keepFrom).foreach { v =>
-      val d = new Path(manifestPath(v))
-      if (manFs.exists(d)) {
-        // preserve commit tags in the ledger before expiring the
-        // version: a vacuumed batch's replay must still read as
-        // committed (tagCommitted), or it would re-append its rows
-        val marks = listStatusSafe(manFs, d)
-          .map(_.getPath.getName).filter(_.startsWith("_tag_"))
-        if (marks.nonEmpty) {
-          val ledger = new Path(man, "_tags")
-          manFs.mkdirs(ledger)
-          marks.foreach { t =>
-            // markers are empty: (re)creating at the destination is the
-            // whole preservation — and unlike a rename it cannot fail
-            // silently before the version delete destroys the only
-            // record that the batch committed
-            val dst = new Path(ledger, t)
-            require(manFs.exists(dst) || touch(manFs, dst),
-              s"could not preserve commit tag $t in the ledger")
-          }
+    log.versions.filter(_ < keepFrom).foreach { v =>
+      val d = new Path(log.at(v).dir)
+      // preserve commit tags in the ledger before expiring the
+      // version: a vacuumed batch's replay must still read as
+      // committed (tagCommitted), or it would re-append its rows
+      val marks = listStatusSafe(manFs, d)
+        .map(_.getPath.getName).filter(_.startsWith("_tag_"))
+      if (marks.nonEmpty) {
+        val ledger = new Path(man, "_tags")
+        manFs.mkdirs(ledger)
+        marks.foreach { t =>
+          // markers are empty: (re)creating at the destination is the
+          // whole preservation — and unlike a rename it cannot fail
+          // silently before the version delete destroys the only
+          // record that the batch committed
+          val dst = new Path(ledger, t)
+          require(manFs.exists(dst) || touch(manFs, dst),
+            s"could not preserve commit tag $t in the ledger")
         }
-        store.expire(manFs, new Path(man), v)
       }
+      store.expire(manFs, new Path(man), v)
     }
     // crashed commit attempts: under the pointer store a LIVE version
     // dir keeps its staging name, so only dirs no retained version
     // resolves to are reclaimable
-    val liveDirs = committedVersions
-      .flatMap(v => store.resolve(manFs, new Path(man), v))
-      .map(_.getName).toSet
+    val liveDirs = retained.map(r => new Path(r.dir).getName).toSet
     listStatusSafe(manFs, new Path(man))
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("_tmp_")
         && aged(st) && !liveDirs(st.getPath.getName))
@@ -3120,17 +3072,18 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * (O(#versions x #files) driver-side, zero data reads, zero Spark
     * jobs via the direct manifest reader). `bytes` is NULL for
     * manifests from before the column existed. */
-  def history(): DataFrame = {
+  def history(log: LogSnapshot = snapshot()): DataFrame = {
     import spark.implicits._
-    committedVersions.map { v =>
-      val rows = GraftTable.readManifestRows(spark, manifestPath(v))._1
+    log.versions.map { v =>
+      val s = log.at(v)
+      val rows = s.rows
       def sumCol(c: String): Option[Long] =
         if (rows.isEmpty) Some(0L)
         else if (!rows.head.schema.fieldNames.contains(c)) None
         else Some(rows.map(r => Option(r.getAs[Number](c))
           .map(_.longValue).getOrElse(0L)).sum)
-      (v.toLong, rows.size.toLong, sumCol("n_rows"), sumCol("bytes"),
-        dataChange(v), new java.sql.Timestamp(commitTimeOf(v)))
+      (v.toLong, rows.length.toLong, sumCol("n_rows"), sumCol("bytes"),
+        dataChange(s), new java.sql.Timestamp(s.commitTime))
     }.toDF("version", "n_files", "n_rows", "bytes", "data_change",
       "commit_ts")
   }
@@ -3144,15 +3097,16 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * entry's own DV parquet. Reads manifests + DV files only (both
     * O(churn) metadata-class, never a data file); a DV-free snapshot
     * reads nothing but its manifest. */
-  def filesDetail(v: Int): DataFrame = {
-    val m0 = manifest(v)
+  def filesDetail(v: SnapshotRef): DataFrame = {
+    val s = resolve(v)
+    val m0 = s.entries
     val m = if (m0.columns.contains("dv")) m0
       else m0.withColumn("dv",
         lit(null).cast(org.apache.spark.sql.types.StringType))
     // per-file counts over each entry's OWN vector ([[GraftTable
     // .ownDvRows]] — the same debt math the MoR commit tail and
     // OPTIMIZE's minDvFraction use, so the surfaces cannot disagree)
-    GraftTable.ownDvRows(spark, m0.collect()) match {
+    GraftTable.ownDvRows(spark, s.rows) match {
       case None => m.withColumn("masked_rows", lit(0L))
       case Some(own) =>
         val counts = own.groupBy("file")
@@ -3171,8 +3125,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * insert/update/delete; rewritten-but-unchanged survivors fall out
     * as equal pairs. Output: (key, old_<c>.., new_<c>.., op). At 100 TB
     * a 0.1% churn commit reads ~0.2% of the table instead of 200%. */
-  def cdc(vFrom: Int, vTo: Int): DataFrame =
-    cdcOf(entryPairs(vFrom), entryPairs(vTo), vFrom, vTo)
+  def cdc(vFrom: SnapshotRef, vTo: SnapshotRef): DataFrame = {
+    val from = resolve(vFrom)
+    cdcOf(from.pairs, resolve(vTo), from.version)
+  }
 
   /** [[cdc]] over ALREADY-READ entry-pair lists — the change-feed
     * source walks versions and reuses each step's `to` as the next
@@ -3185,7 +3141,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * unchanged survivors fall out as equal pairs exactly like COW
     * rewrites. */
   private[graft] def cdcOf(from: Seq[(String, Option[String])],
-      to: Seq[(String, Option[String])], vFrom: Int, vTo: Int): DataFrame = {
+      toSnap: LogSnapshot, vFrom: Int): DataFrame = {
+    val (to, vTo) = (toSnap.pairs, toSnap.version)
     if ((from ++ to).isEmpty)
       throw new IllegalStateException(
         s"cdc v=$vFrom -> v=$vTo: both snapshots reference no files, so " +
@@ -3202,7 +3159,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // Only a pre-schema-recording table falls back to the footer UNION
     // of every churned file (mergeSchema — a sampled-file inference
     // could silently drop a widened column from the feed).
-    val unified = versionSchema(vTo).getOrElse(
+    val unified = toSnap.schema.getOrElse(
       spark.read.option("mergeSchema", "true")
         .parquet((from ++ to).map(_._1).distinct: _*).schema)
     def readSide(pairs: Seq[(String, Option[String])]): DataFrame =
@@ -3424,9 +3381,11 @@ object GraftTable {
   }
 
   /** Unsigned UTF-8 byte comparison — the order Spark's UTF8String and
-    * parquet binary stats use. Driver-side box math must match it, or a
-    * key outside ASCII could order differently than the executor-side
-    * min/max did and wrongly skip a file. */
+    * parquet binary stats use. Driver-side box math and the footer-stats
+    * merge must match it, or a key outside ASCII could order differently
+    * than the executor-side min/max did and wrongly skip a file; Java's
+    * String.compareTo (UTF-16 code units) disagrees for supplementary
+    * characters. */
   private[table] def utf8Cmp(a: String, b: String): Int = {
     val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -3491,8 +3450,8 @@ object GraftTable {
       * version v. True iff OUR payload is the committed version. */
     def publish(fs: FileSystem, man: Path, v: Int, src: Path,
         witness: String): Boolean
-    /** The committed dir for version v, if v is committed. */
-    def resolve(fs: FileSystem, man: Path, v: Int): Option[Path]
+    /** The committed dir of version v, which a listing holds. */
+    def dirOf(fs: FileSystem, man: Path, v: Int): Path
     def committedVersions(fs: FileSystem, man: Path): Seq[Int]
     /** Expire a committed version (vacuum). */
     def expire(fs: FileSystem, man: Path, v: Int): Unit
@@ -3503,17 +3462,13 @@ object GraftTable {
     def publish(fs: FileSystem, man: Path, v: Int, src: Path,
         witness: String): Boolean =
       atomicPublish(fs, src, new Path(man, s"v=$v"), witness)
-    def resolve(fs: FileSystem, man: Path, v: Int): Option[Path] = {
-      val p = new Path(man, s"v=$v")
-      if (fs.exists(p)) Some(p) else None
-    }
+    def dirOf(fs: FileSystem, man: Path, v: Int): Path = new Path(man, s"v=$v")
     def committedVersions(fs: FileSystem, man: Path): Seq[Int] =
       listStatusSafe(fs, man)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
         .map(_.getPath.getName.drop(2).toInt).toSeq.sorted
     def expire(fs: FileSystem, man: Path, v: Int): Unit = {
-      val p = new Path(man, s"v=$v")
-      if (fs.exists(p)) fs.delete(p, true)
+      fs.delete(dirOf(fs, man, v), true)
       ()
     }
   }
@@ -3535,33 +3490,25 @@ object GraftTable {
         true
       } catch { case _: java.io.IOException => false }
     }
-    def resolve(fs: FileSystem, man: Path, v: Int): Option[Path] = {
+    def dirOf(fs: FileSystem, man: Path, v: Int): Path = {
       val p = ptr(man, v)
-      if (!fs.exists(p)) None
-      else {
-        // an existing pointer IS the commit decision; its content may
-        // trail by the store's create→write gap (a store whose
-        // conditional PUT uploads content atomically — S3 — has no gap
-        // at all). Bounded retry bridges it; a pointer that stays empty
-        // is a crashed writer mid-publish — fail loudly, never guess.
-        var nm = ""
-        var attempts = 0
-        while (nm.isEmpty && attempts < 50) {
-          val in = fs.open(p)
-          nm = try {
-            val bos = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-            bos.toString("UTF-8").trim
-          } finally in.close()
-          attempts += 1
-          if (nm.isEmpty) Thread.sleep(20L)
-        }
-        require(nm.nonEmpty,
-          s"torn pointer $p: committed but still empty — a writer " +
-            "crashed between claiming the version and recording its " +
-            "payload; delete the pointer to roll the version back")
-        Some(new Path(man, nm))
+      // a listed pointer IS the commit decision; its content may trail
+      // by the store's create→write gap (a store whose conditional PUT
+      // uploads content atomically — S3 — has no gap at all). Bounded
+      // retry bridges it; a pointer that stays empty is a crashed
+      // writer mid-publish — fail loudly, never guess.
+      var nm = ""
+      var attempts = 0
+      while (nm.isEmpty && attempts < 50) {
+        nm = GraftTable.readText(fs, p).trim
+        attempts += 1
+        if (nm.isEmpty) Thread.sleep(20L)
       }
+      require(nm.nonEmpty,
+        s"torn pointer $p: committed but still empty — a writer " +
+          "crashed between claiming the version and recording its " +
+          "payload; delete the pointer to roll the version back")
+      new Path(man, nm)
     }
     def committedVersions(fs: FileSystem, man: Path): Seq[Int] =
       listStatusSafe(fs, man)
@@ -3569,9 +3516,10 @@ object GraftTable {
         .map(_.getPath.getName.drop(7).toInt).toSeq.sorted
     def expire(fs: FileSystem, man: Path, v: Int): Unit = {
       // pointer FIRST (readers stop resolving), payload dir second
-      val payload = resolve(fs, man, v)
+      val payload = dirOf(fs, man, v)
       fs.delete(ptr(man, v), false)
-      payload.foreach(fs.delete(_, true))
+      fs.delete(payload, true)
+      ()
     }
   }
 
@@ -3696,12 +3644,7 @@ object GraftTable {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val txt = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-        bos.toString("UTF-8")
-      } finally in.close()
+      val txt = GraftTable.readText(fs, p)
       val kv = txt.linesIterator.flatMap { line =>
         line.split("=", 2) match {
           case Array(k, v) => Some(k -> v)
@@ -3857,22 +3800,10 @@ object GraftTable {
     }
   }
 
-  /** UTF-8 byte-order string comparison — the order Spark's string
-    * min/max aggregate in (UTF8String is byte-wise unsigned) and the
-    * order parquet UTF8 chunk statistics are recorded in; Java's
-    * String.compareTo (UTF-16 code units) disagrees for supplementary
-    * characters, so the footer-stats merge must not use it. */
-  private[table] def utf8Compare(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
+  /** A small file's whole content as UTF-8 text. */
+  private[table] def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
   /** listStatus that treats a missing directory as empty (the Hadoop
@@ -3911,10 +3842,13 @@ object GraftTable {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(dirPath)
     val fs = root.getFileSystem(conf)
-    val rootSt = fs.getFileStatus(root) // missing manifest fails loudly
+    // one LIST, no HEAD: a missing manifest fails loudly, and a file
+    // path lists as itself
+    val listed = fs.listStatus(root)
     val parts =
-      if (rootSt.isFile) Array(rootSt)
-      else listStatusSafe(fs, root).filter { st =>
+      if (listed.length == 1 && listed.head.getPath == fs.makeQualified(root))
+        listed
+      else listed.filter { st =>
         val n = st.getPath.getName
         st.isFile && n.endsWith(".parquet") &&
           !n.startsWith("_") && !n.startsWith(".")
@@ -3998,15 +3932,6 @@ object GraftTable {
       } finally reader.close()
     }
     (out.result(), sparkSchema)
-  }
-
-  /** [[readManifestRows]] as a (local-relation) DataFrame — for commit
-    * paths that union prev entries with new stats and write; no read
-    * job, and `.collect()` on the result is driver-only. */
-  def readManifestDf(spark: SparkSession, dirPath: String): DataFrame = {
-    val (rows, schema) = readManifestRows(spark, dirPath)
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Driver-side direct WRITE of manifest rows as ONE parquet part file

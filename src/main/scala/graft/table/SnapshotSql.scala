@@ -85,8 +85,8 @@ object SnapshotSql {
             val gcats = registeredGraftCatalogs(spark)
             val holdsTable = scala.util.Try {
               GraftTable.loadProps(spark, ref).isDefined ||
-                GraftTable(spark, data = "", man = ref, key = "")
-                  .committedVersions.nonEmpty
+                !GraftTable(spark, data = "", man = ref, key = "")
+                  .snapshot().isEmpty
             }.getOrElse(false)
             if (gcats.nonEmpty && !holdsTable)
               fail(s"no committed snapshots under '$ref' — " +
@@ -111,55 +111,56 @@ object SnapshotSql {
     }.toSeq.sorted
   }
 
-  private def fail(detail: String): Nothing =
+  private val fail = failWith(usage) _
+
+  private def failWith(usage: String)(detail: String): Nothing =
     throw new IllegalArgumentException(s"$detail\n$usage")
 
-  def plan(es: Seq[Expression]): LogicalPlan = {
-    if (es.length != 2) fail(s"graft_snapshot takes 2 arguments, got ${es.length}")
-    val man = es.head match {
+  /** A TVF's first argument: a literal manifest dir or catalog name,
+    * resolved through [[resolveRef]]. */
+  private def tableArg(e: Expression, fail: String => Nothing): String =
+    e match {
       case Literal(s: UTF8String, StringType) =>
         resolveRef(SparkSession.active, s.toString, fail)
       case other => fail(s"manifestDir must be a string literal; got '$other'")
     }
-    val v = es(1) match {
-      case Literal(i: Int, IntegerType) => i
+
+  /** `body`'s snapshot, its version failure re-raised through the TVF's
+    * own `fail` so the message carries the usage text. */
+  private def orFail[T](fail: String => Nothing)(body: => T): T =
+    try body
+    catch { case e: IllegalArgumentException => fail(e.getMessage) }
+
+  def plan(es: Seq[Expression]): LogicalPlan = {
+    if (es.length != 2) fail(s"graft_snapshot takes 2 arguments, got ${es.length}")
+    val man = tableArg(es.head, fail)
+    val spark = SparkSession.active
+    val table = GraftTable(spark, data = "", man = man, key = "")
+    val snap = es(1) match {
+      case Literal(i: Int, IntegerType) =>
+        orFail(fail)(table.snapshot(Some(i)).requireTable())
       case Literal(l: Long, LongType) =>
         if (l < 1 || l > Int.MaxValue) // no silent toInt wraparound
           fail(s"version $l out of range [1, ${Int.MaxValue}]")
-        l.toInt
+        orFail(fail)(table.snapshot(Some(l.toInt)).requireTable())
       case Literal(us: Long, TimestampType) => // TIMESTAMP AS OF: micros UTC
-        GraftTable(SparkSession.active, data = "", man = man, key = "")
-          .versionAsOfTime(us / 1000L)
+        orFail(fail)(table.snapshot().asOfTime(us / 1000L))
       case Literal(null, _) =>
         fail("versionOrTimestamp must not be NULL")
       case other =>
         fail(s"version must be an integer or timestamp literal; got '$other'")
     }
-    val spark = SparkSession.active
-    val table = GraftTable(spark, data = "", man = man, key = "")
-    if (!table.isCommitted(v)) {
-      val vs = table.committedVersions
-      if (vs.nonEmpty && v < vs.min)
-        fail(s"snapshot v=$v of $man has been EXPIRED by vacuum — the " +
-          s"retained version range is [${vs.min}, ${vs.max}]; time " +
-          "travel below the vacuum horizon is permanently gone " +
-          "(raise the retention if consumers need deeper history)")
-      fail(s"no committed snapshot v=$v under $man " +
-        s"(committed: ${vs.mkString(", ")})")
-    }
-    snapshotPlan(spark, man, v)
+    snapshotPlan(spark, snap)
   }
 
   /** The logical plan of snapshot v — a prunable [[GraftSnapshotRelation]]
     * (or the analyzed MoR read when the snapshot carries live deletion
     * vectors). Shared by the `graft_snapshot` TVF and the name-addressed
     * catalog ([[GraftCatalog]]), so both surfaces prune identically. */
-  private[table] def snapshotPlan(spark: SparkSession, man: String,
-      v: Int): LogicalPlan = {
-    def fail(detail: String): Nothing =
-      throw new IllegalArgumentException(s"$detail\n$usage")
-    val table = GraftTable(spark, data = "", man = man, key = "")
-    val entries = table.manifest(v).collect().toSeq // O(#files) planning
+  private[table] def snapshotPlan(spark: SparkSession,
+      snap: LogSnapshot): LogicalPlan = {
+    val (man, v) = (snap.man, snap.version)
+    val entries = snap.rows.toSeq // O(#files) planning
     // a snapshot carrying live deletion vectors (MoR merges pending
     // compaction) cannot be a plain file-list relation: masked rows
     // must be anti-joined out. It plans as the analyzed MoR read —
@@ -167,23 +168,13 @@ object SnapshotSql {
     // beneath the union/anti-join; manifest FILE pruning for such
     // snapshots returns after graft_optimize folds the DVs back in
     // (the read-side cost of MoR's O(batch) writes, by design).
-    val liveDvs = entries.headOption
-      .exists(_.schema.fieldNames.contains("dv")) &&
-      entries.exists(_.getAs[String]("dv") != null)
-    if (liveDvs)
-      return org.apache.spark.sql.GraftSqlBridge.analyzed(table.readAsOf(v))
-    val files = entries.map(_.getAs[String]("file"))
+    if (snap.hasLiveDvs)
+      return org.apache.spark.sql.GraftSqlBridge.analyzed(
+        snap.table.readAsOf(snap))
     // schema from the commit's own _schema.ddl when recorded (zero
     // data-file footer reads at planning — the Delta-log shape);
     // pre-round-11 manifests fall back to footer inference
-    val schema = table.versionSchema(v).getOrElse {
-      if (files.isEmpty)
-        fail(s"snapshot v=$v of $man references no data files and " +
-          "records no schema (empty pre-r11 snapshots carry no schema " +
-          "to scan)")
-      spark.read.parquet(files: _*).schema
-    }
-    val output = schema.map(f =>
+    val output = snap.dataSchema.map(f =>
       org.apache.spark.sql.catalyst.expressions.AttributeReference(
         f.name, f.dataType, f.nullable, f.metadata)()).toSeq
     // Table properties (key + stats columns) make the scan PRUNABLE:
@@ -200,8 +191,8 @@ object SnapshotSql {
       key.filter(_ => manCols("lo") && manCols("hi")),
       statsCols.filter(c => manCols(s"lo_$c") && manCols(s"hi_$c")),
       bloomCols.filter(c => manCols(s"bloom_$c")),
-      entries, files, output,
-      colmap = table.logicalToPhysical(v))
+      entries, snap.files, output,
+      colmap = snap.table.logicalToPhysical(v))
   }
 
   private val changesUsage =
@@ -211,8 +202,7 @@ object SnapshotSql {
       "versions' symmetric difference); the table key comes from " +
       "_table_props"
 
-  private def failChanges(detail: String): Nothing =
-    throw new IllegalArgumentException(s"$detail\n$changesUsage")
+  private val failChanges = failWith(changesUsage) _
 
   /** `SELECT * FROM graft_changes('<man>', 1, 2)` — [[GraftTable.cdc]]
     * from pure SQL text, completing the SQL surface (travel via
@@ -220,11 +210,7 @@ object SnapshotSql {
   def changesPlan(es: Seq[Expression]): LogicalPlan = {
     if (es.length != 3)
       failChanges(s"graft_changes takes 3 arguments, got ${es.length}")
-    val man = es.head match {
-      case Literal(s: UTF8String, StringType) =>
-        resolveRef(SparkSession.active, s.toString, failChanges)
-      case other => failChanges(s"manifestDir must be a string literal; got '$other'")
-    }
+    val man = tableArg(es.head, failChanges)
     def intArg(e: Expression, name: String): Int = e match {
       case Literal(i: Int, IntegerType) => i
       case Literal(l: Long, LongType) if l >= 1 && l <= Int.MaxValue => l.toInt
@@ -236,10 +222,9 @@ object SnapshotSql {
       failChanges(s"$man carries no _table_props key — graft_changes " +
         "needs a table created through GraftTable/format(\"graft\")"))
     val table = GraftTable(spark, data = "", man = man, key = key)
-    Seq(vFrom, vTo).foreach(v => if (!table.isCommitted(v))
-      failChanges(s"no committed snapshot v=$v under $man " +
-        s"(committed: ${table.committedVersions.mkString(", ")})"))
-    org.apache.spark.sql.GraftSqlBridge.analyzed(table.cdc(vFrom, vTo))
+    val Seq(from, to) = Seq(vFrom, vTo).map(v =>
+      orFail(failChanges)(table.snapshot(Some(v)).requireTable()))
+    org.apache.spark.sql.GraftSqlBridge.analyzed(table.cdc(from, to))
   }
 
   private[table] val historyUsage: String =
@@ -261,50 +246,32 @@ object SnapshotSql {
     * worth folding, which are undersized, what the live/physical skew
     * is. */
   def filesPlan(es: Seq[Expression]): LogicalPlan = {
-    def fail(detail: String): Nothing =
-      throw new IllegalArgumentException(s"$detail\n$filesUsage")
+    val fail = failWith(filesUsage) _
     if (es.isEmpty || es.length > 2)
       fail(s"graft_files takes 1 or 2 arguments, got ${es.length}")
-    val man = es.head match {
-      case Literal(s: UTF8String, StringType) =>
-        resolveRef(SparkSession.active, s.toString, fail)
-      case other => fail(s"manifestDir must be a string literal; got '$other'")
-    }
+    val man = tableArg(es.head, fail)
     val spark = SparkSession.active
     val table = GraftTable(spark, data = "", man = man, key = "")
-    val vs = table.committedVersions
-    if (vs.isEmpty)
-      fail(s"no committed snapshots under $man — not a GraftTable " +
-        "manifest dir (or the table was never created)")
     val v = es.drop(1).headOption.map {
       case Literal(i: Int, IntegerType) => i
       case Literal(l: Long, LongType) =>
         if (l < 1 || l > Int.MaxValue) fail(s"version $l out of range")
         l.toInt
       case other => fail(s"version must be an integer literal; got '$other'")
-    }.getOrElse(vs.max)
-    if (!table.isCommitted(v))
-      fail(s"no committed snapshot v=$v under $man " +
-        s"(committed: ${vs.mkString(", ")})")
-    org.apache.spark.sql.GraftSqlBridge.analyzed(table.filesDetail(v))
+    }
+    val snap = orFail(fail)(table.snapshot(v).requireTable())
+    org.apache.spark.sql.GraftSqlBridge.analyzed(table.filesDetail(snap))
   }
 
   def historyPlan(es: Seq[Expression]): LogicalPlan = {
-    def fail(detail: String): Nothing =
-      throw new IllegalArgumentException(s"$detail\n$historyUsage")
+    val fail = failWith(historyUsage) _
     if (es.length != 1)
       fail(s"graft_history takes 1 argument, got ${es.length}")
-    val man = es.head match {
-      case Literal(s: UTF8String, StringType) =>
-        resolveRef(SparkSession.active, s.toString, fail)
-      case other => fail(s"manifestDir must be a string literal; got '$other'")
-    }
+    val man = tableArg(es.head, fail)
     val spark = SparkSession.active
     val table = GraftTable(spark, data = "", man = man, key = "")
-    if (table.committedVersions.isEmpty)
-      fail(s"no committed snapshots under $man — not a GraftTable " +
-        "manifest dir (or the table was never created)")
-    org.apache.spark.sql.GraftSqlBridge.analyzed(table.history())
+    val log = orFail(fail)(table.snapshot().requireTable())
+    org.apache.spark.sql.GraftSqlBridge.analyzed(table.history(log))
   }
 
   private[table] val optimizeUsage: String =
@@ -320,28 +287,22 @@ object SnapshotSql {
     * The table's shape comes from `_table_props`, so the call needs
     * nothing but the manifest path. */
   def optimizePlan(es: Seq[Expression]): LogicalPlan = {
-    def fail(detail: String): Nothing =
-      throw new IllegalArgumentException(s"$detail\n$optimizeUsage")
+    val fail = failWith(optimizeUsage) _
     if (es.length != 2)
       fail(s"graft_optimize takes 2 arguments, got ${es.length}")
-    val man = es.head match {
-      case Literal(s: UTF8String, StringType) =>
-        resolveRef(SparkSession.active, s.toString, fail)
-      case other => fail(s"manifestDir must be a string literal; got '$other'")
-    }
+    val man = tableArg(es.head, fail)
     val targetBytes = es(1) match {
       case Literal(i: Int, IntegerType) if i > 0 => i.toLong
       case Literal(l: Long, LongType) if l > 0 => l
       case other => fail(s"targetBytes must be a positive integral literal; got '$other'")
     }
     val spark = SparkSession.active
-    val table = maintenanceTable(spark, man, fail)
-    val vs = table.committedVersions
-    if (vs.isEmpty) fail(s"no committed snapshots under $man")
-    val packed = table.commitCompaction(vs.max, targetBytes)
+    val table = tableForMaintenance(spark, man, fail)
+    val log = orFail(fail)(table.snapshot().requireTable())
+    val (packed, latest) = table.compact(log, targetBytes)
     import spark.implicits._
     org.apache.spark.sql.GraftSqlBridge.analyzed(
-      Seq((packed.toLong, table.committedVersions.max.toLong))
+      Seq((packed.toLong, latest.toLong))
         .toDF("compacted_files", "latest_version"))
   }
 
@@ -360,15 +321,10 @@ object SnapshotSql {
   /** `SELECT * FROM graft_zorder('<man>', 128*1024*1024, 'a', 'b'[, …])`
     * — [[GraftTable.commitZorder]] from pure SQL. */
   def zorderPlan(es: Seq[Expression]): LogicalPlan = {
-    def fail(detail: String): Nothing =
-      throw new IllegalArgumentException(s"$detail\n$zorderUsage")
+    val fail = failWith(zorderUsage) _
     if (es.length < 3 || es.length > 10)
       fail(s"graft_zorder takes 3 to 10 arguments, got ${es.length}")
-    val man = es.head match {
-      case Literal(s: UTF8String, StringType) =>
-        resolveRef(SparkSession.active, s.toString, fail)
-      case other => fail(s"manifestDir must be a string literal; got '$other'")
-    }
+    val man = tableArg(es.head, fail)
     val targetBytes = es(1) match {
       case Literal(i: Int, IntegerType) if i > 0 => i.toLong
       case Literal(l: Long, LongType) if l > 0 => l
@@ -382,10 +338,9 @@ object SnapshotSql {
       strArg(e, s"dim${i + 1}")
     }
     val spark = SparkSession.active
-    val table = maintenanceTable(spark, man, fail)
-    val vs = table.committedVersions
-    if (vs.isEmpty) fail(s"no committed snapshots under $man")
-    val v = table.commitZorder(vs.max, targetBytes, dims)
+    val table = tableForMaintenance(spark, man, fail)
+    val log = orFail(fail)(table.snapshot().requireTable())
+    val v = table.commitZorder(log, targetBytes, dims)
     val n = table.files(v).size.toLong
     import spark.implicits._
     org.apache.spark.sql.GraftSqlBridge.analyzed(
@@ -407,15 +362,10 @@ object SnapshotSql {
   /** `SELECT * FROM graft_vacuum('<man>', 3)` — [[GraftTable.vacuum]]
     * from pure SQL (Delta's VACUUM). */
   def vacuumPlan(es: Seq[Expression]): LogicalPlan = {
-    def fail(detail: String): Nothing =
-      throw new IllegalArgumentException(s"$detail\n$vacuumUsage")
+    val fail = failWith(vacuumUsage) _
     if (es.length < 2 || es.length > 3)
       fail(s"graft_vacuum takes 2-3 arguments, got ${es.length}")
-    val man = es.head match {
-      case Literal(s: UTF8String, StringType) =>
-        resolveRef(SparkSession.active, s.toString, fail)
-      case other => fail(s"manifestDir must be a string literal; got '$other'")
-    }
+    val man = tableArg(es.head, fail)
     def longArg(e: Expression, name: String): Long = e match {
       case Literal(i: Int, IntegerType) => i.toLong
       case Literal(l: Long, LongType) => l
@@ -424,9 +374,9 @@ object SnapshotSql {
     val graceMs = if (es.length == 3) longArg(es(2), "graceMs") else 0L
     if (graceMs < 0) fail(s"graceMs must be >= 0, got $graceMs")
     val spark = SparkSession.active
-    val table = maintenanceTable(spark, man, fail)
-    val vs = table.committedVersions
-    if (vs.isEmpty) fail(s"no committed snapshots under $man")
+    val table = tableForMaintenance(spark, man, fail)
+    val log = orFail(fail)(table.snapshot().requireTable())
+    val vs = log.versions
     val Retain = """(?i)\s*retain\s+(\d+)\s+hours?\s*""".r
     val keepFrom: Long = es(1) match {
       // time-based retention: keep every version committed within the
@@ -436,7 +386,7 @@ object SnapshotSql {
       case Literal(s: UTF8String, StringType) => s.toString match {
         case Retain(h) =>
           val horizon = System.currentTimeMillis() - h.toLong * 3600000L
-          vs.filter(v => table.commitTimeOf(v) >= horizon)
+          vs.filter(v => log.at(v).commitTime >= horizon)
             .minOption.getOrElse(vs.max).toLong
         case other => fail(
           s"unrecognized retention spelling '$other' — use 'retain N hours'")
@@ -445,7 +395,7 @@ object SnapshotSql {
     }
     if (keepFrom < 1 || keepFrom > Int.MaxValue)
       fail(s"keepFrom $keepFrom out of range [1, ${Int.MaxValue}]")
-    val removed = table.vacuum(keepFrom.toInt, vs.max, graceMs)
+    val removed = table.vacuum(keepFrom.toInt, log, graceMs)
     import spark.implicits._
     org.apache.spark.sql.GraftSqlBridge.analyzed(removed.toDF("file"))
   }
@@ -464,15 +414,10 @@ object SnapshotSql {
     * only the manifest (the restore re-references committed files; no
     * data is read or written). */
   def restorePlan(es: Seq[Expression]): LogicalPlan = {
-    def fail(detail: String): Nothing =
-      throw new IllegalArgumentException(s"$detail\n$restoreUsage")
+    val fail = failWith(restoreUsage) _
     if (es.length != 2)
       fail(s"graft_restore takes 2 arguments, got ${es.length}")
-    val man = es.head match {
-      case Literal(s: UTF8String, StringType) =>
-        resolveRef(SparkSession.active, s.toString, fail)
-      case other => fail(s"manifestDir must be a string literal; got '$other'")
-    }
+    val man = tableArg(es.head, fail)
     val toV = es(1) match {
       case Literal(i: Int, IntegerType) => i
       case Literal(l: Long, LongType) if l >= 1 && l <= Int.MaxValue => l.toInt
@@ -480,10 +425,8 @@ object SnapshotSql {
     }
     val spark = SparkSession.active
     val table = GraftTable(spark, data = "", man = man, key = "")
-    if (!table.isCommitted(toV))
-      fail(s"no committed snapshot v=$toV under $man " +
-        s"(committed: ${table.committedVersions.mkString(", ")})")
-    val v = table.commitRestore(toV)
+    val v = table.commitRestore(
+      orFail(fail)(table.snapshot(Some(toV)).requireTable()))
     import spark.implicits._
     org.apache.spark.sql.GraftSqlBridge.analyzed(
       Seq((toV.toLong, v.toLong)).toDF("restored_to", "new_version"))
@@ -505,15 +448,10 @@ object SnapshotSql {
     * [[GraftTable.commitDeleteRange]] from pure SQL (Delta's DELETE
     * WHERE, range form). The table's shape comes from `_table_props`. */
   def deletePlan(es: Seq[Expression]): LogicalPlan = {
-    def fail(detail: String): Nothing =
-      throw new IllegalArgumentException(s"$detail\n$deleteUsage")
+    val fail = failWith(deleteUsage) _
     if (es.length != 3)
       fail(s"graft_delete takes 3 arguments, got ${es.length}")
-    val man = es.head match {
-      case Literal(s: UTF8String, StringType) =>
-        resolveRef(SparkSession.active, s.toString, fail)
-      case other => fail(s"manifestDir must be a string literal; got '$other'")
-    }
+    val man = tableArg(es.head, fail)
     // bounds in BOX representation (the prune/commitDeleteRange space):
     // Catalyst timestamp literals are ALREADY epoch micros and date
     // literals epoch days, so the conversion is a pure re-typing. Each
@@ -543,12 +481,11 @@ object SnapshotSql {
         s"lo with $hiKind hi — mixed kinds coerce to incompatible box " +
         "units and would delete the wrong range")
     val spark = SparkSession.active
-    val table = maintenanceTable(spark, man, fail)
-    val vs = table.committedVersions
-    if (vs.isEmpty) fail(s"no committed snapshots under $man")
+    val table = tableForMaintenance(spark, man, fail)
+    val log = orFail(fail)(table.snapshot().requireTable())
     // the recorded data schema names the key's actual type — when
     // present, the bounds' kind must be the key codec's own
-    table.versionSchema(vs.max).filter(_.fieldNames.contains(table.key))
+    log.schema.filter(_.fieldNames.contains(table.key))
       .foreach { sch =>
         import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType,
           ShortType}
@@ -564,21 +501,17 @@ object SnapshotSql {
           fail(s"table key '${table.key}' is ${sch(table.key).dataType
             .simpleString} — bounds must be $expect literals, got $loKind")
       }
-    val nDel = table.commitDeleteRange(qlo, qhi, vs.max)
+    val nDel = table.commitDeleteRange(qlo, qhi, log)
     import spark.implicits._
     org.apache.spark.sql.GraftSqlBridge.analyzed(
-      Seq((nDel, table.committedVersions.max.toLong))
+      Seq((nDel, table.snapshot().version.toLong))
         .toDF("deleted_rows", "latest_version"))
   }
 
   /** Maintenance ops rewrite data, so they need the FULL table shape —
     * key, data dir, stats/bloom declarations — all from `_table_props`.
-    * Shared with the catalog's row-level DELETE ([[GraftV2Table
-    * .deleteWhere]]) under the [[tableForMaintenance]] name. */
+    * Shared with the catalog's DML, DELETE, ALTER and INSERT paths. */
   private[table] def tableForMaintenance(spark: SparkSession, man: String,
-      fail: String => Nothing): GraftTable = maintenanceTable(spark, man, fail)
-
-  private def maintenanceTable(spark: SparkSession, man: String,
       fail: String => Nothing): GraftTable = {
     val p = GraftTable.loadProps(spark, man).getOrElse(
       fail(s"$man carries no _table_props — maintenance needs a table " +

@@ -126,4 +126,48 @@ class AsyncCloseSpec extends AnyFunSuite {
     // and the committed copy is still there (evictable, not deleted)
     assert(wc.cacheFs.exists(wc.toCachePath(dst)))
   }
+
+  test("directory rename during a child's in-flight upload: the upload completes and its moniker is lifted at the new path") {
+    val c = new Configuration(false)
+    c.setLong("graft.fs.data.page.size", 16 * 1024)
+    c.set("graft.fs.disk.cache.dir", root.resolve("pages3").toString)
+    c.set("graft.fs.write.cache.dir", root.resolve("wc3").toString)
+    c.set("graft.fs.remote.impl", classOf[SlowCloseFileSystem].getName)
+    c.setBoolean("graft.fs.write.cache.async.close", true)
+    // a write cache smaller than the file: the copy is evictable the
+    // moment its moniker lifts
+    c.setLong("graft.fs.write.cache.size", 16 * 1024)
+    c.setBoolean("graft.fs.write.cache.async.evict", false)
+    val fs = new GraftCachingFileSystem
+    fs.initialize(URI.create("graft://async3/"), c)
+
+    val stage = new Path(s"graft://async3${root.toString}/stage3")
+    val fin = new Path(s"graft://async3${root.toString}/final3")
+    val data = Array.tabulate(30000)(i => ((i * 7) % 256).toByte)
+
+    SlowCloseSpecState.remoteClosed.set(false)
+    val out = fs.create(new Path(stage, "part-0.bin"), true)
+    out.write(data)
+    out.close() // returns before the 800ms remote close
+    assert(fs.rename(stage, fin), "directory rename failed")
+    assert(!SlowCloseSpecState.remoteClosed.get, "upload finished before the rename")
+
+    val wc = fs.writeCacheRef.get
+    val moved = wc.toCachePath(new Path(fin, "part-0.bin"))
+    assert(wc.cacheFs.exists(moved) && wc.cacheFs.exists(wc.monikerPath(moved)))
+
+    val deadline = System.currentTimeMillis() + 10000
+    while (wc.cacheFs.exists(wc.monikerPath(moved)) &&
+      System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(!wc.cacheFs.exists(wc.monikerPath(moved)),
+      "moniker leaked at the renamed directory's child")
+    assert(SlowCloseSpecState.remoteClosed.get)
+    // the upload completed at the new path
+    val remote = new java.io.File(s"${root.toString}/final3/part-0.bin")
+    assert(remote.length() == data.length)
+    // the file list tracks the copy where it landed, so eviction frees it
+    wc.evictNow()
+    assert(!wc.cacheFs.exists(moved), "the moved copy was not evicted")
+    assert(wc.used == 0L && wc.listedFiles == 0)
+  }
 }

@@ -525,6 +525,37 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fs.getFileStatus(dir2).isDirectory)
     assert(fs.getFileStatus(new Path(dir2, "b.bin")).getLen == PageSz)
   }
+
+  test("rename of a directory moves its children's write-cache entries: eviction frees the moved copies") {
+    // Spark's commit protocol renames task-attempt directories: the file
+    // list must follow the children, or eviction "frees" paths that no
+    // longer exist and the moved copies stay on disk, untracked.
+    val cap = 1L << 20
+    val fs = newFs("rnsub", "graft.fs.write.cache.size" -> cap.toString,
+      "graft.fs.write.cache.async.evict" -> "false")
+    val wc = fs.writeCacheRef.get
+    val stage = graftPath("rnsub/stage")
+    val fin = graftPath("rnsub/final")
+    val Len = 200 * 1000
+    (0 until 4).foreach(i => writeFile(fs, new Path(stage, s"part-$i.bin"), Len, i))
+    assert(fs.rename(stage, fin))
+    val moved = (0 until 4).map(i => wc.toCachePath(new Path(fin, s"part-$i.bin")))
+    assert(moved.forall(wc.cacheFs.exists(_)), "the local rename did not move the copies")
+    assert(wc.listedFiles == 4 && wc.used == 4L * Len)
+    // three later copies push the cache over its start watermark
+    (0 until 3).foreach(i => writeFile(fs, graftPath(s"rnsub/fill-$i.bin"), Len, 10 + i))
+    wc.evictNow()
+    // FIFO down to the stop watermark: the three oldest (moved) copies go
+    assert(fs.stats.filesEvicted.get == 3)
+    assert(moved.take(3).forall(!wc.cacheFs.exists(_)), "a moved copy survived its eviction")
+    assert(wc.cacheFs.exists(moved(3)))
+    assert(wc.used == 4L * Len && wc.listedFiles == 4)
+    val in = fs.open(new Path(fin, "part-3.bin"))
+    val buf = new Array[Byte](Len)
+    in.readFully(0, buf)
+    in.close()
+    assert(buf.zipWithIndex.forall { case (b, i) => b == expectedByte(i, 3) })
+  }
 }
 
 object CountingRemoteState {
@@ -537,9 +568,13 @@ object CountingRemoteState {
   val fileListCalls = new AtomicLong
   /** Every remote call, of any kind. */
   val allCalls = new AtomicLong
+  /** The path of every LIST, in call order. */
+  val listedPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
-  def reset(): Unit =
+  def reset(): Unit = {
     Seq(statusCalls, listCalls, fileListCalls, allCalls).foreach(_.set(0))
+    listedPaths.clear()
+  }
 }
 
 /** A "remote" that counts its requests: HEADs (getFileStatus), LISTs
@@ -560,6 +595,7 @@ class CountingRemoteFileSystem extends FilterFileSystem(new RawLocalFileSystem) 
 
   override def listStatus(f: Path): Array[FileStatus] = call {
     listCalls.incrementAndGet()
+    listedPaths.add(f.toUri.getPath)
     if (new java.io.File(f.toUri.getPath).isFile) fileListCalls.incrementAndGet()
     fs.listStatus(f)
   }

@@ -118,7 +118,8 @@ class SparkGraftFsSpec extends TestBase {
   // gets cheaper; never raise them. While every file listing went
   // remote, the parquet read made 4 LISTs (one per file) and 4 HEADs
   // cold, 0 warm, and the snapshot read 3 HEADs and 5 LISTs (4 of data
-  // files); the HEAD ceilings keep those counts.
+  // files). The snapshot read's HEADs fell to 2 when the manifest read
+  // stopped stat-ing its dir before listing it.
   test("reading parquet file paths over graft:// lists no file remotely") {
     mountCounting("listguard")
     val local = java.nio.file.Files.createTempDirectory("graft_list_guard").toString
@@ -154,7 +155,66 @@ class SparkGraftFsSpec extends TestBase {
     assert(n == orders.count())
     assert(fileLists == 0, s"listed $fileLists file paths remotely")
     assert(lists <= 1, s"$lists LISTs")
-    assert(heads <= 3, s"$heads HEADs")
+    assert(heads <= 2, s"$heads HEADs")
+  }
+
+  /** LISTs of `path` (a local path under the counting remote) in the
+    * last [[remoteCalls]] window. */
+  private def listsOf(path: String): Int = {
+    import scala.jdk.CollectionConverters._
+    CountingRemoteState.listedPaths.asScala.count(_ == path)
+  }
+
+  // One snapshot per statement: the log (the manifest root) and a
+  // version's manifest dir are each listed at most once per statement.
+  // Ceilings are this change's counts; tighten them, never raise them.
+  // Before it, the MoR read below listed its manifest dir 3 times
+  // (snapshotPlan, then readAsOf's files and entry pairs): LIST=3,
+  // HEAD=2; the INSERT listed the log twice (the table's schema, then
+  // the commit): LIST=13, HEAD=52.
+  test("a graft_snapshot read of a MoR version lists its manifest dir and the log at most once") {
+    mountCounting("morguard")
+    val local = java.nio.file.Files.createTempDirectory("graft_mor_guard").toString
+    val man = s"graft://morguard$local/man"
+    val orders = Tables.load(spark, sfDir, "orders")
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    val t = graft.table.GraftTable(spark, s"graft://morguard$local/data", man,
+      "o_orderkey").create(orders, 4)
+    val nDel = t.commitDeleteMor(Nil, col("o_orderkey") % 7 === 0, 1)
+    assert(nDel > 0 && t.hasLiveDvs(2))
+    val (n, heads, lists, _) = remoteCalls(
+      spark.sql(s"SELECT count(*) FROM graft_snapshot('$man', 2)").head.getLong(0))
+    val (logLists, dirLists) = (listsOf(s"$local/man"), listsOf(s"$local/man/v=2"))
+    info(s"MoR graft_snapshot read: HEAD=$heads LIST=$lists " +
+      s"(log $logLists, manifest dir $dirLists)")
+    assert(n == orders.count() - nDel)
+    assert(logLists <= 1, s"the log was listed $logLists times")
+    assert(dirLists <= 1, s"the manifest dir was listed $dirLists times")
+    assert(lists <= 1, s"$lists LISTs")
+    assert(heads <= 2, s"$heads HEADs")
+  }
+
+  test("one INSERT INTO a catalog table on graft:// lists the log once per commit attempt") {
+    mountCounting("insguard")
+    val local = java.nio.file.Files.createTempDirectory("graft_ins_guard").toString
+    val man = s"graft://insguard$local/man"
+    val orders = Tables.load(spark, sfDir, "orders")
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    graft.table.GraftTable(spark, s"graft://insguard$local/data", man,
+      "o_orderkey").create(orders, 2)
+    spark.conf.set("spark.sql.catalog.gins", classOf[graft.table.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gins.dir", s"$local/catalog")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gins.db")
+    spark.sql(s"CREATE TABLE gins.db.t USING graft OPTIONS (man '$man')")
+    orders.limit(100).createOrReplaceTempView("ins_src")
+    val (_, heads, lists, _) = remoteCalls(
+      spark.sql("INSERT INTO gins.db.t SELECT * FROM ins_src").collect())
+    val logLists = listsOf(s"$local/man")
+    info(s"INSERT INTO: HEAD=$heads LIST=$lists (log $logLists)")
+    assert(graft.table.GraftTable(spark, "", man, "").committedVersions == Seq(1, 2))
+    assert(logLists == 1, s"one commit attempt listed the log $logLists times")
+    assert(lists <= 12, s"$lists LISTs")
+    assert(heads <= 51, s"$heads HEADs")
   }
 
   test("query results identical with and without the caching layer") {

@@ -244,4 +244,41 @@ class FooterStatsSpec extends TestBase {
     val (fast1, slow1) = bothPaths(t, Seq(s"$root/z"))
     assert(fast1 == slow1 && fast1.size == 1, s"\n$fast1\nvs\n$slow1")
   }
+
+  test("string boxes order by unsigned UTF-8 bytes on both paths: U+FFFD < U+1F600") {
+    val bmp = "\uFFFD"
+    val astral = new String(Character.toChars(0x1F600))
+    // Java's UTF-16 order puts the surrogate pair first: the trap
+    assert(bmp.compareTo(astral) > 0)
+    // box pruning: a file holding only U+FFFD cannot hold U+1F600
+    assert(GraftTable.boxCmp(bmp, astral) < 0)
+    val box = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      Array[Any](bmp, bmp), org.apache.spark.sql.types.StructType.fromDDL(
+        "lo STRING, hi STRING"))
+    assert(!GraftTable.boxIntersects(box, "lo", "hi", astral, astral))
+    assert(GraftTable.boxIntersects(box, "lo", "hi", bmp, astral))
+    // footer-stats merge: U+1F600 in the first row group and U+FFFD in
+    // the second, so the merged bounds depend on the comparator
+    val s = spark
+    import s.implicits._
+    val root = tmp("utf8")
+    Seq(astral, bmp).toDF("k").coalesce(1).write
+      .option("parquet.block.size", "1")
+      .option("parquet.page.size.row.check.min", "1")
+      .option("parquet.page.size.row.check.max", "1")
+      .parquet(s"$root/raw")
+    val files = new java.io.File(s"$root/raw").listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).toSeq
+    val groups = files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), s.sessionState.newHadoopConf()))
+      try r.getFooter.getBlocks.size finally r.close()
+    }
+    assert(groups == Seq(2), s"row groups per file: $groups")
+    val t = GraftTable(s, s"$root/d", s"$root/m", "k")
+    val (fast, slow) = bothPaths(t, files)
+    assert(fast == slow, s"\nfast=$fast\nslow=$slow")
+    assert(fast.map(r => (r(1), r(2))) == Seq((bmp, astral)), s"$fast")
+  }
 }
