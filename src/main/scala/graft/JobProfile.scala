@@ -33,16 +33,9 @@ object JobProfile {
     case class J(id: Int, start: Long, var end: Long = -1L,
       var stages: Int = 0, var tasks: Int = 0, site: String)
     val jobs = mutable.LinkedHashMap.empty[Int, J]
-    val listener = new SparkListener {
+    val listener = new CallsiteListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        // local mode: the job's callsite rides the stage infos, not the
-        // job properties — take the first stage's (deepest) callsite
-        val site = e.stageInfos.headOption.map(_.details.linesIterator
-            .filterNot(l => l.contains("org.apache.spark")
-              || l.contains("java.") || l.contains("scala."))
-            .nextOption().getOrElse("?"))
-          .getOrElse("?").trim
-        jobs(e.jobId) = J(e.jobId, e.time, site = site)
+        jobs(e.jobId) = J(e.jobId, e.time, site = siteOf(e))
         jobs(e.jobId).stages = e.stageInfos.size
         jobs(e.jobId).tasks = e.stageInfos.map(_.numTasks).sum
       }
@@ -90,4 +83,42 @@ object JobProfile {
     }
     spark.stop()
   }
+
+  /** Records each SQL execution's callsite, so [[siteOf]] can name the
+    * jobs whose own stack holds only library frames. */
+  class CallsiteListener extends SparkListener {
+    private val execSites =
+      new java.util.concurrent.ConcurrentHashMap[Long, String]()
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+        execSites.put(s.executionId, callsite(s.details))
+      case _ =>
+    }
+
+    /** A job's callsite: its first stage's [[callsite]] (local mode: the
+      * callsite rides the stage infos, not the job properties), else the
+      * callsite of the SQL execution it runs under. Adaptive execution
+      * submits a query's stages from its own thread pool, so those jobs'
+      * stacks start at the pool thread and hold no user frame. */
+    def siteOf(e: SparkListenerJobStart): String =
+      e.stageInfos.headOption.map(s => callsite(s.details)).filter(_ != "?")
+        .orElse(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSites.get(id.toLong))))
+        .getOrElse("?")
+  }
+
+  private val libraryFrames =
+    Seq("org.apache.spark.", "java.", "jdk.", "sun.", "scala.")
+
+  /** The first frame of a stage's `details` (its call stack, one frame
+    * per line) outside Spark, the JDK and the Scala library, or `?`.
+    * Frames are told apart by their class name: every frame of a Scala
+    * source carries `.scala:` in its file name, so a substring test for
+    * `scala.` would drop them all. */
+  def callsite(details: String): String =
+    details.linesIterator.map(_.trim)
+      .find(l => l.nonEmpty && !libraryFrames.exists(l.startsWith))
+      .getOrElse("?")
 }

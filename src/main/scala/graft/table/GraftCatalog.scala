@@ -858,8 +858,11 @@ object StagedGraftTable {
   /** Whether a man/data dir entry is one this table format itself
     * writes — the only names a CTAS abort may reclaim from a dir it
     * did not create: committed/staged manifests (`v=N`, `_tmp_v*`,
-    * `_ptr_v=*`), props, data/DV parquet (`part-*`, `dv-*`), write
-    * stages (`_stage_*`) and Spark's `_SUCCESS` marker. */
+    * `_ptr_v=*`), props, data/DV parquet (`part-*`, `dv-*`) and Spark's
+    * `_SUCCESS` marker (table creation still writes through Spark's
+    * writer). Commit writes create their files at their final names;
+    * `_stage_*` dirs are left only by writers from before that, so they
+    * count as owned for cleanup alone. */
   private[table] def graftOwned(name: String): Boolean =
     name.startsWith("v=") || name.startsWith("_tmp_v") ||
       name.startsWith("_ptr_v=") || name == GraftTable.PropsFile ||

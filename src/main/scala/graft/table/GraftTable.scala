@@ -21,9 +21,12 @@ import org.apache.spark.sql.functions._
   *    the manifest's own per-file `bytes` — no file is ever stat-ed.
   *  - COMMITS are atomic: a manifest version is written to a `_tmp_*`
   *    staging dir and RENAMED into `v=N` in one filesystem op, so
-  *    `v=N` existing means `v=N` is complete — a crash can leave only
-  *    unreferenced data files / staging dirs, both invisible to
-  *    readers and reclaimed by [[vacuum]].
+  *    `v=N` existing means `v=N` is complete. Data and deletion-vector
+  *    files are created at their final names in the data dir
+  *    ([[GraftCommitProtocol]]) and never renamed, so that rename is
+  *    the ONLY commit — a crash can leave only unreferenced data files
+  *    / manifest staging dirs, both invisible to readers and reclaimed
+  *    by [[vacuum]].
   *
   * STORAGE: every path is addressed through the Hadoop
   * [[org.apache.hadoop.fs.FileSystem]] API, resolved from the path's
@@ -284,7 +287,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       val p = new Path(f)
       val fs = p.getFileSystem(hconf)
       val st = fs.getFileStatus(p)
-      if (st.isFile) Seq(st)
+      // not `isFile`: it asks `isSymlink`, which a status served from
+      // graft://'s meta cache answers with a remote HEAD
+      if (!st.isDirectory) Seq(st)
       else listStatusSafe(fs, p).filter { s =>
         val n = s.getPath.getName
         s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
@@ -601,7 +606,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         false
       }
     if (!wroteDirect)
-      entries.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      GraftCommitProtocol.write(spark, entries.coalesce(1), tmp.toString)
     require(touch(manFs, new Path(tmp, s"_ts_${System.currentTimeMillis()}")),
       "could not record commit timestamp")
     require(touch(manFs, new Path(tmp, s"_commit_$attempt")),
@@ -846,8 +851,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         "reclaim files the other still references")
     // checks resolve LIVE from the source's props (ALTER-added ones
     // included), so the clone's own props carry the same constraints
+    // the clone commits through the source's store, declared or not
     val clone = copy(data = targetData, man = targetMan,
-      checks = activeChecks,
+      logStore = store.name, checks = activeChecks,
       dmlModes = GraftTable.loadProps(spark, man)
         .map(_.dmlModes).getOrElse(dmlModes))
     val cloneManDir = new Path(targetMan)
@@ -898,13 +904,16 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * byte-identical; [[vacuum]] never touches it. */
   private def writeProps(provenance: Option[String] = None): Unit = {
     GraftTable.validateDmlModes(dmlModes)
+    // resolve the store BEFORE creating the file: an undeclared store
+    // reads `_table_props`, which must not be this half-written one
+    val storeName = store.name
     manFs.mkdirs(new Path(man))
     val out = manFs.create(new Path(man, GraftTable.PropsFile), true)
     try out.write(
       (s"key=$key\nstats=${statsCols.mkString(",")}\n" +
         s"bloom=${bloomCols.mkString(",")}\ndata=$data\n" +
         s"bloom_items=$bloomItems\nbloom_fpp=$bloomFpp\n" +
-        s"logstore=${store.name}\n" +
+        s"logstore=$storeName\n" +
         checks.map { case (n, e) => s"check.$n=$e\n" }.mkString +
         dmlModes.toSeq.sorted.map { case (s, m) => s"mode.$s=$m\n" }
           .mkString +
@@ -1008,41 +1017,18 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       entriesSchema((key +: statsCols)
         .map(_ -> (GraftTable.IntegralCodec: GraftTable.BoxCodec)).toMap))
 
-  /** Write the batch's clustered files through a UNIQUE staging subdir
-    * and move them into the layout, returning exactly the added files'
-    * paths. A before/after directory diff would misattribute a
-    * concurrent writer's files landing in the same window (double- or
-    * cross-referenced manifest entries); the staging dir makes the
-    * added set exact under any concurrency. Underscore-prefixed dirs
-    * are hidden from Spark/Hadoop scans, so a transient stage is
-    * invisible to readers; part-file names carry job UUIDs, so moves
-    * cannot collide. */
-  private[table] def stagedAppend(batch: DataFrame, nParts: Int): Seq[String] = {
+  /** Write the batch's clustered files straight into the data dir,
+    * each at its final name ([[GraftCommitProtocol]]), and return
+    * exactly the committed tasks' files — the added set comes from the
+    * tasks' commit messages, never from a listing, so a concurrent
+    * writer's files landing in the same dir cannot be misattributed.
+    * The files are staged for the commit only in the sense that no
+    * manifest names them yet: until one does, readers never see them
+    * and [[vacuum]] treats them as orphans (after its grace). */
+  private[table] def stagedAppend(batch: DataFrame, nParts: Int): Seq[String] =
     // files always store the frozen PHYSICAL names (column mapping)
-    val phys = toPhysical(batch)
-    stagedMove(stage =>
-      GraftTable.clusteredWrite(phys, key, nParts, "overwrite", stage))
-  }
-
-  /** The stage-write-move tail shared by [[stagedAppend]] and the
-    * z-order rewrite: `write` lands parquet in a fresh underscore-hidden
-    * staging dir, whose part files move into the data dir one rename
-    * each. Returns the moved files' full paths. */
-  private def stagedMove(write: String => Unit): Seq[String] = {
-    val stage = new Path(data,
-      s"_stage_${java.util.UUID.randomUUID().toString.take(8)}")
-    write(stage.toString)
-    val moved = dataFs.listStatus(stage)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .map { st =>
-        val dst = new Path(data, st.getPath.getName)
-        require(dataFs.rename(st.getPath, dst),
-          s"could not move staged file ${st.getPath} into $data")
-        dst.getName
-      }.toSeq
-    dataFs.delete(stage, true)
-    moved.map(n => s"$data/$n")
-  }
+    GraftTable.clustered(toPhysical(batch), key, nParts)(
+      GraftCommitProtocol.write(spark, _, data))
 
   /** Output-file count for a COW rewrite whose inputs total
     * `impactedBytes` (the manifest's own per-file `bytes` — no file is
@@ -1097,7 +1083,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * entries are never rescanned — rebuilding a 100 TB table's manifest
     * per batch would cost a full scan). Version `prevV` stays immutable.
     * NULL table keys are rejected by the stats scan (see [[fileStats]]);
-    * a rejected batch's already-moved files are unreferenced orphans
+    * a rejected batch's already-written files are unreferenced orphans
     * that [[vacuum]] reclaims. */
   def commitAppend(batch: DataFrame, prevV: SnapshotRef, nParts: Int = 2,
       tag: Option[String] = None): Unit = {
@@ -2105,21 +2091,20 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
   }
 
   /** Write `dv` (file, pos) as ONE parquet placement `dv-<uuid>
-    * .parquet` in the data dir, via a staging dir so the placement is
-    * atomic-ish and a crash leaves only an underscore-hidden stage for
-    * vacuum. Under `spark.graft.dv.maxRowsPerFile` rows (default 32M ≈
-    * low-hundreds of MB of positions, the scattered-churn common case)
-    * the vector lands as a single parquet FILE written by one task;
-    * above it the write fans out to ceil(rows/max) tasks and the whole
-    * output DIRECTORY is placed under the same one name — readers
-    * (`spark.read.parquet`) and [[GraftTable.ownDvRows]] accept both
-    * shapes, and the one-NAME-per-commit invariant that vacuum's
-    * reference counting and the manifest's single `dv` pointer rely on
-    * holds either way, while a giant mask no longer funnels through a
-    * single write task. */
+    * .parquet` in the data dir, created at that final name
+    * ([[GraftCommitProtocol]]); until a manifest points at it, it is an
+    * orphan for vacuum like any uncommitted data file. Under
+    * `spark.graft.dv.maxRowsPerFile` rows (default 32M ≈ low-hundreds
+    * of MB of positions, the scattered-churn common case) the vector is
+    * a single parquet FILE written by one task; above it the write fans
+    * out to ceil(rows/max) tasks, each creating its part file under a
+    * DIRECTORY of that one name — readers (`spark.read.parquet`) and
+    * [[GraftTable.ownDvRows]] accept both shapes, and the
+    * one-NAME-per-commit invariant that vacuum's reference counting and
+    * the manifest's single `dv` pointer rely on holds either way, while
+    * a giant mask no longer funnels through a single write task. */
   private def writeDvFile(dv: DataFrame, totalRows: Long): String = {
-    val id = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(data, s"_stage_dv_$id")
+    val name = s"dv-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
     val rawMax = spark.conf
       .get("spark.graft.dv.maxRowsPerFile", (32L << 20).toString)
     val maxRows = try rawMax.toLong catch {
@@ -2130,20 +2115,19 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       s"spark.graft.dv.maxRowsPerFile must be positive; got $maxRows")
     val nParts = math.min(10000L,
       math.max(1L, (totalRows + maxRows - 1) / maxRows)).toInt
-    if (nParts <= 1) {
-      dv.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = dataFs.listStatus(stage)
-        .filter(_.getPath.getName.startsWith("part-")).head.getPath
-      val dst = new Path(data, s"dv-$id.parquet")
-      require(dataFs.rename(part, dst), s"could not place DV file $dst")
-      dataFs.delete(stage, true)
-      dst.toString
-    } else {
-      dv.repartition(nParts).write.mode("overwrite").parquet(stage.toString)
-      val dst = new Path(data, s"dv-$id.parquet")
-      require(dataFs.rename(stage, dst), s"could not place DV dir $dst")
-      dst.toString
+    val dst = new Path(data, name)
+    if (nParts <= 1)
+      GraftCommitProtocol.write(spark, dv.coalesce(1), data, Some(name))
+    else {
+      val parts = GraftCommitProtocol
+        .write(spark, dv.repartition(nParts), dst.toString)
+        .map(new Path(_).getName).toSet
+      // every file under the one name is read as the vector, so a
+      // failed attempt's part that abortTask could not delete must go
+      listStatusSafe(dataFs, dst).filterNot(st => parts(st.getPath.getName))
+        .foreach(st => dataFs.delete(st.getPath, true))
     }
+    dst.toString
   }
 
   /** Whether snapshot v carries any live deletion vector. */
@@ -2596,19 +2580,18 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     val physMap = logicalToPhysical(Int.MaxValue)
     // persist across the range sampler: the z-coded input is a MoR
     // read + bounds-join + Morton projection, and repartitionByRange
-    // executes its child twice (sample + shuffle) — the stagedAppend
+    // executes its child twice (sample + shuffle) — the clustered-write
     // rule applied to the one write path that does not go through it
     val zd = df.crossJoin(broadcast(mm))
       .withColumn("__z", z_value_n(dims.indices.map(i =>
         norm(numeric(i), col(s"__lo_$i"), col(s"__hi_$i")))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val added = try stagedMove { stage =>
-      zd
-        .repartitionByRange(nOut, col("__z"))
-        .sortWithinPartitions("__z")
-        .select(cols.map(c => col(c).as(physMap.getOrElse(c, c))): _*)
-        .write.mode("overwrite").parquet(stage)
-    } finally { zd.unpersist(blocking = false); () }
+    val added = try GraftCommitProtocol.write(spark,
+        zd.repartitionByRange(nOut, col("__z"))
+          .sortWithinPartitions("__z")
+          .select(cols.map(c => col(c).as(physMap.getOrElse(c, c))): _*),
+        data)
+      finally { zd.unpersist(blocking = false); () }
     require(added.nonEmpty, "z-order rewrite produced no files")
     // content-identical: a layout-only commit
     layoutCommit("z-order rewrite", fileStats(added), prev,
@@ -2987,14 +2970,15 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
 
   /** VACUUM: drop manifest versions below `keepFrom`, then delete every
     * data file referenced by NO retained version (plus crashed `_tmp_*`
-    * / `_stage_*` staging dirs). Returns the deleted data-file names.
+    * manifest staging dirs and legacy `_stage_*` data staging dirs).
+    * Returns the deleted data-file names.
     *
     * Concurrency: every listed version from `keepFrom` up is retained.
     * The listing is the statement's own snapshot when `latest` is one,
     * else taken here at scan time, so a version another writer commits
     * between the caller's planning and this scan still protects its
     * files. An IN-FLIGHT commit (files
-    * moved, manifest rename not yet done) is indistinguishable from a
+    * written, manifest rename not yet done) is indistinguishable from a
     * crash orphan by reference-counting alone — that is what `graceMs`
     * is for: nothing younger than the grace is deleted. Multi-writer
     * deployments must vacuum with a grace exceeding their longest
@@ -3014,7 +2998,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       _.pairs.flatMap(_._2).map(p => new Path(p).getName)).toSet
     val cutoff = System.currentTimeMillis() - graceMs
     def aged(st: FileStatus): Boolean = st.getModificationTime <= cutoff
-    val orphans = listStatusSafe(dataFs, new Path(data))
+    // ONE listing of the data dir feeds both the orphan filter and the
+    // legacy stage-dir sweep below
+    val dataListing = listStatusSafe(dataFs, new Path(data))
+    val orphans = dataListing
       .filter { st =>
         val n = st.getPath.getName
         aged(st) &&
@@ -3057,9 +3044,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("_tmp_")
         && aged(st) && !liveDirs(st.getPath.getName))
       .foreach(st => manFs.delete(st.getPath, true))
-    // crashed data-side staging dirs (writer died before the move) are
-    // invisible to readers (underscore-hidden) but still hold bytes
-    listStatusSafe(dataFs, new Path(data))
+    // crashed `_stage_*` dirs of tables written before commits created
+    // files at their final names: invisible to readers
+    // (underscore-hidden) but still holding bytes
+    dataListing
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("_stage_")
         && aged(st))
       .foreach(st => dataFs.delete(st.getPath, true))
@@ -4040,21 +4028,25 @@ object GraftTable {
     }
   }
 
-  /** Range-cluster `df` on `key` and write to `path` — the shared
+  /** Range-cluster `df` on `key` and write to `path` — the
     * physical-layout primitive behind [[GraftTable!.clusteredWrite]]
-    * and every staged commit write. */
+    * (table creation). */
   def clusteredWrite(df: DataFrame, key: String, nParts: Int, mode: String,
-      path: String): Unit = {
+      path: String): Unit =
+    clustered(df, key, nParts)(_.write.mode(mode).parquet(path))
+
+  /** Range-cluster `df` on `key` into `nParts` sorted partitions and
+    * hand the shaped frame to `sink` — the layout shared by
+    * [[clusteredWrite]] and every commit write
+    * ([[GraftTable!.stagedAppend]]). */
+  private[table] def clustered[T](df: DataFrame, key: String, nParts: Int)
+      (sink: DataFrame => T): T = {
     // Single-partition writes need no range bounds: a round-robin
     // repartition(1) + local sort produces the identical one sorted
     // file WITHOUT repartitionByRange's sampling pass (which executes
     // the whole input plan an extra time just to learn there is
     // nothing to split).
-    if (nParts <= 1) {
-      df.repartition(1).sortWithinPartitions(key)
-        .write.mode(mode).parquet(path)
-      return
-    }
+    if (nParts <= 1) return sink(df.repartition(1).sortWithinPartitions(key))
     // A multi-partition range-clustered write SAMPLES its input to
     // compute partition bounds, so the batch's plan executes TWICE
     // (sample pass + shuffle pass). For a COMPUTED batch — merge
@@ -4078,9 +4070,8 @@ object GraftTable {
         Some(df.persist(org.apache.spark.storage.StorageLevel
           .MEMORY_AND_DISK))
       else None
-    try mat.getOrElse(df).repartitionByRange(nParts, col(key))
-      .sortWithinPartitions(key)
-      .write.mode(mode).parquet(path)
+    try sink(mat.getOrElse(df).repartitionByRange(nParts, col(key))
+      .sortWithinPartitions(key))
     finally { mat.foreach(_.unpersist(blocking = false)); () }
   }
 

@@ -568,17 +568,23 @@ object CountingRemoteState {
   val fileListCalls = new AtomicLong
   /** Every remote call, of any kind. */
   val allCalls = new AtomicLong
+  /** RENAMEs. */
+  val renameCalls = new AtomicLong
+  /** Calls of any kind made from Hadoop's `FileOutputCommitter`. */
+  val committerCalls = new AtomicLong
   /** The path of every LIST, in call order. */
   val listedPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   def reset(): Unit = {
-    Seq(statusCalls, listCalls, fileListCalls, allCalls).foreach(_.set(0))
+    Seq(statusCalls, listCalls, fileListCalls, allCalls, renameCalls,
+      committerCalls).foreach(_.set(0))
     listedPaths.clear()
   }
 }
 
 /** A "remote" that counts its requests: HEADs (getFileStatus), LISTs
-  * (and which of them list a file path), and calls of every kind. It
+  * (and which of them list a file path), RENAMEs, calls of every kind
+  * and which of those Hadoop's FileOutputCommitter made. It
   * filters a RawLocalFileSystem, so the local FS's own internal
   * getFileStatus calls are not counted. Proves the meta cache serves hot
   * facts and file listings RPC-free and the lazy backfill pays exactly
@@ -586,7 +592,13 @@ object CountingRemoteState {
 class CountingRemoteFileSystem extends FilterFileSystem(new RawLocalFileSystem) {
   import CountingRemoteState._
 
-  private def call[T](body: => T): T = { allCalls.incrementAndGet(); body }
+  private def call[T](body: => T): T = {
+    allCalls.incrementAndGet()
+    if (new Throwable().getStackTrace.exists(_.getClassName ==
+        "org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter"))
+      committerCalls.incrementAndGet()
+    body
+  }
 
   override def getFileStatus(f: Path): FileStatus = call {
     statusCalls.incrementAndGet()
@@ -612,7 +624,10 @@ class CountingRemoteFileSystem extends FilterFileSystem(new RawLocalFileSystem) 
       progress: Progressable): FSDataOutputStream =
     call(fs.append(f, bufferSize, progress))
 
-  override def rename(src: Path, dst: Path): Boolean = call(fs.rename(src, dst))
+  override def rename(src: Path, dst: Path): Boolean = call {
+    renameCalls.incrementAndGet()
+    fs.rename(src, dst)
+  }
 
   override def delete(f: Path, recursive: Boolean): Boolean =
     call(fs.delete(f, recursive))

@@ -117,4 +117,19 @@ class ShallowCloneSpec extends TestBase {
       src.shallowClone(7, scratch("g3"), scratch("g4"))
     }
   }
+
+  test("a clone made through a handle that declares no store keeps the source's pointer store") {
+    val root = scratch("ptr_src")
+    GraftTable(spark, s"$root/data", s"$root/man", "id", logStore = "pointer")
+      .create((0L until 400L).map(i => (i, i * 10L)).toDF("id", "v2"), 2)
+    // the handle resolves its store from the source's _table_props
+    val handle = GraftTable(spark, s"$root/data", s"$root/man", "id")
+    val c = scratch("ptr_cl")
+    handle.shallowClone(1, s"$c/data", s"$c/man")
+    assert(GraftTable.loadProps(spark, s"$c/man").flatMap(_.logStore)
+      .contains("pointer"), "the clone's props record another store")
+    assert(new java.io.File(s"$c/man/_ptr_v=1").isFile,
+      "the clone's v=1 was not committed through the pointer store")
+    assert(GraftTable(spark, s"$c/data", s"$c/man", "id").readAsOf(1).count() == 400)
+  }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *     caching filesystem — the sidecar-equivalent cache below, the
   *     lakehouse format above, composed (the BASELINE north star);
   *  2. crash-point matrix for the commit protocol: a writer can die
-  *     after ANY step (staged move done / manifest staged but not
+  *     after ANY step (task files written / manifest staged but not
   *     renamed) and readers never see partial state, graced vacuum
   *     spares in-flight look-alikes, quiesced vacuum reclaims exactly
   *     the orphans;
@@ -83,14 +83,15 @@ class TableFsSpec extends TestBase {
 
   // ---- 2. crash-point matrix ---------------------------------------
 
-  test("crash after the staged move: orphans invisible, graced vacuum spares, quiesced vacuum reclaims exactly them") {
+  test("crash after the task writes: orphans invisible, graced vacuum spares, quiesced vacuum reclaims exactly them") {
     val (out, man) = freshDirs("crash_moved")
     val table = GraftTable(spark, out, man, "o_orderkey").create(orders, 4)
     val n1 = orders.count()
     val before = table.partFiles
 
-    // the writer dies HERE: files moved into the layout, manifest never
-    // committed — the exact window the commit protocol must tolerate
+    // the writer dies HERE: files written at their final names in the
+    // layout, manifest never committed — the exact window the commit
+    // protocol must tolerate
     val orphaned = table.stagedAppend(orders.limit(100), 2)
     assert(orphaned.nonEmpty)
     val orphanNames = orphaned.map(p => new org.apache.hadoop.fs.Path(p).getName)
