@@ -6,15 +6,21 @@ import org.apache.hadoop.fs.permission.FsPermission
 /** A `FileStatus` served from the meta cache's 17-byte facts.
   *
   * The hot fields Spark planning and commit protocols hammer — length,
-  * isDirectory, modification time, path — come straight from the cached
-  * record with zero remote calls. The rarely-used fields (owner, group,
-  * permission, real block size, replication, access time, symlink and
-  * encryption flags) are backfilled from the remote with ONE lazy RPC on
+  * isDirectory, isFile, modification time, path — come straight from the
+  * cached record with zero remote calls. The rarely-used fields (owner,
+  * group, permission, real block size, replication, access time and the
+  * encryption flag) are backfilled from the remote with ONE lazy RPC on
   * first access, memoized for the life of the status object (reference
   * parity: CachedFileStatus.java:103-114, checkRemoteLoaded()).
   * Permission-sensitive tooling over the cached FS therefore sees true
   * owners/permissions without the cache re-paying a HEAD for the facts
   * it already holds.
+  *
+  * Deviation from the reference's backfill list: `isSymlink` answers
+  * false from the record. `getFileStatus` resolves symlinks, so a status
+  * it returns never describes one — and `FileStatus.isFile` asks
+  * `isSymlink`, so a backfilled answer would cost every `isFile` on a
+  * served status one HEAD.
   *
   * The remote fetch failure propagates as a RuntimeException, matching
   * the reference. Note: Writable/Java serialization of this status
@@ -42,6 +48,6 @@ final class CachedFileStatus(
   override def getReplication: Short = source.getReplication
   override def getBlockSize: Long = source.getBlockSize
   override def getAccessTime: Long = source.getAccessTime
-  override def isSymlink: Boolean = source.isSymlink
+  override def isSymlink: Boolean = false
   override def isEncrypted: Boolean = source.isEncrypted
 }

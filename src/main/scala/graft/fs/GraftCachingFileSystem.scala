@@ -149,8 +149,8 @@ class GraftCachingFileSystem extends FileSystem {
     // InMemoryFileIndex lists every file path it is given. Directory
     // listings always hit the remote; the cache holds no directory
     // contents, like the reference's (SURVEY §2A.1). The plain status
-    // matters: Spark reads replication, block size and isSymlink off each
-    // listed file, and on a CachedFileStatus each would backfill.
+    // matters: Spark reads replication and block size off each listed
+    // file, and on a CachedFileStatus each would backfill.
     val known =
       if (fsConf.remoteMutable) None
       else metaCache.peek(q.toString).filterNot(_.isDir)

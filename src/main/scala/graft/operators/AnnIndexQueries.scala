@@ -117,128 +117,6 @@ object AnnIndex {
     GraftTable(spark, s"$root/idx_data", s"$root/idx_man", "cell",
       statsCols = Seq("nid"))
 
-  /** Driver-side direct read of a frozen-model parquet dir — the
-    * [[GraftTable.readManifestRows]] shape extended with single-level
-    * LIST columns (the three model schemas are flat primitives plus
-    * array<float/double>): loading O(model) driver-side state must not
-    * schedule Spark jobs (each `spark.read.parquet(...).collect()`
-    * burned two jobs + their planning gaps per load). Any unexpected
-    * shape falls back to the Spark read in the caller (loud-safe:
-    * throws here, caught at the call sites below). Rows behave like
-    * collected Spark rows (getInt/getLong/getString/getSeq). */
-  private def readModelRows(spark: SparkSession,
-      dir: String): Seq[org.apache.spark.sql.Row] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.ColumnIOFactory
-    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    import org.apache.parquet.example.data.Group
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-    import org.apache.spark.sql.types._
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val parts = fs.listStatus(root).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-        !n.startsWith(".")
-    }
-    require(parts.nonEmpty, s"model dir $dir holds no parquet part")
-    def primType(p: org.apache.parquet.schema.PrimitiveType): DataType =
-      p.getPrimitiveTypeName match {
-        case INT32 => IntegerType
-        case INT64 => LongType
-        case FLOAT => FloatType
-        case DOUBLE => DoubleType
-        case BINARY
-          if p.getLogicalTypeAnnotation != null &&
-            p.getLogicalTypeAnnotation.isInstanceOf[
-              LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-          StringType
-        case BOOLEAN => BooleanType
-        case other =>
-          throw new IllegalStateException(s"model field type $other")
-      }
-    def primValue(g: Group, i: Int, dt: DataType): Any = dt match {
-      case IntegerType => g.getInteger(i, 0)
-      case LongType => g.getLong(i, 0)
-      case FloatType => g.getFloat(i, 0)
-      case DoubleType => g.getDouble(i, 0)
-      case StringType => g.getString(i, 0)
-      case BooleanType => g.getBoolean(i, 0)
-      case other => throw new IllegalStateException(other.toString)
-    }
-    var schema: StructType = null
-    var firstMsg: org.apache.parquet.schema.MessageType = null
-    val out = Seq.newBuilder[org.apache.spark.sql.Row]
-    parts.foreach { st =>
-      val reader =
-        ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-      try {
-        val msg = reader.getFooter.getFileMetaData.getSchema
-        if (firstMsg == null) firstMsg = msg
-        else require(msg == firstMsg, s"model parts disagree on schema in $dir")
-        // field plan: Left(primitive spark type) or Right(element type)
-        // for Spark's 3-level list shape (group(LIST){ repeated group
-        // list { optional <elem> element } })
-        val plan: Seq[Either[DataType, DataType]] =
-          (0 until msg.getFieldCount).map { i =>
-            val f = msg.getType(i)
-            if (f.isPrimitive) Left(primType(f.asPrimitiveType()))
-            else {
-              val ann = f.getLogicalTypeAnnotation
-              require(ann != null && ann.isInstanceOf[
-                  LogicalTypeAnnotation.ListLogicalTypeAnnotation],
-                s"model field '${f.getName}' is a non-LIST group")
-              val rep = f.asGroupType().getType(0).asGroupType()
-              Right(primType(rep.getType(0).asPrimitiveType()))
-            }
-          }
-        if (schema == null) schema = StructType(plan.zipWithIndex.map {
-          case (Left(dt), i) => StructField(msg.getType(i).getName, dt)
-          case (Right(et), i) =>
-            StructField(msg.getType(i).getName, ArrayType(et))
-        })
-        var pages = reader.readNextRowGroup()
-        while (pages != null) {
-          val recReader = new ColumnIOFactory().getColumnIO(msg)
-            .getRecordReader(pages, new GroupRecordConverter(msg))
-          var r = 0L
-          while (r < pages.getRowCount) {
-            val g = recReader.read()
-            val vals = plan.zipWithIndex.map {
-              case (_, i) if g.getFieldRepetitionCount(i) == 0 => null
-              case (Left(dt), i) => primValue(g, i, dt)
-              case (Right(et), i) =>
-                val lst = g.getGroup(i, 0)
-                val n = lst.getFieldRepetitionCount(0)
-                (0 until n).map { j =>
-                  val e = lst.getGroup(0, j)
-                  if (e.getFieldRepetitionCount(0) == 0) null
-                  else primValue(e, 0, et)
-                }
-            }
-            out += new GenericRowWithSchema(vals.toArray, schema)
-            r += 1
-          }
-          pages = reader.readNextRowGroup()
-        }
-      } finally reader.close()
-    }
-    out.result()
-  }
-
-  /** [[readModelRows]] with the Spark-read fallback — the ONE model
-    * load primitive every frozen-model reader goes through. */
-  private[operators] def modelRows(spark: SparkSession,
-      dir: String): Seq[org.apache.spark.sql.Row] =
-    try readModelRows(spark, dir)
-    catch { case scala.util.control.NonFatal(_) =>
-      spark.read.parquet(dir).collect().toSeq
-    }
-
   private[operators] def dv(c: Column): Column = transform(c, x => x.cast("double"))
 
   /** The frozen coarse quantizer, loaded from the model parquet —
@@ -246,7 +124,7 @@ object AnnIndex {
     * kmeansCentroids' collect). */
   def loadModel(spark: SparkSession, root: String): Seq[(Int, Seq[Double])] =
     cachedModel(spark, modelPath(root)) {
-      modelRows(spark, modelPath(root))
+      GraftTable.readParquetRows(spark, modelPath(root))._1
         .map(r => (r.getInt(0), r.getSeq[Double](1)))
         .sortBy(_._1).toSeq
     }
@@ -634,7 +512,7 @@ object AnnIndexPq {
   def loadCodebook(spark: SparkSession, root: String)
       : Array[Array[Array[Float]]] =
     AnnIndex.cachedModel(spark, cbPath(root)) {
-      val rows = AnnIndex.modelRows(spark, cbPath(root))
+      val rows = GraftTable.readParquetRows(spark, cbPath(root))._1
         .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Float](2).toArray))
         .toMap
       val m = rows.keys.map(_._1).max + 1
@@ -886,7 +764,7 @@ object AnnIndexSrp {
   def loadParams(spark: SparkSession, root: String)
       : (Int, Int, Int, String) =
     AnnIndex.cachedModel(spark, paramsPath(root)) {
-      val r = AnnIndex.modelRows(spark, paramsPath(root)).head
+      val r = GraftTable.readParquetRows(spark, paramsPath(root))._1.head
       ((r.getInt(0), r.getInt(1), r.getInt(2), r.getString(3)))
     }
 

@@ -738,7 +738,7 @@ object CurationQueries {
   // atomic versioned commits, prune/stats-only planning, vacuum, CDC,
   // deletion vectors) live in ONE place — graft.table.GraftTable. Every
   // query below is a commit or a read on one of its versioned tables.
-  import graft.table.GraftTable
+  import graft.table.{GraftCommitProtocol, GraftTable}
 
   /** q100/q106's table: lineitem range-clustered on l_orderkey into 16
     * files, committed as v=1 with each file's key box. */
@@ -1149,12 +1149,13 @@ object CurationQueries {
        |FROM events WHERE event_id IN (${BloomKeys.mkString(", ")})
        |ORDER BY event_id""".stripMargin
 
-  /** Z-order (Morton) clustered write shared by q81 and q112: both
-    * dims normalized to the u32 grid (locality needs comparable
-    * scales), interleaved, range-partitioned + sorted on the z-value;
-    * the per-column bounds are ONE broadcast row (the q79 pattern). */
-  private def zOrderedWrite(df: DataFrame, dimA: String, dimB: String,
-      nParts: Int, out: String): Unit = {
+  /** Z-order (Morton) layout shared by q81 and q112: both dims
+    * normalized to the u32 grid (locality needs comparable scales),
+    * interleaved, range-partitioned + sorted on the z-value; the
+    * per-column bounds are ONE broadcast row (the q79 pattern). Returns
+    * the shaped frame; each query writes it its own way. */
+  private def zOrdered(df: DataFrame, dimA: String, dimB: String,
+      nParts: Int): DataFrame = {
     import graft.functions.ZOrder.z_value
     val mm = df.agg(
       min(dimA).as("a_min"), max(dimA).as("a_max"),
@@ -1173,7 +1174,6 @@ object CurationQueries {
       .repartitionByRange(nParts, col("z"))
       .sortWithinPartitions("z")
       .select(cols.map(col): _*)
-      .write.mode("overwrite").parquet(out)
   }
 
   val q81_zorder_layout: Q = (s, dir) => {
@@ -1187,7 +1187,8 @@ object CurationQueries {
     val inputBytes = li.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = (inputBytes + targetFileBytes - 1) / targetFileBytes
     val nParts = nFiles.min(BigInt(1 << 20)).max(BigInt(1)).toInt
-    zOrderedWrite(li, "l_orderkey", "l_partkey", nParts, out)
+    zOrdered(li, "l_orderkey", "l_partkey", nParts)
+      .write.mode("overwrite").parquet(out)
     s.read.parquet(out)
       .filter(col("l_orderkey").between(100, 2000) &&
         col("l_partkey").between(50, 1500))
@@ -1219,8 +1220,8 @@ object CurationQueries {
     val tbl = GraftTable(s, RelationalQueries.scratch("q112_layout", dir),
       RelationalQueries.scratch("q112_manifest", dir), "l_orderkey",
       statsCols = Seq("l_partkey"))
-    tbl.createOver(li.schema)(
-      zOrderedWrite(li, "l_orderkey", "l_partkey", nParts = 16, tbl.data))
+    tbl.createOver(li.schema)(GraftCommitProtocol.write(s,
+      zOrdered(li, "l_orderkey", "l_partkey", nParts = 16), tbl.data))
   }
 
   val q112_multicol_skip: Q = (s, dir) => {

@@ -858,11 +858,12 @@ object StagedGraftTable {
   /** Whether a man/data dir entry is one this table format itself
     * writes — the only names a CTAS abort may reclaim from a dir it
     * did not create: committed/staged manifests (`v=N`, `_tmp_v*`,
-    * `_ptr_v=*`), props, data/DV parquet (`part-*`, `dv-*`) and Spark's
-    * `_SUCCESS` marker (table creation still writes through Spark's
-    * writer). Commit writes create their files at their final names;
-    * `_stage_*` dirs are left only by writers from before that, so they
-    * count as owned for cleanup alone. */
+    * `_ptr_v=*`), props and data/DV parquet (`part-*`, `dv-*`). Every
+    * table write, creation included, creates its files at their final
+    * names through the table's own commit protocol; Spark's `_SUCCESS`
+    * marker comes only from tables created before creation went
+    * through it, and `_stage_*` dirs only from writers from before
+    * commit writes did, so both count as owned for cleanup alone. */
   private[table] def graftOwned(name: String): Boolean =
     name.startsWith("v=") || name.startsWith("_tmp_v") ||
       name.startsWith("_ptr_v=") || name == GraftTable.PropsFile ||

@@ -79,7 +79,7 @@ private[table] class GraftCommitProtocol(dir: String, only: Option[String])
     }
 }
 
-private[table] object GraftCommitProtocol {
+private[graft] object GraftCommitProtocol {
   import org.apache.spark.sql.execution.SQLExecution
   import org.apache.spark.sql.execution.datasources.FileFormatWriter
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat

@@ -93,12 +93,6 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
 
   // ---- physical layout ---------------------------------------------
 
-  /** Range-cluster `df` on the table key and write it: clustering is
-    * what keeps per-file boxes tight (and therefore skipping sharp) —
-    * the same reason q81 z-orders. */
-  def clusteredWrite(df: DataFrame, nParts: Int, mode: String): Unit =
-    GraftTable.clusteredWrite(df, key, nParts, mode, data)
-
   /** Data files currently in the layout (names only — commit
     * bookkeeping, not planning; no data is read). */
   def partFiles: Set[String] =
@@ -119,7 +113,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
   def fileStats(files: Seq[String]): DataFrame = {
     // FOOTER fast path (the Delta/Iceberg shape: stats come from write
     // metadata, never a re-read): every file here was just written by
-    // Spark through stagedAppend/clusteredWrite, and its parquet footer
+    // Spark through GraftCommitProtocol, and its parquet footer
     // already carries exact per-column min/max/null-count/row-count —
     // the distributed stats scan re-reads every newly-written byte to
     // recompute what the writer already recorded. Driver-side footer
@@ -282,19 +276,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     import scala.util.Try
 
     val need = (key +: statsCols).distinct
-    // expand directory args (the create() path stats the whole layout)
-    val sts: Seq[FileStatus] = files.flatMap { f =>
+    val sts: Seq[FileStatus] = files.map { f =>
       val p = new Path(f)
-      val fs = p.getFileSystem(hconf)
-      val st = fs.getFileStatus(p)
-      // not `isFile`: it asks `isSymlink`, which a status served from
-      // graft://'s meta cache answers with a remote HEAD
-      if (!st.isDirectory) Seq(st)
-      else listStatusSafe(fs, p).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !n.startsWith(".")
-      }.toSeq
+      p.getFileSystem(hconf).getFileStatus(p)
     }
 
     def sparkTypeOf(p: org.apache.parquet.schema.PrimitiveType)
@@ -383,7 +367,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     def decodeFile(st: FileStatus): Either[Unit, Option[FileAgg]] =
       Try[Either[Unit, Option[FileAgg]]] {
         val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(st.getPath, hconf))
+          HadoopInputFile.fromStatus(st, hconf))
         try {
           val msg = reader.getFooter.getFileMetaData.getSchema
           val blocks = reader.getFooter.getBlocks.asScala.toSeq
@@ -592,21 +576,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // driver-side direct write (the Delta-log shape — committing a
     // manifest is O(#files) driver work, never a Spark job); entries
     // plans are local relations in the common paths, so the collect is
-    // driver-only too. Types outside the manifest contract fall back
-    // to the Spark write below.
-    val wroteDirect =
-      try GraftTable.writeManifestRows(entries.collect().toIndexedSeq,
-        entries.schema, tmp, hconf)
-      // NonFatal only: an OutOfMemoryError or interrupt must propagate,
-      // not be silently converted into a fallback Spark write
-      catch { case scala.util.control.NonFatal(e) =>
-        logWarning(s"driver-side manifest write failed, falling back " +
-          s"to the Spark write: $e")
-        manFs.delete(tmp, true)
-        false
-      }
-    if (!wroteDirect)
-      GraftCommitProtocol.write(spark, entries.coalesce(1), tmp.toString)
+    // driver-only too. A column outside the manifest contract fails
+    // here, before the staging dir exists.
+    GraftTable.writeManifestRows(entries.collect().toIndexedSeq,
+      entries.schema, tmp, hconf)
     require(touch(manFs, new Path(tmp, s"_ts_${System.currentTimeMillis()}")),
       "could not record commit timestamp")
     require(touch(manFs, new Path(tmp, s"_commit_$attempt")),
@@ -713,30 +686,38 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
 
   // ---- snapshot operations -----------------------------------------
 
-  /** (Re-)create the table: clustered initial layout + manifest v=1.
-    * Destructive by contract (overwrite semantics): the data rewrite
-    * invalidates every prior snapshot, so the old version history is
-    * dropped — otherwise a stale committed v=1 would win the
-    * atomic-commit race and reference the overwritten files. */
+  /** (Re-)create the table: the initial layout, range-clustered on the
+    * key (clustering keeps per-file boxes tight, the same reason q81
+    * z-orders), + manifest v=1. Destructive by contract: the old
+    * version history and data files are dropped — otherwise a stale
+    * committed v=1 would win the atomic-commit race and reference
+    * deleted files. */
   def create(df: DataFrame, nParts: Int): GraftTable =
-    createOver(df.schema)(clusteredWrite(df, nParts, "overwrite"))
+    createOver(df.schema)(GraftTable.clustered(df, key, nParts)(
+      GraftCommitProtocol.write(spark, _, data)))
 
-  /** [[create]] over a caller-written initial layout: `writeLayout`
-    * fills the data dir (overwrite) with files of `schema`, and v=1
-    * commits whatever it wrote — e.g. a z-ordered layout whose boxes
-    * are tight in every declared stats column (q112). */
+  /** [[create]] over a caller-shaped initial layout: `writeLayout`
+    * writes files of `schema` into the empty data dir through
+    * [[GraftCommitProtocol.write]] and returns them, and v=1 commits
+    * exactly those files — e.g. a z-ordered layout whose boxes are
+    * tight in every declared stats column (q112). The manifest dir is
+    * cleared before the data dir, so a create that dies mid-write
+    * leaves no table, never a committed version naming deleted files. */
   private[graft] def createOver(
       schema: org.apache.spark.sql.types.StructType)(
-      writeLayout: => Unit): GraftTable = {
+      writeLayout: => Seq[String]): GraftTable = {
     requireStoreCapability()
     checks.foreach { case (n, e) =>
       GraftTable.validateCheck(spark, n, e, schema) }
-    writeLayout
     val manDir = new Path(man)
     if (manFs.exists(manDir)) manFs.delete(manDir, true)
+    val dataDir = new Path(data)
+    if (dataFs.exists(dataDir)) dataFs.delete(dataDir, true)
+    val added = writeLayout
     manFs.mkdirs(manDir)
     writeProps()
-    commitManifest(fileStats(Seq(data)), 1, schemaDdl = Some(schema.toDDL))
+    val stats = if (added.isEmpty) emptyEntries else fileStats(added)
+    commitManifest(stats, 1, schemaDdl = Some(schema.toDDL))
     this
   }
 
@@ -3801,28 +3782,32 @@ object GraftTable {
     try fs.listStatus(dir)
     catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
 
-  /** Driver-side direct read of a manifest dir (or single file): every
-    * row of every parquet part, with NO Spark job. Planning from a
-    * manifest must not schedule cluster work — the Delta-log shape: a
-    * query's file-skipping step costs footer+page reads on the driver
-    * (the manifest is O(#files) rows, KBs-MBs), not a job the whole
-    * cluster queues behind. Manifests are flat primitive schemas by
-    * construction (`file`/`lo`/`hi`/`n_rows`/`bytes`/`lo_*`/`hi_*`
-    * longs+string, `bloom_*` binary); a nested or repeated field fails
-    * loudly rather than decoding wrong. Rows carry their schema
+  /** Driver-side direct read of a small parquet dir (or single file):
+    * every row of every part, with NO Spark job — the ONE driver-side
+    * decoder, behind manifest planning ([[readManifestRows]]) and the
+    * frozen ANN models (`graft.operators.AnnIndex`). Loading O(#files)
+    * or O(model) driver-side state must not schedule cluster work (the
+    * Delta-log shape: a query's file-skipping step costs footer+page
+    * reads on the driver, not a job the whole cluster queues behind).
+    * Decodes primitive columns (string, binary, long, int, double,
+    * float, boolean) and Spark's 3-level list of one of them; any other
+    * shape — a nested group, an annotated integer (DATE, TIMESTAMP,
+    * INT_8, unsigned, ...) that Spark reads as another type — fails
+    * loudly rather than decoding differently from `spark.read.parquet`.
+    * Rows carry their schema
     * ([[org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema]])
-    * so `getAs[T](name)` works exactly as on collected Spark rows;
-    * parity with `spark.read.parquet(...).collect()` — values, schema,
-    * NULL boxes, binary sketches, multi-part dirs — is locked by
-    * ManifestDirectReadSpec, which also asserts the zero-job contract.
-    * Goes through the path's own [[FileSystem]], so `graft://`-cached
-    * manifests read through the cache like everything else. */
-  def readManifestRows(spark: SparkSession, dirPath: String)
+    * so `getAs[T](name)` works exactly as on collected Spark rows. Goes
+    * through the path's own [[FileSystem]], so `graft://` paths read
+    * through the cache like everything else. */
+  private[graft] def readParquetRows(spark: SparkSession, dirPath: String)
       : (Seq[Row], StructType) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.ColumnIOFactory
+    import org.apache.parquet.example.data.Group
     import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.schema.{PrimitiveType, Type}
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
     import org.apache.spark.sql.types._
@@ -3830,8 +3815,8 @@ object GraftTable {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(dirPath)
     val fs = root.getFileSystem(conf)
-    // one LIST, no HEAD: a missing manifest fails loudly, and a file
-    // path lists as itself
+    // one LIST, no HEAD: a missing dir fails loudly, and a file path
+    // lists as itself
     val listed = fs.listStatus(root)
     val parts =
       if (listed.length == 1 && listed.head.getPath == fs.makeQualified(root))
@@ -3841,53 +3826,90 @@ object GraftTable {
         st.isFile && n.endsWith(".parquet") &&
           !n.startsWith("_") && !n.startsWith(".")
       }
-    require(parts.nonEmpty,
-      s"manifest $dirPath contains no parquet files — not a committed " +
-        "manifest (existence of a version dir implies a complete rename)")
+    require(parts.nonEmpty, s"$dirPath contains no parquet files")
+
+    // the type Spark's reader gives a primitive column, where the
+    // decoder yields the same values
+    def sparkType(p: PrimitiveType): DataType = {
+      val ann = p.getLogicalTypeAnnotation
+      def plainInt(bits: Int): Boolean = ann match {
+        case null => true
+        case i: IntLogicalTypeAnnotation =>
+          i.isSigned && i.getBitWidth == bits
+        case _ => false
+      }
+      p.getPrimitiveTypeName match {
+        case BINARY if ann.isInstanceOf[StringLogicalTypeAnnotation] =>
+          StringType
+        case BINARY if ann == null => BinaryType
+        case INT64 if plainInt(64) => LongType
+        case INT32 if plainInt(32) => IntegerType
+        case DOUBLE => DoubleType
+        case FLOAT => FloatType
+        case BOOLEAN => BooleanType
+        case other => throw new IllegalArgumentException(
+          s"field '${p.getName}' in $dirPath has parquet type $other" +
+            Option(ann).fold("")(a => s" ($a)") + " — the driver-side " +
+            "decoder reads string, binary, long, int, double, float and " +
+            "boolean columns")
+      }
+    }
+    def field(f: Type): StructField = {
+      val repeated = Type.Repetition.REPEATED
+      if (f.isPrimitive && !f.isRepetition(repeated))
+        StructField(f.getName, sparkType(f.asPrimitiveType()))
+      else {
+        // Spark's 3-level list:
+        // group (LIST) { repeated group list { <optional|required> element } }
+        val elem = Some(f).filter(t => !t.isPrimitive &&
+            t.getLogicalTypeAnnotation.isInstanceOf[ListLogicalTypeAnnotation] &&
+            t.asGroupType().getFieldCount == 1)
+          .map(_.asGroupType().getType(0))
+          .filter(r => !r.isPrimitive && r.isRepetition(repeated) &&
+            r.asGroupType().getFieldCount == 1)
+          .map(_.asGroupType().getType(0))
+          .filter(e => e.isPrimitive && !e.isRepetition(repeated))
+        require(elem.isDefined, s"field '${f.getName}' in $dirPath is " +
+          "neither a primitive nor a list of primitives")
+        StructField(f.getName, ArrayType(sparkType(elem.get.asPrimitiveType())))
+      }
+    }
+    def value(g: Group, i: Int, dt: DataType): Any = dt match {
+      case StringType => g.getString(i, 0)
+      case BinaryType => g.getBinary(i, 0).getBytes
+      case LongType => g.getLong(i, 0)
+      case IntegerType => g.getInteger(i, 0)
+      case DoubleType => g.getDouble(i, 0)
+      case FloatType => g.getFloat(i, 0)
+      case BooleanType => g.getBoolean(i, 0)
+      case ArrayType(et, _) =>
+        val lst = g.getGroup(i, 0)
+        IndexedSeq.tabulate(lst.getFieldRepetitionCount(0)) { j =>
+          val e = lst.getGroup(0, j)
+          if (e.getFieldRepetitionCount(0) == 0) null else value(e, 0, et)
+        }
+      case other => throw new IllegalStateException(other.toString)
+    }
 
     var sparkSchema: StructType = null
     var firstMsg: org.apache.parquet.schema.MessageType = null
     val out = Seq.newBuilder[Row]
     parts.foreach { st =>
       val reader =
-        ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+        ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try {
         val msg = reader.getFooter.getFileMetaData.getSchema
-        // flat-primitive schema mapping; rows are decoded by FIELD
-        // INDEX against the first footer's schema, so a part whose
-        // column order/types drifted (manifests grown by separate
-        // append jobs) must fail loudly, never decode shifted
+        // rows are decoded by FIELD INDEX against the first footer's
+        // schema, so a part whose column order/types drifted (a dir
+        // grown by separate append jobs) must fail loudly, never
+        // decode shifted
         if (firstMsg == null) firstMsg = msg
         else require(msg == firstMsg,
-          s"manifest part ${st.getPath.getName} schema differs from the " +
-            s"first part's — $dirPath mixes writer schemas:\n$msg\nvs\n" +
+          s"part ${st.getPath.getName} schema differs from the first " +
+            s"part's — $dirPath mixes writer schemas:\n$msg\nvs\n" +
             firstMsg)
         if (sparkSchema == null) sparkSchema = StructType(
-          (0 until msg.getFieldCount).map { i =>
-            val f = msg.getType(i)
-            require(f.isPrimitive && !f.isRepetition(
-              org.apache.parquet.schema.Type.Repetition.REPEATED),
-              s"manifest field '${f.getName}' in $dirPath is not a flat " +
-                "primitive — not a graft manifest")
-            val p = f.asPrimitiveType()
-            val dt = p.getPrimitiveTypeName match {
-              case BINARY
-                if p.getLogicalTypeAnnotation != null &&
-                  p.getLogicalTypeAnnotation.isInstanceOf[
-                    org.apache.parquet.schema.LogicalTypeAnnotation
-                      .StringLogicalTypeAnnotation] => StringType
-              case BINARY => BinaryType
-              case INT64 => LongType
-              case INT32 => IntegerType
-              case DOUBLE => DoubleType
-              case FLOAT => FloatType
-              case BOOLEAN => BooleanType
-              case other => throw new IllegalStateException(
-                s"manifest field '${f.getName}' has unsupported parquet " +
-                  s"type $other")
-            }
-            StructField(f.getName, dt)
-          })
+          (0 until msg.getFieldCount).map(i => field(msg.getType(i))))
         var pages = reader.readNextRowGroup()
         while (pages != null) {
           val recReader = new ColumnIOFactory().getColumnIO(msg)
@@ -3900,16 +3922,7 @@ object GraftTable {
             while (i < sparkSchema.length) {
               vals(i) =
                 if (g.getFieldRepetitionCount(i) == 0) null
-                else sparkSchema(i).dataType match {
-                  case StringType => g.getString(i, 0)
-                  case BinaryType => g.getBinary(i, 0).getBytes
-                  case LongType => g.getLong(i, 0)
-                  case IntegerType => g.getInteger(i, 0)
-                  case DoubleType => g.getDouble(i, 0)
-                  case FloatType => g.getFloat(i, 0)
-                  case BooleanType => g.getBoolean(i, 0)
-                  case dt => throw new IllegalStateException(dt.toString)
-                }
+                else value(g, i, sparkSchema(i).dataType)
               i += 1
             }
             out += new GenericRowWithSchema(vals, sparkSchema)
@@ -3922,20 +3935,37 @@ object GraftTable {
     (out.result(), sparkSchema)
   }
 
+  /** Driver-side direct read of a manifest dir (or single file):
+    * [[readParquetRows]] plus the manifest contract — manifests are
+    * flat primitive schemas by construction (`file`/`lo`/`hi`/
+    * `n_rows`/`bytes`/`lo_*`/`hi_*` longs+string, `bloom_*` binary), so
+    * any other field fails loudly. Parity with
+    * `spark.read.parquet(...).collect()` — values, schema, NULL boxes,
+    * binary sketches, multi-part dirs — is locked by
+    * ManifestDirectReadSpec, which also asserts the zero-job contract. */
+  def readManifestRows(spark: SparkSession, dirPath: String)
+      : (Seq[Row], StructType) = {
+    val (rows, schema) = readParquetRows(spark, dirPath)
+    schema.fields.find(_.dataType.isInstanceOf[
+        org.apache.spark.sql.types.ArrayType]).foreach { f =>
+      throw new IllegalArgumentException(s"manifest field '${f.name}' in " +
+        s"$dirPath is not a flat primitive — not a graft manifest")
+    }
+    (rows, schema)
+  }
+
   /** Driver-side direct WRITE of manifest rows as ONE parquet part file
-    * — the mirror of [[readManifestRows]], and the other half of the
-    * Delta-log shape: COMMITTING a manifest is O(#files) driver work,
-    * so it must not schedule a Spark job either (the old
-    * `entries.coalesce(1).write.parquet` burned a full job + AQE
-    * planning round per commit — pure fixed overhead at every scale,
-    * and at bench scale the dominant cost of commit-heavy operators).
+    * — the mirror of [[readManifestRows]], and the ONE manifest writer:
+    * COMMITTING a manifest is O(#files) driver work, so it must not
+    * schedule a Spark job (a Spark write burns a full job + AQE
+    * planning round per commit — pure fixed overhead at every scale).
     * Same flat-primitive type set as the read side; parity with the
     * Spark-written form (schema, values, NULL boxes, binary sketches,
-    * empty manifests) is locked by ManifestDirectReadSpec. Returns
-    * false — caller falls back to the Spark write — on any type
-    * outside the manifest contract. */
+    * empty manifests) is locked by ManifestDirectReadSpec. A column
+    * outside the manifest contract fails loudly before anything is
+    * created. */
   def writeManifestRows(rows: Seq[Row], schema: StructType, dir: Path,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -3955,7 +3985,10 @@ object GraftTable {
         case DoubleType => Types.optional(DOUBLE)
         case FloatType => Types.optional(FLOAT)
         case BooleanType => Types.optional(BOOLEAN)
-        case _ => return false // outside the manifest contract
+        case other => throw new IllegalArgumentException(
+          s"manifest column '${f.name}' has type $other — outside the " +
+            "manifest contract (string, binary, long, int, double, " +
+            "float, boolean); nothing was committed")
       }
       builder.addField(t.named(f.name))
     }
@@ -3991,7 +4024,6 @@ object GraftTable {
         w.write(g)
       }
     } finally w.close()
-    true
   }
 
   /** Create an empty marker file; true if it exists when we are done —
@@ -4028,16 +4060,9 @@ object GraftTable {
     }
   }
 
-  /** Range-cluster `df` on `key` and write to `path` — the
-    * physical-layout primitive behind [[GraftTable!.clusteredWrite]]
-    * (table creation). */
-  def clusteredWrite(df: DataFrame, key: String, nParts: Int, mode: String,
-      path: String): Unit =
-    clustered(df, key, nParts)(_.write.mode(mode).parquet(path))
-
   /** Range-cluster `df` on `key` into `nParts` sorted partitions and
-    * hand the shaped frame to `sink` — the layout shared by
-    * [[clusteredWrite]] and every commit write
+    * hand the shaped frame to `sink` — the layout shared by table
+    * creation ([[GraftTable!.create]]) and every commit write
     * ([[GraftTable!.stagedAppend]]). */
   private[table] def clustered[T](df: DataFrame, key: String, nParts: Int)
       (sink: DataFrame => T): T = {

@@ -311,11 +311,13 @@ class ManifestSkipSpec extends TestBase {
   }
 
   test("job-count ratchet: the table-format queries stay within their budgets") {
-    // ceilings = the counts these queries ran at on this fixture on
-    // their earlier single-manifest layouts; lower one when a query
-    // gets cheaper, never raise one to pass
-    val ceilings = Seq("q100_manifest_skip" -> 6, "q105_cow_merge" -> 15,
-      "q106_stats_only_count" -> 6, "q107_mor_delete" -> 12,
+    // ceilings = the counts these queries ran at on this fixture while
+    // table creation still wrote through Spark's own writer (q105 and
+    // q107 had run at 15 and 12 on their earlier single-manifest
+    // layouts); lower one when a query gets cheaper, never raise one to
+    // pass. All five create a table, so they guard the creation path.
+    val ceilings = Seq("q100_manifest_skip" -> 6, "q105_cow_merge" -> 13,
+      "q106_stats_only_count" -> 6, "q107_mor_delete" -> 10,
       "q112_multicol_skip" -> 8)
     val over = ceilings.flatMap { case (q, max) =>
       val n = jobsOf(q)

@@ -371,6 +371,21 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "backfill must be memoized")
   }
 
+  // Hadoop's FileStatus.isFile asks isSymlink; while the symlink flag
+  // was a backfilled field, this cost one HEAD
+  test("isFile on a cached status is answered from the record: zero remote calls") {
+    val fs = newFs("isfile",
+      "graft.fs.remote.impl" -> classOf[CountingRemoteFileSystem].getName)
+    val p = graftPath("isfile.bin")
+    writeFile(fs, p, PageSz, 5)
+    fs.getFileStatus(p) // warm the meta record
+    CountingRemoteState.reset()
+    val st = fs.getFileStatus(p)
+    assert(st.isFile && !st.isSymlink)
+    assert(CountingRemoteState.allCalls.get == 0,
+      s"isFile made ${CountingRemoteState.allCalls.get} remote call(s)")
+  }
+
   // ---- listStatus of a file the meta cache knows ----
 
   private def countingFs(tag: String, extra: (String, String)*) =

@@ -228,6 +228,38 @@ class SparkGraftFsSpec extends TestBase {
     assert(heads <= 16, s"$heads HEADs")
   }
 
+  // Table creation writes its layout through the table's own commit
+  // protocol: each task creates its file at its final name, so the v=1
+  // log publish is the only rename. Ceilings are this change's counts;
+  // tighten them, never raise them. While creation wrote through
+  // Spark's writer and Hadoop's FileOutputCommitter, the same create
+  // made LIST=6, HEAD=32, RENAME=9 and 30 calls from the committer, and
+  // left a `_SUCCESS` in data/.
+  test("create of a 4-file table on graft:// renames no data file and leaves no committer marker") {
+    mountCounting("createguard")
+    val local = java.nio.file.Files.createTempDirectory("graft_create_guard").toString
+    val orders = Tables.load(spark, sfDir, "orders")
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    val (t, heads, lists, _) = remoteCalls(
+      graft.table.GraftTable(spark, s"graft://createguard$local/data",
+        s"graft://createguard$local/man", "o_orderkey").create(orders, 4))
+    val (renames, committer) = (CountingRemoteState.renameCalls.get,
+      CountingRemoteState.committerCalls.get)
+    info(s"create: HEAD=$heads LIST=$lists RENAME=$renames " +
+      s"FileOutputCommitter calls=$committer")
+    val names = new java.io.File(s"$local/data").list().toSeq.sorted
+    assert(!names.exists(n => n == "_SUCCESS" || n == "_temporary"), names)
+    // the data dir holds exactly the files the write tasks created, and
+    // v=1 names every one of them
+    assert(names.size == 4 && names.forall(_.startsWith("part-")), names)
+    assert(t.files(1).map(f => new org.apache.hadoop.fs.Path(f).getName).sorted == names)
+    assert(t.readAsOf(1).count() == orders.count())
+    assert(renames == 1, s"$renames RENAMEs (the v=1 publish is the only one)")
+    assert(committer == 0, s"$committer FileOutputCommitter calls")
+    assert(lists == 0, s"$lists LISTs")
+    assert(heads <= 14, s"$heads HEADs")
+  }
+
   test("query results identical with and without the caching layer") {
     val direct = Tables.load(spark, sfDir, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")

@@ -109,17 +109,20 @@ class GraftCommitProtocolSpec extends TestBase {
     assert(table.readAsOf(2).count() == n1 + 50)
   }
 
-  test("a manifest the driver-side writer cannot encode commits through the same protocol") {
-    val table = freshTable("manfallback")
+  test("a manifest column outside the manifest contract is rejected before anything is written") {
+    val table = freshTable("manreject")
     val n1 = orders.count()
     val base = table.snapshot()
-    // a date column is outside the driver-side writer's types
-    table.commitManifest(base.entries.withColumn("d", current_date()), 2)
-    assert(table.files(2).sorted == table.files(1).sorted)
-    assert(table.readAsOf(2).count() == n1)
-    val names = new java.io.File(new Path(table.snapshot().dir).toUri.getPath).list().toSeq
-    assert(names.count(_.endsWith(".parquet")) == 1, names)
-    assert(!names.exists(n => n == "_SUCCESS" || n == "_temporary"), names)
+    // a date column is outside the manifest contract: the one manifest
+    // reader would decode it as something else
+    val e = intercept[IllegalArgumentException](
+      table.commitManifest(base.entries.withColumn("d", current_date()), 2))
+    assert(e.getMessage.contains("'d'") &&
+      e.getMessage.contains("outside the manifest contract"), e.getMessage)
+    val names = new java.io.File(new Path(table.man).toUri.getPath).list().toSeq
+    assert(!names.exists(_.startsWith("_tmp_v")), names)
+    assert(table.committedVersions == Seq(1))
+    assert(table.readAsOf(1).count() == n1)
   }
 
   test("abortTask deletes its attempt's files; a single-file write has exactly one name") {
