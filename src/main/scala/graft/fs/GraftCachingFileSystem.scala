@@ -211,10 +211,26 @@ class GraftCachingFileSystem extends FileSystem {
     cur
   }
 
+  /** The modification time this FS records for a file it created: the
+    * close time, past the previous generation's (`prev`, the path's
+    * record when the create began). Page keys hash path + mtime
+    * (PageKey.baseFor), so a new generation never reuses the previous
+    * one's key, even when both close within one millisecond. */
+  private def closeStamp(prev: Option[MetaRecord]): Long =
+    math.max(System.currentTimeMillis(), prev.fold(Long.MinValue)(_.modTime + 1))
+
+  /** Both close modes record the new file's meta fact from the close
+    * itself (length = bytes written, mtime = [[closeStamp]]), never from
+    * a remote stat: the remote is immutable and the meta cache evicts
+    * nothing, so every page of the file stays keyed by that stamp. A
+    * remote listing still reports the store's own mtime. */
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
     val q = qualify(f)
+    val prev = metaCache.peek(q.toString)
+    def recordClose(bytes: Long): Unit =
+      metaCache.put(q.toString, MetaRecord(closeStamp(prev), bytes, isDir = false))
     val remoteOut = remoteFs.create(toRemotePath(f), permission, overwrite,
       bufferSize, replication, blockSize, progress)
     val wc = writeCache.filter(w => !w.isExcluded(q))
@@ -257,18 +273,12 @@ class GraftCachingFileSystem extends FileSystem {
         // between here and the async upload's completion would get a
         // length the remote can't back yet — let getFileStatus fall
         // through to the remote instead.
-        if (fsConf.asyncClose && copyLive) {
-          metaCache.put(q.toString,
-            MetaRecord(System.currentTimeMillis(), bytes, isDir = false))
-        }
+        if (fsConf.asyncClose && copyLive) recordClose(bytes)
       },
-      onCloseRemote = _ => {
-        if (!fsConf.asyncClose) {
-          // sync mode: remote is authoritative for length + modTime
-          val rs = remoteFs.getFileStatus(toRemotePath(f))
-          metaCache.put(q.toString,
-            MetaRecord(rs.getModificationTime, rs.getLen, rs.isDirectory))
-        }
+      onCloseRemote = bytes => {
+        // sync mode: the remote close succeeded, so the remote now holds
+        // exactly these bytes (a failed close never gets here)
+        if (!fsConf.asyncClose) recordClose(bytes)
         // upload complete => lift OUR moniker (wherever a rename moved
         // it) so the file becomes evictable; a different token means a
         // newer generation owns the path now — leave it alone
@@ -303,7 +313,9 @@ class GraftCachingFileSystem extends FileSystem {
     * flight) — read-your-writes keeps working for append workloads
     * (WAL-style users). Anything else (stale or missing copy) falls back
     * to remote-only with the local copy dropped. Append is always SYNC:
-    * an appender expects durability at close. */
+    * an appender expects durability at close. Unlike [[create]], its
+    * close HEADs the remote for the record: with no tee target the
+    * file's base length, so its new length, is not known locally. */
   override def append(f: Path, bufferSize: Int,
       progress: Progressable): FSDataOutputStream = {
     val q = qualify(f)

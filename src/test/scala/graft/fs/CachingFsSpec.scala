@@ -399,13 +399,27 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(f, Array.fill[Byte](len)(7))
   }
 
+  /** Writes like [[writeFile]] and returns the wall clock just before
+    * and just after the close. */
+  private def writeTimed(fs: GraftCachingFileSystem, p: Path, len: Int,
+      seed: Int): (Long, Long) = {
+    val out = fs.create(p, true)
+    out.write(Array.tabulate(len)(i => expectedByte(i.toLong, seed)))
+    val before = System.currentTimeMillis()
+    out.close()
+    (before, System.currentTimeMillis())
+  }
+
+  // A file this FS created reports its close stamp as its mtime (the
+  // remote is never asked); a file learned from a stat reports the
+  // remote's mtime.
   test("listStatus of a known file is served from its meta record: zero remote calls, the remote listing's facts") {
     val fs = countingFs("lsf")
     // the same remote through an instance that never trusts its records
     val remoteView = countingFs("lsf_remote", "graft.fs.remote.files.mutable" -> "true")
     val created = graftPath("lsf/created.bin")
     val statted = graftPath("lsf/statted.bin")
-    writeFile(fs, created, PageSz + 3, 1) // known from the create
+    val (closeFrom, closeTo) = writeTimed(fs, created, PageSz + 3, 1) // known from the create
     writeRemote("lsf/statted.bin", 777)
     fs.getFileStatus(statted) // known from a stat
     Seq(created, statted).foreach { p =>
@@ -421,7 +435,13 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(st.getPath == rs.getPath)
       assert(st.getLen == rs.getLen)
       assert(st.isDirectory == rs.isDirectory && !st.isDirectory)
-      assert(st.getModificationTime == rs.getModificationTime)
+      if (p == statted) assert(st.getModificationTime == rs.getModificationTime)
+      else {
+        val m = st.getModificationTime
+        assert(m >= closeFrom && m <= closeTo, s"mtime $m outside the close [$closeFrom, $closeTo]")
+        assert(fs.listStatus(p).head.getModificationTime == m)
+        assert(fs.getFileStatus(p).getModificationTime == m)
+      }
     }
   }
 
@@ -440,16 +460,21 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fs = countingFs("lsow")
     val p = graftPath("lsow/f.bin")
     writeFile(fs, p, PageSz, 3)
-    assert(fs.listStatus(p).head.getLen == PageSz)
-    writeFile(fs, p, 2 * PageSz + 5, 4)
+    val Array(first) = fs.listStatus(p)
+    assert(first.getLen == PageSz)
+    val (closeFrom, closeTo) = writeTimed(fs, p, 2 * PageSz + 5, 4)
     CountingRemoteState.reset()
     val Array(st) = fs.listStatus(p)
     assert(CountingRemoteState.allCalls.get == 0)
     assert(st.getLen == 2 * PageSz + 5)
-    val raw = new RawLocalFileSystem()
-    raw.initialize(java.net.URI.create("file:///"), new Configuration(false))
-    assert(st.getModificationTime ==
-      raw.getFileStatus(new Path(s"$remoteDir/lsow/f.bin")).getModificationTime)
+    // the close stamp, pushed one past the first generation's when both
+    // closed within one millisecond
+    val m = st.getModificationTime
+    assert(m > first.getModificationTime)
+    assert(m >= closeFrom && m <= math.max(closeTo, first.getModificationTime + 1),
+      s"mtime $m outside the close [$closeFrom, $closeTo]")
+    assert(fs.listStatus(p).head.getModificationTime == m)
+    assert(fs.getFileStatus(p).getModificationTime == m)
   }
 
   test("listStatus of a file goes remote when the remote is mutable") {
@@ -571,6 +596,91 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     in.close()
     assert(buf.zipWithIndex.forall { case (b, i) => b == expectedByte(i, 3) })
   }
+
+  // ---- a created file's meta record comes from its close ----
+
+  test("a sync create + close costs one PUT and no HEAD; its record then serves stat, open and listing remote-free") {
+    val fs = countingFs("closerec")
+    val p = graftPath("closerec/f.bin")
+    val len = PageSz + 11
+    CountingRemoteState.reset()
+    writeFile(fs, p, len, 12)
+    assert(CountingRemoteState.createCalls.get == 1)
+    assert(CountingRemoteState.statusCalls.get == 0, "the close HEADed the remote")
+    assert(CountingRemoteState.allCalls.get == 1)
+    CountingRemoteState.reset()
+    assert(fs.getFileStatus(p).getLen == len)
+    val in = fs.open(p)
+    val buf = new Array[Byte](len)
+    in.readFully(0, buf)
+    in.close()
+    assert(buf.zipWithIndex.forall { case (b, i) => b == expectedByte(i, 12) })
+    val Array(ls) = fs.listStatus(p)
+    assert(ls.getLen == len)
+    assert(CountingRemoteState.allCalls.get == 0,
+      s"${CountingRemoteState.allCalls.get} remote call(s) after the close")
+  }
+
+  test("a sync create whose remote close fails leaves no meta record") {
+    val fs = newFs("closefail",
+      "graft.fs.remote.impl" -> classOf[FlakyRemoteFileSystem].getName)
+    val p = graftPath("closefail/f.bin")
+    writeFile(fs, p, PageSz, 13) // an earlier generation's record
+    assert(fs.metaCacheRef.contains(p.toString))
+    FlakyRemoteState.failNextCreateClose.set(true)
+    val out = fs.create(p, true)
+    out.write(Array.fill[Byte](PageSz)(1))
+    intercept[java.io.IOException](out.close())
+    assert(!fs.metaCacheRef.contains(p.toString), "a failed close left a meta record")
+  }
+
+  test("50 overwrites of one path in a tight loop, then 50 past a record ahead of the clock: each read returns its own generation, no page key is reused") {
+    val fs = newFs("gen50")
+    val p = graftPath("gen50/f.bin")
+    val buf = new Array[Byte](PageSz)
+    def overwrite(g: Int): Long = {
+      writeFile(fs, p, PageSz, g)
+      val in = fs.open(p)
+      in.readFully(0, buf)
+      in.close()
+      assert(buf.zipWithIndex.forall { case (b, i) => b == expectedByte(i, g) },
+        s"generation $g read another generation's bytes")
+      fs.getFileStatus(p).getModificationTime
+    }
+    def increasing(stamps: Seq[Long]) =
+      assert(stamps.zip(stamps.tail).forall { case (a, b) => b > a },
+        s"stamps not strictly increasing: $stamps")
+    val stamps = (0 until 50).map(overwrite)
+    increasing(stamps)
+    // a write plus a read takes milliseconds here, so the loop above
+    // rarely closes two generations in one millisecond; a record an
+    // hour ahead of the clock puts every following close "inside" the
+    // previous generation's millisecond
+    val m = fs.metaCacheRef.peek(p.toString).get
+    val ahead = m.copy(modTime = m.modTime + 3600 * 1000L)
+    fs.metaCacheRef.put(p.toString, ahead)
+    val late = ahead.modTime +: (50 until 100).map(overwrite)
+    increasing(late)
+    assert((stamps ++ late).map(PageKey.baseFor(p.toString, _)).distinct.size == 101)
+  }
+
+  // rename drops the meta records of a renamed directory's children.
+  // Carrying them to dst/<child> would be wrong when dst already exists:
+  // the children land at dst/<dir>/<child>, and the log publish's
+  // witness check (exists(dst/_commit_<id>)) must reach the remote to
+  // see that nesting.
+  test("rename(dir, existingDir) on graft://: the children's records are not carried to existingDir/<child>") {
+    val fs = countingFs("rnnest")
+    val src = graftPath("rnnest/_tmp_a")
+    val dst = graftPath("rnnest/v=1")
+    writeFile(fs, new Path(src, "_commit_a"), 0, 0) // a close-time record
+    writeRemote("rnnest/v=1/_commit_b", 0) // a racing writer published v=1
+    assert(fs.rename(src, dst))
+    CountingRemoteState.reset()
+    assert(!fs.exists(new Path(dst, "_commit_a")))
+    assert(CountingRemoteState.statusCalls.get == 1, "the witness check did not reach the remote")
+    assert(fs.exists(new Path(new Path(dst, "_tmp_a"), "_commit_a")))
+  }
 }
 
 object CountingRemoteState {
@@ -585,6 +695,8 @@ object CountingRemoteState {
   val allCalls = new AtomicLong
   /** RENAMEs. */
   val renameCalls = new AtomicLong
+  /** PUTs: create calls. */
+  val createCalls = new AtomicLong
   /** Calls of any kind made from Hadoop's `FileOutputCommitter`. */
   val committerCalls = new AtomicLong
   /** The path of every LIST, in call order. */
@@ -592,7 +704,7 @@ object CountingRemoteState {
 
   def reset(): Unit = {
     Seq(statusCalls, listCalls, fileListCalls, allCalls, renameCalls,
-      committerCalls).foreach(_.set(0))
+      createCalls, committerCalls).foreach(_.set(0))
     listedPaths.clear()
   }
 }
@@ -632,8 +744,10 @@ class CountingRemoteFileSystem extends FilterFileSystem(new RawLocalFileSystem) 
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = call(fs.create(f,
-    permission, overwrite, bufferSize, replication, blockSize, progress))
+      progress: Progressable): FSDataOutputStream = call {
+    createCalls.incrementAndGet()
+    fs.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
 
   override def append(f: Path, bufferSize: Int,
       progress: Progressable): FSDataOutputStream =
