@@ -14,7 +14,10 @@ import org.apache.hadoop.fs.permission.FsPermission
   * parity: CachedFileStatus.java:103-114, checkRemoteLoaded()).
   * Permission-sensitive tooling over the cached FS therefore sees true
   * owners/permissions without the cache re-paying a HEAD for the facts
-  * it already holds.
+  * it already holds. A remote stat's status is wrapped the same way,
+  * with `fetchRemote` returning it: its owner, group and permission load
+  * only when asked, which on a local remote without the native library
+  * is an `ls -ld` fork.
   *
   * Deviation from the reference's backfill list: `isSymlink` answers
   * false from the record. `getFileStatus` resolves symlinks, so a status

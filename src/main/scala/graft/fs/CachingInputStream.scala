@@ -10,10 +10,21 @@ import org.apache.hadoop.fs.{ByteBufferReadable, FSDataInputStream, FileSystem, 
   *
   *   prefetch buffer -> page cache -> write-cache FS -> remote FS
   *
-  * Every external fetch reads a full I/O-buffer-aligned span (default
-  * 4 MiB = 4 pages) so sequential readers amplify one remote RPC into
-  * many local hits; fetched pages are admitted to the shared page cache
-  * unless the ScanDetector flags the stream as a large sequential scan.
+  * An external fetch reads a page-aligned span sized by evidence of
+  * sequential access ([[fetchSpan]], after Linux's on-demand readahead):
+  * the full I/O buffer (default 4 MiB = 4 pages) at file start, on a
+  * stream whose previous fetch ended where this one starts, and after a
+  * run of cached pages just before it; otherwise only the pages the
+  * request covers. Sequential readers so still amplify one remote RPC
+  * into many local hits, while a cold random read does not pay for a
+  * 4 MiB span it never uses. The reference likewise pulls the full
+  * buffer only for sequential and scan reads
+  * (SidecarCachingInputStream.java:826-843). Deviation: not every
+  * external fetch reads a full span, and the full span is chosen from
+  * the stream's last fetch and the page cache, not from the read's kind
+  * (positioned or not). Fetched pages are admitted to the shared page
+  * cache unless the ScanDetector flags the stream as a large sequential
+  * scan.
   * Only positioned reads touch shared state, so Spark's parquet reader
   * (PositionedReadable-heavy) never contends on stream position.
   */
@@ -135,7 +146,7 @@ final class CachingInputStream(
   // gap window, so a cold file pays one tier-cascade pass per span and a
   // warm file serves every range from the page cache with no remote RPC.
   // Reads complete synchronously (the cascade is local-cache-fast and
-  // already amplifies remote fetches to aligned 4 MiB spans); failures
+  // fetches each group's pages in page-aligned spans); failures
   // surface through each range's future per the API contract.
 
   /** Ranges closer than this coalesce into one read (one page: a gap
@@ -243,8 +254,9 @@ final class CachingInputStream(
         // the cache copied just the wanted slice, straight into b
         stats.bytesFromPageCache.addAndGet(want)
       } else {
-        fetchTier = fetchSpan(pageOff)
-        // the span starts at pageOff, so the wanted slice is in-buffer now
+        fetchTier = fetchSpan(pageOff, end)
+        // the span starts at pageOff and covers at least this page's
+        // wanted slice, so it is in-buffer now
         System.arraycopy(buf, (p - bufStart).toInt, b, off + (p - position).toInt, want)
         fetchTier.addAndGet(want)
       }
@@ -252,17 +264,35 @@ final class CachingInputStream(
     }
   }
 
-  /** Fill the prefetch buffer with an I/O-buffer-sized span starting at
-    * `pageOff` from the best external tier, then admit its pages.
-    * Returns the byte counter of the tier that served the span (the
-    * caller attributes only the user-visible bytes, so the per-tier
-    * counters always sum to bytesRead). */
-  private def fetchSpan(pageOff: Long): java.util.concurrent.atomic.AtomicLong = {
-    val spanLen = math.min(conf.ioBufferSize, fileLen - pageOff).toInt
-    // one fixed size class (the configured I/O buffer) so the shared
-    // pool actually recycles across streams; spanLen only shrinks at EOF
+  /** Fill the prefetch buffer with a span starting at `pageOff` from
+    * the best external tier, then admit its pages. Returns the byte
+    * counter of the tier that served the span (the caller attributes
+    * only the user-visible bytes, so the per-tier counters always sum to
+    * bytesRead).
+    *
+    * The span is the full I/O buffer when `pageOff` is the file's first
+    * page or this stream's previous fetch ended exactly at `pageOff` (a
+    * sequential reader, scan-detected streams included, though those
+    * admit nothing). Otherwise it is the larger of the pages covering
+    * the request up to `reqEnd` and the run of cached pages right before
+    * `pageOff` (Linux's context readahead: a cached run is evidence of a
+    * sequential pattern spread over streams), capped at the I/O buffer.
+    * A cold random read so fetches only its own page, or two when it
+    * straddles a boundary. Either way the span ends on a page boundary
+    * or at EOF, so no short page is ever admitted mid-file. */
+  private def fetchSpan(pageOff: Long, reqEnd: Long): java.util.concurrent.atomic.AtomicLong = {
+    val io = conf.ioBufferSize
+    val want =
+      if (pageOff == 0 || bufStart + bufLen == pageOff) io
+      else {
+        val covering = (reqEnd - pageOff + pageSize - 1) / pageSize * pageSize
+        math.min(math.max(covering, cachedRunBefore(pageOff, io)), io)
+      }
+    val spanLen = math.min(want, fileLen - pageOff).toInt
+    // one fixed size class (the configured I/O buffer, the largest span)
+    // so the shared pool actually recycles across streams
     if (buf == null)
-      buf = BufferPool.shared.acquire(math.max(conf.ioBufferSize, 1L).toInt)
+      buf = BufferPool.shared.acquire(math.max(io, 1L).toInt)
     val tier = externalReadFully(pageOff, buf, spanLen)
     bufStart = pageOff
     bufLen = spanLen
@@ -277,6 +307,17 @@ final class CachingInputStream(
       o += pl
     }
     tier
+  }
+
+  /** Bytes in the run of cached pages ending just before `pageOff`,
+    * counting at most `limit` bytes. `contains` leaves both LRU tiers in
+    * their order, so the probe promotes nothing. */
+  private def cachedRunBefore(pageOff: Long, limit: Long): Long = {
+    var start = pageOff
+    while (cacheEnabled && start > 0 && pageOff - start < limit &&
+        pageCache.contains(PageKey(keyBase, start - pageSize)))
+      start -= pageSize
+    pageOff - start
   }
 
   /** Reads into dst and returns the tier counter to charge. */

@@ -55,7 +55,7 @@ class GraftCachingFileSystem extends FileSystem {
       if (impl.nonEmpty)
         Class.forName(impl).getDeclaredConstructor().newInstance()
           .asInstanceOf[FileSystem]
-      else new RawLocalFileSystem()
+      else new NioLocalFileSystem()
     }
     remoteFs.initialize(remoteUri, conf)
     pageCache = new PageCache(fsConf.memCacheBytes, fsConf.diskCacheBytes,
@@ -63,7 +63,7 @@ class GraftCachingFileSystem extends FileSystem {
       offheap = fsConf.dataCacheType == "OFFHEAP")
     metaCache = new MetaCache(stats)
     if (fsConf.writeCacheEnabled) {
-      val wcFs = new RawLocalFileSystem()
+      val wcFs = new NioLocalFileSystem()
       wcFs.initialize(URI.create("file:///"), conf)
       writeCache = Some(new WriteCacheManager(wcFs,
         new Path(fsConf.writeCacheDir), fsConf.writeCacheBytes,
@@ -124,10 +124,11 @@ class GraftCachingFileSystem extends FileSystem {
               old.length, fsConf.pageSize)
         }
         metaCache.put(key, rec)
-        // the RPC already happened — carry its full field set for free
-        new FileStatus(rec.length, rec.isDir, rs.getReplication,
-          rs.getBlockSize, rec.modTime, rs.getAccessTime, rs.getPermission,
-          rs.getOwner, rs.getGroup, q)
+        // the RPC already happened: every field comes from its status,
+        // and owner, group and permission only when asked (a local
+        // remote's status loads those with an `ls -ld` fork)
+        new CachedFileStatus(rec.length, rec.isDir, rs.getBlockSize,
+          rec.modTime, q, _ => rs)
     }
   }
 

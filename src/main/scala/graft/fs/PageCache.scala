@@ -90,6 +90,8 @@ final class PageCache(memCapacity: Long, diskCapacity: Long, diskDir: String,
   def read(k: PageKey, inPage: Int, dst: Array[Byte], dstOff: Int, len: Int): Boolean =
     shardOf(k).read(k, inPage, dst, dstOff, len)
 
+  /** Whether page `k` is in either tier. Leaves both LRU orders as they
+    * are, so a probe promotes nothing. */
   def contains(k: PageKey): Boolean = shardOf(k).contains(k)
 
   /** Admit `src[off, off + len)` as page `k` unless it is cached already;
@@ -206,6 +208,7 @@ private final class PageShard(memCapacity: Long, diskCapacity: Long,
     }
   }
 
+  // containsKey, unlike get, does not reorder an access-ordered map
   def contains(k: PageKey): Boolean = synchronized {
     mem.containsKey(k) || disk.containsKey(k)
   }

@@ -371,6 +371,52 @@ class CachingFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "backfill must be memoized")
   }
 
+  test("a remote stat loads owner, group and permission only when asked") {
+    val fs = countingFs("lazyhead")
+    writeRemote("lazyhead.bin", 777)
+    val p = graftPath("lazyhead.bin")
+    CountingRemoteState.reset()
+    val st = fs.getFileStatus(p) // a miss: one HEAD
+    assert(CountingRemoteState.statusCalls.get == 1)
+    assert(st.getLen == 777 && st.isFile)
+    assert(CountingRemoteState.permissionGets.get == 0,
+      "the miss forced the remote status's permission fields")
+    val raw = new RawLocalFileSystem()
+    raw.initialize(java.net.URI.create("file:///"), new Configuration(false))
+    val expected = raw.getFileStatus(new Path(s"$remoteDir/lazyhead.bin"))
+    assert(st.getPermission == expected.getPermission)
+    assert(st.getOwner == expected.getOwner)
+    assert(st.getGroup == expected.getGroup)
+    assert(st.getModificationTime == expected.getModificationTime)
+    assert(st.getBlockSize == expected.getBlockSize)
+    assert(st.getReplication == expected.getReplication)
+    assert(CountingRemoteState.permissionGets.get == 3)
+    assert(CountingRemoteState.statusCalls.get == 1, "a field access sent another HEAD")
+  }
+
+  // the local file systems behind the cache set modes through java.nio
+  // (NioLocalFileSystem): the same modes Hadoop's chmod fork gave
+  for ((umask, fileMode, dirMode) <- Seq((None, "rw-r--r--", "rwxr-xr-x"),
+      (Some("077"), "rw-------", "rwx------"))) {
+    test(s"local modes under umask ${umask.getOrElse("default")}: copy $fileMode, moniker, new directory $dirMode") {
+      val tag = s"modes_${umask.getOrElse("default")}"
+      val fs = newFs(tag, umask.map("fs.permissions.umask-mode" -> _).toSeq: _*)
+      val wc = fs.writeCacheRef.get
+      assert(wc.cacheFs.isInstanceOf[NioLocalFileSystem])
+      val p = graftPath(s"$tag/new_dir/f.bin")
+      writeFile(fs, p, 100, 3)
+      val cp = wc.toCachePath(p)
+      wc.writeMoniker(cp, "token")
+      def mode(local: String) = java.nio.file.attribute.PosixFilePermissions.toString(
+        java.nio.file.Files.getPosixFilePermissions(java.nio.file.Paths.get(local)))
+      assert(mode(cp.toUri.getPath) == fileMode, "write-cache copy")
+      assert(mode(wc.monikerPath(cp).toUri.getPath) == fileMode, "moniker")
+      assert(mode(cp.getParent.toUri.getPath) == dirMode, "new write-cache directory")
+      assert(mode(s"$remoteDir/$tag/new_dir/f.bin") == fileMode, "remote file")
+      assert(mode(s"$remoteDir/$tag/new_dir") == dirMode, "new remote directory")
+    }
+  }
+
   // Hadoop's FileStatus.isFile asks isSymlink; while the symlink flag
   // was a backfilled field, this cost one HEAD
   test("isFile on a cached status is answered from the record: zero remote calls") {
@@ -687,6 +733,9 @@ object CountingRemoteState {
   import java.util.concurrent.atomic.AtomicLong
   /** HEADs: getFileStatus calls. */
   val statusCalls = new AtomicLong
+  /** getPermission, getOwner and getGroup calls on the statuses the
+    * remote returned (a local status forks `ls -ld` on the first). */
+  val permissionGets = new AtomicLong
   /** LISTs of any path. */
   val listCalls = new AtomicLong
   /** LISTs of a path that is a file. */
@@ -703,8 +752,8 @@ object CountingRemoteState {
   val listedPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   def reset(): Unit = {
-    Seq(statusCalls, listCalls, fileListCalls, allCalls, renameCalls,
-      createCalls, committerCalls).foreach(_.set(0))
+    Seq(statusCalls, permissionGets, listCalls, fileListCalls, allCalls,
+      renameCalls, createCalls, committerCalls).foreach(_.set(0))
     listedPaths.clear()
   }
 }
@@ -729,7 +778,14 @@ class CountingRemoteFileSystem extends FilterFileSystem(new RawLocalFileSystem) 
 
   override def getFileStatus(f: Path): FileStatus = call {
     statusCalls.incrementAndGet()
-    fs.getFileStatus(f)
+    val rs = fs.getFileStatus(f)
+    // the counted fields load from `rs` only when asked
+    new FileStatus(rs.getLen, rs.isDirectory, rs.getReplication, rs.getBlockSize,
+        rs.getModificationTime, rs.getAccessTime, null, null, null, rs.getPath) {
+      override def getPermission: FsPermission = { permissionGets.incrementAndGet(); rs.getPermission }
+      override def getOwner: String = { permissionGets.incrementAndGet(); rs.getOwner }
+      override def getGroup: String = { permissionGets.incrementAndGet(); rs.getGroup }
+    }
   }
 
   override def listStatus(f: Path): Array[FileStatus] = call {
