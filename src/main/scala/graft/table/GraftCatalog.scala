@@ -677,8 +677,9 @@ final case class GraftV2Table(ident: String, man: String,
       // unconditional DELETE FROM t (also TRUNCATE's default route):
       // commit a zero-entry snapshot at the recorded schema — no scan,
       // no rewrite; old versions stay time-travelable until vacuum
-      t.commitManifest(base.entries.limit(0), base.version + 1,
-        schemaDdl = base.schema.map(_.toDDL))
+      t.commit(base, "DELETE FROM", GraftTable.Rule.NoRebase())(_ =>
+        Some(GraftTable.Actions(replaces = true,
+          schemaDdl = base.schema.map(_.toDDL))))
       return
     }
     // the full condition is the ROW predicate (Catalyst translation —

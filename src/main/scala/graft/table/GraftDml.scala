@@ -446,12 +446,11 @@ final case class GraftMergeCommand(table: GraftV2Table,
         }: _*)
 
       val replacement = survivors.unionByName(inserts)
-      val added = t.stagedAppend(replacement,
-        t.sizedParts(2, t.entryBytes(impactedRows)))
-      val stats = if (added.isEmpty) t.emptyEntries else t.fileStats(added)
-      t.commitManifest(
-        t.unionEntries(t.excludeFiles(base.entries, impacted), stats),
-        base.version + 1, schemaDdl = base.schema.map(_.toDDL))
+      val stats = t.fileStats(t.stagedAppend(replacement,
+        t.sizedParts(2, t.entryBytes(impactedRows))))
+      t.commit(base, "MERGE INTO", GraftTable.Rule.NoRebase())(_ =>
+        Some(GraftTable.Actions(Some(stats), removed = impacted,
+          schemaDdl = base.schema.map(_.toDDL))))
       Seq(Row(affected))
     } finally { joined.unpersist(); () }
   }

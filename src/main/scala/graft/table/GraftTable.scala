@@ -72,7 +72,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     dmlModes: Map[String, String] = Map.empty)
     extends org.apache.spark.internal.Logging {
 
-  import GraftTable.{entryDvOf => entryDv, listStatusSafe, touch}
+  import GraftTable.{Actions, Rule, entryDvOf => entryDv, listStatusSafe, touch}
 
   @transient private lazy val hconf =
     spark.sessionState.newHadoopConf()
@@ -109,8 +109,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * drop its rows, so any NULL key is rejected loudly (same contract
     * [[commitMerge]] enforces on its batch). NULLs in NON-key stats
     * columns are legal — an all-NULL file records a NULL box there,
-    * which pruning treats as "cannot skip on this dimension". */
+    * which pruning treats as "cannot skip on this dimension". No files
+    * (an empty batch) yield [[emptyEntries]]. */
   def fileStats(files: Seq[String]): DataFrame = {
+    if (files.isEmpty) return emptyEntries
     // FOOTER fast path (the Delta/Iceberg shape: stats come from write
     // metadata, never a re-read): every file here was just written by
     // Spark through GraftCommitProtocol, and its parquet footer
@@ -617,31 +619,157 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * drop a batch, so it fails loudly. Use [[commitAppendOcc]] when
     * concurrent writers may commit DIFFERENT content. */
   def commitManifest(entries: DataFrame, v: Int,
-      tag: Option[String] = None, schemaDdl: Option[String] = None): Unit =
-    if (!tryCommitManifest(entries, v, tag, schemaDdl = schemaDdl)) {
-      // the publish refusal means v is committed: the winner resolves
-      // from one listing
-      val winner = snapshot(Some(v))
-      tag.foreach { t =>
-        require(manFs.exists(new Path(winner.dir, s"_tag_$t")),
+      tag: Option[String] = None, schemaDdl: Option[String] = None): Unit = {
+    commit(snapshot(Some(v - 1)), "commit", Rule.Replay)(_ =>
+      Some(Actions(Some(entries), replaces = true,
+        schemaDdl = schemaDdl, tag = tag)))
+    ()
+  }
+
+  /** The one commit transaction (Delta's `OptimisticTransaction`):
+    * `plan` the commit's actions on a base snapshot, publish them as the
+    * next version, and after a lost race list the log again and judge
+    * each winner, against the version before it, by the `rules` the
+    * commit kind lists. A rule accepts a winner that already holds this
+    * commit (its version is returned), lets the commit rebase past it,
+    * or throws. A rebase runs `plan` again on the latest version, so a
+    * kind re-plans as much as its plan computes from the base. A plan of
+    * None commits nothing and returns its base's version. After
+    * [[GraftTable.CommitRetries]] lost races in a row the commit gives
+    * up. Returns the version that holds the commit. */
+  private[table] def commit(start: LogSnapshot, what: String,
+      rules: Rule*)(
+      plan: LogSnapshot => Option[Actions]): Int = {
+    var base = start
+    var lost = 0
+    while (lost <= GraftTable.CommitRetries) {
+      val actions = plan(base) match {
+        case Some(a) => a
+        case None => return base.version
+      }
+      val v = base.version + 1
+      val entries = nextManifest(base, actions)
+      if (tryCommitManifest(entries, v, actions.tag, actions.noData,
+          actions.schemaDdl))
+        return v
+      val latest = snapshot()
+      // every version since base is a winner, judged against the one
+      // before it; a publish that failed with no winner at v fails here
+      val winners = (v to math.max(v, latest.version)).map(latest.at)
+      (base +: winners).zip(winners).iterator
+        .map { case (p, w) => judge(what, rules, actions, entries, p, w) }
+        .collectFirst { case Some(held) => held } match {
+        case Some(held) => return held
+        case None => base = latest
+      }
+      lost += 1
+    }
+    throw new IllegalStateException(s"$what lost ${GraftTable.CommitRetries} " +
+      "consecutive races; giving up")
+  }
+
+  /** The verdict of `rules` on `winner`, the version after `prev`, for a
+    * commit that tried `entries` with `ours`: the version holding the
+    * commit, None to rebase past the winner, or a throw. Each check is
+    * O(#files) driver-side. */
+  private def judge(what: String, rules: Seq[Rule],
+      ours: Actions, entries: DataFrame, prev: LogSnapshot,
+      winner: LogSnapshot): Option[Int] = {
+    import Rule._
+    val v = winner.version
+    def conflict(why: String): Nothing =
+      throw new java.util.ConcurrentModificationException(
+        s"$what lost the commit race for v=$v to a commit that may " +
+          s"interact with it ($why); re-run against the latest snapshot")
+    def tagged(t: String) = manFs.exists(new Path(winner.dir, s"_tag_$t"))
+    // (dv, n_rows) by file: under MoR a winner can change a file's
+    // EFFECTIVE content by swapping only its deletion vector
+    def byFile(s: LogSnapshot) = s.rows.map(r =>
+      r.getAs[String]("file") -> (entryDv(r), r.getAs[Long]("n_rows"))).toMap
+    lazy val before = byFile(prev)
+    lazy val after = byFile(winner)
+    rules.iterator.map {
+      case Replay =>
+        ours.tag.foreach(t => require(tagged(t),
           s"lost the commit race for v=$v to a snapshot NOT carrying tag " +
             s"'$t' — concurrent non-replay writers on one version; use " +
-            "commitAppendOcc for multi-writer tables")
+            "commitAppendOcc for multi-writer tables"))
+        // CONTENT equivalence, not just count: a replay of the same
+        // batch references the exact same file set
+        val winnerFiles = winner.files.sorted
+        val ourFiles = entries.select("file").collect()
+          .map(_.getString(0)).sorted.toSeq
+        require(winnerFiles == ourFiles,
+          s"lost the commit race for v=$v to a DIFFERENT snapshot " +
+            s"(${winnerFiles.size} entries vs our ${ourFiles.size}; file " +
+            "sets differ) — concurrent non-replay writers on one version; " +
+            "use commitAppendOcc for multi-writer tables")
+        Some(v)
+      case Tagged => ours.tag.filter(tagged).map(_ => v)
+      case ReadIntact(files) =>
+        if (!files.forall(f => after.contains(f) && after.get(f) == before.get(f)))
+          conflict("it rewrote, re-masked or dropped a file this commit read")
+        None
+      case SchemaIntact =>
+        if (winner.schema.map(_.toDDL) != prev.schema.map(_.toDDL))
+          conflict("it changed the recorded schema")
+        None
+      case EnvelopeClear(lo, hi) =>
+        if (winner.rows.exists(r => !before.contains(r.getAs[String]("file")) &&
+            GraftTable.boxIntersects(r, "lo", "hi", lo, hi)))
+          conflict("it added rows inside this commit's key envelope")
+        None
+      case NoRebase(onLoss) =>
+        onLoss()
+        throw new java.util.ConcurrentModificationException(
+          s"$what lost the commit race for v=$v; re-run against the " +
+            "latest snapshot")
+    }.collectFirst { case Some(held) => held }
+  }
+
+  /** The manifest `a` makes of `base`'s entries — driver-side, from
+    * local relations. */
+  private def nextManifest(base: LogSnapshot, a: Actions)
+      : DataFrame =
+    if (a.replaces) a.added.getOrElse(base.entries.limit(0))
+    else {
+      val kept = a.dv match {
+        case Some((path, masked)) => remasked(base, path, masked)
+        case None => excludeFiles(base.entries, a.removed)
       }
-      // CONTENT equivalence, not just count: the winner must reference
-      // the exact same file set (a replay of the same batch does, by
-      // construction). Both lists are already on the driver, so the
-      // complete check costs the same O(#files) as the count it
-      // replaces — and closes the same-count-different-content hole.
-      val winnerFiles = winner.files.sorted
-      val ourFiles = entries.select("file").collect()
-        .map(_.getString(0)).sorted.toSeq
-      require(winnerFiles == ourFiles,
-        s"lost the commit race for v=$v to a DIFFERENT snapshot " +
-          s"(${winnerFiles.size} entries vs our ${ourFiles.size}; file " +
-          "sets differ) — concurrent non-replay writers on one version; " +
-          "use commitAppendOcc for multi-writer tables")
+      a.added.fold(kept)(unionEntries(kept, _))
     }
+
+  /** `b`'s entries with each file in `masked` re-pointed at the deletion
+    * vector `dv`, its live `n_rows` less its newly masked rows; an entry
+    * masked to zero live rows is dropped (its file becomes a
+    * vacuum-reclaimable orphan once prior versions expire). */
+  private def remasked(b: LogSnapshot, dv: String,
+      masked: Map[String, Long]): DataFrame = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val hasDv = b.entries.columns.contains("dv")
+    val outSchema =
+      if (hasDv) b.entries.schema
+      else StructType(b.entries.schema.fields :+ StructField("dv", StringType))
+    val idxN = outSchema.fieldIndex("n_rows")
+    val idxDv = outSchema.fieldIndex("dv")
+    val updated = b.rows.flatMap { r =>
+      val vals = (if (hasDv) r.toSeq else r.toSeq :+ null).toArray
+      masked.get(r.getAs[String]("file")) match {
+        case Some(n) =>
+          val live = r.getAs[Long]("n_rows") - n
+          if (live <= 0L) None
+          else {
+            vals(idxN) = live
+            vals(idxDv) = dv
+            Some(Row.fromSeq(vals.toIndexedSeq))
+          }
+        case None => Some(Row.fromSeq(vals.toIndexedSeq))
+      }
+    }
+    spark.createDataFrame(updated.toList.asJava, outSchema)
+  }
 
   /** Whether version v's commit changed row content (Delta's
     * `dataChange`): false only for layout-only commits (OPTIMIZE) that
@@ -716,8 +844,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     val added = writeLayout
     manFs.mkdirs(manDir)
     writeProps()
-    val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitManifest(stats, 1, schemaDdl = Some(schema.toDDL))
+    commitManifest(fileStats(added), 1, schemaDdl = Some(schema.toDDL))
     this
   }
 
@@ -1039,7 +1166,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * driver-side set filter returning a LOCAL relation — an anti-JOIN
     * plan here (the pre-r21 spelling) forced every commit's entry
     * collect into a Spark job for zero distributed work. */
-  private[table] def excludeFiles(entries: DataFrame, files: Seq[String])
+  private def excludeFiles(entries: DataFrame, files: Seq[String])
       : DataFrame =
     if (files.isEmpty) entries
     else {
@@ -1049,15 +1176,6 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         .filterNot(r => gone(r.getAs[String]("file")))
       spark.createDataFrame(rows.toList.asJava, entries.schema)
     }
-
-  /** The semi twin of [[excludeFiles]]: keep only rows whose `file`
-    * column names one of `files`. */
-  private def restrictToFiles(df: DataFrame, files: Seq[String])
-      : DataFrame = {
-    import spark.implicits._
-    df.join(broadcast(files.toDF("__keep_file")),
-      col("file") === col("__keep_file"), "left_semi")
-  }
 
   /** Append-commit: new clustered data files + a new manifest version =
     * previous complete entry list + ONLY the new files' stats (existing
@@ -1069,10 +1187,11 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
   def commitAppend(batch: DataFrame, prevV: SnapshotRef, nParts: Int = 2,
       tag: Option[String] = None): Unit = {
     val base = resolve(prevV)
-    val added = stagedAppend(batch, nParts)
-    val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitManifest(unionEntries(base.entries, stats), base.version + 1, tag,
-      schemaDdl = evolvedSchemaDdl(base, batch.schema))
+    val stats = fileStats(stagedAppend(batch, nParts))
+    commit(base, "append", Rule.Replay)(b =>
+      Some(Actions(Some(stats),
+        schemaDdl = evolvedSchemaDdl(b, batch.schema), tag = tag)))
+    ()
   }
 
   /** Optimistic-concurrency append for MULTI-WRITER tables (the Delta
@@ -1088,30 +1207,19 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * callers using the value as a version number must treat -1 as
     * "committed, version unavailable". */
   def commitAppendOcc(batch: DataFrame, nParts: Int = 2,
-      maxRetries: Int = 50, tag: Option[String] = None,
+      tag: Option[String] = None,
       start: Option[LogSnapshot] = None): Int = {
-    val added = stagedAppend(batch, nParts)
-    val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      // the caller's snapshot serves the first attempt; every rebase
-      // re-lists the log
-      val base = start.filter(_ => attempts == 0).getOrElse(snapshot())
-      // a concurrent replay carrying OUR tag may have won a lost race:
-      // its snapshot holds the batch, ours is redundant — stop, leaving
-      // our staged files as vacuum-reclaimable orphans
-      tag.foreach { t =>
-        if (tagCommitted(t, base)) return versionWithTag(t, base).getOrElse(-1)
-      }
-      base.requireTable()
-      if (tryCommitManifest(unionEntries(base.entries, stats),
-          base.version + 1, tag,
-          schemaDdl = evolvedSchemaDdl(base, batch.schema)))
-        return base.version + 1
-      attempts += 1 // lost the race — rebase onto the winner's version
+    val stats = fileStats(stagedAppend(batch, nParts))
+    val base = start.getOrElse(snapshot())
+    // a replay carrying OUR tag may already hold the batch — then ours
+    // is redundant, and its staged files are vacuum-reclaimable orphans;
+    // a winner of a lost race carrying the tag holds it the same way
+    tag.foreach { t =>
+      if (tagCommitted(t, base)) return versionWithTag(t, base).getOrElse(-1)
     }
-    throw new IllegalStateException(
-      s"append commit lost $maxRetries consecutive races; giving up")
+    commit(base.requireTable(), "append commit", Rule.Tagged)(b =>
+      Some(Actions(Some(stats),
+        schemaDdl = evolvedSchemaDdl(b, batch.schema), tag = tag)))
   }
 
   /** Snapshot-isolated COW merge-commit: the manifest names the files
@@ -1134,7 +1242,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * still fail loudly. `tag` records replay provenance (the streaming
     * upsert sink keys exactly-once on it). */
   def commitMerge(batch: DataFrame, prevV: SnapshotRef, nParts: Int = 2,
-      tag: Option[String] = None, maxRebases: Int = 5): Unit = {
+      tag: Option[String] = None): Unit = {
     val prev = resolve(prevV)
     // one pass computes the key envelope AND the null-key census: a
     // NULL merge key can never be matched by the anti join, so such a
@@ -1148,15 +1256,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     val env = batch.agg(codec.loAgg(key), codec.hiAgg(key),
       count(lit(1)), count(col(key))).head
     val (total, nonNull) = (env.getLong(2), env.getLong(3))
-    def conflict(v: Int): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"merge lost the commit race for v=$v to a commit that may " +
-          "interact with it (it rewrote an impacted file or added rows " +
-          "inside this batch's key envelope); re-run the merge against " +
-          "the latest snapshot")
     if (total == 0) { // empty batch: commit a carry-forward version
-      if (!tryCommitManifest(prev.entries, prev.version + 1, tag))
-        conflict(prev.version + 1)
+      commit(prev, "merge", Rule.NoRebase())(_ =>
+        Some(Actions(tag = tag)))
       return
     }
     require(nonNull == total,
@@ -1182,39 +1284,13 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
        else readRows(prev, impactedRows)
          .join(batch.select(key).distinct(), Seq(key), "left_anti"))
         .unionByName(batch, allowMissingColumns = true)
-    val added = stagedAppend(replacement,
-      sizedParts(nParts, entryBytes(impactedRows)))
-    val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    // rebase bookkeeping tracks (file, deletion-vector) PAIRS, not file
-    // names: under MoR a winner can change an impacted file's EFFECTIVE
-    // content by swapping only its DV — the file "survives" by name but
-    // this merge's survivor read is stale all the same
-    def pairsOf(rows: Array[Row]): Map[String, Option[String]] =
-      rows.map(r => r.getAs[String]("file") -> entryDv(r)).toMap
-    var base = prev
-    var basePairs = pairsOf(prevEntries)
-    var rebases = 0
-    while (true) {
-      val entries = unionEntries(excludeFiles(base.entries, impacted),
-        stats)
-      if (tryCommitManifest(entries, base.version + 1, tag,
-          schemaDdl = evolvedSchemaDdl(base, batch.schema)))
-        return
-      // lost the race — re-snapshot at the winner, then an O(#files)
-      // driver-side disjointness check
-      val winner = snapshot(Some(base.version + 1))
-      val winnerPairs = pairsOf(winner.rows)
-      val newEntries = winner.rows
-        .filterNot(r => basePairs.contains(r.getAs[String]("file")))
-      rebases += 1
-      if (rebases > maxRebases ||
-          !impacted.forall(f => winnerPairs.get(f).contains(basePairs(f))) ||
-          newEntries.exists(
-            GraftTable.boxIntersects(_, "lo", "hi", qlo, qhi)))
-        conflict(winner.version)
-      base = winner
-      basePairs = winnerPairs
-    }
+    val stats = fileStats(stagedAppend(replacement,
+      sizedParts(nParts, entryBytes(impactedRows))))
+    commit(prev, "merge", Rule.ReadIntact(impacted),
+        Rule.EnvelopeClear(qlo, qhi))(b =>
+      Some(Actions(Some(stats), removed = impacted,
+        schemaDdl = evolvedSchemaDdl(b, batch.schema), tag = tag)))
+    ()
   }
 
   // ---- merge-on-read (deletion-vector) merge ------------------------
@@ -1459,7 +1535,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * winner provably cannot interact — every file this commit masks
     * kept an identical (dv, n_rows) pair, the recorded schema is
     * unchanged, and none of the winner's NEW files' key boxes
-    * intersect this batch's envelope (see [[commitMorMaskedTail]]);
+    * intersect this batch's envelope (see [[commitMorMasked]]);
     * anything else — in particular a winner that rewrote or re-masked
     * a file whose positions this DV masks (positions are only stable
     * while the file is) — still fails loudly. */
@@ -1472,9 +1548,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       count(lit(1)), count(col(key))).head
     val (total, nonNull) = (env.getLong(2), env.getLong(3))
     if (total == 0) { // empty batch: commit a carry-forward version
-      if (!tryCommitManifest(prev.entries, prev.version + 1, tag))
-        throw new java.util.ConcurrentModificationException(
-          s"MoR merge lost the commit race for v=${prev.version + 1}")
+      commit(prev, "MoR merge", Rule.NoRebase())(_ =>
+        Some(Actions(tag = tag)))
       return
     }
     require(nonNull == total,
@@ -1506,8 +1581,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         .select("file", "pos").persist())
     try {
       // the batch's new clustered files (stats recorded like any append)
-      val added = stagedAppend(batch, nParts)
-      val stats = if (added.isEmpty) emptyEntries else fileStats(added)
+      val stats = fileStats(stagedAppend(batch, nParts))
       commitMorMasked(prev, impactedRows, maskedNew, stats, tag,
         evolvedSchemaDdl(prev, batch.schema), envGuard = Some((qlo, qhi)))
     } finally { maskedNew.foreach(_.unpersist()); () }
@@ -1535,7 +1609,21 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * `maskedNew` MAY contain already-masked positions — the union
     * dedups and the live arithmetic (n_rows − (combined − old)) stays
     * exact. With no masked positions at all this degrades to a pure
-    * append commit (no dv column introduced). */
+    * append commit (no dv column introduced) under the replay rule.
+    *
+    * Lost-race rules (the Delta conflict-checker rule specialized to DV
+    * commits): every file this commit re-points or drops kept an
+    * IDENTICAL (dv, n_rows) pair in the winner — so our masked
+    * positions and live arithmetic stay exact against its entries — and
+    * the recorded schema is unchanged. With `envGuard` (the MoR upsert)
+    * the winner also added no file inside the batch's key envelope, or
+    * a winner-appended row could carry a key this merge should have
+    * superseded. DELETE/UPDATE pass no guard: a winner's concurrent
+    * append commits rows the predicate never saw — the
+    * write-serializable relaxation Delta documents (the DML serializes
+    * BEFORE the append it raced). Untouched entries are carried from
+    * the WINNER verbatim, so its changes to files outside this commit's
+    * mask set compose. */
   private def commitMorMasked(prev: LogSnapshot,
       impactedRows: Array[Row], maskedNew: Option[DataFrame],
       stats: DataFrame, tag: Option[String], schemaDdl: Option[String],
@@ -1543,33 +1631,45 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       envGuard: Option[(Any, Any)] = None,
       newCntPre: Option[Map[String, Long]] = None): Unit = {
     import spark.implicits._
+    // write the combined vector `dvAll` (one DV placement per commit,
+    // one NAME either way, so vacuum's reference counting covers it —
+    // fanned out past the row cutoff, see writeDvFile) and publish:
+    // `allCnt` counts its positions per file, `oldCnt` those already
+    // masked before this commit
+    def publish(dvAll: Option[DataFrame], allCnt: Map[String, Long],
+        oldCnt: Map[String, Long]): Unit = {
+      val dv = if (allCnt.isEmpty) None else Some(
+        writeDvFile(dvAll.get, allCnt.values.sum) ->
+          allCnt.map { case (f, n) => f -> (n - oldCnt.getOrElse(f, 0L)) })
+      val rules =
+        if (allCnt.isEmpty) Seq(Rule.Replay)
+        else Seq(Rule.ReadIntact(allCnt.keySet), Rule.SchemaIntact) ++
+          envGuard.map { case (lo, hi) => Rule.EnvelopeClear(lo, hi) }
+      commit(prev, "MoR DML commit", rules: _*)(_ => Some(Actions(
+        Some(stats), dv = dv, schemaDdl = schemaDdl, tag = tag)))
+      ()
+    }
+    def countsByFile(df: DataFrame): Map[String, Long] =
+      df.groupBy("file").agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getAs[String]("file") -> r.getAs[Long]("n")).toMap
+    // no refold file carries an existing DV: the combined vector is the
+    // deduped new mask, and old counts are provably zero
+    def publishDeduped(): Unit = {
+      val dvAll = maskedNew.get.distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try publish(Some(dvAll), countsByFile(dvAll), Map.empty)
+      finally { dvAll.unpersist(blocking = false); () }
+    }
     // FAST PATH: when no impacted entry carries an existing DV (every
-    // first mask over an envelope — the common case), the combined
-    // vector IS the deduped new mask: ONE aggregation yields the
-    // per-file counts, and old counts are provably zero.
+    // first mask over an envelope — the common case), ONE aggregation
+    // yields the per-file counts
     val anyOldDv = impactedRows.exists(r => entryDv(r).isDefined)
-    if (!anyOldDv && maskedNew.isDefined && newCntPre.isDefined) {
+    if (!anyOldDv && maskedNew.isDefined) {
       // the DML callers' mask comes from ONE scan of the impacted files,
       // so its (file, pos) pairs are already unique: it IS the combined
       // vector and their per-file counts are its counts — no dedup pass
-      commitMorMaskedTail(prev, maskedNew, newCntPre.get,
-        Map.empty, stats, tag, schemaDdl, envGuard)
-      return
-    }
-    if (!anyOldDv && maskedNew.isDefined) {
-      val dvAll = maskedNew.get.distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val allCnt: Map[String, Long] = dvAll
-          .groupBy("file").agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getAs[String]("file") -> r.getAs[Long]("n")).toMap
-        if (allCnt.isEmpty)
-          commitMorMaskedTail(prev, None, Map.empty,
-            Map.empty, stats, tag, schemaDdl, envGuard)
-        else
-          commitMorMaskedTail(prev, Some(dvAll),
-            allCnt, Map.empty, stats, tag, schemaDdl, envGuard)
-      } finally { dvAll.unpersist(blocking = false); () }
+      if (newCntPre.isDefined) publish(maskedNew, newCntPre.get, Map.empty)
+      else publishDeduped()
       return
     }
     // per-file NEW masked counts FIRST — they decide which entries
@@ -1578,15 +1678,12 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // DML callers already aggregated them for their matched-count
     // planning, so they arrive precomputed (`newCntPre`) — zero jobs
     // here on those paths.
-    val newCnt: Map[String, Long] = newCntPre.getOrElse(maskedNew
-      .map(_.groupBy("file").agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getAs[String]("file") -> r.getAs[Long]("n")).toMap)
-      .getOrElse(Map.empty))
+    val newCnt: Map[String, Long] = newCntPre.getOrElse(
+      maskedNew.map(countsByFile).getOrElse(Map.empty))
     if (newCnt.isEmpty) {
       // no masked positions (or no impacted files): a pure append
       // commit — no DV written, no dv column introduced
-      commitMorMaskedTail(prev, None, Map.empty,
-        Map.empty, stats, tag, schemaDdl, envGuard)
+      publish(None, Map.empty, Map.empty)
       return
     }
     val refold = newCnt.keySet
@@ -1615,26 +1712,15 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     }
     try {
       oldDv match {
-        case None =>
-          // impacted set carries DVs but none on the refold files: the
-          // combined vector is the deduped new mask, old counts zero —
-          // the fast-path arithmetic scoped to this commit
-          val dvAll = maskedNew.get.distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val allCnt: Map[String, Long] = dvAll
-              .groupBy("file").agg(count(lit(1)).as("n")).collect()
-              .map(r => r.getAs[String]("file") -> r.getAs[Long]("n")).toMap
-            commitMorMaskedTail(prev, Some(dvAll),
-              allCnt, Map.empty, stats, tag, schemaDdl, envGuard)
-          } finally { dvAll.unpersist(blocking = false); () }
+        // the impacted set carries DVs, but none on the refold files
+        case None => publishDeduped()
         case Some(o) =>
           // ONE tagged pass replaces the pre-r22 three evaluations
           // (combined counts, old counts, and the dv write re-running
           // the union): rows tag their origin, dedup at (file, pos)
           // keeps whether an OLD position is present, and a single
           // per-file aggregation yields combined AND old counts — the
-          // persisted dedup result IS the combined vector the tail
+          // persisted dedup result IS the combined vector the commit
           // writes, so nothing is evaluated twice.
           val tagged = maskedNew.get
             .select(col("file"), col("pos"), lit(false).as("__old"))
@@ -1653,116 +1739,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
               val n = r.getAs[Long]("old")
               if (n == 0L) None else Some(r.getAs[String]("file") -> n)
             }.toMap
-            commitMorMaskedTail(prev,
-              Some(merged.select("file", "pos")),
-              allCnt, oldCnt, stats, tag, schemaDdl, envGuard)
+            publish(Some(merged.select("file", "pos")), allCnt, oldCnt)
           } finally { merged.unpersist(blocking = false); () }
       }
     } finally { ownedDv.foreach(_.unpersist()); () }
-  }
-
-  /** Publish the masked-commit manifest, rebasing MECHANICALLY on a
-    * lost race when the winner provably cannot interact (the Delta
-    * conflict-checker rule specialized to DV commits, the same family
-    * as [[commitMerge]]'s and [[commitAppendOcc]]'s): every file this
-    * commit re-points or drops (the keys of `allCnt`) must survive
-    * into the winner's snapshot with an IDENTICAL (dv, n_rows) pair —
-    * the winner rewrote, re-masked and dropped none of them, so our
-    * masked positions and live arithmetic stay exact against its
-    * entries — and the winner's recorded schema must be unchanged.
-    * When `envGuard` is set (the MoR upsert), the winner's NEW files'
-    * key boxes must additionally miss the batch's key envelope, or a
-    * winner-appended row could carry a key this merge should have
-    * superseded. DELETE/UPDATE pass no guard: a winner's concurrent
-    * append commits rows the predicate never saw — the write-
-    * serializable relaxation Delta documents (the DML serializes
-    * BEFORE the append it raced). Untouched entries are carried from
-    * the WINNER verbatim, so its changes to files outside this
-    * commit's mask set compose. Anything else fails loudly — never a
-    * silent drop. */
-  private def commitMorMaskedTail(prev: LogSnapshot,
-      dvAll: Option[DataFrame], allCnt: Map[String, Long],
-      oldCnt: Map[String, Long], stats: DataFrame,
-      tag: Option[String], schemaDdl: Option[String],
-      envGuard: Option[(Any, Any)] = None, maxRebases: Int = 5): Unit = {
-    if (allCnt.isEmpty) {
-      // no masked positions (or no impacted files): a pure append
-      // commit — no DV written, no dv column introduced
-      commitManifest(unionEntries(prev.entries, stats), prev.version + 1, tag,
-        schemaDdl)
-      return
-    }
-
-    // one combined DV placement per commit, one NAME either way, so
-    // vacuum's reference counting covers it (fanned out past the
-    // row cutoff — see writeDvFile)
-    val dvPath = writeDvFile(dvAll.get, allCnt.values.sum)
-
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    def rebuilt(b: LogSnapshot): DataFrame = {
-      val hasDv = b.entries.columns.contains("dv")
-      val outSchema =
-        if (hasDv) b.entries.schema
-        else StructType(b.entries.schema.fields :+ StructField("dv", StringType))
-      val idxN = outSchema.fieldIndex("n_rows")
-      val idxDv = outSchema.fieldIndex("dv")
-      val updated = b.rows.flatMap { r =>
-        val f = r.getAs[String]("file")
-        val vals = (if (hasDv) r.toSeq else r.toSeq :+ null).toArray
-        allCnt.get(f) match {
-          case Some(maskedTotal) =>
-            val live = r.getAs[Long]("n_rows") -
-              (maskedTotal - oldCnt.getOrElse(f, 0L))
-            if (live <= 0L) None // fully masked: drop the entry entirely
-            else {
-              vals(idxN) = live
-              vals(idxDv) = dvPath
-              Some(Row.fromSeq(vals.toIndexedSeq))
-            }
-          case None => Some(Row.fromSeq(vals.toIndexedSeq))
-        }
-      }
-      spark.createDataFrame(updated.toList.asJava, outSchema)
-    }
-
-    def conflict(v: Int): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"MoR DML commit lost the race for v=$v to a commit that may " +
-          "interact with it (it rewrote, re-masked or dropped a file " +
-          "this commit masks, changed the recorded schema, or added " +
-          "rows inside this merge's key envelope); re-run against the " +
-          "latest snapshot")
-    def pairOf(r: Row): (Option[String], Long) =
-      (entryDv(r), r.getAs[Long]("n_rows"))
-
-    var base = prev
-    var rebases = 0
-    while (true) {
-      if (tryCommitManifest(unionEntries(rebuilt(base), stats),
-          base.version + 1, tag, schemaDdl = schemaDdl))
-        return
-      // lost the race — re-snapshot at the winner, then an O(#files)
-      // driver-side disjointness check
-      rebases += 1
-      val winner = snapshot(Some(base.version + 1))
-      val baseByFile = base.rows
-        .map(r => r.getAs[String]("file") -> pairOf(r)).toMap
-      val winByFile = winner.rows
-        .map(r => r.getAs[String]("file") -> pairOf(r)).toMap
-      val touchedIntact = allCnt.keySet.forall(f =>
-        winByFile.contains(f) && winByFile.get(f) == baseByFile.get(f))
-      val schemaIntact =
-        winner.schema.map(_.toDDL) == base.schema.map(_.toDDL)
-      val envClear = envGuard.forall { case (qlo, qhi) =>
-        !winner.rows.exists(r => !baseByFile.contains(r.getAs[String]("file")) &&
-          GraftTable.boxIntersects(r, "lo", "hi", qlo, qhi))
-      }
-      if (rebases > maxRebases || !touchedIntact || !schemaIntact ||
-          !envClear)
-        conflict(winner.version)
-      base = winner
-    }
   }
 
   /** MERGE-ON-READ DELETE (`spark.graft.delete.mode=mor` — the DV
@@ -1934,8 +1914,7 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
         _.getAs[Long]("n_rows")).sum)
       val estBytes =
         (entryBytes(impactedRows).toDouble * nUpd / totalRows).toLong
-      val added = stagedAppend(updated, sizedParts(1, estBytes))
-      val stats = if (added.isEmpty) emptyEntries else fileStats(added)
+      val stats = fileStats(stagedAppend(updated, sizedParts(1, estBytes)))
       commitMorMasked(prev, impactedRows, Some(maskedNew),
         stats, tag,
         schemaDdl = prev.schema.map(_.toDDL), oldDvPre = oldDv,
@@ -1983,10 +1962,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     // rewrite width sized from the envelope's manifest bytes (floor 2):
     // a 100 TB keyed UPDATE fans its survivor rewrite out to
     // ~target-file-size outputs instead of two giant write tasks
-    val added = stagedAppend(updated, sizedParts(2, entryBytes(impactedRows)))
-    val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitCowRewrite(prev, impactedRows, stats, tag,
-      schemaDdl = prev.schema.map(_.toDDL))
+    commitCowRewrite(prev, impactedRows, fileStats(stagedAppend(updated,
+      sizedParts(2, entryBytes(impactedRows)))), tag, prev.schema.map(_.toDDL))
     nUpd
   }
 
@@ -2005,55 +1982,26 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     }
 
   /** Publish a COW envelope rewrite — `impactedRows`' files dropped,
-    * `stats`' fresh survivor files added — rebasing MECHANICALLY on a
-    * lost race when the winner provably cannot interact: the
-    * [[commitMerge]]/[[commitMorMaskedTail]] Delta-conflict-checker
-    * rule applied to predicate DML. Every impacted file must survive
-    * into the winner with an IDENTICAL (dv, n_rows) pair — the winner
-    * neither rewrote, re-masked nor dropped any file whose rows this
-    * rewrite read, so the staged survivors are still exact against its
-    * snapshot — and the winner's recorded schema must be unchanged. No
-    * envelope guard: a winner's concurrent append commits rows the
-    * predicate never saw — the write-serializable relaxation Delta
-    * documents (the DML serializes BEFORE the append it raced; same
-    * contract as the MoR DELETE/UPDATE). Untouched entries are carried
-    * from the WINNER verbatim, so its changes outside this envelope
-    * compose. Anything else fails loudly — never a silent drop. */
+    * `stats`' fresh survivor files added. Its lost-race rules (the
+    * [[commitMerge]]/[[commitMorMasked]] Delta-conflict-checker rule
+    * applied to predicate DML): every impacted file kept an IDENTICAL
+    * (dv, n_rows) pair in the winner — so the staged survivors are
+    * still exact against its snapshot — and the recorded schema is
+    * unchanged. No envelope guard: a winner's concurrent append commits
+    * rows the predicate never saw — the write-serializable relaxation
+    * Delta documents (the DML serializes BEFORE the append it raced;
+    * same contract as the MoR DELETE/UPDATE). Untouched entries are
+    * carried from the WINNER verbatim, so its changes outside this
+    * envelope compose. */
   private def commitCowRewrite(prev: LogSnapshot, impactedRows: Array[Row],
-      stats: DataFrame, tag: Option[String], schemaDdl: Option[String],
-      maxRebases: Int = 5): Unit = {
+      stats: DataFrame, tag: Option[String],
+      schemaDdl: Option[String]): Unit = {
     val impacted = impactedRows.map(_.getAs[String]("file")).toSeq
-    def pairOf(r: Row): (Option[String], Long) =
-      (entryDv(r), r.getAs[Long]("n_rows"))
-    val impactedPairs = impactedRows
-      .map(r => r.getAs[String]("file") -> pairOf(r)).toMap
-    def conflict(v: Int): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"COW DML commit lost the race for v=$v to a commit that may " +
-          "interact with it (it rewrote, re-masked or dropped a file " +
-          "this rewrite read, or changed the recorded schema); re-run " +
-          "against the latest snapshot")
-    var base = prev
-    var rebases = 0
-    while (true) {
-      if (tryCommitManifest(
-          unionEntries(excludeFiles(base.entries, impacted), stats),
-          base.version + 1, tag, schemaDdl = schemaDdl))
-        return
-      // lost the race — re-snapshot at the winner, then an O(#files)
-      // driver-side disjointness check
-      rebases += 1
-      val winner = snapshot(Some(base.version + 1))
-      val winByFile = winner.rows
-        .map(r => r.getAs[String]("file") -> pairOf(r)).toMap
-      val touchedIntact =
-        impacted.forall(f => winByFile.get(f).contains(impactedPairs(f)))
-      val schemaIntact =
-        winner.schema.map(_.toDDL) == base.schema.map(_.toDDL)
-      if (rebases > maxRebases || !touchedIntact || !schemaIntact)
-        conflict(winner.version)
-      base = winner
-    }
+    commit(prev, "COW DML commit", Rule.ReadIntact(impacted),
+        Rule.SchemaIntact)(_ =>
+      Some(Actions(Some(stats), removed = impacted,
+        schemaDdl = schemaDdl, tag = tag)))
+    ()
   }
 
   /** `spark.graft.mor.maxMaskFraction` (default 0.8): the matched-live
@@ -2125,23 +2073,21 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     * already-compact files are carried over as untouched entries, so a
     * steady-state 100 TB table re-packs just its ingest tail. Returns
     * the number of files compacted away. */
-  def commitCompaction(prevV: SnapshotRef, targetBytes: Long,
-      maxRetries: Int = 5): Int = compact(prevV, targetBytes, maxRetries)._1
+  def commitCompaction(prevV: SnapshotRef, targetBytes: Long): Int =
+    compact(prevV, targetBytes)._1
 
   /** [[commitCompaction]], also returning the latest version after it:
     * the commit's own, or the planned one when nothing needed packing. */
-  private[table] def compact(prevV: SnapshotRef, targetBytes: Long,
-      maxRetries: Int = 5): (Int, Int) = {
+  private[table] def compact(prevV: SnapshotRef, targetBytes: Long)
+      : (Int, Int) = {
     // plans against the latest version (prevV's at least)
     val log = listing(prevV).requireTable()
-    var base = log.at(math.max(prevV.version, log.versions.max))
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      // (re)plan against the CURRENT latest: losing the commit race to
-      // a concurrent batch means the file population changed, so the
-      // pack set must be recomputed, not just the version number —
-      // compaction may never be "accepted" by someone else's snapshot
-      // winning the rename (that snapshot doesn't contain the pack)
+    var packed = 0
+    // no lost-race rule: a winner changed the file population, so the
+    // pack set is recomputed on its snapshot — compaction is never
+    // "accepted" by someone else's snapshot (it doesn't hold the pack)
+    val v = commit(log.at(math.max(prevV.version, log.versions.max)),
+        "compaction") { base =>
       val entries = base.rows
       // the pack set: sub-target files, PLUS any file carrying a
       // deletion vector — OPTIMIZE is also how MoR merges fold their
@@ -2178,31 +2124,23 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       val pack = entries.filter(r =>
         r.getAs[Long]("bytes") < targetBytes || foldWorthy(r))
       val anyDv = pack.exists(entryDv(_).isDefined)
-      if (pack.length <= 1 && !anyDv) return (0, base.version)
-        // already compact and DV-free: no commit, no burned version,
-        // no no-op batch for change-feed consumers
+      packed = if (pack.length <= 1 && !anyDv) 0 else pack.length
+      // already compact and DV-free: no commit, no burned version, no
+      // no-op batch for change-feed consumers. A lost attempt's packed
+      // output becomes vacuum-reclaimable orphans.
+      if (packed == 0) None
       else {
-        val packFiles = pack.map(_.getAs[String]("file")).toSeq
         val totalBytes = pack.map(_.getAs[Long]("bytes")).sum
         val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-        val added = stagedAppend(readRows(base, pack), nOut)
-        if (tryCommitManifest(
-            unionEntries(
-              excludeFiles(base.entries, packFiles),
-              if (added.isEmpty) emptyEntries else fileStats(added)),
-            base.version + 1, noData = true, // LIVE-content-identical:
-                                     // dataChange=false (masked rows
-                                     // were already dead)
-            schemaDdl = base.schema.map(_.toDDL)))
-          return (pack.length, base.version + 1)
-        // lost: this attempt's packed output becomes vacuum-reclaimable
-        // orphans; replan from the winner's version
+        Some(Actions(
+          Some(fileStats(stagedAppend(readRows(base, pack), nOut))),
+          removed = pack.map(_.getAs[String]("file")).toSeq,
+          // LIVE-content-identical: dataChange=false (masked rows were
+          // already dead)
+          noData = true, schemaDdl = base.schema.map(_.toDDL)))
       }
-      attempts += 1
-      base = snapshot()
     }
-    throw new IllegalStateException(
-      s"compaction lost $maxRetries consecutive commit races; giving up")
+    (packed, v)
   }
 
   /** RESTORE (Delta's `RESTORE TABLE ... VERSION AS OF`): make the
@@ -2305,11 +2243,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     if (nDel == 0L) return 0L // conservative boxes kept files whose
                               // rows all miss the range: no-op, no
                               // burned version, no rewrite
-    val added = stagedAppend(df.filter(!doomed),
-      sizedParts(nParts, entryBytes(impactedRows)))
-    val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitCowRewrite(prev, impactedRows, stats, tag,
-      schemaDdl = prev.schema.map(_.toDDL))
+    commitCowRewrite(prev, impactedRows, fileStats(stagedAppend(
+      df.filter(!doomed), sizedParts(nParts, entryBytes(impactedRows)))),
+      tag, prev.schema.map(_.toDDL))
     nDel
   }
 
@@ -2368,11 +2304,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     val nDel = df.filter(pred).count()
     if (nDel == 0L) return 0L // conservative planning kept files whose
                               // rows all miss: no-op, no burned version
-    val added = stagedAppend(df.filter(!coalesce(pred, lit(false))),
-      sizedParts(nParts, entryBytes(impactedRows)))
-    val stats = if (added.isEmpty) emptyEntries else fileStats(added)
-    commitCowRewrite(prev, impactedRows, stats, tag,
-      schemaDdl = prev.schema.map(_.toDDL))
+    commitCowRewrite(prev, impactedRows, fileStats(stagedAppend(
+      df.filter(!coalesce(pred, lit(false))),
+      sizedParts(nParts, entryBytes(impactedRows)))),
+      tag, prev.schema.map(_.toDDL))
     nDel
   }
 
@@ -2478,10 +2413,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
               .drop("__file", "__pos"),
             sizedParts(nParts, entryBytes(impactedRows)))
         }
-      val all = survivors ++ addedNew
-      val stats = if (all.isEmpty) emptyEntries else fileStats(all)
-      commitCowRewrite(prev, impactedRows, stats, tag,
-        schemaDdl = evolvedSchemaDdl(prev, data.schema))
+      commitCowRewrite(prev, impactedRows, fileStats(survivors ++ addedNew),
+        tag, evolvedSchemaDdl(prev, data.schema))
       doomed
     } finally { live.foreach(_.unpersist(blocking = false)); () }
   }
@@ -2575,25 +2508,9 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       finally { zd.unpersist(blocking = false); () }
     require(added.nonEmpty, "z-order rewrite produced no files")
     // content-identical: a layout-only commit
-    layoutCommit("z-order rewrite", fileStats(added), prev,
-      prev.schema.map(_.toDDL))
-  }
-
-  /** Publish a layout-only (`dataChange=false`) commit on top of `prev`.
-    * The single-writer maintenance commits (z-order, schema changes)
-    * never rebase: a lost race runs `onLoss` and fails loudly. Returns
-    * the new version. */
-  private def layoutCommit(what: String, entries: DataFrame,
-      prev: LogSnapshot, schemaDdl: Option[String],
-      onLoss: => Unit = ()): Int = {
-    val v = prev.version + 1
-    if (!tryCommitManifest(entries, v, noData = true, schemaDdl = schemaDdl)) {
-      onLoss
-      throw new java.util.ConcurrentModificationException(
-        s"$what lost the commit race for v=$v; re-run against the latest " +
-          "snapshot")
-    }
-    v
+    commit(prev, "z-order rewrite", Rule.NoRebase())(_ =>
+      Some(Actions(Some(fileStats(added)), replaces = true,
+        noData = true, schemaDdl = prev.schema.map(_.toDDL))))
   }
 
   /** The shared physical-presence (resurrection) guard: refuse
@@ -2737,8 +2654,10 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     setPropLine("schema_detached", Some("true"))
     // a lost race drops the now-unreachable event (the flag stays —
     // conservative: it only widens a guard)
-    layoutCommit("RENAME COLUMN", prev.entries, prev, Some(renamed.toDDL),
-      onLoss = setPropLine(s"rename.${prev.version + 1}.0", None))
+    commit(prev, "RENAME COLUMN", Rule.NoRebase(() =>
+        setPropLine(s"rename.${prev.version + 1}.0", None)))(_ =>
+      Some(Actions(noData = true,
+        schemaDdl = Some(renamed.toDDL))))
   }
 
   /** ALTER TABLE ADD COLUMN's commit: a layout-identical new version
@@ -2766,7 +2685,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
     requireNoPhysicalResurrection(prev,
       widened.fields.drop(base.length).map(_.name).toSeq, "add",
       always = true)
-    layoutCommit("schema widening", prev.entries, prev, Some(widened.toDDL))
+    commit(prev, "schema widening", Rule.NoRebase())(_ =>
+      Some(Actions(noData = true, schemaDdl = Some(widened.toDDL))))
   }
 
   /** ALTER TABLE DROP COLUMN as a METADATA-ONLY commit (Delta's
@@ -2824,8 +2744,8 @@ final case class GraftTable(spark: SparkSession, data: String, man: String,
       base.fields.filterNot(f => gone(f.name)))
     require(narrowed.nonEmpty,
       s"cannot drop every column of $man — drop the table instead")
-    val v = layoutCommit("schema narrowing", prev.entries, prev,
-      Some(narrowed.toDDL))
+    val v = commit(prev, "schema narrowing", Rule.NoRebase())(_ =>
+      Some(Actions(noData = true, schemaDdl = Some(narrowed.toDDL))))
     // the schema has detached from the physical layout: from here on,
     // re-recording a name still physically present must be refused on
     // EVERY path (ALTER and append-time evolution alike) — the flag is
@@ -3178,6 +3098,53 @@ object GraftTable {
   /** Per-version data-schema DDL file, written in staging so it rides
     * the atomic commit (readers plan with zero footer reads). */
   private[table] val SchemaFile = "_schema.ddl"
+
+  // ---- commit actions and lost-race rules ---------------------------
+
+  /** What one commit does on top of its base snapshot (Delta's `add`,
+    * `remove` and `metaData` actions), as a commit kind plans it for
+    * [[GraftTable!.commit]]:
+    *  - `added`: the entries of the files it adds;
+    *  - `removed`: the files it drops;
+    *  - `dv`: the deletion vector it wrote, with the rows it newly masks
+    *    per file — those entries re-point at it, live `n_rows` less the
+    *    masked rows, and an entry masked to zero live rows is dropped;
+    *  - `replaces`: every base entry goes and `added` is the whole
+    *    manifest (create, clone, restore, z-order, DELETE of every row);
+    *  - the version's facts: its recorded schema, its tag, and `noData`
+    *    for a layout-only commit. */
+  private[table] final case class Actions(
+      added: Option[DataFrame] = None,
+      removed: Seq[String] = Nil,
+      dv: Option[(String, Map[String, Long])] = None,
+      replaces: Boolean = false,
+      schemaDdl: Option[String] = None,
+      tag: Option[String] = None,
+      noData: Boolean = false)
+
+  /** A lost-race rule a commit kind lists for [[GraftTable!.commit]]: it
+    * judges one winning commit against the version before it. */
+  private[table] sealed trait Rule
+  private[table] object Rule {
+    /** The winner must replay this commit — carry its tag and its exact
+      * file set — and then holds it; anything else fails with an
+      * IllegalArgumentException. */
+    case object Replay extends Rule
+    /** A winner carrying this commit's tag holds it. */
+    case object Tagged extends Rule
+    /** The winner kept the (dv, n_rows) pair of each file this commit
+      * read. */
+    final case class ReadIntact(files: Iterable[String]) extends Rule
+    /** The winner kept the recorded schema. */
+    case object SchemaIntact extends Rule
+    /** The winner added no file whose key box meets [lo, hi]. */
+    final case class EnvelopeClear(lo: Any, hi: Any) extends Rule
+    /** The commit never rebases: a lost race runs `onLoss`, then fails. */
+    final case class NoRebase(onLoss: () => Unit = () => ()) extends Rule
+  }
+
+  /** Lost races one commit survives before it gives up. */
+  private[table] val CommitRetries = 50
 
   // ---- key/stats box codecs ----------------------------------------
 
